@@ -67,11 +67,14 @@ class Facade(db: Db) {
   }
 
   /** Latest close per symbol (the J11 rewrite used by valuation,
-    * trading defaults, holdings enrichment). */
+    * trading defaults, holdings enrichment). `max_by` over the bare
+    * close, not [[Kernels.latestPerKey]]'s row struct: the buffers are
+    * fixed-width, so this plans a hash aggregation instead of a sort
+    * aggregate over all of Stocks. */
   def latestCloses(): DataFrame =
-    Kernels.latestPerKey(db.stocks.select("symbol", "timestamp", "close"),
-        Seq("symbol"), Seq(col("timestamp")))
-      .select(col("symbol"), col("close"), col("timestamp").as("as_of"))
+    db.stocks.groupBy(col("symbol")).agg(
+      max_by(col("close"), col("timestamp")).as("close"),
+      max(col("timestamp")).as("as_of"))
 
   // ---- portfolio.js ----
 
@@ -591,7 +594,8 @@ class Facade(db: Db) {
   def reviews(listId: Long, userId: Long): DataFrame =
     Acl.visibleReviews(db.review.filter(col("listid") === listId),
         db.stocklist, lit(userId))
-      .join(broadcast(db.users), Seq("userid"))
+      .join(broadcast(db.users.select(col("userid"), col("email"))),
+        Seq("userid"))
       .select(col("reviewid"), col("listid"), col("userid"), col("email"),
         col("content"), col("created_at"))
       .orderBy(col("created_at").desc, col("reviewid").desc)

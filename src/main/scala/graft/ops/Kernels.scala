@@ -35,10 +35,14 @@ object Kernels {
     * `holdings.js:46-65`, `trading.js:22-35`: per-key
     * `ORDER BY timestamp DESC LIMIT 1` issued once per holding).
     *
-    * One hash aggregation with partial (map-side) combine: `max_by`
-    * over a deterministic ordering struct. No sort, no window, one
-    * shuffle on the key — this survives 100 TB where a global
-    * window-sort would not.
+    * One aggregation with partial (map-side) combine: `max_by` of the
+    * row struct over a deterministic ordering struct. No window, no
+    * global sort, one shuffle on the key — this survives 100 TB where
+    * a global window-sort would not. The struct buffers are not
+    * fixed-width, so Spark plans a SortAggregate (a per-partition sort
+    * on the key each side of the shuffle), not a HashAggregate. For a
+    * single fixed-width value, `max_by(value, ord)` over a fixed-width
+    * `ord` hashes instead — see [[graft.api.Facade.latestCloses]].
     *
     * @param ord ordering columns, most-significant first; MUST be a
     *            total order within each key group for determinism.
@@ -84,14 +88,35 @@ object Kernels {
     * nulls-last. Keep every ord expression non-null-producing: in
     * particular a `-id` tie-break requires a NUMERIC id (unary minus
     * on a string id is a failed cast — null, or an error under ANSI);
-    * hash or cast non-numeric ids to a non-null orderable first. */
+    * hash or cast non-numeric ids to a non-null orderable first.
+    *
+    * The heap carries the non-key columns only; the key columns come
+    * out of the grouping itself, so the result stays hash-partitioned
+    * on `keys` and a following per-key operator on the same keys (a
+    * re-rank heap, say) plans no second exchange. `perKey` names
+    * columns that are constant within a key (a query's vector beside
+    * its id): they ride once per group, through `first`, instead of in
+    * every heap row or in the grouping key. */
   def topKPerKeyAgg(df: DataFrame, keys: Seq[String], ord: Seq[Column],
-                    k: Int): DataFrame = {
-    val payload = struct(df.columns.map(col): _*)
+                    k: Int, perKey: Seq[String] = Nil): DataFrame =
+    heapPerKey(df, keys, perKey, ord, k, explode(col("__top")).as("__row"))
+
+  /** The shared body of [[topKPerKeyAgg]] and [[topKPerKeyRanked]]:
+    * one heap per key over the columns that are neither keys nor
+    * `perKey`, unpacked by `unpack` (an explode of `__top` into
+    * `__row`), with the columns back in `df`'s order, then `extra`. */
+  private def heapPerKey(df: DataFrame, keys: Seq[String], perKey: Seq[String],
+                         ord: Seq[Column], k: Int, unpack: Column,
+                         extra: Seq[Column] = Nil): DataFrame = {
+    val grouped = keys ++ perKey
+    val payload = struct(df.columns.filterNot(grouped.contains).map(col): _*)
     df.groupBy(keys.map(col): _*)
-      .agg(graft.functions.TopKAgg.topk_rows(payload, ord, k).as("__top"))
-      .select(explode(col("__top")).as("__row"))
-      .select(col("__row.*"))
+      .agg(graft.functions.TopKAgg.topk_rows(payload, ord, k).as("__top"),
+        perKey.map(c => first(col(c)).as(c)): _*)
+      .select(grouped.map(col) :+ unpack: _*)
+      .select(df.columns.toSeq.map(c =>
+        if (grouped.contains(c)) col(c) else col("__row").getField(c).as(c)) ++
+        extra: _*)
   }
 
   /** [[topKPerKeyAgg]] plus a 1-based `rank` column, derived from the
@@ -107,13 +132,10 @@ object Kernels {
     * [[topKPerKeyAgg]] null-ord contract applies (null-ord rows are
     * skipped — keep ord expressions non-null, numeric-id tie-breaks). */
   def topKPerKeyRanked(df: DataFrame, keys: Seq[String], ord: Seq[Column],
-                       k: Int): DataFrame = {
-    val payload = struct(df.columns.map(col): _*)
-    df.groupBy(keys.map(col): _*)
-      .agg(graft.functions.TopKAgg.topk_rows(payload, ord, k).as("__top"))
-      .select(posexplode(col("__top")).as(Seq("__pos", "__row")))
-      .select(col("__row.*") +: Seq((col("__pos") + 1).cast("int").as("rank")): _*)
-  }
+                       k: Int): DataFrame =
+    heapPerKey(df, keys, Nil, ord, k,
+      posexplode(col("__top")).as(Seq("__pos", "__row")),
+      Seq((col("__pos") + 1).cast("int").as("rank")))
 
   /** MERGE/upsert semantics — the reference's `INSERT … ON CONFLICT DO
     * UPDATE` (`lists.js:483-491` stockin shares, `portfolio.js:427-445`

@@ -29,6 +29,12 @@ class IvfIndex private (val cells: DataFrame,
   private[pipeline] def centroidLit: Column =
     typedlit(centroids.map(_.toSeq).toSeq)
 
+  /** The cell a raw vector is assigned to: the projection [[IvfIndex.build]]
+    * and [[append]] assign with, so it reproduces a stored vector's cell. */
+  private[pipeline] def cellOf(cv: Column): Column =
+    IvfIndex.nearestCellEuclid(
+      graft.functions.VectorExprs.l2_normalize(cv), centroidLit)
+
   /** Coarse-probe column for composition ([[PqIndex.topKProbed]]):
     * the `nProbe` nearest cells of a query vector, ranked in the same
     * L2-NORMALIZED space the quantizer was trained and assigned in. */
@@ -85,8 +91,9 @@ class IvfIndex private (val cells: DataFrame,
     * oracle). */
   def topK(queries: DataFrame, vec: String, k: Int, nProbe: Int,
            allowed: Option[DataFrame] = None): DataFrame = {
-    val q = Kernels.ensureParallelism(
-      queries.select(col(id).as("query_id"), Similarity.vecD(col(vec)).as("qv")))
+    // not spread with ensureParallelism: the query side is broadcast,
+    // so a repartition would only add a job
+    val q = queries.select(col(id).as("query_id"), Similarity.vecD(col(vec)).as("qv"))
     val c0 = cells.select(col(id).as("neighbor_id"), col("cell"), col("cv"))
     val c = allowed.fold(c0)(a =>
       c0.join(a.select(col(id).as("neighbor_id")), Seq("neighbor_id"),
@@ -201,9 +208,7 @@ class IvfIndex private (val cells: DataFrame,
   def append(batch: DataFrame, vec: String): IvfIndex = {
     val b = Kernels.ensureParallelism(
       batch.select(col(id), Similarity.vecD(col(vec)).as("cv")))
-    val assigned = b.withColumn("cell", IvfIndex.nearestCellEuclid(
-        graft.functions.VectorExprs.l2_normalize(col("cv")), centroidLit))
-      .select(col(id), col("cell"), col("cv"))
+    val assigned = b.select(col(id), cellOf(col("cv")).as("cell"), col("cv"))
     new IvfIndex(CacheScope.persist(cells.unionByName(assigned)),
       centroids, id, System.currentTimeMillis())
   }

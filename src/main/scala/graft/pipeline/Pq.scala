@@ -13,15 +13,19 @@ import graft.ops.{CacheScope, Kernels}
   * — followed by an exact cosine re-rank of the ADC survivors.
   *
   * Scale shape: the encoded corpus is `m` small ints per vector (8
-  * codes ≈ 8 B vs 512 B for a 64-dim double vector), so the scan side
-  * shuffles/holds a ~64× compressed representation; full vectors are
-  * touched only for the `nCandidates` re-rank rows per query. Training
-  * is driver-local on a reservoir sample (same posture as
-  * [[IvfIndex]]) — no distributed ML iterations; encoding is one
-  * codegen projection pass, no join, no shuffle. Composes with IVF
-  * (coarse cells + PQ within cells) — here the flat-PQ form, which is
-  * already sublinear in *work* per candidate rather than in candidates
-  * scanned.
+  * codes ≈ 8 B vs 512 B for a 64-dim double vector), and the ADC scan
+  * does `m` lookups per candidate. A probe is ONE plan with no join
+  * back to the corpus: the scan's rows carry each candidate's full
+  * vector into the per-query ADC heap, which keeps only the
+  * `nCandidates` best (map-side, before its one shuffle), and the
+  * exact cosine re-rank runs on the heap's output against the query
+  * vector, which the heap carries once per query. Training is
+  * driver-local on a reservoir sample (same posture as [[IvfIndex]]) —
+  * no distributed ML iterations; encoding is one codegen projection
+  * pass, no join, no shuffle. Composes with IVF (coarse cells + PQ
+  * within cells, see [[topKProbed]]); a residual index
+  * ([[PqIndex.buildResidual]]) holds `(id, cell, code, cv)` — each
+  * code carries its coarse cell — and a flat one `(id, code, cv)`.
   */
 class PqIndex private (val codes: DataFrame,
                        val codebooks: Array[Array[Array[Double]]],
@@ -40,29 +44,30 @@ class PqIndex private (val codes: DataFrame,
            nCandidates: Int = 256): DataFrame = {
     require(residualOf.isEmpty,
       "residual-encoded codes are relative to coarse cells — use topKProbed")
-    val q = Kernels.ensureParallelism(
-      queries.select(col(id).as("query_id"), Similarity.vecD(col(vec)).as("qv")))
+    val q = queryFrame(queries, vec)
       .withColumn("dt", PqExprs.pq_dist_table(col("qv"), codebooks))
     // ADC scan: every (query, corpus) pair, but each pair is m lookups
     // over the broadcast per-query table — the classic PQ trade. The
-    // corpus side never shuffles; candidates carry (ids, adc) only.
-    val scored = codes.crossJoin(broadcast(q.select(col("query_id"), col("dt"))))
-      .filter(col(id) =!= col("query_id"))
-      .select(col("query_id"), col(id).as("neighbor_id"),
-        PqExprs.pq_adc(col("code"), col("dt")).as("adc"))
-    rerank(scored, q, k, nCandidates)
+    // corpus side never shuffles.
+    rerank(codes.crossJoin(broadcast(q)), k, nCandidates)
   }
 
   /** IVF-PQ composition (the FAISS-IVFPQ architecture): the ADC scan
     * is restricted to each query's `nProbe` nearest coarse cells
     * instead of the whole corpus — candidates drop from N to
-    * ~N·nProbe/nCells, and the join is a hash join on the cell id
-    * rather than a broadcast cross. At a billion vectors that is the
-    * difference between scanning 10⁹ and 10⁷ codes per query batch.
-    * Both indexes must be built over the same corpus and id column.
+    * ~N·nProbe/nCells, and the scan is a broadcast hash join on the
+    * cell id rather than a broadcast cross. At a billion vectors that
+    * is the difference between scanning 10⁹ and 10⁷ codes per query
+    * batch. Both indexes must be built over the same corpus and id
+    * column.
     *
-    * For a [[PqIndex.buildResidual]] index the ADC table is computed
-    * per (query, probed cell) from the query's residual to that cell's
+    * One plan: cell pruning → ADC → exact re-rank. The query side
+    * (one row per (query, probed cell), with its ADC table) is
+    * broadcast as is; a residual index's codes already carry their
+    * cell, so the scan reads the codes frame alone, while a flat index
+    * takes each code's cell from `coarse.cells`. For a
+    * [[PqIndex.buildResidual]] index the ADC table is computed per
+    * (query, probed cell) from the query's residual to that cell's
     * centroid — still on the broadcast side, still one codegen
     * projection; `coarse` must be the index the residuals were encoded
     * against. */
@@ -71,53 +76,55 @@ class PqIndex private (val codes: DataFrame,
                  allowed: Option[DataFrame] = None): DataFrame = {
     require(residualOf.forall(_ eq coarse),
       "a residual PQ index must be probed with its build-time coarse index")
-    val q0 = Kernels.ensureParallelism(
-      queries.select(col(id).as("query_id"), Similarity.vecD(col(vec)).as("qv")))
+    val q0 = queryFrame(queries, vec)
     // FILTERED search: the same live-cell list pruning as
     // IvfIndex.topK — under a geometry-correlated filter the probe
     // budget must go to cells that still hold candidates
     def probeEx: Column = coarse.probeExpr(col("qv"), nProbe, allowed)
-    val q = residualOf match {
+    val (q, coded0) = residualOf match {
       case None =>
         // one ADC table per query, shared by all its probed cells
-        q0.withColumn("dt", PqExprs.pq_dist_table(col("qv"), codebooks))
-          .withColumn("cell", explode(probeEx))
+        (q0.withColumn("dt", PqExprs.pq_dist_table(col("qv"), codebooks))
+          .withColumn("cell", explode(probeEx)),
+          codes.join(coarse.cells.select(col(id), col("cell")), Seq(id)))
       case Some(c) =>
         // per-(query, cell) ADC table over the residual in that cell —
         // the same normalized space the residuals were encoded in
-        q0.withColumn("cell", explode(probeEx))
+        (q0.withColumn("cell", explode(probeEx))
           .withColumn("dt", PqExprs.pq_dist_table(
             graft.functions.VectorExprs.vec_sub(
               graft.functions.VectorExprs.l2_normalize(col("qv")),
-              element_at(c.centroidLit, col("cell") + 1)), codebooks))
+              element_at(c.centroidLit, col("cell") + 1)), codebooks)),
+          codes)
     }
-    val coded0 = codes.join(
-      coarse.cells.select(col(id), col("cell")), Seq(id))
     val coded = allowed.fold(coded0)(a =>
       coded0.join(a.select(col(id)), Seq(id), "left_semi"))
-    val scored = coded.join(broadcast(
-        q.select(col("query_id"), col("cell"), col("dt"))), Seq("cell"))
-      .filter(col(id) =!= col("query_id"))
-      .select(col("query_id"), col(id).as("neighbor_id"),
-        PqExprs.pq_adc(col("code"), col("dt")).as("adc"))
-    rerank(scored, q, k, nCandidates)
+    rerank(coded.join(broadcast(q), Seq("cell")), k, nCandidates)
   }
 
-  /** Shared tail of both scan variants: ADC top-`nCandidates`
-    * candidate cut, exact cosine re-rank over candidates only (full
-    * vectors rejoined for ≤ nCandidates rows per query), ranked top-k.
-    * `q` may carry one row per (query, probed cell) — the qv side is
-    * de-duplicated before the re-rank join. */
-  private def rerank(scored: DataFrame, q: DataFrame, k: Int,
-                     nCandidates: Int): DataFrame = {
+  /** `(query_id, qv)` per query row. Not spread with
+    * [[Kernels.ensureParallelism]]: the query side is small by
+    * contract and broadcast, so a repartition would only add a job. */
+  private def queryFrame(queries: DataFrame, vec: String): DataFrame =
+    queries.select(col(id).as("query_id"), Similarity.vecD(col(vec)).as("qv"))
+
+  /** Shared tail of both scan variants, over the scan's joined rows
+    * (codes side `id, code, cv`; query side `query_id, qv, dt`): ADC
+    * distances, the ADC top-`nCandidates` heap per query — whose rows
+    * carry each candidate's `cv` while `qv` rides once per query —
+    * then the exact cosine re-rank of the heap's output into a ranked
+    * top-k. The re-rank heap keys on `query_id` like the candidate
+    * heap and reuses its partitioning: one shuffle, and no join back
+    * to the codes. */
+  private def rerank(joined: DataFrame, k: Int, nCandidates: Int): DataFrame = {
+    val scored = joined.filter(col(id) =!= col("query_id"))
+      .select(col("query_id"), col("qv"), col(id).as("neighbor_id"),
+        PqExprs.pq_adc(col("code"), col("dt")).as("adc"), col("cv"))
     val cand = Kernels.topKPerKeyAgg(scored, Seq("query_id"),
-      Seq(-col("adc"), col("neighbor_id")), nCandidates)
-    val withVecs = cand
-      .join(codes.select(col(id).as("neighbor_id"), col("cv")), Seq("neighbor_id"))
-      .join(broadcast(q.select(col("query_id"), col("qv")).distinct()), Seq("query_id"))
+        Seq(-col("adc"), col("neighbor_id")), nCandidates, perKey = Seq("qv"))
       .select(col("query_id"), col("neighbor_id"),
         Similarity.cosine(col("qv"), col("cv")).as("cos"))
-    Kernels.topKPerKeyRanked(withVecs, Seq("query_id"),
+    Kernels.topKPerKeyRanked(cand, Seq("query_id"),
       Seq(col("cos"), -col("neighbor_id")), k)
   }
 
@@ -125,9 +132,10 @@ class PqIndex private (val codes: DataFrame,
     * (same posture and staleness contract as [[IvfIndex.save]]): the
     * per-subspace codebooks land as a tiny parquet
     * (m · nWords rows), the encoded corpus as a parquet of
-    * (id, code, cv), under a fresh `snap_*` with an atomic `_latest`
-    * flip. The snapshot reflects the corpus AS OF [[builtAt]] —
-    * rebuild + re-save when the corpus moves. */
+    * (id, code, cv) — a residual index's cell is not stored,
+    * [[PqIndex.loadResidual]] re-derives it — under a fresh `snap_*`
+    * with an atomic `_latest` flip. The snapshot reflects the corpus
+    * AS OF [[builtAt]] — rebuild + re-save when the corpus moves. */
   def save(path: String): Unit = {
     val s = codes.sparkSession
     import s.implicits._
@@ -139,7 +147,8 @@ class PqIndex private (val codes: DataFrame,
     } yield (j, w, word.toSeq)).toSeq
       .toDF("subspace", "word", "c")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/codebooks")
-    codes.write.mode("overwrite").parquet(s"$dir/codes")
+    codes.select(col(id), col("code"), col("cv"))
+      .write.mode("overwrite").parquet(s"$dir/codes")
     IndexIo.writeMeta(s, dir, Seq(
       "kind" -> "pq", "id" -> id,
       "m" -> codebooks.length.toString,
@@ -183,31 +192,42 @@ object PqIndex {
     * tiny parquet (driver memory O(m · nWords · dims/m) = O(nWords ·
     * dims)), the encoded corpus read lazily and registered in
     * [[graft.ops.CacheScope]]. No training runs. */
-  def load(spark: org.apache.spark.sql.SparkSession, path: String): PqIndex = {
-    val (meta, idx) = loadCurrent(spark, path, residualOf = None)
-    require(!meta.contains("residual_coarse"),
-      "residual PQ index — load with PqIndex.loadResidual(spark, path, coarse)")
-    idx
-  }
+  def load(spark: org.apache.spark.sql.SparkSession, path: String): PqIndex =
+    loadCurrent(spark, path, residualOf = None)
 
   private def loadCurrent(spark: org.apache.spark.sql.SparkSession,
-                          path: String, residualOf: Option[IvfIndex])
-      : (Map[String, String], PqIndex) = {
+                          path: String, residualOf: Option[IvfIndex]): PqIndex = {
     val snap = IndexIo.currentSnap(spark, path).getOrElse(
       throw new java.io.FileNotFoundException(s"$path/_latest"))
     val dir = s"$path/$snap"
     val meta = IndexIo.readMeta(spark, dir)
     require(meta.get("kind").contains("pq"), s"not a PQ index: $dir")
+    residualOf match {
+      case None =>
+        require(!meta.contains("residual_coarse"),
+          "residual PQ index — load with PqIndex.loadResidual(spark, path, coarse)")
+      case Some(c) =>
+        val expected = meta.getOrElse("residual_coarse",
+          throw new IllegalArgumentException(s"$path is not a residual PQ index"))
+        require(expected == centroidFingerprint(c.centroids).toString,
+          "coarse quantizer mismatch: this residual index was built against " +
+            "different centroids")
+    }
     val id = meta("id")
     val rows = spark.read.parquet(s"$dir/codebooks")
       .select(col("subspace"), col("word"), col("c")).collect()
     val codebooks = rows.groupBy(_.getInt(0)).toArray.sortBy(_._1)
       .map(_._2.sortBy(_.getInt(1)).map(_.getSeq[Double](2).toArray))
     require(codebooks.length == meta("m").toInt, s"corrupt codebooks in $dir")
-    val codes = CacheScope.persist(
-      spark.read.parquet(s"$dir/codes")
-        .select(col(id), col("code"), col("cv")))
-    (meta, new PqIndex(codes, codebooks, id, meta("built_at").toLong, residualOf))
+    val stored = spark.read.parquet(s"$dir/codes")
+    // a residual code's cell is re-derived with the projection that
+    // assigned it (same vector, fingerprint-checked centroids), so it
+    // is the build-time cell by construction
+    val codes = CacheScope.persist(residualOf.fold(
+        stored.select(col(id), col("code"), col("cv")))(c =>
+      stored.select(col(id), c.cellOf(col("cv")).as("cell"), col("code"),
+        col("cv"))))
+    new PqIndex(codes, codebooks, id, meta("built_at").toLong, residualOf)
   }
 
   /** Drop all persisted snapshots except the current one. */
@@ -217,10 +237,9 @@ object PqIndex {
   /** Train per-subspace codebooks driver-locally and encode the corpus
     * in one distributed codegen pass. `dims` must be divisible by `m`.
     *
-    * The persisted codes frame keeps the full vector alongside the
-    * code for the re-rank fetch; a storage-backed deployment would
-    * hold codes in memory and fetch vectors from the table — the plan
-    * shape (candidates-only vector access) is the same. */
+    * The codes frame keeps the full vector alongside the code: the
+    * scan carries it into the candidate heap, and the exact re-rank
+    * reads it for the ≤ nCandidates survivors per query. */
   def build(corpus: DataFrame, id: String, vec: String,
             m: Int = 8, nWords: Int = 256, seed: Long = 42L,
             maxTrainRows: Int = 100000): PqIndex = {
@@ -248,7 +267,9 @@ object PqIndex {
     * better recall at fixed m·log₂(nWords) bits. Residuals live in the
     * coarse quantizer's NORMALIZED space (see [[IvfIndex.build]]);
     * [[PqIndex.topKProbed]] computes the matching per-cell query
-    * residual. Query only via `topKProbed` with the SAME `coarse`. */
+    * residual. The codes keep the cell the residual was taken in, so a
+    * probe scans them without a join to `coarse.cells`. Query only via
+    * `topKProbed` with the SAME `coarse`. */
   def buildResidual(corpus: DataFrame, id: String, vec: String,
                     coarse: IvfIndex, m: Int = 8, nWords: Int = 256,
                     seed: Long = 42L, maxTrainRows: Int = 100000): PqIndex = {
@@ -271,7 +292,7 @@ object PqIndex {
     }
     val encoded = CacheScope.persist(
       resid.withColumn("code", PqExprs.pq_encode(col("rv"), codebooks))
-        .select(col(id), col("code"), col("cv")))
+        .select(col(id), col("cell"), col("code"), col("cv")))
     new PqIndex(encoded, codebooks, id, System.currentTimeMillis(),
       residualOf = Some(coarse))
   }
@@ -281,15 +302,8 @@ object PqIndex {
     * `coarse`'s centroids, so a drifted/rebuilt quantizer is rejected
     * instead of silently mis-decoding every residual. */
   def loadResidual(spark: org.apache.spark.sql.SparkSession, path: String,
-                   coarse: IvfIndex): PqIndex = {
-    val (meta, idx) = loadCurrent(spark, path, residualOf = Some(coarse))
-    val expected = meta.getOrElse("residual_coarse",
-      throw new IllegalArgumentException(s"$path is not a residual PQ index"))
-    require(expected == centroidFingerprint(coarse.centroids).toString,
-      "coarse quantizer mismatch: this residual index was built against " +
-        "different centroids")
-    idx
-  }
+                   coarse: IvfIndex): PqIndex =
+    loadCurrent(spark, path, residualOf = Some(coarse))
 
   private[pipeline] def centroidFingerprint(cents: Array[Array[Double]]): Long =
     cents.flatten.foldLeft(17L)((h, d) =>

@@ -55,6 +55,25 @@ class FacadeSpec extends SparkSpec {
     assert(closes == Seq(("AAA", 12.2), ("BBB", 19.5)))
   }
 
+  test("latestCloses plans a hash aggregation over Schemas-typed stocks, same rows as latestPerKey") {
+    val stocks = db.stocks.select(graft.schema.Schemas.stocks.fields.map(f =>
+      $"${f.name}".cast(f.dataType).as(f.name)).toIndexedSeq: _*)
+    val closes = new Facade(db.copy(stocks = stocks)).latestCloses()
+    val got = closes.collect().toSet
+    val nodes = allNodes(closes.queryExecution.executedPlan)
+    assert(!nodes.exists(_.nodeName.contains("SortAggregate")),
+      closes.queryExecution.executedPlan.toString)
+    assert(nodes.exists(_.nodeName == "HashAggregate"))
+    // the row-struct kernel it replaced, as the reference answer
+    val ref = graft.ops.Kernels.latestPerKey(
+        stocks.select("symbol", "timestamp", "close"), Seq("symbol"),
+        Seq($"timestamp"))
+      .select($"symbol", $"close", $"timestamp".as("as_of"))
+    assert(closes.columns.toSeq == ref.columns.toSeq)
+    assert(got == ref.collect().toSet)
+    assert(got.size == 2)
+  }
+
   test("history pages newest-first by default (O2/O3)") {
     val got = api.history("AAA", asc = false, limit = 2)
       .select("timestamp").as[Date].collect().toSeq
@@ -106,6 +125,18 @@ class FacadeSpec extends SparkSpec {
     assert(api.reviews(100L, 1L).count() == 1)
     // public list: anyone sees
     assert(api.reviews(101L, 3L).count() == 1)
+  }
+
+  test("reviews over Schemas-shaped users: created_at is the review's (M3)") {
+    // Schemas.users carries its own created_at, which must not collide
+    // with review.created_at in the joined frame
+    val users = db.users.withColumn("passwordhash", lit("h"))
+      .withColumn("created_at", lit(t("2023-06-01")))
+    val api2 = new Facade(db.copy(users = users))
+    val got = api2.reviews(101L, 3L)
+      .select("reviewid", "email", "created_at")
+      .as[(Long, String, Timestamp)].collect().toSeq
+    assert(got == Seq((1000L, "ada@x.io", t("2024-01-05"))))
   }
 
   test("predict emits horizon rows per symbol with trend (M1)") {

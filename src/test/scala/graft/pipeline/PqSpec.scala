@@ -147,6 +147,69 @@ class PqSpec extends SparkSpec {
     rpq.close(); reloaded.close(); coarse.close(); other.close()
   }
 
+  /** Run `f` and count the Spark jobs it started: its jobs carry a
+    * local-property tag, and a tagged no-op job after it marks the end
+    * of its events on the listener bus. */
+  private def jobsOf[A](f: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val key = "graft.test.jobsOf"
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(key)).foreach {
+          case `tag` => jobs.incrementAndGet()
+          case t if t == tag + "/end" => drained.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      val r = f
+      sc.setLocalProperty(key, tag + "/end")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (r, jobs.get())
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("reloaded residual IVF-PQ: one probe call runs ≤ 4 jobs and is exact at full probe") {
+    val coarse = IvfIndex.build(emb, "vec_id", "embedding", nCells = 8)
+    val path = java.nio.file.Files.createTempDirectory("graft_rpqjobs").toString + "/idx"
+    val built = PqIndex.buildResidual(emb, "vec_id", "embedding", coarse,
+      m = 8, nWords = 32)
+    built.save(path)
+    val pq = PqIndex.loadResidual(spark, path, coarse)
+    pq.codes.count() // a loaded index is queried warm
+    val queries = emb.filter($"vec_id" < 8)
+    val n = emb.count().toInt
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("query_id", "neighbor_id", "cos", "rank")
+        .as[(Long, Long, Double, Int)].collect().toSet
+    // full probe, every vector a candidate: the exact re-rank is the
+    // brute-force answer, bit for bit
+    val (got, jobs) = jobsOf(rows(pq.topKProbed(queries, "embedding", coarse,
+      nProbe = 8, k = 5, nCandidates = n)))
+    info(s"$jobs jobs for one probe call")
+    assert(jobs <= 4, s"$jobs jobs for one probe call")
+    assert(got.size == 8 * 5)
+    assert(got == rows(
+      Similarity.bruteForceTopK(emb, queries, "vec_id", "embedding", k = 5)))
+    // the reloaded codes carry the cell the build assigned, while the
+    // stored codes keep the (id, code, cv) format older snapshots have
+    assert(pq.codes.select("vec_id", "cell").collect().toSet ==
+      built.codes.select("vec_id", "cell").collect().toSet)
+    val snap = IndexIo.currentSnap(spark, path).get
+    assert(spark.read.parquet(s"$path/$snap/codes").columns.toSeq ==
+      Seq("vec_id", "code", "cv"))
+    built.close(); pq.close(); coarse.close()
+  }
+
   test("PQ top-1 with generous candidates matches brute force on the real corpus") {
     val queries = emb.filter($"vec_id" < 8)
     val idx = PqIndex.build(emb, "vec_id", "embedding", m = 8, nWords = 32)
