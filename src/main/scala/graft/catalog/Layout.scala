@@ -151,50 +151,83 @@ object Layout {
     * not per data file. */
   def manifestAsOf(spark: SparkSession, path: String,
                    snap: Option[String]): Option[DataFrame] =
-    partsAsOf(spark, path, snap).map { parts =>
-      val ps = parts.filter(_.startsWith("m_"))
-        .map(p => SnapshotManifest.partPath(path, p))
-      // Zone manifests are METADATA — O(file-count) rows — and every
-      // lifecycle op / pruned read touches them several times, so the
-      // common homogeneous-schema case is read ON THE DRIVER and
-      // returned as a LocalRelation: downstream filters/projections
-      // fold at optimization time (ConvertToLocalRelation) and every
-      // `.collect()` over it is job-free, with Catalyst still
-      // evaluating the expressions — semantics identical to the
-      // spark.read path by LocalParquetSpec's pinned type mapping.
-      // Oversized (>64 MB) or type-exotic or schema-heterogeneous
-      // manifests fall back to the distributed read; mergeSchema
-      // (a distributed footer-merge JOB) only for genuinely
-      // heterogeneous parts.
-      val fs = SnapshotManifest.fsOf(spark, path)
-      val sts =
-        try ps.flatMap(p => fs.listStatus(new Path(p)).toSeq)
-          .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-            !st.getPath.getName.startsWith("."))
-        catch { case scala.util.control.NonFatal(_) => Seq.empty }
-      LocalParquet.readAll(
-          spark.sparkContext.hadoopConfiguration, sts) match {
-        case Some((schema, rows)) =>
-          spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-        case None =>
-          if (ps.lengthCompare(1) == 0) spark.read.parquet(ps.head)
-          else {
-            val schemas = ps.map(p => spark.read.parquet(p).schema).distinct
-            if (schemas.lengthCompare(1) == 0)
-              spark.read.schema(schemas.head).parquet(ps: _*)
-            else spark.read.option("mergeSchema", "true").parquet(ps: _*)
-          }
-      }
-    }
+    partsAsOf(spark, path, snap).map(zoneManifest(spark, path, _))
 
+  /** The zone manifest of an already-resolved part list — the union
+    * of its `m_` parts. */
+  private def zoneManifest(spark: SparkSession, path: String,
+                           parts: Seq[String]): DataFrame = {
+    val ps = parts.filter(_.startsWith("m_"))
+      .map(p => SnapshotManifest.partPath(path, p))
+    // Zone manifests are METADATA — O(file-count) rows — and every
+    // lifecycle op / pruned read touches them several times, so the
+    // common homogeneous-schema case is read ON THE DRIVER and
+    // returned as a LocalRelation: downstream filters/projections
+    // fold at optimization time (ConvertToLocalRelation) and every
+    // `.collect()` over it is job-free, with Catalyst still
+    // evaluating the expressions — semantics identical to the
+    // spark.read path by LocalParquetSpec's pinned type mapping.
+    // Oversized (>64 MB) or type-exotic or schema-heterogeneous
+    // manifests fall back to the distributed read; mergeSchema
+    // (a distributed footer-merge JOB) only for genuinely
+    // heterogeneous parts.
+    val sts =
+      try dataFiles(SnapshotManifest.fsOf(spark, path), ps.map(new Path(_)))
+      catch { case scala.util.control.NonFatal(_) => Seq.empty }
+    LocalParquet.readAll(
+        spark.sparkContext.hadoopConfiguration, sts) match {
+      case Some((schema, rows)) =>
+        spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      case None =>
+        if (ps.lengthCompare(1) == 0) spark.read.parquet(ps.head)
+        else {
+          val schemas = ps.map(p => spark.read.parquet(p).schema).distinct
+          if (schemas.lengthCompare(1) == 0)
+            spark.read.schema(schemas.head).parquet(ps: _*)
+          else spark.read.option("mergeSchema", "true").parquet(ps: _*)
+        }
+    }
+  }
+
+  /** The part list of `snap` (the current snapshot when None). Each op
+    * resolves it ONCE and derives its manifest and deletion vector
+    * from that one list: resolving `_latest` twice could pair one
+    * snapshot's files with the next one's deletion vector. */
   private def partsAsOf(spark: SparkSession, path: String,
                         snap: Option[String]): Option[Seq[String]] =
     snap.fold(SnapshotManifest.currentParts(spark, path))(s =>
       Some(SnapshotManifest.partsOf(spark, path, s)))
 
+  /** The snapshot a maintenance op bases its work on — a legacy table
+    * is migrated first — and its part list, read once: the op's
+    * manifest, deletion vector and CAS commit all see one snapshot. */
+  private def baseOf(spark: SparkSession, path: String,
+                     time: String): (Option[String], Seq[String]) = {
+    if (SnapshotManifest.currentSnap(spark, path).isEmpty)
+      writeZoneManifest(spark, path, time) // migrate legacy table
+    val snap = SnapshotManifest.currentSnap(spark, path)
+    (snap, snap.fold(Seq.empty[String])(SnapshotManifest.partsOf(spark, path, _)))
+  }
+
+  /** Data files directly under `dirs` — Spark's listing rule: names
+    * starting with `_` or `.` (markers, checksums) are not data. */
+  private def dataFiles(fs: org.apache.hadoop.fs.FileSystem,
+                        dirs: Seq[Path]): Seq[org.apache.hadoop.fs.FileStatus] =
+    dirs.flatMap(d => fs.listStatus(d).toSeq).filter { st =>
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }
+
+  /** The fixed schema of every `dv_*` part (what `spark.read` infers
+    * from one, all fields nullable) — given to the reader, so building
+    * a deletion-vector scan launches no schema-inference job. */
+  private val DvSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "file STRING, sym_bucket BIGINT, row_index BIGINT")
+
   /** The live deletion vector of a snapshot — union of its `dv_*`
     * parts, one row per deleted position (file, sym_bucket,
-    * row_index) — or None when the snapshot carries no deletes.
+    * row_index) — or None when the snapshot carries no deletes. The
+    * schema is a constant, so building the frame runs no job.
     *
     * JOIN-STRATEGY PIN: the [[minusDv]] anti-join must never
     * degenerate — a tiny DV broadcasts (the common case), but a DV
@@ -208,20 +241,53 @@ object Layout {
     * hint on the build side. */
   def deletionVectorAsOf(spark: SparkSession, path: String,
                          snap: Option[String]): Option[DataFrame] =
-    partsAsOf(spark, path, snap).flatMap { parts =>
-      val dv = parts.filter(_.startsWith("dv_"))
-      if (dv.isEmpty) None
-      else {
-        val df = spark.read.parquet(
-          dv.map(p => SnapshotManifest.partPath(path, p)): _*)
-        val fs = SnapshotManifest.fsOf(spark, path)
-        val bytes = dv.map(p => fs.getContentSummary(
-          new Path(SnapshotManifest.partPath(path, p))).getLength).sum
-        val thr = org.apache.spark.sql.internal.SQLConf.get
-          .autoBroadcastJoinThreshold
-        Some(if (thr >= 0 && bytes <= thr) df else df.hint("shuffle_hash"))
-      }
+    partsAsOf(spark, path, snap).flatMap(deletionVector(spark, path, _))
+
+  private def deletionVector(spark: SparkSession, path: String,
+                             parts: Seq[String]): Option[DataFrame] = {
+    val dv = parts.filter(_.startsWith("dv_"))
+    if (dv.isEmpty) None
+    else {
+      val df = spark.read.schema(DvSchema).parquet(
+        dv.map(p => SnapshotManifest.partPath(path, p)): _*)
+      val fs = SnapshotManifest.fsOf(spark, path)
+      val bytes = dv.map(p => fs.getContentSummary(
+        new Path(SnapshotManifest.partPath(path, p))).getLength).sum
+      val thr = org.apache.spark.sql.internal.SQLConf.get
+        .autoBroadcastJoinThreshold
+      Some(if (thr >= 0 && bytes <= thr) df else df.hint("shuffle_hash"))
     }
+  }
+
+  /** Σ rows of the part list's deletion vector, from the `dv_*` parts'
+    * footers — exact, and no job. */
+  private def dvRows(spark: SparkSession, path: String,
+                     parts: Seq[String]): Long =
+    LocalParquet.footerRows(spark.sparkContext.hadoopConfiguration,
+      dataFiles(SnapshotManifest.fsOf(spark, path),
+        parts.filter(_.startsWith("dv_"))
+          .map(p => new Path(SnapshotManifest.partPath(path, p)))))
+
+  /** Scan the data files `rel` (manifest-relative names) of the table
+    * at `path` — every Layout scan of live files is built here.
+    * Without `mergeSchema` the schema is the one Spark's writer put in
+    * the footer of the file Spark's own non-merging inference reads —
+    * the first in path order, whatever order the paths are passed in
+    * — so the scan is planned without the inference job Spark
+    * launches even for one footer. A footer without that key (a
+    * non-Spark writer) or one that carries the partition column falls
+    * back to the inference. */
+  private def scanFiles(spark: SparkSession, path: String, rel: Seq[String],
+                        mergeSchema: Boolean = false): DataFrame = {
+    val r = spark.read.option("basePath", path)
+    val reader =
+      if (mergeSchema) r.option("mergeSchema", "true")
+      else LocalParquet.sparkSchemaOf(spark.sparkContext.hadoopConfiguration,
+          new Path(path, rel.min))
+        .filterNot(_.fieldNames.exists(_.equalsIgnoreCase("sym_bucket")))
+        .fold(r)(r.schema)
+    reader.parquet(rel.map(f => globEscape(new Path(path, f).toString)): _*)
+  }
 
   /** All retained snapshot names, ascending by commit order — the
     * time-travel axis. Retention is governed by [[vacuum]]
@@ -294,11 +360,8 @@ object Layout {
                         rebuild: Boolean = false): Unit = {
     require(columns.nonEmpty && columns.distinct.size == columns.size,
       s"buildBloomIndexes: columns must be non-empty and distinct: $columns")
-    if (SnapshotManifest.currentSnap(spark, path).isEmpty)
-      writeZoneManifest(spark, path, time) // migrate legacy table
-    val baseSnap = SnapshotManifest.currentSnap(spark, path)
-    val m = manifest(spark, path).get
-    val cur = SnapshotManifest.currentParts(spark, path).getOrElse(Seq.empty)
+    val (baseSnap, cur) = baseOf(spark, path, time)
+    val m = zoneManifest(spark, path, cur)
     val bfParts = cur.filter(_.startsWith("bf_"))
     // per-column covered file sets + per-part column sets — names
     // only, bounded by part count × FILE count
@@ -321,21 +384,19 @@ object Layout {
     val toIndex: Map[String, Set[String]] = columns.map { c =>
       c -> liveFiles.filterNot(covered(c)).toSet
     }.toMap
-    val scanFiles = toIndex.values.flatten.toSeq.distinct
-    if (scanFiles.isEmpty) return // fully covered — nothing to commit
+    val toScan = toIndex.values.flatten.toSeq.distinct
+    if (toScan.isEmpty) return // fully covered — nothing to commit
     val sized =
       if (expectedItemsPerFile > 0) expectedItemsPerFile
       else {
-        val scanSet = scanFiles.toSet
+        val scanSet = toScan.toSet
         val known = liveRows.collect { case (f, Some(n)) if scanSet(f) => n }
         if (known.isEmpty) 1000000L else math.max(64L, known.max * 5 / 4)
       }
-    val files = scanFiles.map(r => globEscape(new Path(path, r).toString))
     val bloomAggs = columns.map(c =>
       graft.functions.BloomAgg.bloom_agg(
         xxhash64(col(c)), sized, fpp).as(s"__bloom_$c"))
-    val agg = spark.read.option("basePath", path)
-      .parquet(files.toIndexedSeq: _*)
+    val agg = scanFiles(spark, path, toScan)
       .groupBy(regexp_extract(col("_metadata.file_path"),
         "(sym_bucket=[^/]+/[^/]+)$", 1).as("file"))
       .agg(bloomAggs.head, bloomAggs.tail: _*)
@@ -429,14 +490,16 @@ object Layout {
           case _ => Seq.empty
         }
       }
-      if (files.isEmpty) return Some(Array.empty[Row])
-      val rows = files.map { st =>
+      // no bucket files: a mistyped or empty root — the aggregation
+      // then fails loudly instead of an empty manifest being committed
+      if (files.isEmpty) return None
+      val zones = LocalParquet.footerZones(conf, files, time, dt)
+        .getOrElse(return None)
+      val rows = files.zip(zones).map { case (st, (n, mn, mx)) =>
         val bucket: Long = st.getPath.getParent.toString match {
           case bucketRe(b) => b.toLong
           case _ => return None
         }
-        val (n, mn, mx) = LocalParquet.footerZone(conf, st, time, dt)
-          .getOrElse(return None)
         val q = fs.makeQualified(st.getPath).toString
         Row(q.stripPrefix(qroot).stripPrefix("/"), bucket, mn, mx, n)
       }
@@ -636,35 +699,39 @@ object Layout {
     * a key frame, which a `Column` predicate cannot express). */
   def deleteWhere(spark: SparkSession, path: String, time: String,
                   selector: DataFrame => DataFrame): Long = {
-    if (SnapshotManifest.currentSnap(spark, path).isEmpty)
-      writeZoneManifest(spark, path, time) // migrate legacy table
-    val baseSnap = SnapshotManifest.currentSnap(spark, path)
-    stageDvPart(spark, path, selector) match {
+    val (baseSnap, base) = baseOf(spark, path, time)
+    stageDvPart(spark, path, base, manifestFiles(spark, path, base), selector) match {
       case None => 0L
       case Some((part, n)) =>
         failpoint("delete-before-flip")
-        val parts = SnapshotManifest.currentParts(spark, path)
-          .getOrElse(Seq.empty) :+ part
-        SnapshotManifest.commit(spark, path, parts, Some(baseSnap))
+        SnapshotManifest.commit(spark, path, base :+ part, Some(baseSnap))
         n
     }
   }
 
+  /** The data files a part list's zone manifest references. */
+  private def manifestFiles(spark: SparkSession, path: String,
+                            parts: Seq[String]): Seq[String] =
+    if (!parts.exists(_.startsWith("m_"))) Seq.empty
+    else zoneManifest(spark, path, parts).select(col("file")).collect()
+      .map(_.getString(0)).toSeq // bounded by FILE count
+
   /** Stage (write, do NOT commit) a deletion-vector part for the
-    * selector's hits over the current live view; the caller folds the
-    * returned part into its own snapshot commit — [[deleteWhere]]'s
-    * single-op commit, or [[applyChanges]]' ONE-COMMIT batch covering
-    * the delete and the append together. None when nothing matched. */
+    * selector's hits over the live rows of `files` under the part
+    * list `base`; the caller folds the returned part into its own
+    * snapshot commit — [[deleteWhere]]'s single-op commit,
+    * [[expireBefore]]'s, or [[applyChanges]]' ONE-COMMIT batch
+    * covering the delete and the append together. Returns the part
+    * and its row count — read from the staged part's footers, so it
+    * is exact under task retries and costs no job — or None when
+    * nothing matched. */
   private def stageDvPart(spark: SparkSession, path: String,
+                          base: Seq[String], files: Seq[String],
                           selector: DataFrame => DataFrame)
       : Option[(String, Long)] = {
-    val m = manifest(spark, path).get
-    val files = m.select(col("file")).collect().map(r =>
-      globEscape(new Path(path, r.getString(0)).toString))
     if (files.isEmpty) return None
-    val scanned = withPos(
-      spark.read.option("basePath", path).parquet(files.toIndexedSeq: _*))
-    val survivors = deletionVectorAsOf(spark, path, None)
+    val scanned = withPos(scanFiles(spark, path, files))
+    val survivors = deletionVector(spark, path, base)
       .fold(scanned)(dv => minusDv(scanned, dv))
     val hits = selector(survivors)
       .select(col("__dv_file").as("file"),
@@ -675,16 +742,12 @@ object Layout {
     fs.mkdirs(mDir)
     val part = SnapshotManifest.newPartName("dv")
     val tmp = new Path(mDir, s".tmp_$part")
-    // the matched-row count rides the write itself as an observed
-    // metric — the old post-write `read.count()` was a second Spark
-    // job per delete (~70 ms of pure overhead at any scale)
-    val obs = org.apache.spark.sql.Observation()
-    hits.observe(obs, count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(tmp.toString)
-    val n = obs.get("n").asInstanceOf[Long]
+    hits.write.mode("overwrite").parquet(tmp.toString)
+    val n = LocalParquet.footerRows(spark.sparkContext.hadoopConfiguration,
+      dataFiles(fs, Seq(tmp)))
     if (n == 0L) { fs.delete(tmp, true); return None }
     if (!fs.rename(tmp, new Path(mDir, part)))
-      throw new java.io.IOException(s"delete: dv part rename failed: $part")
+      throw new java.io.IOException(s"dv part rename failed: $part")
     Some((part, n))
   }
 
@@ -705,10 +768,8 @@ object Layout {
     * (filesDropped, straddleRowsDeleted). */
   def expireBefore(spark: SparkSession, path: String, time: String,
                    cutoff: Column): (Int, Long) = {
-    if (SnapshotManifest.currentSnap(spark, path).isEmpty)
-      writeZoneManifest(spark, path, time) // migrate legacy table
-    val baseSnap = SnapshotManifest.currentSnap(spark, path)
-    val live = manifest(spark, path).get
+    val (baseSnap, base) = baseOf(spark, path, time)
+    val live = zoneManifest(spark, path, base)
     val schema = live.schema
     val liveRows = live.collect() // bounded by FILE count
     // cast the cutoff to the zone-bound (= time column) type so a
@@ -727,39 +788,8 @@ object Layout {
     val droppedSet = dropped.map(_.getString(0)).toSet
     val straddle = liveRows.filterNot(r => droppedSet(r.getString(0)))
       .filter(r => lt(r.get(2))) // zmin < cutoff ≤ zmax
-    val fs = SnapshotManifest.fsOf(spark, path)
-    // (part, rows deleted); the count rides the DV write as an
-    // observed metric — the old shape paid TWO extra jobs per expiry
-    // (a post-write isEmpty probe + a separate count)
-    val dvPart: Option[(String, Long)] =
-      if (straddle.isEmpty) None
-      else {
-        val files = straddle.map(r =>
-          globEscape(new Path(path, r.getString(0)).toString))
-        val scanned = withPos(spark.read.option("basePath", path)
-          .parquet(files.toIndexedSeq: _*))
-        val survivors = deletionVectorAsOf(spark, path, None)
-          .fold(scanned)(dv => minusDv(scanned, dv))
-        val hits = survivors.filter(col(time) < cutLit)
-          .select(col("__dv_file").as("file"),
-            col("sym_bucket").cast("long").as("sym_bucket"),
-            col("__dv_pos").as("row_index"))
-        val mDir = new Path(path, SnapshotManifest.ManifestsDir)
-        fs.mkdirs(mDir)
-        val part = SnapshotManifest.newPartName("dv")
-        val tmp = new Path(mDir, s".tmp_$part")
-        val obs = org.apache.spark.sql.Observation()
-        hits.observe(obs, count(lit(1)).as("n"))
-          .write.mode("overwrite").parquet(tmp.toString)
-        val n = obs.get("n").asInstanceOf[Long]
-        if (n == 0L) {
-          fs.delete(tmp, true); None
-        } else {
-          if (!fs.rename(tmp, new Path(mDir, part)))
-            throw new java.io.IOException(s"expire: dv rename failed: $part")
-          Some((part, n))
-        }
-      }
+    val dvPart = stageDvPart(spark, path, base,
+      straddle.map(_.getString(0)).toSeq, _.filter(col(time) < cutLit))
     val straddleDeleted = dvPart.fold(0L)(_._2)
     if (dropped.nonEmpty || dvPart.nonEmpty) {
       val keptRows = liveRows.filterNot(r => droppedSet(r.getString(0)))
@@ -767,9 +797,8 @@ object Layout {
       // and bloom-index parts stay referenced (expiry only NARROWS the
       // file list — surviving files' entries are still valid; entries
       // for dropped files dangle harmlessly until compact folds them)
-      val keptDvParts = SnapshotManifest.currentParts(spark, path)
-        .getOrElse(Seq.empty)
-        .filter(p => p.startsWith("dv_") || p.startsWith("bf_"))
+      val keptDvParts =
+        base.filter(p => p.startsWith("dv_") || p.startsWith("bf_"))
       val mPart = writeManifestPart(spark, path, schema, keptRows)
       // SHRINK PROVENANCE for the hop-chain re-verifiers
       // ([[graft.plans.TableState.ShrinkHop]]): the dropped FILE LIST
@@ -821,52 +850,39 @@ object Layout {
         "window crosses a physical rewrite (compact/re-create); " +
         "read the change feed per append/delete window instead")
     val fresh = pb.filterNot(pa)
-    def readParts(ps: Seq[String]): DataFrame =
-      spark.read.parquet(ps.map(p => SnapshotManifest.partPath(path, p)): _*)
-    def scanFiles(fs: Seq[String]): DataFrame =
-      withPos(spark.read.option("basePath", path).parquet(
-        fs.map(f => globEscape(new Path(path, f).toString)): _*))
-    val freshM = fresh.filter(_.startsWith("m_"))
-    val freshDv = fresh.filter(_.startsWith("dv_"))
-    val insFiles =
-      if (freshM.isEmpty) Array.empty[String]
-      else readParts(freshM).select(col("file")).collect().map(_.getString(0))
+    val insFiles = manifestFiles(spark, path, fresh)
+    val freshDv = deletionVector(spark, path, fresh)
     val inserts =
       if (insFiles.isEmpty) None
       else {
-        val sc = scanFiles(insFiles.toIndexedSeq)
+        val sc = withPos(scanFiles(spark, path, insFiles))
         // window DVs are the only ones that can reference these files
-        val lv = if (freshDv.isEmpty) sc else minusDv(sc, readParts(freshDv))
+        val lv = freshDv.fold(sc)(minusDv(sc, _))
         Some(lv.drop("__dv_file", "__dv_pos")
           .withColumn("_change_type", lit("insert")))
       }
-    val deletes =
-      if (freshDv.isEmpty) None
+    val deletes = freshDv.flatMap { dv =>
+      val ins = insFiles.toSet
+      val delFiles = dv.select(col("file")).distinct().collect()
+        .map(_.getString(0)).filterNot(ins) // bounded by FILE count
+      if (delFiles.isEmpty) None
       else {
-        val dv = readParts(freshDv)
-        val ins = insFiles.toSet
-        val delFiles = dv.select(col("file")).distinct().collect()
-          .map(_.getString(0)).filterNot(ins) // bounded by FILE count
-        if (delFiles.isEmpty) None
-        else {
-          val sc = scanFiles(delFiles.toIndexedSeq)
-          Some(sc.join(dv, sc("__dv_file") === dv("file") &&
-              sc("__dv_pos") === dv("row_index"), "left_semi")
-            .drop("__dv_file", "__dv_pos")
-            .withColumn("_change_type", lit("delete")))
-        }
+        val sc = withPos(scanFiles(spark, path, delFiles.toIndexedSeq))
+        Some(sc.join(dv, sc("__dv_file") === dv("file") &&
+            sc("__dv_pos") === dv("row_index"), "left_semi")
+          .drop("__dv_file", "__dv_pos")
+          .withColumn("_change_type", lit("delete")))
       }
+    }
     (inserts, deletes) match {
       case (Some(i), Some(d)) => i.unionByName(d)
       case (Some(i), None)    => i
       case (None, Some(d))    => d
       case (None, None) =>
         // empty window: keep the table schema via any live file
-        val m = manifestAsOf(spark, path, Some(toSnap)).get
-        val any = m.select(col("file")).limit(1).collect()
+        val any = manifestFiles(spark, path, pb)
         require(any.nonEmpty, s"changes: snapshot $toSnap lists no files")
-        spark.read.option("basePath", path)
-          .parquet(globEscape(new Path(path, any(0).getString(0)).toString))
+        scanFiles(spark, path, any.take(1))
           .limit(0).withColumn("_change_type", lit(""))
     }
   }
@@ -964,9 +980,12 @@ object Layout {
       // windows read the batch exactly as two-commit batches did.
       migrateIfLegacy(spark, targetPath, time)
       val baseSnap = SnapshotManifest.currentSnap(spark, targetPath)
+      val base = baseSnap.fold(Seq.empty[String])(
+        SnapshotManifest.partsOf(spark, targetPath, _))
       val dvPart =
         if (sweepEmpty) None
-        else stageDvPart(spark, targetPath,
+        else stageDvPart(spark, targetPath, base,
+          manifestFiles(spark, targetPath, base),
           scan => scan.join(sweep, keys, "left_semi"))
       val insPart =
         if (nIns == 0L) None
@@ -975,9 +994,8 @@ object Layout {
       val newParts = dvPart.map(_._1).toSeq ++ insPart.toSeq
       if (newParts.nonEmpty) {
         failpoint("applychanges-before-flip")
-        val parts = SnapshotManifest.currentParts(spark, targetPath)
-          .getOrElse(Seq.empty) ++ newParts
-        SnapshotManifest.commit(spark, targetPath, parts, Some(baseSnap))
+        SnapshotManifest.commit(spark, targetPath, base ++ newParts,
+          Some(baseSnap))
       }
       failpoint("applychanges-before-done")
       epoch.foreach { e =>
@@ -1038,9 +1056,11 @@ object Layout {
     * behavior cannot drift apart. */
   def planMaintenance(spark: SparkSession, path: String,
                       filesPerBucket: Int = 4): Seq[BucketMaintenance] = {
-    val m = manifest(spark, path).getOrElse(return Seq.empty)
+    val parts = SnapshotManifest.currentParts(spark, path)
+      .getOrElse(return Seq.empty)
+    val m = zoneManifest(spark, path, parts)
     planFrom(m.columns.contains("n_rows"), m.collect(),
-      deletionVectorAsOf(spark, path, None), filesPerBucket)
+      deletionVector(spark, path, parts), filesPerBucket)
   }
 
   /** [[planMaintenance]] over ALREADY-READ manifest rows + DV —
@@ -1104,10 +1124,8 @@ object Layout {
               filesPerBucket: Int = 4): Int = {
     val rootP = new Path(path)
     val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (SnapshotManifest.currentSnap(spark, path).isEmpty)
-      writeZoneManifest(spark, path, time) // migrate legacy table
-    val baseSnap = SnapshotManifest.currentSnap(spark, path)
-    val live = manifest(spark, path).get
+    val (baseSnap, base) = baseOf(spark, path, time)
+    val live = zoneManifest(spark, path, base)
     val schema = live.schema
     val liveRows = live.collect() // bounded by FILE count
     // target selection IS the planner's output: dv-pressured buckets
@@ -1115,7 +1133,7 @@ object Layout {
     // the deletes into clean files, and the folded snapshot drops every
     // dv_* part — which is only sound if ALL dv-touched buckets were
     // rewritten this pass)
-    val dvOpt = deletionVectorAsOf(spark, path, None)
+    val dvOpt = deletionVector(spark, path, base)
     val plan = planFrom(live.columns.contains("n_rows"), liveRows,
       dvOpt, filesPerBucket)
     val dvBuckets: Set[Long] = plan.filter(_.dvPressure).map(_.bucket).toSet
@@ -1142,9 +1160,7 @@ object Layout {
     def processBucket(bucket: Long, rows: Array[Row])
         : (Array[String], Array[Row], Option[DataFrame]) = {
       org.apache.spark.sql.SparkSession.setActiveSession(spark)
-      val files = rows.map(r =>
-        globEscape(new Path(rootP, r.getString(0)).toString))
-      val bdf0 = spark.read.option("basePath", path).parquet(files.toIndexedSeq: _*)
+      val bdf0 = scanFiles(spark, path, rows.map(_.getString(0)).toSeq)
       val (bdf, removedHere) = dvOpt match {
         case Some(dv) if dvBuckets(bucket) =>
           val posed = withPos(bdf0)
@@ -1161,9 +1177,7 @@ object Layout {
           val rem =
             if (dvFiles.isEmpty) None
             else {
-              val touched = withPos(spark.read.option("basePath", path)
-                .parquet(dvFiles.map(f =>
-                  globEscape(new Path(rootP, f).toString)).toIndexedSeq: _*))
+              val touched = withPos(scanFiles(spark, path, dvFiles.toSeq))
               Some(touched.join(bdv,
                 touched("__dv_file") === bdv("file") &&
                   touched("__dv_pos") === bdv("row_index"), "left_semi")
@@ -1222,8 +1236,7 @@ object Layout {
     val replaced: Set[String] = bucketResults.flatMap(_._1).toSet
     val freshRows: Array[Row] = bucketResults.flatMap(_._2).toArray
     val removedDfs: Seq[DataFrame] = bucketResults.flatMap(_._3)
-    val nParts = SnapshotManifest.currentParts(spark, path).map(_.size).getOrElse(0)
-    if (targets.nonEmpty || nParts > 1) {
+    if (targets.nonEmpty || base.size > 1) {
       val folded = liveRows.filterNot(r => replaced(r.getString(0))) ++ freshRows
       // stage the provenance part BEFORE the flip so it commits
       // atomically with the folded manifest. An EMPTY part (pure
@@ -1234,8 +1247,7 @@ object Layout {
       val removedSrc: Option[DataFrame] = removedDfs
         .reduceOption(_ unionByName _)
         .orElse(liveRows.headOption.map(r =>
-          spark.read.option("basePath", path).parquet(
-            globEscape(new Path(rootP, r.getString(0)).toString)).limit(0)))
+          scanFiles(spark, path, Seq(r.getString(0))).limit(0)))
       val rwPart = removedSrc.map { df =>
         val mDir = new Path(path, SnapshotManifest.ManifestsDir)
         fs.mkdirs(mDir)
@@ -1279,15 +1291,12 @@ object Layout {
                 filesPerBucket: Int = 4): Unit = {
     val rootP = new Path(path)
     val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (SnapshotManifest.currentSnap(spark, path).isEmpty)
-      writeZoneManifest(spark, path, time) // migrate legacy table
-    val baseSnap = SnapshotManifest.currentSnap(spark, path)
-    val m = manifest(spark, path).get
+    val (baseSnap, base) = baseOf(spark, path, time)
+    val m = zoneManifest(spark, path, base)
     val files = m.select(col("file")).collect().map(_.getString(0))
     require(files.nonEmpty, s"recluster: $path has no live files")
-    val sc0 = spark.read.option("basePath", path).parquet(
-      files.map(f => globEscape(new Path(rootP, f).toString)).toIndexedSeq: _*)
-    val live = deletionVectorAsOf(spark, path, None) match {
+    val sc0 = scanFiles(spark, path, files.toSeq)
+    val live = deletionVector(spark, path, base) match {
       case Some(dv) => minusDv(withPos(sc0), dv).drop("__dv_file", "__dv_pos")
       case None => sc0
     }
@@ -1348,14 +1357,7 @@ object Layout {
     // dead (dv_/bf_ parts reference data files too, but only as
     // annotations on m_-listed files — a dangling dv/bf entry must
     // not keep an expired file alive)
-    // ONE footer-bounded job over every kept m_ part (was one Spark
-    // job per part — pure per-job overhead on multi-part snapshots)
-    val mParts = keepParts.filter(_.startsWith("m_"))
-    val liveFiles =
-      if (mParts.isEmpty) Set.empty[String]
-      else spark.read.option("mergeSchema", "true")
-        .parquet(mParts.map(p => SnapshotManifest.partPath(path, p)): _*)
-        .select(col("file")).collect().map(_.getString(0)).toSet
+    val liveFiles = manifestFiles(spark, path, keepParts).toSet
     fs.listStatus(rootP).foreach { st =>
       val n = st.getPath.getName
       if (st.isDirectory && n.startsWith(".stage_")) fs.delete(st.getPath, true)
@@ -1372,11 +1374,14 @@ object Layout {
   }
 
   /** METADATA-ONLY COUNT(*) — the table's live row count from the
-    * snapshot log alone: Σ manifest `n_rows` − |deletion vector|.
-    * No data file is opened when stats are complete (the normal case:
-    * every write/append/compact records `n_rows`); files from
-    * pre-stat manifest parts fall back to a parquet footer count of
-    * exactly those files. At 100 TB this answers the most common
+    * snapshot log alone: Σ manifest `n_rows` − |deletion vector|, the
+    * deletion vector's size summed from its `dv_*` parts' footers.
+    * No data file is opened and NO Spark job runs when stats are
+    * complete (the normal case: every write/append/compact records
+    * `n_rows`; LayoutSpec pins 0 jobs); files from pre-stat manifest
+    * parts fall back to a parquet footer count job over exactly those
+    * files. The snapshot is resolved once, so the manifest and the
+    * deletion vector are the same snapshot's. At 100 TB this answers the most common
     * dashboard probe in O(manifest parts) instead of a full scan —
     * the same AddFile-stats trick Delta's COUNT(*) optimization
     * pulls. DV-aware by construction: `n_rows` is physical, the
@@ -1385,8 +1390,9 @@ object Layout {
     * `snap` from [[snapshots]] to count a time-travel version. */
   def countFast(spark: SparkSession, path: String,
                 snap: Option[String] = None): Long = {
-    val m = manifestAsOf(spark, path, snap).getOrElse(
+    val parts = partsAsOf(spark, path, snap).getOrElse(
       throw new IllegalArgumentException(s"countFast: no snapshot log at $path"))
+    val m = zoneManifest(spark, path, parts)
     val rows = // bounded by FILE count, like every manifest consumer
       if (m.columns.contains("n_rows"))
         m.select(col("file"), col("n_rows")).collect()
@@ -1395,11 +1401,9 @@ object Layout {
     val unknown = rows.collect { case r if r.isNullAt(1) => r.getString(0) }
     val fallback =
       if (unknown.isEmpty) 0L
-      else spark.read.option("basePath", path)
-        .parquet(unknown.map(f => globEscape(new Path(path, f).toString)): _*)
+      else scanFiles(spark, path, unknown.toSeq)
         .count() // footer-count job over ONLY the stat-less files
-    val dv = deletionVectorAsOf(spark, path, snap).fold(0L)(_.count())
-    known + fallback - dv
+    known + fallback - dvRows(spark, path, parts)
   }
 
   /** METADATA-SIZED JOIN SIDE — the cost-based broadcast decision made
@@ -1546,13 +1550,21 @@ object Layout {
     * file list from that snapshot's manifest instead of the current
     * one — the table exactly as of that commit, readable as long as
     * [[vacuum]]'s retention (keep-last-2 by default) still holds the
-    * snapshot's files (the s15 oracle). */
+    * snapshot's files (the s15 oracle).
+    *
+    * JOB-FREE BUILD: the snapshot is resolved once (its manifest and
+    * deletion vector always belong to the same commit), the manifest
+    * is read on the driver, the scan takes its schema from a data
+    * file's footer and the deletion vector has a constant schema — so
+    * building the frame launches no Spark job (LayoutSpec pins 0 jobs
+    * on a table with two deletion-vector parts). */
   /** SCHEMA EVOLUTION: `mergeSchema = true` unions the file schemas
     * across the snapshot (parquet schema merging), so batches appended
     * with ADDED columns read back with nulls for pre-evolution rows —
     * additive evolution only, the Delta/Iceberg default posture.
     * Off by default: merging reads every file footer up front, which
-    * a stable-schema table shouldn't pay. */
+    * a stable-schema table shouldn't pay; without it the schema is the
+    * first scanned file's, as in Spark's own non-merging read. */
   /** POINT-PROBE SKIPPING: `pointEq = Some((column, literal))` prunes
     * the file list through the column's per-file bloom index
     * ([[buildBloomIndex]]) before scanning — files whose filter proves
@@ -1576,8 +1588,11 @@ object Layout {
       df.filter(col("sym_bucket") === bucketOf(lit(v), numBuckets))
     }
     def fullScan = bucketPruned(rd.parquet(path))
-    val base = manifestAsOf(spark, path, asOfSnap) match {
-      case Some(m) =>
+    val resolved = partsAsOf(spark, path, asOfSnap)
+    failpoint("read-after-resolve")
+    val base = resolved match {
+      case Some(parts) =>
+        val m = zoneManifest(spark, path, parts)
         val pruned0 = bucketPruned(m)
         val pruned = timeRange.fold(pruned0) { case (lo, hi) =>
           pruned0.filter(col("zmax") >= lo && col("zmin") <= hi)
@@ -1585,21 +1600,19 @@ object Layout {
         // bounded by FILE count (of one bucket under a key predicate)
         val rel0 = pruned.select(col("file")).collect().map(_.getString(0))
         val rel = pointEq.fold(rel0) { case (bc, v) =>
-          bloomPrune(spark, path, asOfSnap, bc, v, rel0)
+          bloomPrune(spark, path, parts, bc, v, rel0)
         }
-        val files = rel.map(r => globEscape(new Path(path, r).toString))
-        if (files.isEmpty) {
+        if (rel.isEmpty) {
           // nothing overlaps: keep the schema via any live file
           val any = m.select(col("file")).limit(1).collect()
           if (any.isEmpty) fullScan.limit(0)
-          else rd
-            .parquet(globEscape(new Path(path, any(0).getString(0)).toString))
+          else scanFiles(spark, path, Seq(any(0).getString(0)), mergeSchema)
             .limit(0)
         } else {
-          val scanned = rd.parquet(files.toIndexedSeq: _*)
+          val scanned = scanFiles(spark, path, rel.toSeq, mergeSchema)
           // merge-on-read: drop positions the live deletion vector
           // covers (no-op when the snapshot carries no deletes)
-          val lv = deletionVectorAsOf(spark, path, asOfSnap).fold(scanned)(
+          val lv = deletionVector(spark, path, parts).fold(scanned)(
             dv => minusDv(withPos(scanned), dv).drop("__dv_file", "__dv_pos"))
           bucketPruned(lv)
         }
@@ -1632,10 +1645,9 @@ object Layout {
     * FILE NAMES come back to the driver — the filter bytes
     * (file-count × ~MB at scale) never do. */
   private def bloomPrune(spark: SparkSession, path: String,
-                         snap: Option[String], column: String, value: Column,
+                         parts: Seq[String], column: String, value: Column,
                          rel: Array[String]): Array[String] = {
-    val bfParts = partsAsOf(spark, path, snap)
-      .getOrElse(Seq.empty).filter(_.startsWith("bf_"))
+    val bfParts = parts.filter(_.startsWith("bf_"))
     if (bfParts.isEmpty || rel.isEmpty) return rel
     val entries = spark.read.parquet(
         bfParts.map(p => SnapshotManifest.partPath(path, p)): _*)
@@ -1643,9 +1655,7 @@ object Layout {
     val covered = entries.select(col("file"))
       .collect().map(_.getString(0)).toSet // names only, FILE count
     if (covered.isEmpty) return rel
-    val dt = spark.read
-      .parquet(globEscape(new Path(path, rel(0)).toString))
-      .schema(column).dataType
+    val dt = scanFiles(spark, path, Seq(rel(0))).schema(column).dataType
     val hashed = spark.range(1)
       .select(xxhash64(value.cast(dt))).head.getLong(0)
     val might = udf((b: Array[Byte]) =>

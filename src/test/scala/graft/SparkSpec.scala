@@ -20,6 +20,37 @@ trait SparkSpec extends AnyFunSuite {
       allNodes(q.plan)
     case other => Seq(other)
   }
+
+  /** Run `f` and count the Spark jobs it started: its jobs carry a
+    * local-property tag, and a tagged no-op job after it marks the end
+    * of its events on the listener bus. */
+  def jobsOf[A](f: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val key = "graft.test.jobsOf"
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(key)).foreach {
+          case `tag` => jobs.incrementAndGet()
+          case t if t == tag + "/end" => drained.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      val r = f
+      sc.setLocalProperty(key, tag + "/end")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (r, jobs.get())
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+  }
 }
 
 object SparkSpec {

@@ -943,6 +943,151 @@ class LayoutSpec extends SparkSpec {
       Layout.read(spark, dir, "symbol", "ts", numBuckets = 4).count())
   }
 
+  test("a compact committing right after a read resolves its snapshot leaves that read on the snapshot") {
+    val dir = Files.createTempDirectory("graft_resolve").toString + "/t"
+    val df = (1 to 1000).map(i => (s"SYM${i % 10}", i.toLong, i * 1.5))
+      .toDF("symbol", "ts", "close")
+    Layout.writeClusteredZoned(df, dir, "symbol", "ts",
+      numBuckets = 4, filesPerBucket = 2)
+    Layout.delete(spark, dir, "ts", $"ts" <= 100)
+    Layout.delete(spark, dir, "ts", $"ts" > 900)
+    // the compact folds both deletion vectors into new files and
+    // commits a snapshot without dv parts; a read that took its files
+    // from the old snapshot and its deletion vector from the new one
+    // would bring the deleted rows back
+    Layout.testInterleave = Some(("read-after-resolve", () => {
+      assert(Layout.compact(spark, dir, "symbol", "ts", filesPerBucket = 2) > 0)
+    }))
+    val got = try Layout.read(spark, dir, "symbol", "ts", numBuckets = 4)
+        .select($"ts").as[Long].collect().toSet
+      finally Layout.testInterleave = None
+    assert(got == (101L to 900L).toSet)
+    assert(SnapshotManifest.currentParts(spark, dir).get
+      .forall(p => p.startsWith("m_") || p.startsWith("rw_")))
+    assert(Layout.read(spark, dir, "symbol", "ts", numBuckets = 4)
+      .select($"ts").as[Long].collect().toSet == (101L to 900L).toSet)
+  }
+
+  test("job counts: building a read and countFast run no job on a table with two DV parts") {
+    val dir = Files.createTempDirectory("graft_jobs").toString + "/t"
+    val df = (1 to 1000).map(i => (s"SYM${i % 10}", i.toLong, i * 1.5))
+      .toDF("symbol", "ts", "close")
+    Layout.writeClusteredZoned(df, dir, "symbol", "ts",
+      numBuckets = 4, filesPerBucket = 2)
+    Layout.delete(spark, dir, "ts", $"ts" <= 100)
+    Layout.delete(spark, dir, "ts", $"ts" > 900)
+    assert(SnapshotManifest.currentParts(spark, dir).get
+      .count(_.startsWith("dv_")) == 2)
+    val (read, buildJobs) = jobsOf(Layout.read(spark, dir, "symbol", "ts",
+      numBuckets = 4, symbolEq = Some("SYM1")))
+    assert(buildJobs == 0, s"$buildJobs jobs to build the read")
+    val (n, countJobs) = jobsOf(Layout.countFast(spark, dir))
+    assert(countJobs == 0, s"$countJobs jobs in countFast")
+    assert(n == 800L)
+    val (rows, collectJobs) = jobsOf(read.select($"ts").as[Long].collect())
+    assert(collectJobs <= 2, s"$collectJobs jobs in the read's collect")
+    assert(rows.toSet == (101L to 900L).filter(_ % 10 == 1).toSet)
+  }
+
+  test("read takes Spark's inferred schema from the footer, also after an append added a column") {
+    val dir = Files.createTempDirectory("graft_evolve").toString + "/t"
+    // 16 base files (part-00000..00015, four per bucket), then a
+    // 4-file append (part-00000..00003, one per bucket) WITH a new
+    // column: in buckets 1-3 the appended file comes first in path
+    // order although the manifest lists it last
+    val base = (1 to 800).map(i => (s"SYM${i % 40}", i.toLong, i * 1.5))
+      .toDF("symbol", "ts", "close")
+    Layout.writeClusteredZoned(base, dir, "symbol", "ts",
+      numBuckets = 4, filesPerBucket = 4)
+    Layout.appendClusteredZoned(
+      (801 to 1000).map(i => (s"SYM${i % 40}", i.toLong, i * 1.5, s"n$i"))
+        .toDF("symbol", "ts", "close", "note"),
+      dir, "symbol", "ts", numBuckets = 4, filesPerBucket = 1)
+    def inferred(files: Seq[String]) = spark.read.option("basePath", dir)
+      .parquet(files.map(f =>
+        Layout.globEscape(new org.apache.hadoop.fs.Path(dir, f).toString)): _*)
+      .schema
+    val m = Layout.manifest(spark, dir).get
+    assert(Layout.read(spark, dir, "symbol", "ts", numBuckets = 4).schema ==
+      inferred(m.select($"file").as[String].collect().toSeq))
+    val symbolOf = (0 until 40).map(i => s"SYM$i").toDF("s")
+      .select(Layout.bucketOf($"s", 4), $"s").as[(Long, String)].collect()
+      .toMap
+    assert(symbolOf.size == 4)
+    symbolOf.foreach { case (b, s) =>
+      val files = m.filter($"sym_bucket" === b)
+        .select($"file").as[String].collect().toSeq
+      val got = Layout.read(spark, dir, "symbol", "ts", numBuckets = 4,
+        symbolEq = Some(s)).schema
+      assert(got == inferred(files), s"bucket $b")
+      if (b > 0) assert(got.fieldNames.contains("note"), s"bucket $b")
+    }
+    assert(Layout.read(spark, dir, "symbol", "ts", numBuckets = 4,
+      mergeSchema = true).schema.fieldNames.contains("note"))
+  }
+
+  test("deleteWhere returns exactly the rows that vanished; an applyChanges sweep is counted from footers") {
+    val dir = Files.createTempDirectory("graft_delcount").toString + "/t"
+    val df = (1 to 1000).map(i => (s"SYM${i % 10}", i.toLong, i * 1.5))
+      .toDF("symbol", "ts", "close")
+    Layout.writeClusteredZoned(df, dir, "symbol", "ts",
+      numBuckets = 4, filesPerBucket = 2)
+    def live() = Layout.read(spark, dir, "symbol", "ts", numBuckets = 4).count()
+    val before = live()
+    val n = Layout.deleteWhere(spark, dir, "ts", _.filter($"ts" % 7 === 0))
+    assert(n == 142L && n == before - live())
+    // an upsert of 61 keys, 9 of them already deleted: the sweep's dv
+    // part holds the 52 live old versions, and the batch re-adds all 61
+    val parts = SnapshotManifest.currentParts(spark, dir).get.toSet
+    Layout.applyChanges(
+      (200 to 260).map(i => (s"SYM${i % 10}", i.toLong, -1.0, "insert"))
+        .toDF("symbol", "ts", "close", "_change_type"),
+      dir, "symbol", "ts", Seq("symbol", "ts"), numBuckets = 4)
+    val sweep = SnapshotManifest.currentParts(spark, dir).get
+      .filterNot(parts).filter(_.startsWith("dv_"))
+    assert(sweep.size == 1)
+    assert(spark.read.parquet(SnapshotManifest.partPath(dir, sweep.head))
+      .count() == 52L)
+    assert(live() == before - n - 52L + 61L)
+    assert(Layout.countFast(spark, dir) == live())
+  }
+
+  test("double zone columns take the exact aggregation: NaN and -0.0 bounds equal min/max") {
+    val dir = Files.createTempDirectory("graft_dzone").toString + "/t"
+    // footer statistics widen a -0.0 maximum to +0.0 and drop NaN
+    Layout.writeClusteredZoned(Seq(("S", -2.0), ("S", -0.0)).toDF("symbol", "t"),
+      dir, "symbol", "t", numBuckets = 1, filesPerBucket = 1)
+    Layout.appendClusteredZoned(
+      Seq(("S", Double.NaN), ("S", 1.0)).toDF("symbol", "t"),
+      dir, "symbol", "t", numBuckets = 1, filesPerBucket = 1)
+    val m = Layout.manifest(spark, dir).get.collect()
+    assert(m.length == 2)
+    m.foreach { r =>
+      val want = spark.read
+        .parquet(new org.apache.hadoop.fs.Path(dir, r.getString(0)).toString)
+        .agg(min($"t"), max($"t")).head()
+      // Double.compare tells -0.0 from 0.0 and equates NaN with NaN
+      assert(java.lang.Double.compare(r.getDouble(2), want.getDouble(0)) == 0 &&
+        java.lang.Double.compare(r.getDouble(3), want.getDouble(1)) == 0,
+        s"manifest ${r.get(2)}..${r.get(3)} vs data ${want.get(0)}..${want.get(1)}")
+    }
+  }
+
+  test("writeZoneManifest over an empty or mistyped root never commits an empty manifest") {
+    val empty = Files.createTempDirectory("graft_emptyroot").toString + "/t"
+    hfs.mkdirs(new org.apache.hadoop.fs.Path(empty))
+    intercept[Exception](Layout.writeZoneManifest(spark, empty, "ts"))
+    assert(SnapshotManifest.currentSnap(spark, empty).isEmpty)
+    // the table's parent directory: no bucket directory directly below
+    val parent = Files.createTempDirectory("graft_mistyped").toString
+    val df = (1 to 100).map(i => (s"SYM${i % 4}", i.toLong))
+      .toDF("symbol", "ts")
+    Layout.writeClustered(df, parent + "/t", "symbol", "ts", numBuckets = 4)
+    scala.util.Try(Layout.writeZoneManifest(spark, parent, "ts"))
+    assert(SnapshotManifest.currentSnap(spark, parent).isEmpty ||
+      Layout.countFast(spark, parent) == 100L)
+  }
+
   test("append write + read-back echo (S3/U1)") {
     val dir = Files.createTempDirectory("graft_append").toString + "/t"
     Seq(("AAA", 1, 10.0)).toDF("symbol", "ts", "close")

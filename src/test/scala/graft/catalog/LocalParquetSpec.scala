@@ -75,6 +75,44 @@ class LocalParquetSpec extends SparkSpec {
           -1, -0.0, false)))
   }
 
+  test("readAll returns spark.read's schema and rows for parts of both writers") {
+    val schema = StructType(Seq(
+      StructField("file", StringType),
+      StructField("n_rows", LongType, nullable = false), // REQUIRED
+      StructField("d", DateType),
+      StructField("ts", TimestampType),
+      StructField("x", DoubleType)))
+    val rows = Seq(
+      Row("sym_bucket=0/a.parquet", 3L, java.sql.Date.valueOf("1998-12-01"),
+        java.sql.Timestamp.valueOf("1997-06-15 12:34:56.789123"), -0.0),
+      Row(null, 0L, null, null, null))
+    val base = java.nio.file.Files
+      .createTempDirectory("local_parquet_read").toString
+    val conf = spark.sparkContext.hadoopConfiguration
+    // Spark's default INT96 timestamps are outside readAll's set (it
+    // declines them); manifest parts carry INT64 microseconds
+    val tsType = "spark.sql.parquet.outputTimestampType"
+    val prev = spark.conf.get(tsType)
+    spark.conf.set(tsType, "TIMESTAMP_MICROS")
+    try spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      .coalesce(1).write.parquet(s"$base/spark")
+    finally spark.conf.set(tsType, prev)
+    val fs = new Path(base).getFileSystem(conf)
+    fs.mkdirs(new Path(s"$base/local"))
+    LocalParquet.write(conf, new Path(s"$base/local", "part-00000.parquet"),
+      schema, rows)
+    for (dir <- Seq(s"$base/spark", s"$base/local")) {
+      val files = fs.listStatus(new Path(dir)).toSeq.filter(st =>
+        st.isFile && !st.getPath.getName.startsWith("_") &&
+          !st.getPath.getName.startsWith("."))
+      val (gotSchema, got) = LocalParquet.readAll(conf, files).get
+      val want = spark.read.parquet(dir)
+      assert(gotSchema === want.schema, dir)
+      assert(got.map(_.toString).sorted.toSeq ===
+        want.collect().map(_.toString).sorted.toSeq, dir)
+    }
+  }
+
   test("unsupported types are declined, not mangled") {
     assert(!LocalParquet.supports(StructType(Seq(
       StructField("x", DecimalType(18, 2))))))
