@@ -251,8 +251,9 @@ object ResultCache {
 
   /** Reclaim entries older than `olderThanMs` (mtime of the entry
     * dir) plus any orphaned staging dirs. Writer-side, after a grace
-    * period covering in-flight readers — the StatsCache/IndexIo
-    * single-maintainer contract. Returns directories removed. */
+    * period covering in-flight readers — the single-maintainer
+    * contract of [[SnapshotManifest.vacuumSnapDirs]]. Returns
+    * directories removed. */
   def vacuum(spark: org.apache.spark.sql.SparkSession, cacheDir: String,
              olderThanMs: Long): Int = {
     val fs = SnapshotManifest.fsOf(spark, cacheDir)

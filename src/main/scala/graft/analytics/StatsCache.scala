@@ -2,8 +2,8 @@ package graft.analytics
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.hadoop.fs.{FileSystem, Path}
-import java.nio.charset.StandardCharsets
+import org.apache.hadoop.fs.Path
+import graft.catalog.SnapshotManifest
 
 /** Materialized statistics memoization — the reference's
   * `statistics_cache` table (`sql/schema.sql:101-110`): probe before
@@ -20,39 +20,27 @@ import java.nio.charset.StandardCharsets
   * exactly one statistics job for all missing keys together (the
   * reference pays a per-symbol loop).
   *
-  * Concurrency contract: SINGLE WRITER, many readers. The pointer
-  * flip is write-temp-then-rename-with-OVERWRITE (atomic on HDFS and
-  * POSIX), so a concurrent reader always sees a complete pointer
-  * (never torn, never missing); but two
-  * concurrent writeBacks would base-read the same snapshot and the
-  * last rename would silently drop the other's upserts — serialize
-  * write-backs externally (a real deployment gets this from the
-  * table format's optimistic commit). Run [[vacuum]] only from the
-  * writer, after a grace period covering the longest in-flight read
-  * of the previous snapshot.
+  * Concurrency: many readers, and write-backs from any number of
+  * writers. A write-back stages its merged rows in a fresh `snap_*`
+  * directory and publishes it with
+  * [[graft.catalog.SnapshotManifest.casFlip]] against the snapshot it
+  * merged from — the
+  * [[graft.plans.RegistryStore.persist]] discipline: a writer that
+  * lost the race deletes its staged directory, re-merges over the
+  * winner's snapshot and retries (bounded attempts), so two racing
+  * write-backs both land. Run [[vacuum]] after a grace period
+  * covering the longest in-flight read of the previous snapshot.
   */
 class StatsCache(spark: SparkSession, root: String, keyCols: Seq[String]) {
   import graft.ops.Kernels
 
-  private def fs: FileSystem =
-    FileSystem.get(spark.sparkContext.hadoopConfiguration)
-  private def pointer = new Path(root, "_latest")
-
-  private def currentSnap(): Option[String] =
-    if (!fs.exists(pointer)) None
-    else {
-      val in = fs.open(pointer)
-      try Some(new String(in.readAllBytes(), StandardCharsets.UTF_8).trim)
-      finally in.close()
-    }
-
-  private def read(): Option[DataFrame] =
-    currentSnap().map(s => spark.read.parquet(new Path(root, s).toString))
+  private def read(snap: Option[String]): Option[DataFrame] =
+    snap.map(s => spark.read.parquet(new Path(root, s).toString))
 
   /** Cached rows for the requested keys (semi-join probe). */
   def probe(keys: DataFrame): DataFrame = {
     val keyset = keys.select(keyCols.map(col): _*).distinct()
-    read() match {
+    read(SnapshotManifest.currentSnap(spark, root)) match {
       case Some(df) => df.join(broadcast(keyset), keyCols, "left_semi")
       case None     => keys.sparkSession.emptyDataFrame
     }
@@ -61,32 +49,31 @@ class StatsCache(spark: SparkSession, root: String, keyCols: Seq[String]) {
   /** Upsert freshly computed stats (stamped with updated_at). */
   def writeBack(fresh: DataFrame): Unit = {
     val stamped = fresh.withColumn("updated_at", current_timestamp())
-    val merged = read() match {
-      case Some(existing) =>
-        Kernels.upsert(existing, stamped.select(existing.columns.map(col): _*), keyCols)
-      case None => stamped
+    val fs = SnapshotManifest.fsOf(spark, root)
+    var attempts = 0
+    while (attempts < 5) {
+      val expected = SnapshotManifest.currentSnap(spark, root)
+      val merged = read(expected) match {
+        case Some(existing) =>
+          Kernels.upsert(existing,
+            stamped.select(existing.columns.map(col): _*), keyCols)
+        case None => stamped
+      }
+      val snap = SnapshotManifest.newSnapName()
+      merged.write.mode("overwrite").parquet(new Path(root, snap).toString)
+      SnapshotManifest.failpoint("statscache-before-flip")
+      if (SnapshotManifest.casFlip(spark, root, snap, expected)) return
+      // lost the race: discard the staged snapshot, re-merge, retry
+      fs.delete(new Path(root, snap), true)
+      attempts += 1
     }
-    val snap = s"snap_${System.nanoTime()}"
-    merged.write.mode("overwrite").parquet(new Path(root, snap).toString)
-    // write the pointer to a temp file and rename OVER the old one
-    // (Options.Rename.OVERWRITE — atomic on HDFS and POSIX): a
-    // create+write in place would expose a torn/empty pointer, and a
-    // delete-then-rename would expose a missing one
-    val tmp = new Path(root, s"_latest.tmp_${System.nanoTime()}")
-    val out = fs.create(tmp, true)
-    try out.write(snap.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    org.apache.hadoop.fs.FileContext
-      .getFileContext(spark.sparkContext.hadoopConfiguration)
-      .rename(tmp, pointer, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    throw new IllegalStateException(
+      s"stats cache write-back at $root: lost the concurrent-commit race " +
+        s"$attempts times — serialize write-backs or retry later")
   }
 
   /** Drop all snapshots except the current one. */
-  def vacuum(): Unit = currentSnap().foreach { keep =>
-    fs.listStatus(new Path(root)).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("snap_") && n != keep) fs.delete(st.getPath, true)
-    }
-  }
+  def vacuum(): Unit = SnapshotManifest.vacuumSnapDirs(spark, root)
 
   /** Compute-through: cached rows for hit keys; `compute` runs ONCE
     * for all missing keys (vs the reference's per-key query loop,

@@ -32,7 +32,7 @@ import org.apache.hadoop.fs.Path
   * silently partial table, ever. Dead files are reclaimed by
   * [[vacuum]] (keep-last-2). Snapshots are the time-travel axis
   * ([[read]]'s asOfSnap) and the change-feed axis ([[changes]]).
-  * SINGLE WRITER, many readers — the IndexIo/scd2Sink contract —
+  * SINGLE WRITER, many readers ([[SnapshotManifest]]'s protocol) —
   * backstopped by optimistic concurrency: every incremental mutator
   * (append/delete/expire/compact) captures the snapshot it read and
   * commits compare-and-swap against it
@@ -43,32 +43,10 @@ import org.apache.hadoop.fs.Path
   * against the winner's snapshot.
   */
 object Layout {
+  import SnapshotManifest.failpoint
 
   def bucketOf(symbol: org.apache.spark.sql.Column, numBuckets: Int) =
     pmod(xxhash64(symbol), lit(numBuckets))
-
-  /** Test-only crash injection: when set to a failpoint name, the
-    * matching maintenance op throws AFTER its data files are in place
-    * but BEFORE the snapshot flip — LayoutSpec uses it to pin that a
-    * crashed append/compact is invisible to readers. */
-  @volatile private[graft] var testFailpoint: Option[String] = None
-
-  /** Test-only interleave injection: when set to (failpoint-name, f),
-    * the matching maintenance op runs `f` ONCE just before its
-    * snapshot flip — LayoutSpec races a second writer inside the
-    * window to pin the optimistic-concurrency contract. */
-  @volatile private[graft] var testInterleave: Option[(String, () => Unit)] =
-    None
-  private def failpoint(name: String): Unit = {
-    if (testFailpoint.contains(name))
-      throw new java.io.IOException(s"injected failpoint: $name")
-    testInterleave match {
-      case Some((n, thunk)) if n == name =>
-        testInterleave = None // self-clearing: the thunk's own ops pass
-        thunk()
-      case _ => ()
-    }
-  }
 
   /** Write a time-series frame in the clustered layout. */
   def writeClustered(df: DataFrame, path: String, symbol: String,
@@ -131,8 +109,8 @@ object Layout {
     * files a crashed append/compact may have left, or they are
     * resurrected into the new snapshot. */
   def writeZoneManifest(spark: SparkSession, path: String, time: String): Unit = {
-    val (schema, rows) = zoneRows(spark, path, Seq(path), time)
-    commitPart(spark, path, schema, rows, replaceAll = true)
+    val (schema, rows) = zoneRows(spark, path, time)
+    commitPart(spark, path, schema, rows)
   }
 
   /** The CURRENT zone manifest (file, sym_bucket, zmin, zmax,
@@ -410,17 +388,11 @@ object Layout {
           col(s"__bloom_$c").as("bloom")))
       .reduce(_.unionByName(_))
       .join(broadcast(wanted), Seq("file", "column"), "left_semi")
-    val fs = SnapshotManifest.fsOf(spark, path)
-    val mDir = new Path(path, SnapshotManifest.ManifestsDir)
-    fs.mkdirs(mDir)
-    val part = SnapshotManifest.newPartName("bf")
-    val tmp = new Path(mDir, s".tmp_$part")
     // DISTRIBUTED part write (the dv_* discipline): at scale this part
     // is file-count × filter-size of binary — never funnel it through
     // one task the way the row-per-file zone manifests can afford
-    entries.write.parquet(tmp.toString)
-    if (!fs.rename(tmp, new Path(mDir, part)))
-      throw new java.io.IOException(s"bloom index rename failed: $part")
+    val part = SnapshotManifest.stageFrame(spark, path,
+      SnapshotManifest.newPartName("bf"), entries)
     // incremental: keep prior parts (per-column file sets disjoint by
     // construction); rebuild: drop parts fully owned by these columns
     val kept =
@@ -431,68 +403,82 @@ object Layout {
     SnapshotManifest.commit(spark, path, kept :+ part, Some(baseSnap))
   }
 
-  /** Per-file (bucket, zmin, zmax, n_rows) rows for the data files
-    * under `scan`, with paths RELATIVE to `root` and URI-DECODED
-    * (input_file_name returns escaped URIs; see [[literalPath]]). One
-    * column-pruned aggregate; driver memory bounded by FILE count.
-    * `n_rows` is the file's PHYSICAL row count (the Delta
-    * `numRecords` stat — deletion vectors subtract logically, not
-    * here): it sizes [[buildBloomIndexes]]'s filters and weights
-    * [[planMaintenance]] without opening data files. */
-  private def zoneRows(spark: SparkSession, root: String, scan: Seq[String],
-                       time: String)
+  /** Per-file (bucket, zmin, zmax, n_rows) rows for the data files in
+    * the `sym_bucket=` directories under `root`, with paths RELATIVE
+    * to `root` and URI-DECODED (input_file_name returns escaped URIs;
+    * see [[literalPath]]); driver memory bounded by FILE count.
+    * `n_rows` is the file's PHYSICAL row count (the Delta `numRecords`
+    * stat — deletion vectors subtract logically, not here): it sizes
+    * [[buildBloomIndexes]]'s filters and weights [[planMaintenance]]
+    * without opening data files.
+    *
+    * FOOTER FAST PATH: per-file (min, max, count) of the zone column
+    * already sit in the parquet footers the write just produced —
+    * exact for integer/date/timestamp zone types — and the zone type
+    * is in the Spark schema of those footers, so the rows come from
+    * O(files) driver footer reads and no job runs. Other types
+    * (strings, whose binary stats may truncate; doubles), missing
+    * stats or a footer without a Spark schema fall back to one
+    * column-pruned aggregation job ([[zoneAgg]]); either path yields
+    * identical rows and the schema [[zoneSchema]] (LayoutSpec pins
+    * both). */
+  private def zoneRows(spark: SparkSession, root: String, time: String)
       : (org.apache.spark.sql.types.StructType, Array[Row]) = {
-    val agg = spark.read.option("basePath", root).parquet(scan: _*)
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val qroot = fs.makeQualified(new Path(root)).toString
+    def rel(p: Path): String =
+      fs.makeQualified(p).toString.stripPrefix(qroot).stripPrefix("/")
+    zoneRowsFromFooters(spark, fs, root, time, rel).getOrElse {
+      val agg = zoneAgg(spark, root, time)
+      (agg.schema, agg.collect().map { r =>
+        Row(rel(new Path(new java.net.URI(r.getString(0)))),
+          r.get(1), r.get(2), r.get(3), r.get(4))
+      })
+    }
+  }
+
+  /** The zone aggregation over every data file under `root` — the
+    * fallback of [[zoneRows]]: one column-pruned aggregate job, plus
+    * Spark's schema inference when the frame is built. */
+  private[catalog] def zoneAgg(spark: SparkSession, root: String,
+                               time: String): DataFrame =
+    spark.read.option("basePath", root).parquet(root)
       .groupBy(input_file_name().as("file"),
         col("sym_bucket").cast("long").as("sym_bucket"))
       .agg(min(col(time)).as("zmin"), max(col(time)).as("zmax"),
         count(lit(1)).as("n_rows"))
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val qroot = fs.makeQualified(new Path(root)).toString
-    // FOOTER FAST PATH: per-file (min, max, count) of the zone column
-    // already sit in the parquet footers the write just produced —
-    // exact for numeric/date/timestamp zone types — so the manifest is
-    // assembled from O(files) driver footer reads instead of a full
-    // re-scan aggregation job over the written data. Strings (whose
-    // binary stats may truncate) or any file with missing stats fall
-    // back to the aggregation; either path yields identical rows
-    // (LayoutSpec + every lifecycle oracle pin that).
-    zoneRowsFromFooters(spark, fs, qroot, scan, time, agg.schema)
-      .map(rows => (agg.schema, rows))
-      .getOrElse {
-        val rows = agg.collect().map { r =>
-          val p = fs.makeQualified(
-            new Path(new java.net.URI(r.getString(0)))).toString
-          Row(p.stripPrefix(qroot).stripPrefix("/"),
-            r.get(1), r.get(2), r.get(3), r.get(4))
-        }
-        (agg.schema, rows)
-      }
+
+  /** The schema of [[zoneAgg]] for a zone column of type `dt`, names
+    * and nullability included — what the footer path commits, so the
+    * parts of both paths are interchangeable. */
+  private[catalog] def zoneSchema(dt: org.apache.spark.sql.types.DataType)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("file", StringType, nullable = false),
+      StructField("sym_bucket", LongType), StructField("zmin", dt),
+      StructField("zmax", dt), StructField("n_rows", LongType, nullable = false)))
   }
 
   private def zoneRowsFromFooters(spark: SparkSession,
                                   fs: org.apache.hadoop.fs.FileSystem,
-                                  qroot: String, scan: Seq[String],
-                                  time: String,
-                                  schema: org.apache.spark.sql.types.StructType)
-      : Option[Array[Row]] = {
-    val dt = schema("zmin").dataType
+                                  root: String, time: String,
+                                  rel: Path => String)
+      : Option[(org.apache.spark.sql.types.StructType, Array[Row])] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val bucketRe = ".*sym_bucket=(-?\\d+)$".r
     try {
-      val files = scan.flatMap { s =>
-        val p = new Path(s)
-        fs.listStatus(p).toSeq.flatMap {
-          case d if d.isDirectory &&
-              d.getPath.getName.startsWith("sym_bucket=") =>
-            fs.listStatus(d.getPath).toSeq.filter(f => f.isFile &&
-              f.getPath.getName.endsWith(".parquet"))
-          case _ => Seq.empty
-        }
+      val files = fs.listStatus(new Path(root)).toSeq.flatMap {
+        case d if d.isDirectory &&
+            d.getPath.getName.startsWith("sym_bucket=") =>
+          fs.listStatus(d.getPath).toSeq.filter(f => f.isFile &&
+            f.getPath.getName.endsWith(".parquet"))
+        case _ => Seq.empty
       }
       // no bucket files: a mistyped or empty root — the aggregation
       // then fails loudly instead of an empty manifest being committed
       if (files.isEmpty) return None
+      val dt = LocalParquet.sparkSchemaOf(conf, files.head.getPath)
+        .flatMap(_.find(_.name == time)).getOrElse(return None).dataType
       val zones = LocalParquet.footerZones(conf, files, time, dt)
         .getOrElse(return None)
       val rows = files.zip(zones).map { case (st, (n, mn, mx)) =>
@@ -500,59 +486,22 @@ object Layout {
           case bucketRe(b) => b.toLong
           case _ => return None
         }
-        val q = fs.makeQualified(st.getPath).toString
-        Row(q.stripPrefix(qroot).stripPrefix("/"), bucket, mn, mx, n)
+        Row(rel(st.getPath), bucket, mn, mx, n)
       }
-      Some(rows.toArray)
+      Some((zoneSchema(dt), rows.toArray))
     } catch { case scala.util.control.NonFatal(_) => None }
   }
 
-  /** Write `rows` as a fresh immutable manifest part (temp dir +
-    * rename — never observable half-written), then commit a snapshot
-    * referencing this part alone (`replaceAll`, the fold/rebuild case)
-    * or the current parts plus it (the append-delta case). */
+  /** Stage `rows` as a fresh zone-manifest part and commit a snapshot
+    * of this part plus `extraParts` — the fold/rebuild case. */
   private def commitPart(spark: SparkSession, root: String,
                          schema: org.apache.spark.sql.types.StructType,
-                         rows: Array[Row], replaceAll: Boolean,
-                         partName: Option[String] = None,
+                         rows: Array[Row],
                          expected: Option[Option[String]] = None,
-                         extraParts: Seq[String] = Nil): Unit = {
-    val part = writeManifestPart(spark, root, schema, rows, partName)
-    val parts =
-      if (replaceAll) part +: extraParts
-      else (SnapshotManifest.currentParts(spark, root).getOrElse(Seq.empty) :+
-        part) ++ extraParts
-    SnapshotManifest.commit(spark, root, parts, expected)
-  }
-
-  /** Write `rows` as an immutable manifest part file (temp + rename —
-    * never observable half-written) WITHOUT committing a snapshot;
-    * the caller folds the returned name into its own commit. */
-  private def writeManifestPart(spark: SparkSession, root: String,
-                                schema: org.apache.spark.sql.types.StructType,
-                                rows: Array[Row],
-                                partName: Option[String] = None): String = {
-    val fs = SnapshotManifest.fsOf(spark, root)
-    val mDir = new Path(root, SnapshotManifest.ManifestsDir)
-    fs.mkdirs(mDir)
-    val part = partName.getOrElse(SnapshotManifest.newPartName())
-    val tmp = new Path(mDir, s".tmp_$part")
-    // manifest parts are the METADATA plane — O(file-count) rows at any
-    // table scale — so the common schemas are written directly on the
-    // driver (~2 ms) instead of through a full Spark job (~150 ms of
-    // planning + task + commit protocol, measured r20); exotic zone
-    // types fall back to the identical-output Spark path
-    if (LocalParquet.supports(schema)) {
-      fs.mkdirs(tmp)
-      LocalParquet.write(spark.sparkContext.hadoopConfiguration,
-        new Path(tmp, "part-00000.parquet"), schema, rows)
-    } else
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-        .coalesce(1).write.parquet(tmp.toString)
-    if (!fs.rename(tmp, new Path(mDir, part)))
-      throw new java.io.IOException(s"manifest part rename failed: $part")
-    part
-  }
+                         extraParts: Seq[String] = Nil): Unit =
+    SnapshotManifest.commit(spark, root,
+      SnapshotManifest.stageRows(spark, root, schema, rows) +: extraParts,
+      expected)
 
   /** Append a new slice to an existing clustered+zoned table WITHOUT
     * rewriting it — the ingest path for a growing fact table (daily
@@ -633,29 +582,43 @@ object Layout {
                               filesPerBucket: Int,
                               partName: Option[String]): Option[String] = {
     val spark = df.sparkSession
-    val rootP = new Path(path)
-    val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stage = new Path(rootP, s".stage_append_${System.nanoTime()}")
-    df.withColumn("sym_bucket", bucketOf(col(symbol), numBuckets))
+    val staged = df.withColumn("sym_bucket", bucketOf(col(symbol), numBuckets))
       .repartitionByRange(numBuckets * filesPerBucket,
         col("sym_bucket"), col(time))
       .sortWithinPartitions(col(symbol), col(time))
-      .write.mode("overwrite")
-      .partitionBy("sym_bucket")
-      .parquet(stage.toString)
+    moveStaged(spark, path, "append", staged, time).map { case (schema, rows) =>
+      // an empty batch stages no files and commits nothing
+      SnapshotManifest.stageRows(spark, path, schema, rows,
+        partName.getOrElse(SnapshotManifest.newPartName()))
+    }
+  }
+
+  /** Write `df` (carrying `sym_bucket`) into a fresh `.stage_<kind>_*`
+    * directory partitioned by bucket, take the staged files' zone rows,
+    * move each file into its bucket directory under `path` and delete
+    * the stage. The moved files stay unreferenced until the caller's
+    * commit — a crash leaves orphans for [[vacuum]], never a partial
+    * table. Returns (zone schema, zone rows), or None when `df` wrote
+    * no files. */
+  private def moveStaged(spark: SparkSession, path: String, kind: String,
+                         df: DataFrame, time: String)
+      : Option[(org.apache.spark.sql.types.StructType, Array[Row])] = {
+    val rootP = new Path(path)
+    val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val stage = new Path(rootP, s".stage_${kind}_${SnapshotManifest.token()}")
+    df.write.mode("overwrite").partitionBy("sym_bucket").parquet(stage.toString)
     val staged = fs.listStatus(stage).exists(st => st.isDirectory &&
       st.getPath.getName.startsWith("sym_bucket="))
-    if (!staged) { fs.delete(stage, true); return None } // empty batch
-    val (schema, rows) = zoneRows(spark, stage.toString, Seq(stage.toString), time)
-    rows.foreach { r =>
+    val zones = if (staged) Some(zoneRows(spark, stage.toString, time)) else None
+    zones.foreach(_._2.foreach { r =>
       val rel = r.getString(0)
       val dst = new Path(rootP, rel)
       fs.mkdirs(dst.getParent)
       if (!fs.rename(new Path(stage, rel), dst))
-        throw new java.io.IOException(s"append: rename failed for $rel")
-    }
+        throw new java.io.IOException(s"$kind: rename failed for $rel")
+    })
     fs.delete(stage, true)
-    Some(writeManifestPart(spark, path, schema, rows, partName))
+    zones
   }
 
   /** Stamp each scanned row with the position key a deletion vector
@@ -733,22 +696,26 @@ object Layout {
     val scanned = withPos(scanFiles(spark, path, files))
     val survivors = deletionVector(spark, path, base)
       .fold(scanned)(dv => minusDv(scanned, dv))
-    val hits = selector(survivors)
+    stageDv(spark, path, selector(survivors)
       .select(col("__dv_file").as("file"),
         col("sym_bucket").cast("long").as("sym_bucket"),
-        col("__dv_pos").as("row_index"))
-    val fs = SnapshotManifest.fsOf(spark, path)
-    val mDir = new Path(path, SnapshotManifest.ManifestsDir)
-    fs.mkdirs(mDir)
-    val part = SnapshotManifest.newPartName("dv")
-    val tmp = new Path(mDir, s".tmp_$part")
-    hits.write.mode("overwrite").parquet(tmp.toString)
-    val n = LocalParquet.footerRows(spark.sparkContext.hadoopConfiguration,
-      dataFiles(fs, Seq(tmp)))
-    if (n == 0L) { fs.delete(tmp, true); return None }
-    if (!fs.rename(tmp, new Path(mDir, part)))
-      throw new java.io.IOException(s"dv part rename failed: $part")
-    Some((part, n))
+        col("__dv_pos").as("row_index")))
+  }
+
+  /** Stage `rows` (the deletion-vector schema) as a fresh `dv_*` part,
+    * returning it with its row count from the part's footers; an empty
+    * part is deleted again and None returned. */
+  private def stageDv(spark: SparkSession, path: String,
+                      rows: DataFrame): Option[(String, Long)] = {
+    val part = SnapshotManifest.stageFrame(spark, path,
+      SnapshotManifest.newPartName("dv"), rows)
+    val n = dvRows(spark, path, Seq(part))
+    if (n > 0L) Some((part, n))
+    else {
+      SnapshotManifest.fsOf(spark, path)
+        .delete(new Path(SnapshotManifest.partPath(path, part)), true)
+      None
+    }
   }
 
   /** TIME-RETENTION EXPIRY: drop every row with `time` < `cutoff` —
@@ -762,6 +729,8 @@ object Layout {
     * for their sub-cutoff rows. Work is O(straddle files), never
     * O(expired data). Commits as one snapshot (filtered manifest +
     * straddle DV, pointer flip last — the standing crash contract);
+    * when whole files drop, the deletion vector is folded to the rows
+    * of the files still live (O(deleted positions));
     * dropped files are reclaimed by [[vacuum]]. Like [[compact]],
     * this is a physical rewrite of the file list, so [[changes]]
     * windows crossing it refuse (it is not row-additive). Returns
@@ -793,13 +762,23 @@ object Layout {
     val straddleDeleted = dvPart.fold(0L)(_._2)
     if (dropped.nonEmpty || dvPart.nonEmpty) {
       val keptRows = liveRows.filterNot(r => droppedSet(r.getString(0)))
-      // fold the kept manifest rows into ONE fresh part; existing DV
-      // and bloom-index parts stay referenced (expiry only NARROWS the
-      // file list — surviving files' entries are still valid; entries
-      // for dropped files dangle harmlessly until compact folds them)
-      val keptDvParts =
-        base.filter(p => p.startsWith("dv_") || p.startsWith("bf_"))
-      val mPart = writeManifestPart(spark, path, schema, keptRows)
+      // fold the kept manifest rows into ONE fresh part; bloom-index
+      // parts stay referenced (expiry only NARROWS the file list —
+      // surviving files' entries are still valid; entries for dropped
+      // files dangle harmlessly until a rebuild)
+      val bfParts = base.filter(_.startsWith("bf_"))
+      // deletion-vector rows of a dropped file would still be counted
+      // ([[countFast]], [[readForJoin]]'s estimate, [[planMaintenance]]),
+      // so when files drop the base DV parts fold into ONE part of the
+      // rows whose file is still live
+      val baseDv = base.filter(_.startsWith("dv_"))
+      val dvParts =
+        if (dropped.isEmpty || baseDv.isEmpty) baseDv
+        else stageDv(spark, path, spark.read.schema(DvSchema)
+            .parquet(baseDv.map(SnapshotManifest.partPath(path, _)): _*)
+            .filter(col("file").isin(keptRows.map(_.getString(0)): _*)))
+          .map(_._1).toSeq
+      val mPart = SnapshotManifest.stageRows(spark, path, schema, keptRows)
       // SHRINK PROVENANCE for the hop-chain re-verifiers
       // ([[graft.plans.TableState.ShrinkHop]]): the dropped FILE LIST
       // — metadata-only, O(dropped files). The expired rows
@@ -808,15 +787,15 @@ object Layout {
       // subset-safe consumers restamp from the marker alone, row-level
       // consumers refuse with guidance. Straddle dv rows stay in the
       // plain read, so only whole-file drops are listed.
-      val rsPart = writeManifestPart(spark, path,
+      val rsPart = SnapshotManifest.stageRows(spark, path,
         org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("file",
             org.apache.spark.sql.types.StringType))),
         dropped.map(r => Row(r.getString(0))),
-        Some(s"rs_${baseSnap.get}__${SnapshotManifest.token()}"))
+        s"rs_${baseSnap.get}__${SnapshotManifest.token()}")
       failpoint("expire-before-flip")
       SnapshotManifest.commit(spark, path,
-        mPart +: (keptDvParts ++ dvPart.map(_._1).toSeq) :+ rsPart,
+        mPart +: (bfParts ++ dvParts ++ dvPart.map(_._1).toSeq) :+ rsPart,
         Some(baseSnap))
     }
     (dropped.length, straddleDeleted)
@@ -1122,8 +1101,6 @@ object Layout {
     * Returns the number of buckets rewritten. */
   def compact(spark: SparkSession, path: String, symbol: String, time: String,
               filesPerBucket: Int = 4): Int = {
-    val rootP = new Path(path)
-    val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val (baseSnap, base) = baseOf(spark, path, time)
     val live = zoneManifest(spark, path, base)
     val schema = live.schema
@@ -1168,9 +1145,10 @@ object Layout {
           // provenance side scans ONLY the dv-touched FILES of this
           // bucket (bounded by the deletes, not the bucket) — the
           // rewrite side above already pays the full-bucket read once
-          // intersect with the bucket's LIVE files: dv entries may
-          // dangle onto expiry-dropped files (documented-harmless for
-          // reads; here they must not resurrect a dead path)
+          // intersect with the bucket's LIVE files: in a table whose
+          // expiries predate the deletion-vector fold, dv entries may
+          // dangle onto expiry-dropped files, which must not resurrect
+          // a dead path here
           val liveHere = rows.map(_.getString(0)).toSet
           val dvFiles = bdv.select(col("file")).distinct().collect()
             .map(_.getString(0)).filter(liveHere)
@@ -1186,26 +1164,11 @@ object Layout {
           (minusDv(posed, bdv).drop("__dv_file", "__dv_pos"), rem)
         case _ => (bdf0, None)
       }
-      val stage = new Path(rootP, s".stage_compact_${bucket}_${System.nanoTime()}")
-      bdf.repartitionByRange(filesPerBucket, col(time))
-        .sortWithinPartitions(col(symbol), col(time))
-        .write.mode("overwrite")
-        .partitionBy("sym_bucket")
-        .parquet(stage.toString)
       // a fully-deleted bucket stages zero files — fold it to nothing
-      val staged = fs.listStatus(stage).exists(st => st.isDirectory &&
-        st.getPath.getName.startsWith("sym_bucket="))
-      val newRows =
-        if (!staged) Array.empty[Row]
-        else zoneRows(spark, stage.toString, Seq(stage.toString), time)._2
-      newRows.foreach { r =>
-        val rel = r.getString(0)
-        val dst = new Path(rootP, rel)
-        fs.mkdirs(dst.getParent)
-        if (!fs.rename(new Path(stage, rel), dst))
-          throw new java.io.IOException(s"compact: rename failed for $rel")
-      }
-      fs.delete(stage, true)
+      val newRows = moveStaged(spark, path, s"compact_$bucket",
+        bdf.repartitionByRange(filesPerBucket, col(time))
+          .sortWithinPartitions(col(symbol), col(time)), time)
+        .fold(Array.empty[Row])(_._2)
       (rows.map(_.getString(0)), newRows, removedHere)
     }
     val bucketResults: Seq[(Array[String], Array[Row], Option[DataFrame])] = {
@@ -1248,18 +1211,10 @@ object Layout {
         .reduceOption(_ unionByName _)
         .orElse(liveRows.headOption.map(r =>
           scanFiles(spark, path, Seq(r.getString(0))).limit(0)))
-      val rwPart = removedSrc.map { df =>
-        val mDir = new Path(path, SnapshotManifest.ManifestsDir)
-        fs.mkdirs(mDir)
-        val part = s"rw_${baseSnap.get}__${SnapshotManifest.token()}"
-        val tmp = new Path(mDir, s".tmp_$part")
-        df.write.mode("overwrite").parquet(tmp.toString)
-        if (!fs.rename(tmp, new Path(mDir, part)))
-          throw new java.io.IOException(s"compact: rw part rename failed: $part")
-        part
-      }
+      val rwPart = removedSrc.map(SnapshotManifest.stageFrame(spark, path,
+        s"rw_${baseSnap.get}__${SnapshotManifest.token()}", _))
       failpoint("compact-before-flip")
-      commitPart(spark, path, schema, folded, replaceAll = true,
+      commitPart(spark, path, schema, folded,
         expected = Some(baseSnap), extraParts = rwPart.toSeq)
       vacuum(spark, path)
     }
@@ -1289,8 +1244,6 @@ object Layout {
   def recluster(spark: SparkSession, path: String, newSymbol: String,
                 time: String, numBuckets: Int = 16,
                 filesPerBucket: Int = 4): Unit = {
-    val rootP = new Path(path)
-    val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val (baseSnap, base) = baseOf(spark, path, time)
     val m = zoneManifest(spark, path, base)
     val files = m.select(col("file")).collect().map(_.getString(0))
@@ -1300,31 +1253,15 @@ object Layout {
       case Some(dv) => minusDv(withPos(sc0), dv).drop("__dv_file", "__dv_pos")
       case None => sc0
     }
-    val stage = new Path(rootP, s".stage_recluster_${System.nanoTime()}")
-    live.drop("sym_bucket")
-      .withColumn("sym_bucket", bucketOf(col(newSymbol), numBuckets))
-      .repartitionByRange(numBuckets * filesPerBucket,
-        col("sym_bucket"), col(time))
-      .sortWithinPartitions(col(newSymbol), col(time))
-      .write.mode("overwrite")
-      .partitionBy("sym_bucket")
-      .parquet(stage.toString)
-    val staged = fs.listStatus(stage).exists(st => st.isDirectory &&
-      st.getPath.getName.startsWith("sym_bucket="))
-    val (schema, rows) =
-      if (!staged) (m.schema, Array.empty[Row]) // fully-deleted table
-      else zoneRows(spark, stage.toString, Seq(stage.toString), time)
-    rows.foreach { r =>
-      val rel = r.getString(0)
-      val dst = new Path(rootP, rel)
-      fs.mkdirs(dst.getParent)
-      if (!fs.rename(new Path(stage, rel), dst))
-        throw new java.io.IOException(s"recluster: rename failed for $rel")
-    }
-    fs.delete(stage, true)
+    val (schema, rows) = moveStaged(spark, path, "recluster",
+      live.drop("sym_bucket")
+        .withColumn("sym_bucket", bucketOf(col(newSymbol), numBuckets))
+        .repartitionByRange(numBuckets * filesPerBucket,
+          col("sym_bucket"), col(time))
+        .sortWithinPartitions(col(newSymbol), col(time)), time)
+      .getOrElse((m.schema, Array.empty[Row])) // fully-deleted table
     failpoint("recluster-before-flip")
-    commitPart(spark, path, schema, rows, replaceAll = true,
-      expected = Some(baseSnap))
+    commitPart(spark, path, schema, rows, expected = Some(baseSnap))
     vacuum(spark, path)
   }
 

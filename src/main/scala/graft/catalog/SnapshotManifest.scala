@@ -1,36 +1,53 @@
 package graft.catalog
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import java.nio.charset.StandardCharsets
 
-/** Snapshot log for manifest-backed tables — the
-  * [[graft.pipeline.IndexIo]] / [[graft.streaming.Streams.scd2Sink]]
-  * `_latest`-flip pattern generalized from a single directory pointer
-  * to a LIST of immutable manifest parts (the simplified
-  * Delta/Iceberg transaction-log shape):
+/** THE commit protocol of every durable artifact in graft: how a
+  * write becomes visible atomically, how versions are named, how
+  * superseded versions are reclaimed. No other module writes a
+  * `_latest` pointer, names a snapshot or stages a manifest part.
+  *
+  * One primitive — [[flip]]: write the pointer text to a temp file,
+  * then rename it OVER `_latest` (`Options.Rename.OVERWRITE`, atomic
+  * on HDFS and POSIX) — so a torn or missing pointer is never
+  * observable. [[casFlip]] is the same flip under the root's commit
+  * lock, taken only while `_latest` still names the expected version.
+  * Everything a pointer names is written first, in full, under a
+  * fresh name ([[newSnapName]], [[newPartName]] — wall-clock-ordered
+  * [[token]]s), so a crash at any point before the flip leaves
+  * readers on the previous version and the partial artifacts
+  * unreferenced. Three pointer shapes share it:
   *
   * {{{
-  * <root>/_manifests/m_<ms>_<nano>/   parquet manifest parts
-  *                                    (immutable once committed)
-  * <root>/_snaps/snap_<ms>_<nano>     text: one part name per line
-  * <root>/_latest                     text: current snap name
+  * manifest-backed tables (Layout, ZOrder, LshIndex):
+  *   <root>/_manifests/<kind>_<token>/  immutable parquet parts
+  *   <root>/_snaps/snap_<token>         text: one part name per line
+  *   <root>/_latest                     text: current snap name
+  * snapshot directories (IvfIndex, PqIndex, Bpe, term indexes,
+  *                       StatsCache, viewSink):
+  *   <root>/snap_<token>/               one complete version
+  *   <root>/_latest                     text: current dir name
+  * version files (RegistryStore):       <dir>/reg_<token>.json
   * }}}
   *
-  * Crash contract: every mutation writes ONLY NEW files/dirs and
-  * flips `_latest` LAST via write-temp + rename(OVERWRITE) — atomic
-  * on HDFS and POSIX. A crash at any earlier point leaves the
-  * previous snapshot fully intact and the partial artifacts
-  * unreferenced: invisible to readers, reclaimed later by the
-  * owner's vacuum (e.g. [[Layout.vacuum]]). SINGLE WRITER, many
-  * readers — same concurrency contract as IndexIo/StatsCache —
-  * with an OPTIMISTIC-CONCURRENCY safety net: a [[commit]] carrying
-  * `expectedSnap` verifies, under the commit lock, that the table is
-  * still on the snapshot the writer based its work on, and throws
-  * [[ConcurrentCommitException]] otherwise. Two maintainers racing
-  * (compact + delete) can no longer silently drop each other's
-  * parts: the loser fails loudly and retries against the winner's
-  * snapshot.
+  * `scd2Sink` flips its own bucket map as the pointer text. Older
+  * artifacts named `snap_<nanoTime>` stay readable: the pointer names
+  * its target verbatim, and the vacuums keep whatever it names.
+  *
+  * Manifest tables [[commit]] a snap file listing their parts, parts
+  * staged through [[stageFrame]] / [[stageRows]]. Concurrency: many
+  * readers; writers commit compare-and-swap — [[commit]] with
+  * `expectedSnap`, or [[casFlip]] — so two writers racing can never
+  * silently drop each other's work: the loser gets
+  * [[ConcurrentCommitException]] (or `false`) and recomputes against
+  * the winner's version. Reclamation is the owner's: [[Layout.vacuum]]
+  * (keep-last-2), [[vacuumSnapDirs]] (keep the pointed-to dirs).
+  *
+  * [[testFailpoint]] / [[testInterleave]] are the one test hook of
+  * every writer: a named [[failpoint]] sits in each stage→flip window.
   */
 object SnapshotManifest {
   val ManifestsDir = "_manifests"
@@ -44,6 +61,34 @@ object SnapshotManifest {
     * and retry. */
   final class ConcurrentCommitException(msg: String)
     extends RuntimeException(msg)
+
+  /** Test-only crash injection: when set to a failpoint name, the
+    * writer reaching that [[failpoint]] throws — after its new files
+    * are in place, before its flip — so a spec can pin that a crashed
+    * write is invisible to readers. */
+  @volatile private[graft] var testFailpoint: Option[String] = None
+
+  /** Test-only interleave injection: when set to (failpoint-name, f),
+    * the writer reaching that [[failpoint]] runs `f` ONCE — a spec
+    * races a second writer inside the stage→flip window to pin the
+    * compare-and-swap contract. Self-clearing, so the thunk's own
+    * writes pass the same point. */
+  @volatile private[graft] var testInterleave: Option[(String, () => Unit)] =
+    None
+
+  /** A named point in a writer's stage→flip window (see
+    * [[testFailpoint]] / [[testInterleave]]); a no-op unless a spec
+    * armed it. */
+  private[graft] def failpoint(name: String): Unit = {
+    if (testFailpoint.contains(name))
+      throw new java.io.IOException(s"injected failpoint: $name")
+    testInterleave match {
+      case Some((n, thunk)) if n == name =>
+        testInterleave = None
+        thunk()
+      case _ => ()
+    }
+  }
 
   def fsOf(spark: SparkSession, root: String): FileSystem =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -64,6 +109,10 @@ object SnapshotManifest {
     * data-file zone manifest, `dv` = deletion vector, `bf` = per-file
     * bloom index ([[Layout]] filters by prefix when resolving each). */
   def newPartName(prefix: String = "m"): String = s"${prefix}_${token()}"
+
+  /** A fresh snapshot name — a snap file under `_snaps/` or a
+    * snapshot directory under the root. */
+  def newSnapName(): String = s"snap_${token()}"
 
   def partPath(root: String, part: String): String =
     s"$root/$ManifestsDir/$part"
@@ -125,7 +174,7 @@ object SnapshotManifest {
     val fs = fsOf(spark, root)
     val snapsDir = new Path(root, SnapsDir)
     fs.mkdirs(snapsDir)
-    val snap = s"snap_${token()}"
+    val snap = newSnapName()
     val tmp = new Path(snapsDir, s".tmp_$snap")
     val out = fs.create(tmp, true)
     try out.write(parts.mkString("\n").getBytes(StandardCharsets.UTF_8))
@@ -173,18 +222,80 @@ object SnapshotManifest {
       if (cur == expected) { flip(spark, root, next); true } else false
     }
 
-  /** Atomically point `_latest` at `snap` (the IndexIo flip verbatim:
-    * FileContext rename with OVERWRITE — a torn or missing pointer is
-    * never observable). */
-  def flip(spark: SparkSession, root: String, snap: String): Unit = {
+  /** Atomically replace `_latest` with `text` — a snap or directory
+    * name, or a caller's own pointer text (scd2Sink's bucket map),
+    * written byte for byte. Write-temp, then FileContext rename with
+    * OVERWRITE (plain FileSystem.rename refuses an existing
+    * destination): a torn or missing pointer is never observable. The
+    * only pointer write in graft. */
+  def flip(spark: SparkSession, root: String, text: String): Unit = {
     val fs = fsOf(spark, root)
     val tmp = new Path(root, s".${LatestFile}.tmp_${token()}")
     val out = fs.create(tmp, true)
-    try out.write(snap.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    try out.write(text.getBytes(StandardCharsets.UTF_8)) finally out.close()
     FileContext.getFileContext(new Path(root).toUri,
         spark.sparkContext.hadoopConfiguration)
       .rename(tmp, new Path(root, LatestFile), Options.Rename.OVERWRITE)
   }
+
+  /** Stage one immutable part: `write` fills
+    * `<root>/_manifests/.tmp_<part>`, which is then renamed into place
+    * — a part is never observable half-written. Nothing is committed:
+    * the caller lists the returned name in its own [[commit]], and an
+    * uncommitted part is reclaimed by the owner's vacuum. */
+  private def stagePart(spark: SparkSession, root: String, part: String)
+                       (write: Path => Unit): String = {
+    val fs = fsOf(spark, root)
+    val mDir = new Path(root, ManifestsDir)
+    fs.mkdirs(mDir)
+    val tmp = new Path(mDir, s".tmp_$part")
+    write(tmp)
+    if (!fs.rename(tmp, new Path(mDir, part)))
+      throw new java.io.IOException(s"manifest part rename failed: $part")
+    part
+  }
+
+  /** [[stagePart]] for a distributed frame — data-plane sized parts
+    * (deletion vectors, bloom filters, LSH bands). */
+  def stageFrame(spark: SparkSession, root: String, part: String,
+                 df: DataFrame): String =
+    stagePart(spark, root, part)(tmp =>
+      df.write.mode("overwrite").parquet(tmp.toString))
+
+  /** [[stagePart]] for driver-held `rows` — METADATA parts, O(file
+    * count) at any table scale, so the common schemas are written on
+    * the driver (~2 ms, [[LocalParquet]]) instead of through a Spark
+    * job (~150 ms of planning, task and commit protocol, measured r20);
+    * other types fall back to the identical-output Spark write. */
+  def stageRows(spark: SparkSession, root: String, schema: StructType,
+                rows: Array[Row], part: String = newPartName()): String =
+    stagePart(spark, root, part) { tmp =>
+      if (LocalParquet.supports(schema)) {
+        fsOf(spark, root).mkdirs(tmp)
+        LocalParquet.write(spark.sparkContext.hadoopConfiguration,
+          new Path(tmp, "part-00000.parquet"), schema, rows)
+      } else
+        spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+          .coalesce(1).write.parquet(tmp.toString)
+    }
+
+  /** Delete every `snap_*` directory directly under `root` that
+    * `keep(current)` does not name — by default all but the one
+    * `_latest` names. A no-op without a pointer. Writer-only, after a
+    * grace period covering the longest in-flight read of a superseded
+    * snapshot. Returns the number of directories deleted. */
+  def vacuumSnapDirs(spark: SparkSession, root: String,
+                     keep: String => Set[String] = Set(_)): Int =
+    currentSnap(spark, root).fold(0) { cur =>
+      val kept = keep(cur)
+      val fs = fsOf(spark, root)
+      fs.listStatus(new Path(root)).count { st =>
+        val n = st.getPath.getName
+        val stale = st.isDirectory && n.startsWith("snap_") && !kept(n)
+        if (stale) fs.delete(st.getPath, true)
+        stale
+      }
+    }
 
   /** All snap names on disk, ascending by commit order. */
   def snaps(spark: SparkSession, root: String): Seq[String] = {

@@ -143,15 +143,8 @@ object ZOrder {
       Row.fromSeq(p.stripPrefix(qroot).stripPrefix("/") +:
         (1 to 2 * cols.size).map(r.get))
     }
-    val mDir = new Path(path, SnapshotManifest.ManifestsDir)
-    fs.mkdirs(mDir)
-    val part = SnapshotManifest.newPartName()
-    val tmp = new Path(mDir, s".tmp_$part")
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), agg.schema)
-      .coalesce(1).write.parquet(tmp.toString)
-    if (!fs.rename(tmp, new Path(mDir, part)))
-      throw new java.io.IOException(s"zorder manifest rename failed: $part")
-    SnapshotManifest.commit(spark, path, Seq(part))
+    SnapshotManifest.commit(spark, path,
+      Seq(SnapshotManifest.stageRows(spark, path, agg.schema, rows)))
   }
 
   /** The live n-D zone manifest. */

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.catalog.SnapshotManifest
 import graft.ops.CacheScope
 
 /** Byte-pair-encoding subword tokenization (Sennrich/Haddow/Birch,
@@ -329,20 +330,21 @@ object Bpe {
   /** Persist a merge table so later sessions tokenize WITHOUT
     * retraining — training reads the corpus once, ever; the artifact
     * is a tiny `(rank, a, b)` parquet under a fresh `snap_*` with an
-    * atomic `_latest` flip ([[IndexIo]] — the same single-writer /
-    * many-readers copy-on-write contract as the ANN indexes, so a
-    * re-train never breaks in-flight tokenizer readers). */
+    * atomic `_latest` flip ([[SnapshotManifest]] — the same
+    * single-writer / many-readers copy-on-write contract as the ANN
+    * indexes, so a re-train never breaks in-flight tokenizer
+    * readers). */
   def save(spark: org.apache.spark.sql.SparkSession,
            merges: Seq[(String, String)], path: String): Unit = {
     import spark.implicits._
-    val snap = IndexIo.newSnap()
+    val snap = SnapshotManifest.newSnapName()
     val dir = s"$path/$snap"
     merges.zipWithIndex.map { case ((a, b), r) => (r, a, b) }
       .toDF("rank", "a", "b")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/merges")
     IndexIo.writeMeta(spark, dir, Seq(
       "kind" -> "bpe", "n_merges" -> merges.size.toString))
-    IndexIo.flip(spark, path, snap)
+    SnapshotManifest.flip(spark, path, snap)
   }
 
   /** Load the current merge table (rank order). The collect is
@@ -350,7 +352,7 @@ object Bpe {
     * vocabularies, broadcast to executors by [[tokenCounts]] anyway. */
   def load(spark: org.apache.spark.sql.SparkSession,
            path: String): Vector[(String, String)] = {
-    val snap = IndexIo.currentSnap(spark, path).getOrElse(
+    val snap = SnapshotManifest.currentSnap(spark, path).getOrElse(
       throw new IllegalStateException(s"no _latest pointer under $path"))
     spark.read.parquet(s"$path/$snap/merges")
       .orderBy("rank").select("a", "b")

@@ -1,58 +1,23 @@
 package graft.pipeline
 
 import org.apache.spark.sql.SparkSession
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.Path
 import java.nio.charset.StandardCharsets
 
-/** Snapshot-versioned persistence shared by the ANN index artifacts
-  * ([[IvfIndex]], [[PqIndex]]) — the same minimal copy-on-write
-  * pattern as [[graft.analytics.StatsCache]]: every save lands in a
-  * fresh `snap_*` directory and atomically flips a `_latest` pointer,
-  * so a rebuild never breaks in-flight readers of the previous
-  * version, and a crashed save leaves the pointer untouched.
-  *
-  * Concurrency contract (mirrors StatsCache): SINGLE WRITER, many
-  * readers. Run [[vacuum]] only from the writer, after a grace period
-  * covering the longest in-flight read of the previous snapshot.
+/** The `_meta` file of a persisted pipeline artifact ([[IvfIndex]],
+  * [[PqIndex]], [[Bpe]], the term indexes, [[LshIndex]]): `key value`
+  * lines naming its kind and pinned parameters. Written into a
+  * snapshot directory before the [[graft.catalog.SnapshotManifest]]
+  * flip that publishes it, so a reader never sees a partial one.
   */
 private[pipeline] object IndexIo {
-
-  private def fsOf(spark: SparkSession, path: String): FileSystem =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** The current snapshot directory name, if the pointer exists. */
-  def currentSnap(spark: SparkSession, root: String): Option[String] = {
-    val fs = fsOf(spark, root)
-    val pointer = new Path(root, "_latest")
-    if (!fs.exists(pointer)) None
-    else {
-      val in = fs.open(pointer)
-      try Some(new String(in.readAllBytes(), StandardCharsets.UTF_8).trim)
-      finally in.close()
-    }
-  }
-
-  /** A fresh, not-yet-referenced snapshot directory name. */
-  def newSnap(): String = s"snap_${System.nanoTime()}"
-
-  /** Atomically point `_latest` at `snap` (write-temp then rename with
-    * OVERWRITE — atomic on HDFS and POSIX; a torn or missing pointer
-    * is never observable). */
-  def flip(spark: SparkSession, root: String, snap: String): Unit = {
-    val fs = fsOf(spark, root)
-    val tmp = new Path(root, s"_latest.tmp_${System.nanoTime()}")
-    val out = fs.create(tmp, true)
-    try out.write(snap.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    FileContext.getFileContext(new Path(root).toUri,
-        spark.sparkContext.hadoopConfiguration)
-      .rename(tmp, new Path(root, "_latest"), Options.Rename.OVERWRITE)
-  }
 
   /** Write `key value` metadata lines into `<dir>/_meta`. */
   def writeMeta(spark: SparkSession, dir: String,
                 kv: Seq[(String, String)]): Unit = {
-    val fs = fsOf(spark, dir)
-    val out = fs.create(new Path(dir, "_meta"), true)
+    val p = new Path(dir, "_meta")
+    val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .create(p, true)
     try out.write(kv.map { case (k, v) => s"$k $v" }.mkString("\n")
       .getBytes(StandardCharsets.UTF_8))
     finally out.close()
@@ -60,23 +25,12 @@ private[pipeline] object IndexIo {
 
   /** Parse `<dir>/_meta` back into a key → value map. */
   def readMeta(spark: SparkSession, dir: String): Map[String, String] = {
-    val fs = fsOf(spark, dir)
-    val in = fs.open(new Path(dir, "_meta"))
+    val p = new Path(dir, "_meta")
+    val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
     val text = try new String(in.readAllBytes(), StandardCharsets.UTF_8)
     finally in.close()
     text.linesIterator.map(_.trim).filter(_.nonEmpty).map { l =>
       val Array(k, v) = l.split(" ", 2); k -> v
     }.toMap
   }
-
-  /** Drop all snapshots except the current one (writer-only; see the
-    * class doc's grace-period contract). */
-  def vacuum(spark: SparkSession, root: String): Unit =
-    currentSnap(spark, root).foreach { keep =>
-      val fs = fsOf(spark, root)
-      fs.listStatus(new Path(root)).foreach { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("snap_") && n != keep) fs.delete(st.getPath, true)
-      }
-    }
 }

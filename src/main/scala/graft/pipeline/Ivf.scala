@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.catalog.SnapshotManifest
 import graft.ops.{CacheScope, Kernels}
 
 /** IVF (inverted-file) approximate nearest neighbor: k-means coarse
@@ -155,8 +156,8 @@ class IvfIndex private (val cells: DataFrame,
     * centroid array lands as a tiny parquet, the assigned corpus as a
     * cell-partitioned parquet (the inverted lists — a probe touches
     * only its cells' directories), both under a fresh `snap_*` with
-    * an atomic `_latest` flip ([[IndexIo]]): rebuilds never break
-    * in-flight readers.
+    * an atomic `_latest` flip ([[graft.catalog.SnapshotManifest]]):
+    * rebuilds never break in-flight readers.
     *
     * Staleness contract (mirrors [[graft.analytics.StatsCache]]'s
     * `updated_at`): the snapshot reflects the corpus AS OF
@@ -167,7 +168,7 @@ class IvfIndex private (val cells: DataFrame,
   def save(path: String): Unit = {
     val s = cells.sparkSession
     import s.implicits._
-    val snap = IndexIo.newSnap()
+    val snap = SnapshotManifest.newSnapName()
     val dir = s"$path/$snap"
     centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
       .toDF("cell", "c")
@@ -178,7 +179,7 @@ class IvfIndex private (val cells: DataFrame,
       "n_cells" -> centroids.length.toString,
       "metric" -> "cosine-normalized", // trained/assigned/probed on unit vectors
       "built_at" -> builtAt.toString))
-    IndexIo.flip(s, path, snap)
+    SnapshotManifest.flip(s, path, snap)
   }
 
   /** INCREMENTAL APPEND — index a new vector batch WITHOUT
@@ -262,7 +263,7 @@ object IvfIndex {
     * lazily and registered in [[graft.ops.CacheScope]] like a built
     * index. No training runs — the load cost is one small read. */
   def load(spark: org.apache.spark.sql.SparkSession, path: String): IvfIndex = {
-    val snap = IndexIo.currentSnap(spark, path).getOrElse(
+    val snap = SnapshotManifest.currentSnap(spark, path).getOrElse(
       throw new java.io.FileNotFoundException(s"$path/_latest"))
     val dir = s"$path/$snap"
     val meta = IndexIo.readMeta(spark, dir)
@@ -279,7 +280,7 @@ object IvfIndex {
 
   /** Drop all persisted snapshots except the current one. */
   def vacuum(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
-    IndexIo.vacuum(spark, path)
+    SnapshotManifest.vacuumSnapDirs(spark, path)
 
   /** Build the index: deterministic Lloyd's k-means (fixed seed) on a
     * bounded sample, optionally refined by FULL-CORPUS distributed

@@ -333,17 +333,8 @@ object LshIndex {
   }
 
   private def writePart(spark: SparkSession, path: String, prefix: String,
-                        df: DataFrame): String = {
-    val fs = SnapshotManifest.fsOf(spark, path)
-    val mDir = new Path(path, SnapshotManifest.ManifestsDir)
-    fs.mkdirs(mDir)
-    val part = prefix + SnapshotManifest.token()
-    val tmp = new Path(mDir, s".tmp_$part")
-    df.write.mode("overwrite").parquet(tmp.toString)
-    if (!fs.rename(tmp, new Path(mDir, part)))
-      throw new java.io.IOException(s"LshIndex: part rename failed: $part")
-    part
-  }
+                        df: DataFrame): String =
+    SnapshotManifest.stageFrame(spark, path, prefix + SnapshotManifest.token(), df)
 
   private def readParts(spark: SparkSession, path: String,
                         prefix: String): DataFrame = {

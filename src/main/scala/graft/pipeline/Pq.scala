@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.catalog.SnapshotManifest
 import graft.functions.PqExprs
 import graft.ops.{CacheScope, Kernels}
 
@@ -139,7 +140,7 @@ class PqIndex private (val codes: DataFrame,
   def save(path: String): Unit = {
     val s = codes.sparkSession
     import s.implicits._
-    val snap = IndexIo.newSnap()
+    val snap = SnapshotManifest.newSnapName()
     val dir = s"$path/$snap"
     (for {
       (book, j) <- codebooks.zipWithIndex
@@ -158,7 +159,7 @@ class PqIndex private (val codes: DataFrame,
       // caller plugged the right one back in
       residualOf.map(c => "residual_coarse" ->
         PqIndex.centroidFingerprint(c.centroids).toString))
-    IndexIo.flip(s, path, snap)
+    SnapshotManifest.flip(s, path, snap)
   }
 
   /** Release the cached codes frame (queries recompute afterwards). */
@@ -197,7 +198,7 @@ object PqIndex {
 
   private def loadCurrent(spark: org.apache.spark.sql.SparkSession,
                           path: String, residualOf: Option[IvfIndex]): PqIndex = {
-    val snap = IndexIo.currentSnap(spark, path).getOrElse(
+    val snap = SnapshotManifest.currentSnap(spark, path).getOrElse(
       throw new java.io.FileNotFoundException(s"$path/_latest"))
     val dir = s"$path/$snap"
     val meta = IndexIo.readMeta(spark, dir)
@@ -232,7 +233,7 @@ object PqIndex {
 
   /** Drop all persisted snapshots except the current one. */
   def vacuum(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
-    IndexIo.vacuum(spark, path)
+    SnapshotManifest.vacuumSnapDirs(spark, path)
 
   /** Train per-subspace codebooks driver-locally and encode the corpus
     * in one distributed codegen pass. `dims` must be divisible by `m`.

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.catalog.SnapshotManifest
 
 /** Text-analysis operators for large-scale training-data pipelines:
   * token counting, quality scoring, language ID, fingerprinting.
@@ -251,7 +252,8 @@ object TextAnalysis {
   }
 
   /** Persist a [[termIndex]] (plus the [[docLengths]] BM25 needs)
-    * BUCKETED BY TERM, under an [[IndexIo]] `_latest` snapshot:
+    * BUCKETED BY TERM, under a [[SnapshotManifest]] `_latest`
+    * snapshot directory:
     *
     *   - postings land in `term_bucket=H/` directories
     *     (`pmod(xxhash64(term), nBuckets)` — bounded directory count
@@ -267,12 +269,13 @@ object TextAnalysis {
     *   - the snapshot flip makes refresh atomic: readers of the
     *     previous index version are never broken mid-rebuild.
     *
-    * SINGLE WRITER, many readers — the IndexIo contract. */
+    * SINGLE WRITER, many readers — the snapshot-directory contract
+    * of [[SnapshotManifest]]. */
   def saveTermIndex(docs: DataFrame, id: String, text: String,
                     root: String, nBuckets: Int = 64,
                     withPositions: Boolean = false): Unit = {
     val spark = docs.sparkSession
-    val snap = IndexIo.newSnap()
+    val snap = SnapshotManifest.newSnapName()
     val dir = s"$root/$snap"
     val idx = if (withPositions) termIndexPositional(docs, id, text)
               else termIndex(docs, id, text)
@@ -285,13 +288,13 @@ object TextAnalysis {
     IndexIo.writeMeta(spark, dir,
       Seq("kind" -> "terms", "nBuckets" -> nBuckets.toString, "id" -> id,
         "positions" -> withPositions.toString))
-    IndexIo.flip(spark, root, snap)
+    SnapshotManifest.flip(spark, root, snap)
   }
 
   /** True when `root` holds a committed term-index snapshot. */
   def termIndexExists(spark: org.apache.spark.sql.SparkSession,
                       root: String): Boolean =
-    IndexIo.currentSnap(spark, root).isDefined
+    SnapshotManifest.currentSnap(spark, root).isDefined
 
   /** INCREMENTAL INDEX APPEND — fold a batch of NEW documents into a
     * [[saveTermIndex]] index in O(batch): the batch is tokenized and
@@ -305,15 +308,16 @@ object TextAnalysis {
     * corpus stats (N, avgdl, df) recompute over the union, so
     * rankings are exactly the from-scratch index's. Run
     * [[compactTermIndex]] when the chain grows long (it bounds the
-    * per-query link factor), and [[vacuumTermIndex]] — never
-    * IndexIo's generic vacuum, which would sever the chain — to
-    * reclaim superseded snapshots. Appends are NEW docs only (dedup
-    * upstream — the d12 admission loop); re-appending an id double
-    * counts it, same contract as [[graft.pipeline.LshIndex.append]]. */
+    * per-query link factor), and [[vacuumTermIndex]] — never the
+    * keep-current-only [[SnapshotManifest.vacuumSnapDirs]] default,
+    * which would sever the chain — to reclaim superseded snapshots.
+    * Appends are NEW docs only (dedup upstream — the d12 admission
+    * loop); re-appending an id double counts it, same contract as
+    * [[graft.pipeline.LshIndex.append]]. */
   def appendTermIndex(docs: DataFrame, id: String, text: String,
                       root: String): Unit = {
     val spark = docs.sparkSession
-    val prev = IndexIo.currentSnap(spark, root).getOrElse(
+    val prev = SnapshotManifest.currentSnap(spark, root).getOrElse(
       throw new IllegalStateException(
         s"appendTermIndex: no index at $root; saveTermIndex first"))
     val meta = IndexIo.readMeta(spark, s"$root/$prev")
@@ -324,7 +328,7 @@ object TextAnalysis {
     // the batch link must match the chain's posting schema — a
     // positional index stays positional across appends
     val withPos = meta.get("positions").contains("true")
-    val snap = IndexIo.newSnap()
+    val snap = SnapshotManifest.newSnapName()
     val dir = s"$root/$snap"
     val idx = if (withPos) termIndexPositional(docs, id, text)
               else termIndex(docs, id, text)
@@ -337,20 +341,23 @@ object TextAnalysis {
     IndexIo.writeMeta(spark, dir,
       Seq("kind" -> "terms", "nBuckets" -> n.toString, "id" -> id,
         "positions" -> withPos.toString, "prev" -> prev))
-    IndexIo.flip(spark, root, snap)
+    SnapshotManifest.flip(spark, root, snap)
   }
 
   /** The live snapshot chain, newest first — one link per
     * [[appendTermIndex]] since the last [[saveTermIndex]] /
     * [[compactTermIndex]]. */
   private def termChain(spark: org.apache.spark.sql.SparkSession,
-                        root: String): Seq[String] = {
-    val head = IndexIo.currentSnap(spark, root).getOrElse(
-      throw new java.io.FileNotFoundException(s"$root/_latest"))
+                        root: String): Seq[String] =
+    termChainFrom(spark, root,
+      SnapshotManifest.currentSnap(spark, root).getOrElse(
+        throw new java.io.FileNotFoundException(s"$root/_latest")))
+
+  private def termChainFrom(spark: org.apache.spark.sql.SparkSession,
+                            root: String, head: String): Seq[String] =
     Iterator.iterate(Option(head))(s =>
         s.flatMap(x => IndexIo.readMeta(spark, s"$root/$x").get("prev")))
       .takeWhile(_.isDefined).map(_.get).toSeq
-  }
 
   /** Fold the snapshot CHAIN into one full snapshot (no `prev`) and
     * flip — one pass over the INDEX rows (tf longs, never the corpus
@@ -365,7 +372,7 @@ object TextAnalysis {
     val meta = IndexIo.readMeta(spark, s"$root/${links.head}")
     val n = meta("nBuckets").toInt
     val id = meta("id")
-    val snap = IndexIo.newSnap()
+    val snap = SnapshotManifest.newSnapName()
     val dir = s"$root/$snap"
     links.map(l => spark.read
         .option("basePath", s"$root/$l/postings")
@@ -380,27 +387,18 @@ object TextAnalysis {
     IndexIo.writeMeta(spark, dir,
       Seq("kind" -> "terms", "nBuckets" -> n.toString, "id" -> id,
         "positions" -> meta.getOrElse("positions", "false")))
-    IndexIo.flip(spark, root, snap)
+    SnapshotManifest.flip(spark, root, snap)
     links.size
   }
 
   /** Reclaim snapshots not reachable from the live chain — the
-    * chain-aware replacement for IndexIo's generic vacuum (which
-    * keeps only the current snapshot and would sever `prev` links).
-    * Writer-side, after the reader grace period. */
+    * whole chain is kept, where the default vacuum keeps only the
+    * current snapshot and would sever `prev` links. Writer-side,
+    * after the reader grace period. */
   def vacuumTermIndex(spark: org.apache.spark.sql.SparkSession,
-                      root: String): Int = {
-    val keep = termChain(spark, root).toSet
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(p).count { st =>
-      val name = st.getPath.getName
-      val stale = st.isDirectory && name.startsWith("snap_") &&
-        !keep.contains(name)
-      if (stale) fs.delete(st.getPath, true)
-      stale
-    }
-  }
+                      root: String): Int =
+    SnapshotManifest.vacuumSnapDirs(spark, root,
+      head => termChainFrom(spark, root, head).toSet)
 
   /** Query-term postings from a [[saveTermIndex]] index: the scan is
     * pruned to the ≤ |terms| bucket directories the query terms hash

@@ -515,10 +515,11 @@ object Mv {
     * Copy-on-write: the merged summary lands in a FRESH directory and
     * the registry entry is re-pointed afterwards, so in-flight readers
     * of the previous summary never observe a half-written view and a
-    * crashed refresh leaves the registered MV untouched (the same
-    * snapshot-then-flip discipline as `pipeline/IndexIo`; the pointer
-    * here is the session-scoped registry — a multi-session deployment
-    * persists it via that `_latest` pattern instead).
+    * crashed refresh leaves the registered MV untouched (the
+    * snapshot-then-flip discipline of [[graft.catalog.SnapshotManifest]];
+    * the pointer here is the session-scoped registry — a multi-session
+    * deployment persists it through [[RegistryStore]]'s `_latest`
+    * instead).
     *
     * DELETES are deliberately not folded here: SUM/COUNT retract, but
     * MIN/MAX do not (dropping the current minimum forces a rescan of
@@ -1108,8 +1109,8 @@ object Mv {
   /** Drop superseded summary directories — the `_v*` siblings
     * [[refreshAppend]] left behind, minus the currently registered
     * one. Writer-side only, after a grace period covering the longest
-    * in-flight read of the previous version (the same single-writer
-    * contract as `pipeline/IndexIo.vacuum` / `analytics/StatsCache`).
+    * in-flight read of the previous version (the contract of
+    * [[graft.catalog.SnapshotManifest.vacuumSnapDirs]]).
     * Returns the number of directories reclaimed. */
   def vacuum(spark: SparkSession, name: String): Int = {
     RegistryStore.ensureLoaded(spark) // see [[refreshAppend]]

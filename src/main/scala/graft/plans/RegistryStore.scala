@@ -16,11 +16,11 @@ import graft.catalog.SnapshotManifest
   * rules up via `spark.sql.extensions=graft.GraftExtensions`) starts
   * with every catalog empty and silently loses every rewrite: queries
   * stay correct but quietly repay the fact scans, joins, and shuffles
-  * the declarations had eliminated. The cure is the same pointer
-  * pattern every other durable artifact here uses (IndexIo, the
-  * snapshot log): declarations serialize to a versioned JSON file
-  * beside a `_latest` pointer, atomically flipped, pruned to the last
-  * two versions.
+  * the declarations had eliminated. The cure is the commit protocol
+  * every durable artifact here uses ([[SnapshotManifest]]):
+  * declarations serialize to a versioned JSON file beside a `_latest`
+  * pointer, flipped compare-and-swap, pruned to the last two
+  * versions.
   *
   *   - Set `graft.registry.path` on the session (or in
   *     `spark-defaults`) and every declaration — [[Mv.build]]/
@@ -37,9 +37,9 @@ import graft.catalog.SnapshotManifest
   *   - Without the conf the registries stay session-scoped, the
   *     pre-r12 behavior.
   *
-  * Single-writer per registry path (the declaring driver), the same
-  * contract as every maintenance op here; readers only ever see a
-  * complete pointed-to version. */
+  * Any number of declaring drivers per registry path ([[persist]]'s
+  * CAS loop merges a concurrent winner's declarations); readers only
+  * ever see a complete pointed-to version. */
 object RegistryStore {
 
   val ConfKey = "graft.registry.path"
@@ -89,20 +89,6 @@ object RegistryStore {
       loaded.getOrElseUpdate(dir, { load(spark, dir); true })
     }
 
-  /** Test hook — runs a thunk at a named point inside [[persist]]
-    * (the [[graft.catalog.Layout.testInterleave]] pattern): lets a
-    * spec interleave a concurrent writer inside the stage→flip window
-    * to pin the CAS retry. Self-clearing so the thunk's own persist
-    * does not recurse. */
-  @volatile private[graft] var testInterleave: Option[(String, () => Unit)] =
-    None
-  private def interleave(name: String): Unit = testInterleave match {
-    case Some((n, thunk)) if n == name =>
-      testInterleave = None
-      thunk()
-    case _ => ()
-  }
-
   /** Serialize all three catalogs to `dir` (versioned file + `_latest`
     * flip + keep-last-2 prune).
     *
@@ -126,7 +112,7 @@ object RegistryStore {
       // read — one small file read; live (newer) defs win by name
       loadExcluding(spark, dir, exclude)
       val name = stageVersion(spark, dir)
-      interleave("registry-before-flip")
+      SnapshotManifest.failpoint("registry-before-flip")
       if (SnapshotManifest.casFlip(spark, dir, name, expected)) {
         prune(fs, dir, name)
         return

@@ -247,15 +247,8 @@ object Streams {
             current.map(_.buckets).getOrElse(Map.empty) ++
               affected.map(b => b -> s"$epochDir/__kb=$b"),
             Some(nBuckets))
-          // atomic manifest flip (FileContext rename with OVERWRITE —
-          // plain FileSystem.rename refuses existing destinations)
-          val tmp = new org.apache.hadoop.fs.Path(root, s"_latest.tmp.$epoch")
-          val out = fs.create(tmp, true)
-          try out.write(next.serialize
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          finally out.close()
-          org.apache.hadoop.fs.FileContext.getFileContext(rootPath.toUri, conf)
-            .rename(tmp, pointer, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+          // atomic manifest flip: the bucket map IS the pointer text
+          graft.catalog.SnapshotManifest.flip(s, root, next.serialize)
           // keep-last-2 GC: a bucket dir is live while the NEW or the
           // PREVIOUS manifest references it; anything older was
           // superseded two flips ago and no well-behaved reader can
@@ -628,8 +621,8 @@ object Streams {
     * aggregation + one state-sized join — base facts never exist,
     * let alone get re-read), and the refreshed state lands as a fresh
     * `state_e<epoch>` parquet snapshot with an atomic `_latest` flip
-    * (the StatsCache/IndexIo copy-on-write read contract: readers of
-    * the previous state never break).
+    * ([[graft.catalog.SnapshotManifest]]'s copy-on-write read
+    * contract: readers of the previous state never break).
     *
     * EXACTLY-ONCE: the epoch is the snapshot NAME, so "already
     * committed" is a property of the pointer itself — a crash between

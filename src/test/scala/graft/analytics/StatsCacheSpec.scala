@@ -1,6 +1,7 @@
 package graft.analytics
 
 import graft.SparkSpec
+import graft.catalog.SnapshotManifest
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -36,5 +37,22 @@ class StatsCacheSpec extends SparkSpec {
     val got = cache.probe(Seq("AAA", "BBB").toDF("symbol"))
       .select("symbol", "cov").as[(String, Double)].collect().toMap
     assert(got == Map("AAA" -> 2.0, "BBB" -> 3.0))
+  }
+
+  test("two racing write-backs both land") {
+    val dir = Files.createTempDirectory("graft_cache3").toString + "/stats"
+    val cache = new StatsCache(spark, dir, Seq("symbol"))
+    cache.writeBack(Seq(("AAA", 1.0)).toDF("symbol", "cov"))
+    // a second writer commits inside the first one's stage→flip window
+    SnapshotManifest.testInterleave = Some(("statscache-before-flip", () =>
+      new StatsCache(spark, dir, Seq("symbol"))
+        .writeBack(Seq(("BBB", 2.0)).toDF("symbol", "cov"))))
+    try {
+      cache.writeBack(Seq(("CCC", 3.0)).toDF("symbol", "cov"))
+      assert(SnapshotManifest.testInterleave.isEmpty, "thunk must have run")
+    } finally SnapshotManifest.testInterleave = None
+    val got = cache.probe(Seq("AAA", "BBB", "CCC").toDF("symbol"))
+      .select("symbol", "cov").as[(String, Double)].collect().toMap
+    assert(got == Map("AAA" -> 1.0, "BBB" -> 2.0, "CCC" -> 3.0))
   }
 }

@@ -216,11 +216,11 @@ class LayoutSpec extends SparkSpec {
     // crash AFTER the batch's files land in the bucket dirs, BEFORE
     // the snapshot flip — the worst window of the old delete/rename
     // scheme
-    Layout.testFailpoint = Some("append-before-flip")
+    SnapshotManifest.testFailpoint = Some("append-before-flip")
     try intercept[java.io.IOException] {
       Layout.appendClusteredZoned(df.filter($"ts" > 500), dir, "symbol", "ts",
         numBuckets = 4, filesPerBucket = 2)
-    } finally Layout.testFailpoint = None
+    } finally SnapshotManifest.testFailpoint = None
     // no partial data, no missing data: the exact pre-append table
     assert(full() == base)
     // the retry lands the batch exactly once (the orphaned first
@@ -253,10 +253,10 @@ class LayoutSpec extends SparkSpec {
     // crash AFTER replacement files are written, BEFORE the folded
     // manifest flips: the old delete-then-rename scheme would lose
     // whole buckets here
-    Layout.testFailpoint = Some("compact-before-flip")
+    SnapshotManifest.testFailpoint = Some("compact-before-flip")
     try intercept[java.io.IOException] {
       Layout.compact(spark, dir, "symbol", "ts", filesPerBucket = 2)
-    } finally Layout.testFailpoint = None
+    } finally SnapshotManifest.testFailpoint = None
     assert(full() == want)
     // re-running compact completes the job
     val rewritten = Layout.compact(spark, dir, "symbol", "ts", filesPerBucket = 2)
@@ -282,11 +282,11 @@ class LayoutSpec extends SparkSpec {
     assert(full() == want)
     // crash AFTER the re-keyed files land, BEFORE the flip: readers
     // stay on the OLD clustering, nothing lost
-    Layout.testFailpoint = Some("recluster-before-flip")
+    SnapshotManifest.testFailpoint = Some("recluster-before-flip")
     try intercept[java.io.IOException] {
       Layout.recluster(spark, dir, "exch", "ts", numBuckets = 4,
         filesPerBucket = 2)
-    } finally Layout.testFailpoint = None
+    } finally SnapshotManifest.testFailpoint = None
     assert(full() == want)
     // the real run: row parity under the NEW key...
     Layout.recluster(spark, dir, "exch", "ts", numBuckets = 4,
@@ -351,10 +351,10 @@ class LayoutSpec extends SparkSpec {
     def full() = Layout.read(spark, dir, "symbol", "ts", numBuckets = 4)
       .select($"ts").as[Long].collect().toSet
     // a crashed delete is invisible: dv part staged but never flipped
-    Layout.testFailpoint = Some("delete-before-flip")
+    SnapshotManifest.testFailpoint = Some("delete-before-flip")
     try intercept[java.io.IOException] {
       Layout.delete(spark, dir, "ts", $"ts" <= 100)
-    } finally Layout.testFailpoint = None
+    } finally SnapshotManifest.testFailpoint = None
     assert(full() == (1L to 1000L).toSet)
     // the real delete lands; re-deleting the same predicate is a no-op
     assert(Layout.delete(spark, dir, "ts", $"ts" <= 100) == 100L)
@@ -391,12 +391,12 @@ class LayoutSpec extends SparkSpec {
     // interleave a DELETE inside compact's pre-flip window: compact
     // based its fold on the pre-delete snapshot, so last-writer-wins
     // would silently drop the delete's dv part (resurrecting ts<=100)
-    Layout.testInterleave = Some(("compact-before-flip", () => {
+    SnapshotManifest.testInterleave = Some(("compact-before-flip", () => {
       assert(Layout.delete(spark, dir, "ts", $"ts" <= 100) == 100L)
     }))
     try intercept[SnapshotManifest.ConcurrentCommitException] {
       Layout.compact(spark, dir, "symbol", "ts", filesPerBucket = 2)
-    } finally Layout.testInterleave = None
+    } finally SnapshotManifest.testInterleave = None
     // loser lost: table = winner's snapshot (both deletes live)
     assert(full() == (101L to 900L).toSet)
     // retried loser succeeds against the new snapshot and folds BOTH
@@ -421,7 +421,7 @@ class LayoutSpec extends SparkSpec {
     // snapshot read and flip: the first must lose the CAS, re-read the
     // winner's part list, and re-commit — unlike the maintenance ops,
     // an append retries internally because its part is pure addition
-    Layout.testInterleave = Some(("append-before-flip", () => {
+    SnapshotManifest.testInterleave = Some(("append-before-flip", () => {
       Layout.appendClusteredZoned(
         (1001 to 1100).map(i => (s"SYM${i % 4}", i.toLong, i * 1.0))
           .toDF("symbol", "ts", "close"),
@@ -431,7 +431,7 @@ class LayoutSpec extends SparkSpec {
       (2001 to 2100).map(i => (s"SYM${i % 4}", i.toLong, i * 1.0))
         .toDF("symbol", "ts", "close"),
       dir, "symbol", "ts", numBuckets = 4, filesPerBucket = 2)
-    finally Layout.testInterleave = None
+    finally SnapshotManifest.testInterleave = None
     // both batches visible after both commits — neither dropped
     assert(full() ==
       ((1 to 400) ++ (1001 to 1100) ++ (2001 to 2100)).map(_.toLong).toSet)
@@ -589,11 +589,11 @@ class LayoutSpec extends SparkSpec {
     // its previous snapshot — there is no longer an inter-commit
     // window where only the delete half landed
     val preCrash = live(tp)
-    Layout.testFailpoint = Some("applychanges-before-flip")
+    SnapshotManifest.testFailpoint = Some("applychanges-before-flip")
     try intercept[java.io.IOException] {
       Layout.applyChanges(Layout.changes(spark, sp, snap1, snap3),
         tp, "symbol", "ts", keys = Seq("ts"), numBuckets = 4, filesPerBucket = 2)
-    } finally Layout.testFailpoint = None
+    } finally SnapshotManifest.testFailpoint = None
     assert(live(tp) == preCrash, "pre-flip crash must be invisible")
     // the real run: deletes + inserts land as ONE snapshot commit —
     // half the fixed snapshot cost of every CDC batch
@@ -690,11 +690,11 @@ class LayoutSpec extends SparkSpec {
       .select($"ts").as[Long].collect()
     // crash AFTER both halves committed, BEFORE the done marker — the
     // worst retry window: the whole batch already landed on the target
-    Layout.testFailpoint = Some("applychanges-before-done")
+    SnapshotManifest.testFailpoint = Some("applychanges-before-done")
     try intercept[java.io.IOException] {
       Layout.applyChanges(feed, tp, "symbol", "ts", keys = Seq("ts"),
         numBuckets = 4, filesPerBucket = 2, epoch = Some("w1"))
-    } finally Layout.testFailpoint = None
+    } finally SnapshotManifest.testFailpoint = None
     // retrying the SAME epoch finds intent-without-done and sweeps the
     // insert keys too — the re-appended batch must not duplicate
     Layout.applyChanges(feed, tp, "symbol", "ts", keys = Seq("ts"),
@@ -748,10 +748,10 @@ class LayoutSpec extends SparkSpec {
       numBuckets = 4, filesPerBucket = 6)
     val before = Layout.manifest(spark, dir).get.count()
     // crash before the flip: the full table stays readable
-    Layout.testFailpoint = Some("expire-before-flip")
+    SnapshotManifest.testFailpoint = Some("expire-before-flip")
     try intercept[java.io.IOException] {
       Layout.expireBefore(spark, dir, "ts", lit(601L))
-    } finally Layout.testFailpoint = None
+    } finally SnapshotManifest.testFailpoint = None
     assert(Layout.read(spark, dir, "symbol", "ts", numBuckets = 4)
       .count() == 1200)
     val (nDropped, nStraddle) = Layout.expireBefore(spark, dir, "ts", lit(601L))
@@ -955,12 +955,12 @@ class LayoutSpec extends SparkSpec {
     // commits a snapshot without dv parts; a read that took its files
     // from the old snapshot and its deletion vector from the new one
     // would bring the deleted rows back
-    Layout.testInterleave = Some(("read-after-resolve", () => {
+    SnapshotManifest.testInterleave = Some(("read-after-resolve", () => {
       assert(Layout.compact(spark, dir, "symbol", "ts", filesPerBucket = 2) > 0)
     }))
     val got = try Layout.read(spark, dir, "symbol", "ts", numBuckets = 4)
         .select($"ts").as[Long].collect().toSet
-      finally Layout.testInterleave = None
+      finally SnapshotManifest.testInterleave = None
     assert(got == (101L to 900L).toSet)
     assert(SnapshotManifest.currentParts(spark, dir).get
       .forall(p => p.startsWith("m_") || p.startsWith("rw_")))
@@ -987,6 +987,67 @@ class LayoutSpec extends SparkSpec {
     val (rows, collectJobs) = jobsOf(read.select($"ts").as[Long].collect())
     assert(collectJobs <= 2, s"$collectJobs jobs in the read's collect")
     assert(rows.toSet == (101L to 900L).filter(_ % 10 == 1).toSet)
+  }
+
+  test("an append of a small batch runs ≤ 3 jobs: its zone rows come from the footers") {
+    val dir = Files.createTempDirectory("graft_appendjobs").toString + "/t"
+    def batch(lo: Int) = (lo until lo + 100).map(i => (s"SYM${i % 10}", i.toLong, i * 1.5))
+      .toDF("symbol", "ts", "close")
+    Layout.writeClusteredZoned(batch(0), dir, "symbol", "ts",
+      numBuckets = 4, filesPerBucket = 2)
+    val (_, jobs) = jobsOf(Layout.appendClusteredZoned(batch(100), dir,
+      "symbol", "ts", numBuckets = 4, filesPerBucket = 2))
+    assert(jobs <= 3, s"$jobs jobs for one appendClusteredZoned")
+    assert(Layout.countFast(spark, dir) == 200L)
+    assert(Layout.read(spark, dir, "symbol", "ts", numBuckets = 4)
+      .select($"ts").as[Long].collect().toSet == (0L until 200L).toSet)
+  }
+
+  test("footer zone rows carry the aggregation's schema and rows (long and timestamp zones)") {
+    val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
+    val tables = Seq(
+      (1 to 300).map(i => (s"SYM${i % 7}", i.toLong)).toDF("symbol", "ts"),
+      (1 to 300).map(i => (s"SYM${i % 7}", new java.sql.Timestamp(base + i * 60000L)))
+        .toDF("symbol", "ts"))
+    // timestamps footer-zone only as INT64 micros, not Spark's INT96
+    val tsType = "spark.sql.parquet.outputTimestampType"
+    val prev = spark.conf.getOption(tsType)
+    spark.conf.set(tsType, "TIMESTAMP_MICROS")
+    try tables.foreach { df =>
+      val dir = Files.createTempDirectory("graft_zoneschema").toString + "/t"
+      Layout.writeClustered(df, dir, "symbol", "ts", numBuckets = 4)
+      val agg = Layout.zoneAgg(spark, dir, "ts")
+      // names, types AND nullability: a footer-path part must be
+      // interchangeable with an aggregation-path one
+      assert(Layout.zoneSchema(df.schema("ts").dataType) == agg.schema)
+      val (_, jobs) = jobsOf(Layout.writeZoneManifest(spark, dir, "ts"))
+      assert(jobs == 0, s"$jobs jobs: the footer path was not taken for ${df.schema("ts")}")
+      val qroot = hfs.makeQualified(new org.apache.hadoop.fs.Path(dir)).toString
+      val want = agg.collect().map(r => (hfs.makeQualified(
+          new org.apache.hadoop.fs.Path(new java.net.URI(r.getString(0))))
+          .toString.stripPrefix(qroot).stripPrefix("/"),
+        r.get(1), r.get(2), r.get(3), r.get(4))).toSet
+      val got = Layout.manifest(spark, dir).get.collect()
+        .map(r => (r.getString(0), r.get(1), r.get(2), r.get(3), r.get(4))).toSet
+      assert(got == want)
+    } finally prev.fold(spark.conf.unset(tsType))(spark.conf.set(tsType, _))
+  }
+
+  test("expireBefore drops the deletion-vector rows of the files it drops") {
+    val dir = Files.createTempDirectory("graft_expiredv").toString + "/t"
+    val df = (1 to 1000).map(i => (s"SYM${i % 10}", i.toLong, i * 1.5))
+      .toDF("symbol", "ts", "close")
+    Layout.writeClusteredZoned(df, dir, "symbol", "ts", numBuckets = 4)
+    Layout.delete(spark, dir, "ts", $"ts" <= 10)
+    Layout.delete(spark, dir, "ts", $"ts" === 500L)
+    val (dropped, _) = Layout.expireBefore(spark, dir, "ts", lit(300L))
+    assert(dropped > 0)
+    val read = Layout.read(spark, dir, "symbol", "ts", numBuckets = 4)
+    assert(read.count() == 700L)
+    assert(Layout.countFast(spark, dir) == read.count())
+    Layout.planMaintenance(spark, dir).foreach { b =>
+      assert(b.dvFiles <= b.files, s"more dv files than live files: $b")
+    }
   }
 
   test("read takes Spark's inferred schema from the footer, also after an append added a column") {

@@ -173,7 +173,7 @@ class PqSpec extends SparkSpec {
     // stored codes keep the (id, code, cv) format older snapshots have
     assert(pq.codes.select("vec_id", "cell").collect().toSet ==
       built.codes.select("vec_id", "cell").collect().toSet)
-    val snap = IndexIo.currentSnap(spark, path).get
+    val snap = graft.catalog.SnapshotManifest.currentSnap(spark, path).get
     assert(spark.read.parquet(s"$path/$snap/codes").columns.toSeq ==
       Seq("vec_id", "code", "cv"))
     built.close(); pq.close(); coarse.close()

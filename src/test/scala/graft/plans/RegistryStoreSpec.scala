@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 
 import graft.SparkSpec
-import graft.catalog.Tables
+import graft.catalog.{SnapshotManifest, Tables}
 
 /** Pins registry durability: with `graft.registry.path` set,
   * declarations write through to a versioned JSON + `_latest` pointer,
@@ -158,13 +158,13 @@ class RegistryStoreSpec extends SparkSpec with BeforeAndAfterAll {
     RegistryStore.resetForTest()
     try {
       PkCatalog.register(UniqueKeyDef("regspec_cas_a", Set(childP), Seq("ok")))
-      RegistryStore.testInterleave = Some(("registry-before-flip", () => {
+      SnapshotManifest.testInterleave = Some(("registry-before-flip", () => {
         PkCatalog.register(
           UniqueKeyDef("regspec_cas_b", Set(parentP), Seq("ck2")))
         RegistryStore.persist(spark, regDir)
       }))
       RegistryStore.persist(spark, regDir)
-      assert(RegistryStore.testInterleave.isEmpty, "thunk must have run")
+      assert(SnapshotManifest.testInterleave.isEmpty, "thunk must have run")
       // a fresh driver sees BOTH declarations
       MvCatalog.clear(); FkCatalog.clear(); PkCatalog.clear()
       RegistryStore.resetForTest()
@@ -174,7 +174,7 @@ class RegistryStoreSpec extends SparkSpec with BeforeAndAfterAll {
       assert(PkCatalog.get("regspec_cas_b").isDefined,
         "the interleaved winner's def was overwritten (lost update)")
     } finally {
-      RegistryStore.testInterleave = None
+      SnapshotManifest.testInterleave = None
       Seq("regspec_cas_a", "regspec_cas_b").foreach { n =>
         PkCatalog.unregister(n)
         RegistryStore.writeThrough(spark, exclude = Set(n))
