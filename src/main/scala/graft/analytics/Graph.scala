@@ -1,33 +1,24 @@
 package graft.analytics
 
+import graft.ops.Fixpoint
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Iterative graph analytics over normalized undirected edge lists
   * (the [[graft.ops.Kernels.normalizeEdge]] shape the reference's
   * friend graph uses) — the ranking complement to
-  * [[graft.pipeline.Dedup.dupClusters]]' connectivity pass.
+  * [[graft.pipeline.Dedup.dupClusters]]' connectivity pass. Every
+  * convergence loop here runs on [[graft.ops.Fixpoint]]: one
+  * checkpoint job per round, whose observed aggregate is the round's
+  * convergence signal.
   */
 object Graph {
-
-  /** Eager localCheckpoint + fresh-stats leaf rewrap
-    * ([[org.apache.spark.sql.graft.PlanBridge.freshLeaf]]): the plain
-    * checkpoint copies the source plan's estimated Statistics onto the
-    * new leaf, and in an iterative loop those estimates COMPOUND
-    * (sizeInBytes is a BigInt product over join children — k-core's
-    * edges⋈f(edges)⋈f(edges) shape cubes it per round) until the
-    * driver burns its time in BigInteger.multiply during planning.
-    * The rewrap keeps the SAME persisted blocks (freeCheckpointBlocks
-    * still releases them) but resets the leaf statistics. */
-  private def ckptFresh(df: DataFrame): DataFrame =
-    org.apache.spark.sql.graft.PlanBridge.freshLeaf(
-      df.localCheckpoint(eager = true))
 
   /** Connected components over an undirected edge list: (node,
     * component) with component = min node id reachable. Delegates to
     * the min-label-propagation + pointer-jumping kernel
     * ([[graft.pipeline.Dedup.dupClusters]] — ~log₂-diameter rounds,
-    * per-round localCheckpoint, exact fixpoint or throw); this is the
+    * exact fixpoint or throw); this is the
     * same published algorithm regardless of what the ids identify, so
     * the graph surface exposes it rather than re-deriving it. Nodes
     * with no edges don't appear (no component to report). */
@@ -50,9 +41,9 @@ object Graph {
     * never a collect, never a cartesian; the rank vector is
     * checkpoint-light (nodes × 16 bytes). Iterations are a fixed
     * small constant (ranking stabilizes long before convergence in
-    * practice); for convergence-driven runs add the
-    * [[graft.pipeline.Dedup]] localCheckpoint-per-round discipline to
-    * keep the plan from growing linearly.
+    * practice); convergence-driven runs belong on
+    * [[graft.ops.Fixpoint]], which keeps the plan from growing
+    * linearly.
     */
   def pageRank(edges: DataFrame, u1: String, u2: String,
                iters: Int = 3, d: Double = 0.85): DataFrame = {
@@ -92,67 +83,65 @@ object Graph {
     * successive rank vectors drops to `tol`, or `maxIters` rounds —
     * whichever first; returns (node, pr, iterations, converged).
     * `tol` ≤ 0 requests exactly `maxIters` rounds (fixed-iteration
-    * mode): the per-round delta join+agg is skipped entirely and
-    * `converged` reports false.
+    * mode): no delta is measured and `converged` reports false.
     *
     * Scale shape: per round, ONE equi-join from the edge list to the
-    * rank vector plus one hash aggregation, exactly like [[pageRank]];
-    * the rank vector is `localCheckpoint`ed each round (the
-    * [[graft.pipeline.Dedup.dupClusters]] discipline) so the plan
-    * never grows with the iteration count, and the previous round's
-    * blocks are freed as soon as the next is materialized. The
-    * dangling-mass and L1-delta reads are 1-scalar driver hops over
-    * the already-materialized vectors — O(nodes) work, no data-path
-    * collect. */
+    * rank vector plus one hash aggregation, exactly like [[pageRank]],
+    * materialized by [[graft.ops.Fixpoint]] so the plan never grows
+    * with the iteration count. Each rank row carries its previous
+    * value, so the L1 delta is an aggregate observed by the round's
+    * own checkpoint job, and the node count rides out of the node
+    * set's checkpoint the same way. */
   def pageRankDirected(edges: DataFrame, src: String, dst: String,
                        maxIters: Int = 20, d: Double = 0.85,
                        tol: Double = 1e-6): (DataFrame, Int, Boolean) = {
     require(maxIters >= 1, "pageRankDirected: maxIters must be >= 1")
     val out = edges.select(col(src).as("src"), col(dst).as("dst")).distinct()
     val odeg = out.groupBy(col("src")).agg(count(lit(1)).as("__deg"))
-    val nodes = out.select(col("src").as("node"))
-      .unionAll(out.select(col("dst").as("node"))).distinct()
-      .transform(ckptFresh)
-    val nN = nodes.count().toDouble
-    var pr = nodes.select(col("node"), lit(1.0 / nN).as("pr"))
-      .transform(ckptFresh)
-    var it = 0
-    var delta = Double.MaxValue
-    while (it < maxIters && delta > tol) {
+    val (nodes, n) = Fixpoint.materialize(
+      out.select(col("src").as("node"))
+        .unionAll(out.select(col("dst").as("node"))).distinct(),
+      count(lit(1)))
+    val nN = n.get
+    val run = Fixpoint.run(
+      nodes.select(col("node"), lit(1.0 / nN).as("pr"), nullOld),
+      maxIters, l1Delta(tol), tol) { (pr, _) =>
       // dangling mass rides into the round's ONE materializing action
-      // as a broadcast 1-row scalar (the [[pageRank]] `n` idiom) —
-      // collecting it to the driver first was a second full
-      // action per round, pure scheduler latency. The expression
-      // preserves the literal form's IEEE op order:
+      // as a broadcast 1-row scalar (the [[pageRank]] `n` idiom). The
+      // expression preserves the literal form's IEEE op order:
       // (d * dangling) / nN.
-      val dangling = pr
-        .join(odeg.withColumnRenamed("src", "node"), Seq("node"), "left_anti")
-        .agg(coalesce(sum(col("pr")), lit(0.0)).as("__dang"))
-      val contrib = out
-        .join(pr.withColumnRenamed("node", "src"), "src")
-        .join(odeg, "src")
-        .groupBy(col("dst")).agg(sum(col("pr") / col("__deg")).as("__in"))
-      val next = nodes
-        .join(contrib.withColumnRenamed("dst", "node"), Seq("node"), "left")
-        .crossJoin(broadcast(dangling))
+      pr.select(col("node"), col("pr").as("__old"))
+        .join(inflow(out, odeg, pr), Seq("node"), "left")
+        .crossJoin(broadcast(danglingMass(odeg, pr)))
         .select(col("node"),
           (lit((1.0 - d) / nN) + lit(d) * col("__dang") / lit(nN) +
-            lit(d) * coalesce(col("__in"), lit(0.0))).as("pr"))
-        .transform(ckptFresh)
-      // fixed-iteration mode (tol ≤ 0) skips the L1-delta join+agg —
-      // a third of each round's actions, pure overhead when the caller
-      // asked for exactly maxIters rounds
-      if (tol > 0.0)
-        delta = pr.select(col("node"), col("pr").as("__old"))
-          .join(next.select(col("node"), col("pr").as("__new")), Seq("node"))
-          .agg(sum(abs(col("__new") - col("__old")))).head.getDouble(0)
-      graft.ops.CacheScope.freeCheckpointBlocks(pr)
-      pr = next
-      it += 1
+            lit(d) * coalesce(col("__in"), lit(0.0))).as("pr"),
+          col("__old"))
     }
-    graft.ops.CacheScope.freeCheckpointBlocks(nodes)
-    (graft.ops.CacheScope.register(pr), it, delta <= tol)
+    Fixpoint.free(nodes)
+    (run.state.select(col("node"), col("pr")), run.rounds, run.converged)
   }
+
+  /** The PageRanks' round helpers. A rank row carries its previous
+    * value as `__old` (null before the first round), so the L1 delta
+    * is an aggregate over the round's own output; `tol` ≤ 0 asks for
+    * fixed rounds and measures nothing. */
+  private val nullOld = lit(null).cast("double").as("__old")
+  private def l1Delta(tol: Double) =
+    Option.when(tol > 0.0)(sum(abs(col("pr") - col("__old"))))
+
+  /** Σ pr(u)/outdeg(u) over each node's in-edges, as (node, __in). */
+  private def inflow(out: DataFrame, odeg: DataFrame,
+                     pr: DataFrame): DataFrame =
+    out.join(pr.select(col("node").as("src"), col("pr")), "src")
+      .join(odeg, "src")
+      .groupBy(col("dst").as("node"))
+      .agg(sum(col("pr") / col("__deg")).as("__in"))
+
+  /** The rank mass held by sinks (no out-edges), as a 1-row __dang. */
+  private def danglingMass(odeg: DataFrame, pr: DataFrame): DataFrame =
+    pr.join(odeg.withColumnRenamed("src", "node"), Seq("node"), "left_anti")
+      .agg(coalesce(sum(col("pr")), lit(0.0)).as("__dang"))
 
   /** HITS hubs & authorities (Kleinberg 1999) over a directed edge
     * list, L1-normalized after each half-step:
@@ -164,27 +153,22 @@ object Graph {
     * out-edges hub 0. Returns (node, hub, auth) after `iters` rounds.
     *
     * Scale shape: per round, two equi-joins from the edge list + two
-    * hash aggregations; the normalizers are 1-scalar driver hops over
-    * already-aggregated frames; both vectors are `localCheckpoint`ed
-    * per round so the plan never grows with the iteration count (the
-    * [[pageRankDirected]] discipline). */
+    * hash aggregations; the normalizers ride in as broadcast 1-row
+    * scalars. Both vectors live in one (node, hub, auth) frame that
+    * [[graft.ops.Fixpoint]] materializes once per round, so the plan
+    * never grows with the iteration count. */
   def hits(edges: DataFrame, src: String, dst: String,
            iters: Int = 5): DataFrame = {
     require(iters >= 1, "hits: iters must be >= 1")
     val out = edges.select(col(src).as("src"), col(dst).as("dst")).distinct()
-    val nodes = out.select(col("src").as("node"))
+    val init = out.select(col("src").as("node"))
       .unionAll(out.select(col("dst").as("node"))).distinct()
-      .transform(ckptFresh)
-    var hub = nodes.select(col("node"), lit(1.0).as("hub"))
-      .transform(ckptFresh)
-    var auth: DataFrame = null // set by the first half-step below
-    for (_ <- 1 to iters) {
-      // each half-step is ONE materializing action: the L1 normalizer
-      // rides in as a broadcast 1-row scalar (the [[pageRank]] `n`
-      // idiom) instead of a separate driver `head` per half-step, and
-      // the raw frame needs no checkpoint of its own — its
-      // aggregation exchange appears twice in the one plan and Spark's
-      // ReuseExchange computes it once. Division op/order unchanged:
+      .select(col("node"), lit(1.0).as("hub"), lit(0.0).as("auth"))
+    Fixpoint.run(init, iters, None) { (cur, _) =>
+      // the L1 normalizers ride in as broadcast 1-row scalars (the
+      // [[pageRank]] `n` idiom), and each raw frame's aggregation
+      // exchange appears twice in the round's plan, which
+      // ReuseExchange computes once. Division op/order unchanged:
       // raw / Σraw.
       // a null/zero half-step sum (degenerate graph) must fail loudly,
       // not flow silent null/NaN ranks downstream (r19 advice): the
@@ -196,32 +180,25 @@ object Graph {
             .cast("double"))
           .otherwise(s0)
       val araw = out
-        .join(hub.withColumnRenamed("node", "src"), "src")
+        .join(cur.select(col("node").as("src"), col("hub")), "src")
         .groupBy(col("dst")).agg(sum(col("hub")).as("raw"))
       val asum = araw.agg(sum(col("raw")).as("__s"))
-      val nextAuth = nodes
+      val auth = cur.select(col("node"))
         .join(araw.withColumnRenamed("dst", "node"), Seq("node"), "left")
         .crossJoin(broadcast(asum))
         .select(col("node"),
           (coalesce(col("raw"), lit(0.0)) / checked(col("__s"))).as("auth"))
-        .transform(ckptFresh)
       val hraw = out
-        .join(nextAuth.withColumnRenamed("node", "dst"), "dst")
+        .join(auth.withColumnRenamed("node", "dst"), "dst")
         .groupBy(col("src")).agg(sum(col("auth")).as("raw"))
       val hsum = hraw.agg(sum(col("raw")).as("__s"))
-      val nextHub = nodes
+      auth
         .join(hraw.withColumnRenamed("src", "node"), Seq("node"), "left")
         .crossJoin(broadcast(hsum))
         .select(col("node"),
-          (coalesce(col("raw"), lit(0.0)) / checked(col("__s"))).as("hub"))
-        .transform(ckptFresh)
-      graft.ops.CacheScope.freeCheckpointBlocks(hub)
-      if (auth != null) graft.ops.CacheScope.freeCheckpointBlocks(auth)
-      hub = nextHub
-      auth = nextAuth
-    }
-    graft.ops.CacheScope.freeCheckpointBlocks(nodes)
-    graft.ops.CacheScope.register(hub.join(auth, Seq("node")))
+          (coalesce(col("raw"), lit(0.0)) / checked(col("__s"))).as("hub"),
+          col("auth"))
+    }.state
   }
 
   /** EXACT triangle count via degree-ordered orientation (the
@@ -280,8 +257,8 @@ object Graph {
     * with p uniform over `sources`, zero elsewhere, so Σpr = 1 every
     * round and rank measures proximity to the sources: unreachable
     * nodes hold exactly 0. Convergence/iteration contract, per-round
-    * plan shape (one equi-join + one agg), and localCheckpoint
-    * discipline are identical to [[pageRankDirected]]. */
+    * plan shape (one equi-join + one agg) and [[graft.ops.Fixpoint]]
+    * rounds are identical to [[pageRankDirected]]. */
   def personalizedPageRank(edges: DataFrame, src: String, dst: String,
                            sources: Seq[Any], maxIters: Int = 20,
                            d: Double = 0.85,
@@ -290,44 +267,25 @@ object Graph {
     require(sources.nonEmpty, "personalizedPageRank: sources must be non-empty")
     val out = edges.select(col(src).as("src"), col(dst).as("dst")).distinct()
     val odeg = out.groupBy(col("src")).agg(count(lit(1)).as("__deg"))
-    val nodes = out.select(col("src").as("node"))
-      .unionAll(out.select(col("dst").as("node"))).distinct()
-      .transform(ckptFresh)
     // the teleport vector as a codegen expression — no join needed
     val p = when(col("node").isin(sources: _*),
       lit(1.0) / lit(sources.size.toDouble)).otherwise(lit(0.0))
-    var pr = nodes.select(col("node"), p.as("pr"))
-      .transform(ckptFresh)
-    var it = 0
-    var delta = Double.MaxValue
-    while (it < maxIters && delta > tol) {
+    val init = out.select(col("src").as("node"))
+      .unionAll(out.select(col("dst").as("node"))).distinct()
+      .select(col("node"), p.as("pr"), nullOld)
+    val run = Fixpoint.run(init, maxIters, l1Delta(tol), tol) { (pr, _) =>
       // dangling mass fused into the round's single action as a
       // broadcast scalar — see [[pageRankDirected]]; op order
       // preserved: (1−d) + d·dangling.
-      val dangling = pr
-        .join(odeg.withColumnRenamed("src", "node"), Seq("node"), "left_anti")
-        .agg(coalesce(sum(col("pr")), lit(0.0)).as("__dang"))
-      val contrib = out
-        .join(pr.withColumnRenamed("node", "src"), "src")
-        .join(odeg, "src")
-        .groupBy(col("dst")).agg(sum(col("pr") / col("__deg")).as("__in"))
-      val next = nodes
-        .join(contrib.withColumnRenamed("dst", "node"), Seq("node"), "left")
-        .crossJoin(broadcast(dangling))
+      pr.select(col("node"), col("pr").as("__old"))
+        .join(inflow(out, odeg, pr), Seq("node"), "left")
+        .crossJoin(broadcast(danglingMass(odeg, pr)))
         .select(col("node"),
           ((lit(1.0 - d) + lit(d) * col("__dang")) * p +
-            lit(d) * coalesce(col("__in"), lit(0.0))).as("pr"))
-        .transform(ckptFresh)
-      if (tol > 0.0) // fixed-iteration mode: see [[pageRankDirected]]
-        delta = pr.select(col("node"), col("pr").as("__old"))
-          .join(next.select(col("node"), col("pr").as("__new")), Seq("node"))
-          .agg(sum(abs(col("__new") - col("__old")))).head.getDouble(0)
-      graft.ops.CacheScope.freeCheckpointBlocks(pr)
-      pr = next
-      it += 1
+            lit(d) * coalesce(col("__in"), lit(0.0))).as("pr"),
+          col("__old"))
     }
-    graft.ops.CacheScope.freeCheckpointBlocks(nodes)
-    (graft.ops.CacheScope.register(pr), it, delta <= tol)
+    (run.state.select(col("node"), col("pr")), run.rounds, run.converged)
   }
 
   /** k-core decomposition by iterative peeling (Seidman 1983;
@@ -342,11 +300,14 @@ object Graph {
     * converged, further rounds are no-ops, so the cap only matters
     * pre-convergence.
     *
-    * Scale shape: per round, one degree aggregation + two anti-joins
-    * of the edge list against the sub-threshold node set — all
-    * equi-joins on node ids; the edge list is `localCheckpoint`ed per
-    * round so the plan never grows. The only driver hop is the
-    * per-round sub-threshold count (1 scalar, the termination probe).
+    * Scale shape: each edge carries both endpoints' degrees in the
+    * current subgraph, so a round is a filter (drop every edge with a
+    * sub-threshold endpoint), one degree aggregation and two
+    * equi-joins on node ids, materialized by [[graft.ops.Fixpoint]].
+    * The count of edges with a sub-threshold endpoint — the edges the
+    * NEXT round peels — is observed by the round's own checkpoint job,
+    * so zero means converged, the capped round included, with no
+    * separate probe.
     * Peeling removes whole frontiers per round, so round count is
     * bounded by the degeneracy ordering's depth, not node count —
     * small in practice even on web graphs. */
@@ -354,34 +315,24 @@ object Graph {
             maxRounds: Int = 20): (DataFrame, Int, Boolean) = {
     require(k >= 1, "kCore: k must be >= 1")
     require(maxRounds >= 0, "kCore: maxRounds must be >= 0")
-    var und = edges.select(least(col(u1), col(u2)).as("u1"),
+    val und = edges.select(least(col(u1), col(u2)).as("u1"),
         greatest(col(u1), col(u2)).as("u2"))
       .filter(col("u1") =!= col("u2")).distinct()
-      .transform(ckptFresh)
     def degrees(e: DataFrame): DataFrame =
       e.select(col("u1").as("node")).unionAll(e.select(col("u2").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
-      val bad = degrees(und).filter(col("deg") < k).select(col("node"))
-      if (bad.isEmpty) converged = true
-      else {
-        val peeled = und
-          .join(bad.withColumnRenamed("node", "u1"), Seq("u1"), "left_anti")
-          .join(bad.withColumnRenamed("node", "u2"), Seq("u2"), "left_anti")
-          .select(col("u1"), col("u2"))
-          .transform(ckptFresh)
-        graft.ops.CacheScope.freeCheckpointBlocks(und)
-        und = peeled
-        rounds += 1
-      }
+    def withDegrees(e: DataFrame): DataFrame = {
+      val deg = degrees(e)
+      e.join(deg.select(col("node").as("u1"), col("deg").as("d1")), "u1")
+        .join(deg.select(col("node").as("u2"), col("deg").as("d2")), "u2")
+        .select(col("u1"), col("u2"), col("d1"), col("d2"))
     }
-    // the cap round may itself have reached the fixpoint — report that
-    // accurately (one cheap agg over the already-peeled edge list)
-    if (!converged)
-      converged = degrees(und).filter(col("deg") < k).isEmpty
-    (graft.ops.CacheScope.register(degrees(und)), rounds, converged)
+    val run = Fixpoint.run(withDegrees(und), maxRounds,
+        Some(count_if(col("d1") < k || col("d2") < k))) { (cur, _) =>
+      withDegrees(cur.filter(col("d1") >= k && col("d2") >= k)
+        .select(col("u1"), col("u2")))
+    }
+    (degrees(run.state), run.rounds, run.converged)
   }
 
   /** Weighted single/multi-source shortest paths by Bellman-Ford
@@ -395,10 +346,10 @@ object Graph {
     *
     * Per round: ONE equi-join of the current distance vector to the
     * edge list (the relax step) + one min-aggregation folding the
-    * candidates into the vector, then a change-count probe (1 driver
-    * scalar) for early termination; the vector is `localCheckpoint`ed
-    * per round ([[pageRankDirected]] discipline). Never all-pairs,
-    * never a driver-side frontier. */
+    * candidates into the vector, materialized by [[graft.ops.Fixpoint]]
+    * with the count of changed costs observed by the same job (a round
+    * that changes nothing ends the run and is not counted). Never
+    * all-pairs, never a driver-side frontier. */
   def shortestPaths(edges: DataFrame, src: String, dst: String,
                     weight: String, sources: Seq[Long],
                     maxRounds: Int): (DataFrame, Int, Boolean) = {
@@ -408,37 +359,27 @@ object Graph {
     import spark.implicits._
     val e = edges.select(col(src).as("src"), col(dst).as("dst"),
       col(weight).cast("long").as("w"))
-    var dist = sources.distinct.toDF("node")
-      .select(col("node").cast("long").as("node"), lit(0L).as("cost"))
-      .transform(ckptFresh)
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
-      // the previous cost threads THROUGH the min-aggregation (every
-      // node has exactly one dist row, so max(__old) recovers it —
-      // the [[graft.pipeline.Dedup.dupClusters]] trick): the
-      // change probe then reads off the round's already-materialized
-      // checkpoint instead of paying a separate join+count action
-      // over both vectors per round.
-      val cand = e.join(dist.withColumnRenamed("node", "src"), "src")
-        .select(col("dst").as("node"), (col("cost") + col("w")).as("cost"),
-          lit(null).cast("long").as("__old"))
-      val next = dist.select(col("node"), col("cost"),
-          col("cost").as("__old"))
-        .unionByName(cand)
-        .groupBy(col("node")).agg(min(col("cost")).as("cost"),
-          max(col("__old")).as("__old"))
-        .withColumn("__changed",
-          col("__old").isNull || col("cost") < col("__old"))
-        .select(col("node"), col("cost"), col("__changed"))
-        .transform(ckptFresh)
-      val changed = next.filter(col("__changed")).limit(1).count()
-      graft.ops.CacheScope.freeCheckpointBlocks(dist)
-      dist = next.select(col("node"), col("cost"))
-      if (changed == 0) converged = true else rounds += 1
+    val init = sources.distinct.toDF("node")
+      .select(col("node").cast("long").as("node"), lit(0L).as("cost"),
+        lit(true).as("__changed"))
+    val run = Fixpoint.run(init, maxRounds, Some(count_if(col("__changed")))) {
+      (dist, _) =>
+        // the previous cost threads THROUGH the min-aggregation (every
+        // node has exactly one dist row, so max(__old) recovers it —
+        // the [[graft.pipeline.Dedup.dupClusters]] trick), so the
+        // changed flag needs no join against the previous vector
+        val cand = e.join(dist.select(col("node").as("src"), col("cost")), "src")
+          .select(col("dst").as("node"), (col("cost") + col("w")).as("cost"),
+            lit(null).cast("long").as("__old"))
+        dist.select(col("node"), col("cost"), col("cost").as("__old"))
+          .unionByName(cand)
+          .groupBy(col("node")).agg(min(col("cost")).as("cost"),
+            max(col("__old")).as("__old"))
+          .select(col("node"), col("cost"),
+            (col("__old").isNull || col("cost") < col("__old")).as("__changed"))
     }
-    (graft.ops.CacheScope.register(dist.select(col("node"), col("cost"))),
-      rounds, converged)
+    (run.state.select(col("node"), col("cost")),
+      if (run.converged) run.rounds - 1 else run.rounds, run.converged)
   }
 
   /** Unweighted BFS hop distances from a source set over an
@@ -454,11 +395,10 @@ object Graph {
     * hop k−1, not the whole settled set) to the adjacency list, then
     * anti-joins out already-settled nodes — each edge is traversed at
     * most twice over the whole run, and per-round work shrinks with
-    * the frontier. Both the settled set and the frontier are
-    * `localCheckpoint`ed per round (the [[pageRankDirected]]
-    * discipline) so the plan never grows with the hop count; the
-    * only driver hop is the per-round frontier count (1 scalar),
-    * which doubles as the termination probe. */
+    * the frontier. The settled set, with the frontier flagged `__new`,
+    * is one [[graft.ops.Fixpoint]] state, so the plan never grows
+    * with the hop count; the count of newly reached nodes is observed
+    * by the round's own checkpoint job and ends the run at zero. */
   def bfsHops(edges: DataFrame, u1: String, u2: String,
               sources: Seq[Long], maxHops: Int): DataFrame = {
     require(maxHops >= 0, "bfsHops: maxHops must be >= 0")
@@ -467,30 +407,18 @@ object Graph {
     val adj = edges.select(col(u1).as("src"), col(u2).as("dst"))
       .union(edges.select(col(u2).as("src"), col(u1).as("dst")))
     import spark.implicits._
-    var settled = sources.distinct.toDF("node")
-      .select(col("node").cast("long").as("node"), lit(0L).as("hop"))
-      .transform(ckptFresh)
-    var frontier = settled.select(col("node"))
-    var hop = 0L
-    var frontierSize = frontier.count()
-    while (frontierSize > 0 && hop < maxHops) {
-      hop += 1
-      val next = adj.join(frontier.withColumnRenamed("node", "src"), "src")
-        .select(col("dst").as("node")).distinct()
-        .join(settled, Seq("node"), "left_anti")
-        .select(col("node"), lit(hop).as("hop"))
-        .transform(ckptFresh)
-      // the settled set stays a UNION of the per-hop checkpointed
-      // frontiers (≤ maxHops tiny materialized leaves) instead of
-      // being re-checkpointed wholesale every round — that copy was a
-      // second materializing action per hop for data the blocks
-      // already hold. Leaves are shared across rounds, so nothing is
-      // freed mid-loop; the caller's CacheScope release walks the
-      // union and frees every leaf.
-      settled = settled.unionByName(next)
-      frontier = next.select(col("node"))
-      frontierSize = next.count()
-    }
-    graft.ops.CacheScope.register(settled)
+    val init = sources.distinct.toDF("node")
+      .select(col("node").cast("long").as("node"), lit(0L).as("hop"),
+        lit(true).as("__new"))
+    Fixpoint.run(init, maxHops, Some(count_if(col("__new")))) {
+      (settled, hop) =>
+        val reached = adj
+          .join(settled.filter(col("__new")).select(col("node").as("src")), "src")
+          .select(col("dst").as("node")).distinct()
+          .join(settled, Seq("node"), "left_anti")
+        settled.select(col("node"), col("hop"), lit(false).as("__new"))
+          .unionByName(reached.select(col("node"), lit(hop.toLong).as("hop"),
+            lit(true).as("__new")))
+    }.state.select(col("node"), col("hop"))
   }
 }

@@ -74,8 +74,9 @@ object LocalParquet {
           .as(LogicalTypeAnnotation.dateType()).named(f.name)
       case TimestampType =>
         // INT64 µs adjusted-to-UTC — Spark reads it as TimestampType
-        // under any session zone (and writes this form itself on
-        // Spark 4's default outputTimestampType)
+        // under any session zone. Spark's own writer uses this form only
+        // with `spark.sql.parquet.outputTimestampType = TIMESTAMP_MICROS`;
+        // its default is INT96, whose footer statistics are unusable
         Types.primitive(PrimitiveType.PrimitiveTypeName.INT64, rep)
           .as(LogicalTypeAnnotation.timestampType(true,
             LogicalTypeAnnotation.TimeUnit.MICROS)).named(f.name)

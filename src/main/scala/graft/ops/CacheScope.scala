@@ -40,10 +40,10 @@ object CacheScope {
     df.persist()
   }
 
-  /** Register an already-materialized frame for release — for kernels
-    * that manage persistence eagerly inside a loop (e.g. the
-    * dup-cluster fixpoint) and hand only their final
-    * `localCheckpoint`ed frame to the caller's scope. [[releaseAll]]
+  /** Register an already-materialized frame for release — for
+    * [[Fixpoint]] runs, which manage persistence eagerly inside the
+    * loop and hand only their final `localCheckpoint`ed frame to the
+    * caller's scope. [[releaseAll]]
     * frees its block-manager blocks too, not just cache-manager
     * entries. */
   def register(df: DataFrame): DataFrame = synchronized {
@@ -75,7 +75,7 @@ object CacheScope {
   /** Drop the block-manager blocks behind a `localCheckpoint`ed
     * frame's LogicalRDD nodes. Safe on non-checkpointed frames
     * (no-op). */
-  def freeCheckpointBlocks(df: DataFrame): Unit =
+  private[ops] def freeCheckpointBlocks(df: DataFrame): Unit =
     df.queryExecution.analyzed.foreach {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         lr.rdd.unpersist(blocking = false)

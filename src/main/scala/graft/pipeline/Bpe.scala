@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.catalog.SnapshotManifest
-import graft.ops.CacheScope
+import graft.ops.Fixpoint
 
 /** Byte-pair-encoding subword tokenization (Sennrich/Haddow/Birch,
   * "Neural Machine Translation of Rare Words with Subword Units", ACL
@@ -93,9 +93,9 @@ object Bpe {
     * when the best pair's weighted count falls below `minCount`.
     * Returns merges in rank order. Each round collects exactly ONE
     * row (the winning pair) — the vocab itself never leaves the
-    * executors; per-round `localCheckpoint` truncates the lineage the
-    * same way dupClusters does (the fold expression would otherwise
-    * nest once per round). */
+    * executors; each round's vocab is materialized through
+    * [[graft.ops.Fixpoint]], which truncates the lineage (the fold
+    * expression would otherwise nest once per round). */
   def train(docs: DataFrame, text: String, numMerges: Int,
             minCount: Long = 2): Vector[(String, String)] =
     trainLoop(wordFreq(docs, text)
@@ -130,7 +130,7 @@ object Bpe {
 
   private def trainLoop(vocab0: DataFrame, numMerges: Int,
                         minCount: Long): Vector[(String, String)] = {
-    var vocab = vocab0.localCheckpoint(true)
+    var vocab = Fixpoint.materialize(vocab0)
     val merges = Vector.newBuilder[(String, String)]
     var round = 0
     var done = false
@@ -143,14 +143,14 @@ object Bpe {
           val (a, b) = (r.getString(0), r.getString(1))
           merges += ((a, b))
           val prev = vocab
-          vocab = vocab.select(applyMerge(col("toks"), a, b).as("toks"),
-            col("freq")).localCheckpoint(true)
-          CacheScope.freeCheckpointBlocks(prev)
+          vocab = Fixpoint.materialize(
+            vocab.select(applyMerge(col("toks"), a, b).as("toks"), col("freq")))
+          Fixpoint.free(prev)
         case None => done = true
       }
       round += 1
     }
-    CacheScope.freeCheckpointBlocks(vocab)
+    Fixpoint.free(vocab)
     merges.result()
   }
 

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.ops.{CacheScope, Kernels}
+import graft.ops.{CacheScope, Fixpoint, Kernels}
 
 /** Deduplication operators for training-data pipelines, ordered by
   * cost/recall: exact → n-gram Jaccard (inverted index) → MinHash+LSH
@@ -346,29 +346,20 @@ object Dedup {
     * one shuffle-join on the edge key plus one self-join on the label
     * key — no all-pairs step, state is one `(id, label)` row per
     * node — and pointer jumping makes rounds ≈ log₂(diameter), so a
-    * chain of 10⁶ docs converges in ~20 rounds.
+    * chain of 10⁶ docs converges in ~20 rounds. The rounds run on
+    * [[Fixpoint]]: one checkpoint job each, whose observed count of
+    * changed labels is the convergence test.
     *
-    * Each round's labels are eagerly `localCheckpoint`ed and the
-    * previous round's blocks freed: iterative self-joins otherwise
-    * double the logical plan per round (2^rounds plan nodes — the
-    * analyzer, not the data, becomes the bottleneck), which is the
-    * same lineage-truncation discipline GraphX's Pregel applies. On a
-    * cluster with dynamic allocation, set a reliable checkpoint dir
-    * and swap `localCheckpoint` for `checkpoint` — executor loss
-    * discards local checkpoint blocks.
-    *
-    * Converged means every edge has equal labels on both ends, which
-    * within a component forces the single value min(component) — the
-    * fixpoint is exact, not approximate. `maxIters` is a guard rail
-    * (2^50-diameter graphs don't exist); exceeding it throws rather
-    * than returning a silently-partial closure. `jumps` is the number
-    * of pointer jumps composed per round — A/B'd at sf0.1 (BENCH_NOTES
-    * r18): 0 jumps stalls hash-to-min on chain graphs (>20 rounds),
-    * 2 jumps leaves the round count unchanged (merge dynamics, not
-    * pointer depth, bound it) while the extra self-join doubles the
-    * per-round cost — 1 is the measured optimum. */
-  def dupClusters(pairs: DataFrame, maxIters: Int = 50,
-                  jumps: Int = 1): DataFrame = {
+    * Converged means no label changed in a round, which within a
+    * component forces the single value min(component) — the fixpoint
+    * is exact, not approximate. `maxIters` is a guard rail (2^50-
+    * diameter graphs don't exist); exceeding it throws rather than
+    * returning a silently-partial closure. One pointer jump per round
+    * is the measured optimum (BENCH_NOTES r18, sf0.1 A/B): no jump
+    * stalls hash-to-min on chain graphs (>20 rounds), two leave the
+    * round count unchanged (merge dynamics, not pointer depth, bound
+    * it) while the extra self-join doubles the per-round cost. */
+  def dupClusters(pairs: DataFrame, maxIters: Int = 50): DataFrame = {
     val e0 = pairs.select(col("id1").as("src"), col("id2").as("dst"))
     // cache PARTITIONED ON THE JOIN KEY: the per-round join then
     // reuses the cached distribution (InMemoryRelation preserves hash
@@ -377,98 +368,55 @@ object Dedup {
     val edges = CacheScope.persist(
       e0.unionAll(e0.select(col("dst").as("src"), col("src").as("dst")))
         .distinct().repartition(col("dst")))
-    // seed with min(self, neighbors) — round 1 fused into init.
-    // `ckpt` owns the round's checkpoint blocks (freed next round);
-    // `labels` re-wraps them as a fresh-stats leaf (PlanBridge) so the
-    // per-round join statistics cannot compound across iterations —
-    // without this, sizeInBytes SQUARES per round and the driver ends
-    // up multiplying million-digit BigInts inside stats estimation
-    var ckpt = edges
+    // seed with min(self, neighbors) — round 1 fused into init; a
+    // node's label before it was its own id
+    val seed = edges
       .groupBy(col("dst").as("id"))
       .agg(min(least(col("dst"), col("src"))).as("label"))
-      .select(col("id"), col("label"), col("label").as("__old"),
-        lit(false).as("__changed"))
-      .localCheckpoint(eager = true)
-    var fresh = org.apache.spark.sql.graft.PlanBridge.freshLeaf(ckpt)
-    var it = 0
-    var converged = false
-    while (!converged && it < maxIters) {
-      val labels = fresh.select(col("id"), col("label"))
-      val labelT = fresh.schema("label").dataType
-      val viaEdges = edges
-        .join(labels.select(col("id").as("dst"), col("label")), Seq("dst"))
-        .select(col("src").as("id"), col("label"),
-          lit(null).cast(labelT).as("__old"))
-      // hash-to-min representative merge (Rastogi et al., "Finding
-      // Connected Components in Map-Reduce", ICDE 2013): every node
-      // whose min DROPPED last round forwards the new min to the
-      // representative it just left behind, so two touching clusters
-      // merge at their representatives in one round and the jump below
-      // redistributes — without this, neighbor-min + path-halving
-      // alone creeps hop-by-hop along chain graphs (observed: >50
-      // rounds on a long n_chars chain that this converges in ~6).
-      // The messages lag one round (read FREE off the previous
-      // checkpoint, no extra aggregation), which at most delays
-      // convergence by a round.
-      val msgs = fresh.filter(col("__changed"))
-        .select(col("__old").as("id"), col("label"),
-          lit(null).cast(labelT).as("__old"))
-      // the previous label threads THROUGH the min-aggregation (every
-      // id has exactly one labels row, so max(__old) recovers it) —
-      // the convergence check then reads off the checkpointed frame
-      // instead of paying a separate shuffle join per round
-      val stepped = labels.withColumn("__old", col("label"))
-        .unionByName(viaEdges).unionByName(msgs)
-        .groupBy("id").agg(min("label").as("label"), max("__old").as("__old"))
-      // ITERATED pointer jump: label := label(label), `jumps` times per
-      // round (always ≤ — a node's own label row is the min over a set
-      // containing itself, and the composed lookup preserves that).
-      // One jump halves the pointer depth (rounds ≈ log₂ diameter);
-      // each EXTRA jump per round is one more self-join — far cheaper
-      // than a full round (edge join + re-aggregation + checkpoint +
-      // convergence probe + AQE re-plan), so depth /2^jumps per round
-      // shrinks the round count on chain-heavy graphs (d11's
-      // lang × n_chars interval chains: 9 rounds → 5 at jumps=2) at a
-      // fraction of the per-round cost.
-      var jumped = stepped
-      var j = 0
-      while (j < jumps) {
-        jumped = jumped
-          .join(jumped.select(col("id").as("label"), col("label").as("__pl")),
+      .select(col("id"), col("label"), col("id").as("__old"),
+        (col("label") =!= col("id")).as("__changed"))
+    val run = Fixpoint.run(seed, maxIters, Some(count_if(col("__changed")))) {
+      (prev, _) =>
+        val labels = prev.select(col("id"), col("label"))
+        val labelT = prev.schema("label").dataType
+        val viaEdges = edges
+          .join(labels.select(col("id").as("dst"), col("label")), Seq("dst"))
+          .select(col("src").as("id"), col("label"),
+            lit(null).cast(labelT).as("__old"))
+        // hash-to-min representative merge (Rastogi et al., "Finding
+        // Connected Components in Map-Reduce", ICDE 2013): every node
+        // whose min DROPPED last round forwards the new min to the
+        // representative it just left behind, so two touching clusters
+        // merge at their representatives in one round and the jump below
+        // redistributes — without this, neighbor-min + path-halving
+        // alone creeps hop-by-hop along chain graphs (observed: >50
+        // rounds on a long n_chars chain that this converges in ~6).
+        // The messages lag one round (read FREE off the previous
+        // round's state, no extra aggregation), which at most delays
+        // convergence by a round.
+        val msgs = prev.filter(col("__changed"))
+          .select(col("__old").as("id"), col("label"),
+            lit(null).cast(labelT).as("__old"))
+        // the previous label threads THROUGH the min-aggregation (every
+        // id has exactly one labels row, so max(__old) recovers it), so
+        // the round's changed flag needs no join against the old labels
+        val stepped = labels.withColumn("__old", col("label"))
+          .unionByName(viaEdges).unionByName(msgs)
+          .groupBy("id").agg(min("label").as("label"), max("__old").as("__old"))
+        // pointer jump: label := label(label) (always ≤ — a node's own
+        // label row is the min over a set containing itself)
+        stepped
+          .join(stepped.select(col("id").as("label"), col("label").as("__pl")),
             Seq("label"), "left")
-          .select(col("id"),
-            coalesce(col("__pl"), col("label")).as("label"), col("__old"))
-        j += 1
-      }
-      val next = jumped
-        .withColumn("__changed", col("label") =!= col("__old"))
-        .localCheckpoint(eager = true)
-      // fixpoint probe over the already-materialized checkpoint blocks
-      // (no joins — limit(1) exits at the first changed label)
-      converged = next.filter(col("__changed")).limit(1).count() == 0L
-      if (sys.env.contains("GRAFT_DEBUG_CC"))
-        println(s"[cc] round $it: changed=" +
-          next.filter(col("__changed")).count())
-      freeCheckpoint(ckpt)
-      ckpt = next
-      fresh = org.apache.spark.sql.graft.PlanBridge.freshLeaf(next)
-      it += 1
+          .select(col("id"), coalesce(col("__pl"), col("label")).as("label"),
+            col("__old"))
+          .withColumn("__changed", col("label") =!= col("__old"))
     }
-    val labels = fresh.select(col("id"), col("label"))
-    if (!converged)
+    if (!run.converged)
       throw new IllegalStateException(
         s"dupClusters did not converge in $maxIters rounds")
-    // the final round's labels stay resident for the caller's terminal
-    // action; registering them lets CacheScope.releaseAll drop the
-    // checkpoint blocks afterwards (one (id,label) frame — negligible
-    // next to the corpus, but no block should outlive its query)
-    CacheScope.register(labels.select(col("id"), col("label").as("cluster")))
+    run.state.select(col("id"), col("label").as("cluster"))
   }
-
-  /** Drop the block-manager blocks behind a `localCheckpoint`ed frame
-    * (Dataset.unpersist only covers cache-manager entries). */
-  private def freeCheckpoint(df: DataFrame): Unit =
-    CacheScope.freeCheckpointBlocks(df)
 
   /** Apply a near-dup pair set: drop every doc that is not its
     * cluster's keeper.

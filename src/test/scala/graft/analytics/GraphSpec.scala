@@ -213,11 +213,13 @@ class GraphSpec extends SparkSpec {
     assert(core2.as[(Long, Long)].collect().toMap == got)
   }
 
+  // 1→4 direct costs 10; 1→2→3→4 costs 3. Bellman-Ford must prefer
+  // the 3-hop route once allowed enough rounds.
+  private lazy val weighted = Seq((1L, 4L, 10L), (1L, 2L, 1L), (2L, 3L, 1L),
+    (3L, 4L, 1L), (4L, 5L, 1L)).toDF("s", "t", "w")
+
   test("shortestPaths: cheap long route beats expensive direct edge, hop cap bounds it") {
-    // 1→4 direct costs 10; 1→2→3→4 costs 3. Bellman-Ford must prefer
-    // the 3-hop route once allowed enough rounds.
-    val e = Seq((1L, 4L, 10L), (1L, 2L, 1L), (2L, 3L, 1L), (3L, 4L, 1L),
-      (4L, 5L, 1L)).toDF("s", "t", "w")
+    val e = weighted
     val (d, rounds, conv) = Graph.shortestPaths(e, "s", "t", "w",
       sources = Seq(1L), maxRounds = 10)
     assert(conv && rounds <= 5)
@@ -234,6 +236,19 @@ class GraphSpec extends SparkSpec {
       sources = Seq(1L, 4L), maxRounds = 10)
     assert(dm.as[(Long, Long)].collect().toMap ==
       Map(1L -> 0L, 2L -> 1L, 3L -> 2L, 4L -> 0L, 5L -> 1L))
+  }
+
+  test("shortestPaths: each round's checkpoint job carries the change count, no probe job") {
+    // 5 rounds: 4 that lower a cost and the one that finds nothing.
+    // The loop that probed each checkpoint with a limit(1).count ran
+    // 26 jobs here (4-core local session); at least one job per round
+    // must be gone.
+    val ((d, rounds, conv), jobs) = jobsOf(Graph.shortestPaths(weighted,
+      "s", "t", "w", sources = Seq(1L), maxRounds = 10))
+    assert(conv && rounds == 4)
+    assert(d.count() == 5L)
+    assert(jobs <= 26 - 5, s"jobs=$jobs")
+    graft.ops.CacheScope.releaseAll()
   }
 
   test("bfsHops: ring closed form, multi-source min, maxHops cutoff") {

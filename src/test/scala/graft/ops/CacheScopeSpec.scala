@@ -12,7 +12,12 @@ class CacheScopeSpec extends SparkSpec {
   private val cacheHeavy =
     Seq("d1_exact_dedup", "d2_ngram_jaccard", "d3_minhash_lsh",
       "d4_simhash_pairs", "d6_cross_corpus_overlap",
-      "e2_embedding_near_dup", "e3_ivf_topk")
+      "e2_embedding_near_dup", "e3_ivf_topk",
+      // Fixpoint loops: every intermediate round freed, the last
+      // released with the scope
+      "d7_dup_clusters", "d11_dedup_resolve", "a24_pagerank_directed",
+      "a25_personalized_pagerank", "a26_hits", "a28_bfs_hops",
+      "a30_kcore", "a31_shortest_paths", "a36_connected_components")
 
   test("no persistent RDDs survive a released catalog query") {
     CacheScope.releaseAll() // clean slate (other suites share the JVM)

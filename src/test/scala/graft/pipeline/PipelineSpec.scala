@@ -452,14 +452,26 @@ class PipelineSpec extends SparkSpec {
     graft.ops.CacheScope.releaseAll()
   }
 
+  // a single 64-node chain: min label must travel 63 hops; with
+  // path halving that is ~6 rounds, and maxIters=12 would fail
+  // without the jump
+  private lazy val longChain = (0L until 63L).map(i => (i, i + 1)).toDF("id1", "id2")
+
   test("dupClusters converges on a long chain (pointer jumping)") {
-    // a single 64-node chain: min label must travel 63 hops; with
-    // path halving that is ~6 rounds, and maxIters=12 would fail
-    // without the jump
-    val pairs = (0L until 63L).map(i => (i, i + 1)).toDF("id1", "id2")
+    val pairs = longChain
     val got = Dedup.dupClusters(pairs, maxIters = 12)
     assert(got.filter(col("cluster") =!= 0L).count() == 0L)
     assert(got.count() == 64L)
+    graft.ops.CacheScope.releaseAll()
+  }
+
+  test("dupClusters: each round's checkpoint job carries the change count, no probe job") {
+    // the long chain takes 6 rounds. The loop that probed each
+    // checkpoint with a limit(1).count ran 55–57 jobs here (4-core
+    // local session); at least one job per round must be gone.
+    val (got, jobs) = jobsOf(Dedup.dupClusters(longChain, maxIters = 12))
+    assert(got.filter(col("cluster") =!= 0L).count() == 0L)
+    assert(jobs <= 55 - 6, s"jobs=$jobs")
     graft.ops.CacheScope.releaseAll()
   }
 
