@@ -26,8 +26,8 @@ import java.nio.charset.StandardCharsets
   *   <root>/_manifests/<kind>_<token>/  immutable parquet parts
   *   <root>/_snaps/snap_<token>         text: one part name per line
   *   <root>/_latest                     text: current snap name
-  * snapshot directories (IvfIndex, PqIndex, Bpe, term indexes,
-  *                       StatsCache, viewSink):
+  * snapshot directories (the pipeline indexes, all through
+  *                       graft.pipeline.IndexIo; StatsCache, viewSink):
   *   <root>/snap_<token>/               one complete version
   *   <root>/_latest                     text: current dir name
   * version files (RegistryStore):       <dir>/reg_<token>.json

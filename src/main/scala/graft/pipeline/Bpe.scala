@@ -2,7 +2,6 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.catalog.SnapshotManifest
 import graft.ops.Fixpoint
 
 /** Byte-pair-encoding subword tokenization (Sennrich/Haddow/Birch,
@@ -329,35 +328,30 @@ object Bpe {
 
   /** Persist a merge table so later sessions tokenize WITHOUT
     * retraining — training reads the corpus once, ever; the artifact
-    * is a tiny `(rank, a, b)` parquet under a fresh `snap_*` with an
-    * atomic `_latest` flip ([[SnapshotManifest]] — the same
-    * single-writer / many-readers copy-on-write contract as the ANN
-    * indexes, so a re-train never breaks in-flight tokenizer
-    * readers). */
+    * is a tiny `(rank, a, b)` parquet published through
+    * [[IndexIo.publish]] (the same single-writer / many-readers
+    * copy-on-write contract as the ANN indexes, so a re-train never
+    * breaks in-flight tokenizer readers). */
   def save(spark: org.apache.spark.sql.SparkSession,
            merges: Seq[(String, String)], path: String): Unit = {
     import spark.implicits._
-    val snap = SnapshotManifest.newSnapName()
-    val dir = s"$path/$snap"
-    merges.zipWithIndex.map { case ((a, b), r) => (r, a, b) }
-      .toDF("rank", "a", "b")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/merges")
-    IndexIo.writeMeta(spark, dir, Seq(
-      "kind" -> "bpe", "n_merges" -> merges.size.toString))
-    SnapshotManifest.flip(spark, path, snap)
+    IndexIo.publish(spark, path, Seq(
+        "kind" -> "bpe", "n_merges" -> merges.size.toString)) { dir =>
+      merges.zipWithIndex.map { case ((a, b), r) => (r, a, b) }
+        .toDF("rank", "a", "b")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/merges")
+    }
   }
 
   /** Load the current merge table (rank order). The collect is
     * bounded by the merge-table size — a few 10k rows in real
-    * vocabularies, broadcast to executors by [[tokenCounts]] anyway. */
+    * vocabularies, broadcast to executors by [[tokenCounts]] anyway.
+    * Throws `FileNotFoundException` when nothing was saved at `path`. */
   def load(spark: org.apache.spark.sql.SparkSession,
-           path: String): Vector[(String, String)] = {
-    val snap = SnapshotManifest.currentSnap(spark, path).getOrElse(
-      throw new IllegalStateException(s"no _latest pointer under $path"))
-    spark.read.parquet(s"$path/$snap/merges")
+           path: String): Vector[(String, String)] =
+    spark.read.parquet(s"${IndexIo.open(spark, path, "bpe")._1}/merges")
       .orderBy("rank").select("a", "b")
       .collect().map(r => (r.getString(0), r.getString(1))).toVector
-  }
 
   /** The DuckDB replay of [[tokenCounts]] for a FIXED merge table —
     * the oracle side of gate t26. Representation: every token is

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * natural completion: centroids LEARNED from the data, not given by
   * a label column.
   *
-  * Reuses the IVF quantizer-training machinery ([[IvfIndex]] — the
+  * Trains with the IVF quantizer's trainer ([[IvfIndex.train]] — the
   * FAISS shape): seed on a bounded reservoir sample driver-side, then
   * refine with distributed Lloyd's rounds where each round is ONE
   * assignment projection (centroid array as a codegen literal — no
@@ -29,13 +29,9 @@ object Cluster {
     * `distIters` full-corpus distributed rounds. Deterministic for a
     * fixed seed; empty clusters keep their previous centroid. */
   def fit(df: DataFrame, vec: String, k: Int, distIters: Int = 2,
-          seed: Long = 42L, maxTrainRows: Int = 100000): Array[Array[Double]] = {
-    val v = df.select(Similarity.vecD(col(vec)).as("nv"))
-    val sample = Sampling.boundedVectorSample(v, maxTrainRows, seed)
-    val seeded = IvfIndex.localKMeans(sample, k, iters = 5, seed = seed)
-    if (distIters <= 0) seeded
-    else IvfIndex.distributedLloyd(v, seeded, distIters)
-  }
+          seed: Long = 42L, maxTrainRows: Int = 100000): Array[Array[Double]] =
+    IvfIndex.train(df.select(Similarity.vecD(col(vec)).as("nv")), k,
+      distIters, seed, maxTrainRows)
 
   /** Nearest-centroid assignment (squared Euclidean, ties to the
     * lowest centroid index): one codegen projection against the

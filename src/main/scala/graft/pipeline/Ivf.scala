@@ -22,6 +22,11 @@ import graft.ops.{CacheScope, Kernels}
   * products, no join, no shuffle), and a query touches
   * ~nProbe/nCells of the corpus. The cell column is the natural
   * partition key for the stored index.
+  *
+  * A probe scores exact cosines on the raw vectors it reads, so it
+  * needs no re-rank; a quantized scan within the probed cells
+  * ([[PqIndex.topKProbed]]) verifies through the one exact re-rank
+  * tail, [[Similarity.rerank]].
   */
 class IvfIndex private (val cells: DataFrame,
                         private[pipeline] val centroids: Array[Array[Double]],
@@ -91,27 +96,9 @@ class IvfIndex private (val cells: DataFrame,
     * narrows (at full probe the filtered search is exact, the e12
     * oracle). */
   def topK(queries: DataFrame, vec: String, k: Int, nProbe: Int,
-           allowed: Option[DataFrame] = None): DataFrame = {
-    // not spread with ensureParallelism: the query side is broadcast,
-    // so a repartition would only add a job
-    val q = queries.select(col(id).as("query_id"), Similarity.vecD(col(vec)).as("qv"))
-    val c0 = cells.select(col(id).as("neighbor_id"), col("cell"), col("cv"))
-    val c = allowed.fold(c0)(a =>
-      c0.join(a.select(col(id).as("neighbor_id")), Seq("neighbor_id"),
-        "left_semi"))
-    // rank centroids per query, keep nProbe nearest (assignment metric,
-    // normalized space — matches the final cosine ranking); under a
-    // filter, probeExpr ranks LIVE cells only
-    val probed = q.withColumn("cell",
-      explode(probeExpr(col("qv"), nProbe, allowed)))
-    val cand = broadcast(probed).join(c, Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        Similarity.cosine(col("qv"), col("cv")).as("cos"))
-      .dropDuplicates("query_id", "neighbor_id")
-    Kernels.topKPerKeyRanked(cand, Seq("query_id"),
-      Seq(col("cos"), -col("neighbor_id")), k)
-  }
+           allowed: Option[DataFrame] = None): DataFrame =
+    probeTopK(Similarity.queryFrame(queries, id, vec), k, nProbe, allowed,
+      excludeSelf = true, small = true)
 
   /** Cross-corpus ANN JOIN: cosine top-k corpus neighbors for EVERY
     * left row — the labelling/enrichment shape ("nearest reference
@@ -129,35 +116,49 @@ class IvfIndex private (val cells: DataFrame,
     * enrichment); cross-corpus id collisions are not identity. */
   def annJoin(left: DataFrame, leftId: String, vec: String, k: Int,
               nProbe: Int, excludeSelf: Boolean = false,
-              allowed: Option[DataFrame] = None): DataFrame = {
-    val q = Kernels.ensureParallelism(
-      left.select(col(leftId).as("query_id"), Similarity.vecD(col(vec)).as("qv")))
-    // FILTERED join: same live-cell list pruning as [[topK]] — the
-    // probe stays a pure expression (no join), so the big-left
-    // contract (nothing broadcasts, shuffle on cell only) holds
+              allowed: Option[DataFrame] = None): DataFrame =
+    probeTopK(Kernels.ensureParallelism(
+        Similarity.queryFrame(left, leftId, vec)), k, nProbe, allowed,
+      excludeSelf, small = false)
+
+  /** The one probe body of [[topK]] and [[annJoin]]: each query row
+    * (`query_id, qv`) explodes into its probed cells ([[probeExpr]]:
+    * the assignment metric in normalized space, which matches the
+    * final cosine ranking; under a filter, LIVE cells only — a pure
+    * expression, no join), joins the inverted lists on the cell (the
+    * filter semi-joined in before any distance math), and the exact
+    * cosines are ranked per query. A `small` query side (topK's) is
+    * broadcast, and its pairs are deduplicated: a query frame that
+    * repeats an id would otherwise yield each of its pairs once per
+    * repeat. A large one (annJoin's) shuffles on the cell alongside
+    * the lists, and since each corpus vector lives in one cell a pair
+    * arises once per left row. */
+  private def probeTopK(q: DataFrame, k: Int, nProbe: Int,
+                        allowed: Option[DataFrame], excludeSelf: Boolean,
+                        small: Boolean): DataFrame = {
     val probed = q.withColumn("cell",
       explode(probeExpr(col("qv"), nProbe, allowed)))
     val c0 = cells.select(col(id).as("neighbor_id"), col("cell"), col("cv"))
     val c = allowed.fold(c0)(a =>
       c0.join(a.select(col(id).as("neighbor_id")), Seq("neighbor_id"),
         "left_semi"))
-    val joined = probed.join(c, Seq("cell"))
-    val filtered =
-      if (excludeSelf) joined.filter(col("neighbor_id") =!= col("query_id"))
-      else joined
-    val cand = filtered.select(col("query_id"), col("neighbor_id"),
-      Similarity.cosine(col("qv"), col("cv")).as("cos"))
-    Kernels.topKPerKeyRanked(cand, Seq("query_id"),
-      Seq(col("cos"), -col("neighbor_id")), k)
+    val joined = (if (small) broadcast(probed) else probed).join(c, Seq("cell"))
+    val scored = (if (excludeSelf)
+        joined.filter(col("neighbor_id") =!= col("query_id")) else joined)
+      .select(col("query_id"), col("neighbor_id"),
+        Similarity.cosine(col("qv"), col("cv")).as("cos"))
+    Kernels.topKPerKeyRanked(
+      if (small) scored.dropDuplicates("query_id", "neighbor_id") else scored,
+      Seq("query_id"), Seq(col("cos"), -col("neighbor_id")), k)
   }
 
   /** Persist the index so later sessions query WITHOUT retraining —
     * at 100 TB, re-running Lloyd's per job is not an option. The
     * centroid array lands as a tiny parquet, the assigned corpus as a
     * cell-partitioned parquet (the inverted lists — a probe touches
-    * only its cells' directories), both under a fresh `snap_*` with
-    * an atomic `_latest` flip ([[graft.catalog.SnapshotManifest]]):
-    * rebuilds never break in-flight readers.
+    * only its cells' directories), both published as one snapshot
+    * through [[IndexIo.publish]]: rebuilds never break in-flight
+    * readers.
     *
     * Staleness contract (mirrors [[graft.analytics.StatsCache]]'s
     * `updated_at`): the snapshot reflects the corpus AS OF
@@ -168,18 +169,16 @@ class IvfIndex private (val cells: DataFrame,
   def save(path: String): Unit = {
     val s = cells.sparkSession
     import s.implicits._
-    val snap = SnapshotManifest.newSnapName()
-    val dir = s"$path/$snap"
-    centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cell", "c")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
-    cells.write.mode("overwrite").partitionBy("cell").parquet(s"$dir/cells")
-    IndexIo.writeMeta(s, dir, Seq(
+    IndexIo.publish(s, path, Seq(
       "kind" -> "ivf", "id" -> id,
       "n_cells" -> centroids.length.toString,
       "metric" -> "cosine-normalized", // trained/assigned/probed on unit vectors
-      "built_at" -> builtAt.toString))
-    SnapshotManifest.flip(s, path, snap)
+      "built_at" -> builtAt.toString)) { dir =>
+      centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+        .toDF("cell", "c")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
+      cells.write.mode("overwrite").partitionBy("cell").parquet(s"$dir/cells")
+    }
   }
 
   /** INCREMENTAL APPEND — index a new vector batch WITHOUT
@@ -263,11 +262,7 @@ object IvfIndex {
     * lazily and registered in [[graft.ops.CacheScope]] like a built
     * index. No training runs — the load cost is one small read. */
   def load(spark: org.apache.spark.sql.SparkSession, path: String): IvfIndex = {
-    val snap = SnapshotManifest.currentSnap(spark, path).getOrElse(
-      throw new java.io.FileNotFoundException(s"$path/_latest"))
-    val dir = s"$path/$snap"
-    val meta = IndexIo.readMeta(spark, dir)
-    require(meta.get("kind").contains("ivf"), s"not an IVF index: $dir")
+    val (dir, meta) = IndexIo.open(spark, path, "ivf")
     val id = meta("id")
     val centroids = spark.read.parquet(s"$dir/centroids")
       .select(col("cell"), col("c")).collect()
@@ -315,23 +310,29 @@ object IvfIndex {
             maxTrainRows: Int = 100000, distIters: Int = 1): IvfIndex = {
     val base = CacheScope.persist(Kernels.ensureParallelism(
         corpus.select(col(id), Similarity.vecD(col(vec)).as("cv"))))
-    // bounded per-partition reservoir sample (see [[Sampling]]): no
-    // count() pre-pass, one scan, unbiased under sorted/clustered
-    // ingest, O(maxTrainRows · dims) driver memory at ANY corpus size
-    val sample = Sampling.boundedVectorSample(
-      base.select(col("cv")), maxTrainRows, seed).map(normalizeLocal)
-    val seeded = localKMeans(sample, nCells, iters = 5, seed = seed)
-    val centroids =
-      if (distIters <= 0) seeded
-      else distributedLloyd(
-        base.select(graft.functions.VectorExprs.l2_normalize(col("cv")).as("nv")),
-        seeded, distIters)
+    val centroids = train(
+      base.select(graft.functions.VectorExprs.l2_normalize(col("cv")).as("nv")),
+      nCells, distIters, seed, maxTrainRows)
     val assigned = CacheScope.persist(
       base.withColumn("cell", nearestCellEuclid(
           graft.functions.VectorExprs.l2_normalize(col("cv")), typedlit(
           centroids.map(_.toSeq).toSeq)))
         .select(col(id), col("cell"), col("cv")))
     new IvfIndex(assigned, centroids, id, System.currentTimeMillis())
+  }
+
+  /** THE k-means trainer of [[build]] and [[Cluster.fit]], over a frame
+    * whose one column `nv` holds the vectors to cluster: a bounded
+    * per-partition reservoir sample (see [[Sampling]]: no count()
+    * pre-pass, one scan, unbiased under sorted/clustered ingest,
+    * O(maxTrainRows · dims) driver memory at ANY corpus size) seeds
+    * driver-local Lloyd's ([[localKMeans]]), then `distIters`
+    * full-corpus [[distributedLloyd]] rounds refine it. */
+  private[pipeline] def train(nv: DataFrame, k: Int, distIters: Int,
+                              seed: Long, maxTrainRows: Int): Array[Array[Double]] = {
+    val seeded = localKMeans(Sampling.boundedVectorSample(nv, maxTrainRows, seed),
+      k, iters = 5, seed = seed)
+    if (distIters <= 0) seeded else distributedLloyd(nv, seeded, distIters)
   }
 
   /** Distributed Lloyd's rounds over the FULL (normalized) corpus:
@@ -342,7 +343,7 @@ object IvfIndex {
     * collect are O(nCells · dims) at ANY corpus size. Empty cells
     * keep their previous centroid (standard Lloyd's, same rule as
     * [[localKMeans]]). */
-  private[pipeline] def distributedLloyd(normed: DataFrame,
+  private def distributedLloyd(normed: DataFrame,
                                          init: Array[Array[Double]],
                                          iters: Int): Array[Array[Double]] = {
     var cents = init
@@ -361,15 +362,6 @@ object IvfIndex {
       cents = next
     }
     cents
-  }
-
-  /** Driver-side twin of [[graft.functions.L2Normalize]] (same
-    * zero-vector passthrough) for the training sample. */
-  private def normalizeLocal(p: Array[Double]): Array[Double] = {
-    var ss = 0.0; var i = 0
-    while (i < p.length) { ss += p(i) * p(i); i += 1 }
-    val norm = math.sqrt(ss)
-    if (norm == 0.0) p else p.map(_ / norm)
   }
 
   /** Driver-local Lloyd's iterations with seeded distinct-point init.

@@ -42,8 +42,12 @@ import graft.catalog.SnapshotManifest
   */
 object LshIndex {
 
-  private def meta(spark: SparkSession, path: String): Map[String, String] =
-    IndexIo.readMeta(spark, path)
+  /** The root-level `_meta` of the index at `path`, kind-checked. */
+  private def meta(spark: SparkSession, path: String): Map[String, String] = {
+    val m = IndexIo.readMeta(spark, path)
+    require(m.get("kind").contains("lsh"), s"not an LSH index: $path")
+    m
+  }
 
   /** The index's pinned parameters: (id, text, n, k, bands) — what a
     * caller composing its own batch-side kernels (the streaming dedup
@@ -51,7 +55,6 @@ object LshIndex {
   def params(spark: SparkSession, path: String)
       : (String, String, Int, Int, Int) = {
     val m = meta(spark, path)
-    require(m.get("kind").contains("lsh"), s"not an LSH index: $path")
     (m("id"), m("text"), m("n").toInt, m("k").toInt, m("bands").toInt)
   }
 
@@ -81,7 +84,6 @@ object LshIndex {
   def append(batch: DataFrame, path: String): Unit = {
     val spark = batch.sparkSession
     val m = meta(spark, path)
-    require(m.get("kind").contains("lsh"), s"not an LSH index: $path")
     val sh = graft.ops.CacheScope.persist(Dedup.hashedShingles(
       batch, m("id"), m("text"), m("n").toInt))
     try appendFromHashed(spark, sh, path)
@@ -95,19 +97,27 @@ object LshIndex {
   private[graft] def appendFromHashed(spark: SparkSession, sh: DataFrame,
                                       path: String): Unit = {
     val m = meta(spark, path)
-    require(m.get("kind").contains("lsh"), s"not an LSH index: $path")
     require(SnapshotManifest.currentSnap(spark, path).nonEmpty,
       s"LshIndex.append: no index at $path; build first")
-    // stage ONCE, outside the CAS loop: the parts' content is
-    // independent of the base snapshot, so a lost race retries only
-    // the (metadata-sized) read-parts + commit step — never the
-    // signature computation or the parquet write
-    val fresh = stagePartsFromHashed(sh, path, m("id"),
-      m("k").toInt, m("bands").toInt)
+    // stage ONCE, outside the CAS loop (see commitOnTop)
+    commitOnTop(spark, path, "append", stagePartsFromHashed(sh, path,
+      m("id"), m("k").toInt, m("bands").toInt))
+  }
+
+  /** Commit the staged `fresh` parts on top of the current snapshot,
+    * compare-and-swap: a racing writer that flips first makes this one
+    * re-read the (metadata-sized) part list and retry — the parts'
+    * content is independent of the base snapshot, so nothing is
+    * recomputed or rewritten. After 5 lost races the parts belong to
+    * no snapshot and are deleted at once instead of being left for a
+    * later vacuum. */
+  private def commitOnTop(spark: SparkSession, path: String, op: String,
+                          fresh: Seq[String]): Unit = {
     var attempts = 0
     while (attempts < 5) {
       val base = SnapshotManifest.currentSnap(spark, path)
-      require(base.nonEmpty, s"LshIndex.append: no index at $path; build first")
+      require(base.nonEmpty, s"LshIndex.$op: no index at $path; build first")
+      SnapshotManifest.failpoint("lsh-before-flip")
       try {
         SnapshotManifest.commit(spark, path,
           SnapshotManifest.partsOf(spark, path, base.get) ++ fresh,
@@ -115,17 +125,15 @@ object LshIndex {
         return
       } catch {
         case _: SnapshotManifest.ConcurrentCommitException =>
-          attempts += 1 // a racing appender won; re-read and retry
+          attempts += 1 // a racing writer won; re-read and retry
       }
     }
-    // abandoned: the staged parts belong to no snapshot — reclaim them
-    // now instead of leaving orphans for a later vacuum
     val fs = SnapshotManifest.fsOf(spark, path)
     fresh.foreach(p =>
       fs.delete(new Path(SnapshotManifest.partPath(path, p)), true))
     throw new IllegalStateException(
-      s"LshIndex.append at $path: lost the concurrent-commit race " +
-        s"$attempts times; serialize appenders or retry later")
+      s"LshIndex.$op at $path: lost the concurrent-commit race " +
+        s"$attempts times; serialize writers or retry later")
   }
 
   /** REMOVE documents from the index — the retention/right-to-forget
@@ -139,33 +147,13 @@ object LshIndex {
     * [[compactIndex]] purges them physically). */
   def remove(spark: SparkSession, path: String, ids: DataFrame): Unit = {
     val m = meta(spark, path)
-    require(m.get("kind").contains("lsh"), s"not an LSH index: $path")
     require(SnapshotManifest.currentSnap(spark, path).nonEmpty,
       s"LshIndex.remove: no index at $path; build first")
     val id = m("id")
     require(ids.columns.contains(id),
       s"LshIndex.remove: ids frame must carry the index id column '$id'")
-    val fresh = Seq(writePart(spark, path, "lt_",
-      ids.select(col(id)).distinct()))
-    var attempts = 0
-    while (attempts < 5) {
-      val base = SnapshotManifest.currentSnap(spark, path)
-      try {
-        SnapshotManifest.commit(spark, path,
-          SnapshotManifest.partsOf(spark, path, base.get) ++ fresh,
-          Some(base))
-        return
-      } catch {
-        case _: SnapshotManifest.ConcurrentCommitException =>
-          attempts += 1
-      }
-    }
-    val fs = SnapshotManifest.fsOf(spark, path)
-    fresh.foreach(p =>
-      fs.delete(new Path(SnapshotManifest.partPath(path, p)), true))
-    throw new IllegalStateException(
-      s"LshIndex.remove at $path: lost the concurrent-commit race " +
-        s"$attempts times; serialize writers or retry later")
+    commitOnTop(spark, path, "remove", Seq(writePart(spark, path, "lt_",
+      ids.select(col(id)).distinct())))
   }
 
   /** COMPACT the index: fold the per-append `lb_*`/`lf_*` part pairs
@@ -181,7 +169,6 @@ object LshIndex {
     * grace period. Returns the number of parts folded away. */
   def compactIndex(spark: SparkSession, path: String): Int = {
     val m = meta(spark, path)
-    require(m.get("kind").contains("lsh"), s"not an LSH index: $path")
     val id = m("id")
     var attempts = 0
     while (attempts < 5) {
@@ -227,7 +214,6 @@ object LshIndex {
     * corpus side reads only the persisted `lb_*`/`lf_*` parts. */
   def probe(spark: SparkSession, path: String, batch: DataFrame): DataFrame = {
     val m = meta(spark, path)
-    require(m.get("kind").contains("lsh"), s"not an LSH index: $path")
     val sh = graft.ops.CacheScope.persist(Dedup.hashedShingles(
       batch, m("id"), m("text"), m("n").toInt))
     probeFromHashed(spark, path, sh)
@@ -238,7 +224,6 @@ object LshIndex {
   private[graft] def probeFromHashed(spark: SparkSession, path: String,
                                      sh: DataFrame): DataFrame = {
     val m = meta(spark, path)
-    require(m.get("kind").contains("lsh"), s"not an LSH index: $path")
     val id = m("id")
     val (k, bands) = (m("k").toInt, m("bands").toInt)
     val sigs = Dedup.sigsFromHashedShingles(sh, id, k)

@@ -17,10 +17,11 @@ import graft.ops.{CacheScope, Kernels}
   * codes ≈ 8 B vs 512 B for a 64-dim double vector), and the ADC scan
   * does `m` lookups per candidate. A probe is ONE plan with no join
   * back to the corpus: the scan's rows carry each candidate's full
-  * vector into the per-query ADC heap, which keeps only the
-  * `nCandidates` best (map-side, before its one shuffle), and the
-  * exact cosine re-rank runs on the heap's output against the query
-  * vector, which the heap carries once per query. Training is
+  * vector into the per-query ADC heap of [[Similarity.rerank]] — the
+  * one exact re-rank tail, shared with [[Sq]] and
+  * [[Similarity.progressiveTopK]] — which keeps only the
+  * `nCandidates` best (map-side, before its one shuffle) and ranks
+  * them by exact cosine. Training is
   * driver-local on a reservoir sample (same posture as [[IvfIndex]]) —
   * no distributed ML iterations; encoding is one codegen projection
   * pass, no join, no shuffle. Composes with IVF (coarse cells + PQ
@@ -45,7 +46,7 @@ class PqIndex private (val codes: DataFrame,
            nCandidates: Int = 256): DataFrame = {
     require(residualOf.isEmpty,
       "residual-encoded codes are relative to coarse cells — use topKProbed")
-    val q = queryFrame(queries, vec)
+    val q = Similarity.queryFrame(queries, id, vec)
       .withColumn("dt", PqExprs.pq_dist_table(col("qv"), codebooks))
     // ADC scan: every (query, corpus) pair, but each pair is m lookups
     // over the broadcast per-query table — the classic PQ trade. The
@@ -77,7 +78,7 @@ class PqIndex private (val codes: DataFrame,
                  allowed: Option[DataFrame] = None): DataFrame = {
     require(residualOf.forall(_ eq coarse),
       "a residual PQ index must be probed with its build-time coarse index")
-    val q0 = queryFrame(queries, vec)
+    val q0 = Similarity.queryFrame(queries, id, vec)
     // FILTERED search: the same live-cell list pruning as
     // IvfIndex.topK — under a geometry-correlated filter the probe
     // budget must go to cells that still hold candidates
@@ -103,54 +104,27 @@ class PqIndex private (val codes: DataFrame,
     rerank(coded.join(broadcast(q), Seq("cell")), k, nCandidates)
   }
 
-  /** `(query_id, qv)` per query row. Not spread with
-    * [[Kernels.ensureParallelism]]: the query side is small by
-    * contract and broadcast, so a repartition would only add a job. */
-  private def queryFrame(queries: DataFrame, vec: String): DataFrame =
-    queries.select(col(id).as("query_id"), Similarity.vecD(col(vec)).as("qv"))
-
-  /** Shared tail of both scan variants, over the scan's joined rows
-    * (codes side `id, code, cv`; query side `query_id, qv, dt`): ADC
-    * distances, the ADC top-`nCandidates` heap per query — whose rows
-    * carry each candidate's `cv` while `qv` rides once per query —
-    * then the exact cosine re-rank of the heap's output into a ranked
-    * top-k. The re-rank heap keys on `query_id` like the candidate
-    * heap and reuses its partitioning: one shuffle, and no join back
-    * to the codes. */
-  private def rerank(joined: DataFrame, k: Int, nCandidates: Int): DataFrame = {
-    val scored = joined.filter(col(id) =!= col("query_id"))
-      .select(col("query_id"), col("qv"), col(id).as("neighbor_id"),
-        PqExprs.pq_adc(col("code"), col("dt")).as("adc"), col("cv"))
-    val cand = Kernels.topKPerKeyAgg(scored, Seq("query_id"),
-        Seq(-col("adc"), col("neighbor_id")), nCandidates, perKey = Seq("qv"))
-      .select(col("query_id"), col("neighbor_id"),
-        Similarity.cosine(col("qv"), col("cv")).as("cos"))
-    Kernels.topKPerKeyRanked(cand, Seq("query_id"),
-      Seq(col("cos"), -col("neighbor_id")), k)
-  }
+  /** The ADC scan's rows (codes side `id, code, cv`; query side
+    * `query_id, qv, dt`) into [[Similarity.rerank]]. ADC-distance ties
+    * break to the higher neighbor id. */
+  private def rerank(joined: DataFrame, k: Int, nCandidates: Int): DataFrame =
+    Similarity.rerank(joined.filter(col(id) =!= col("query_id"))
+        .select(col("query_id"), col("qv"), col(id).as("neighbor_id"),
+          PqExprs.pq_adc(col("code"), col("dt")).as("adc"), col("cv")),
+      Seq(-col("adc"), col("neighbor_id")), k, nCandidates)
 
   /** Persist the index so later sessions query WITHOUT retraining
     * (same posture and staleness contract as [[IvfIndex.save]]): the
     * per-subspace codebooks land as a tiny parquet
     * (m · nWords rows), the encoded corpus as a parquet of
     * (id, code, cv) — a residual index's cell is not stored,
-    * [[PqIndex.loadResidual]] re-derives it — under a fresh `snap_*`
-    * with an atomic `_latest` flip. The snapshot reflects the corpus
+    * [[PqIndex.loadResidual]] re-derives it — published through
+    * [[IndexIo.publish]]. The snapshot reflects the corpus
     * AS OF [[builtAt]] — rebuild + re-save when the corpus moves. */
   def save(path: String): Unit = {
     val s = codes.sparkSession
     import s.implicits._
-    val snap = SnapshotManifest.newSnapName()
-    val dir = s"$path/$snap"
-    (for {
-      (book, j) <- codebooks.zipWithIndex
-      (word, w) <- book.zipWithIndex
-    } yield (j, w, word.toSeq)).toSeq
-      .toDF("subspace", "word", "c")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/codebooks")
-    codes.select(col(id), col("code"), col("cv"))
-      .write.mode("overwrite").parquet(s"$dir/codes")
-    IndexIo.writeMeta(s, dir, Seq(
+    IndexIo.publish(s, path, Seq(
       "kind" -> "pq", "id" -> id,
       "m" -> codebooks.length.toString,
       "built_at" -> builtAt.toString) ++
@@ -158,8 +132,16 @@ class PqIndex private (val codes: DataFrame,
       // record its centroid fingerprint so loadResidual can verify the
       // caller plugged the right one back in
       residualOf.map(c => "residual_coarse" ->
-        PqIndex.centroidFingerprint(c.centroids).toString))
-    SnapshotManifest.flip(s, path, snap)
+        PqIndex.centroidFingerprint(c.centroids).toString)) { dir =>
+      (for {
+        (book, j) <- codebooks.zipWithIndex
+        (word, w) <- book.zipWithIndex
+      } yield (j, w, word.toSeq)).toSeq
+        .toDF("subspace", "word", "c")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/codebooks")
+      codes.select(col(id), col("code"), col("cv"))
+        .write.mode("overwrite").parquet(s"$dir/codes")
+    }
   }
 
   /** Release the cached codes frame (queries recompute afterwards). */
@@ -167,27 +149,6 @@ class PqIndex private (val codes: DataFrame,
 }
 
 object PqIndex {
-
-  /** Train the `m` per-subspace codebooks CONCURRENTLY on the driver:
-    * each subspace's k-means is an independent, seeded, deterministic
-    * computation over its own slice of the sample (seed + j), so
-    * running them on a small pool changes nothing but wall-clock —
-    * sequential training serialized ~m × 5 Lloyd's rounds of pure
-    * driver CPU while 31 cores idled. Results land by index, so the
-    * codebook array is bit-identical to the sequential build. */
-  private def trainCodebooksParallel(m: Int)(
-      f: Int => Array[Array[Double]]): Array[Array[Array[Double]]] = {
-    if (m <= 1) return Array.tabulate(m)(f)
-    import scala.concurrent.{Await, Future}
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(m, Runtime.getRuntime.availableProcessors()))
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    try Await.result(
-      Future.sequence((0 until m).toList.map(j => Future(f(j)))),
-      scala.concurrent.duration.Duration.Inf).toArray
-    finally pool.shutdown()
-  }
 
   /** Load a [[PqIndex.save]]d index: codebooks re-collected from the
     * tiny parquet (driver memory O(m · nWords · dims/m) = O(nWords ·
@@ -198,11 +159,7 @@ object PqIndex {
 
   private def loadCurrent(spark: org.apache.spark.sql.SparkSession,
                           path: String, residualOf: Option[IvfIndex]): PqIndex = {
-    val snap = SnapshotManifest.currentSnap(spark, path).getOrElse(
-      throw new java.io.FileNotFoundException(s"$path/_latest"))
-    val dir = s"$path/$snap"
-    val meta = IndexIo.readMeta(spark, dir)
-    require(meta.get("kind").contains("pq"), s"not a PQ index: $dir")
+    val (dir, meta) = IndexIo.open(spark, path, "pq")
     residualOf match {
       case None =>
         require(!meta.contains("residual_coarse"),
@@ -244,20 +201,10 @@ object PqIndex {
   def build(corpus: DataFrame, id: String, vec: String,
             m: Int = 8, nWords: Int = 256, seed: Long = 42L,
             maxTrainRows: Int = 100000): PqIndex = {
-    require(m > 0 && nWords > 1)
     val base = CacheScope.persist(Kernels.ensureParallelism(
       corpus.select(col(id), Similarity.vecD(col(vec)).as("cv"))))
-    val sample = Sampling.boundedVectorSample(base.select(col("cv")), maxTrainRows, seed)
-    val dims = sample.head.length
-    require(dims % m == 0, s"dims ($dims) must be divisible by m ($m)")
-    val sub = dims / m
-    val codebooks = trainCodebooksParallel(m) { j =>
-      val pts = sample.map(v => java.util.Arrays.copyOfRange(v, j * sub, (j + 1) * sub))
-      IvfIndex.localKMeans(pts, nWords, iters = 5, seed = seed + j)
-    }
-    val encoded = CacheScope.persist(
-      base.withColumn("code", PqExprs.pq_encode(col("cv"), codebooks))
-        .select(col(id), col("code"), col("cv")))
+    val (encoded, codebooks) = trainAndEncode(base, "cv",
+      Seq(id, "code", "cv"), m, nWords, seed, maxTrainRows)
     new PqIndex(encoded, codebooks, id, System.currentTimeMillis())
   }
 
@@ -274,28 +221,48 @@ object PqIndex {
   def buildResidual(corpus: DataFrame, id: String, vec: String,
                     coarse: IvfIndex, m: Int = 8, nWords: Int = 256,
                     seed: Long = 42L, maxTrainRows: Int = 100000): PqIndex = {
-    require(m > 0 && nWords > 1)
     val norm = graft.functions.VectorExprs.l2_normalize _
     val sub = graft.functions.VectorExprs.vec_sub _
     // coarse.cells is already cached (id, cell, cv) — reuse it; the
     // residual is one codegen projection on top
     val resid = CacheScope.persist(coarse.cells.withColumn("rv",
       sub(norm(col("cv")), element_at(coarse.centroidLit, col("cell") + 1))))
-    val sample = Sampling.boundedVectorSample(
-      resid.select(col("rv")), maxTrainRows, seed)
-    val dims = sample.head.length
-    require(dims % m == 0, s"dims ($dims) must be divisible by m ($m)")
-    val subLen = dims / m
-    val codebooks = trainCodebooksParallel(m) { j =>
-      val pts = sample.map(v =>
-        java.util.Arrays.copyOfRange(v, j * subLen, (j + 1) * subLen))
-      IvfIndex.localKMeans(pts, nWords, iters = 5, seed = seed + j)
-    }
-    val encoded = CacheScope.persist(
-      resid.withColumn("code", PqExprs.pq_encode(col("rv"), codebooks))
-        .select(col(id), col("cell"), col("code"), col("cv")))
+    val (encoded, codebooks) = trainAndEncode(resid, "rv",
+      Seq(id, "cell", "code", "cv"), m, nWords, seed, maxTrainRows)
     new PqIndex(encoded, codebooks, id, System.currentTimeMillis(),
       residualOf = Some(coarse))
+  }
+
+  /** The one train → encode path of [[build]] and [[buildResidual]]:
+    * a bounded reservoir sample of the (cached) `src`'s vector column
+    * `v`, one driver-local k-means codebook per subspace, then the
+    * encoded frame (`code` = the codes of `v`) projected to `keep` and
+    * cached. The `m` k-means runs are independent and seeded (seed +
+    * j), so they run CONCURRENTLY on a small driver pool — sequential
+    * training serialized ~m × 5 Lloyd's rounds of driver CPU while the
+    * other cores idled — and land by index: the codebooks are
+    * bit-identical to a sequential build. */
+  private def trainAndEncode(src: DataFrame, v: String, keep: Seq[String],
+                             m: Int, nWords: Int, seed: Long,
+                             maxTrainRows: Int)
+      : (DataFrame, Array[Array[Array[Double]]]) = {
+    require(m > 0 && nWords > 1)
+    val sample = Sampling.boundedVectorSample(src.select(col(v)), maxTrainRows, seed)
+    val dims = sample.head.length
+    require(dims % m == 0, s"dims ($dims) must be divisible by m ($m)")
+    val sub = dims / m
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.min(m, Runtime.getRuntime.availableProcessors()))
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    val codebooks = try Await.result(Future.sequence((0 until m).toList.map(j =>
+        Future(IvfIndex.localKMeans(sample.map(p =>
+          java.util.Arrays.copyOfRange(p, j * sub, (j + 1) * sub)),
+          nWords, iters = 5, seed = seed + j)))),
+      scala.concurrent.duration.Duration.Inf).toArray
+    finally pool.shutdown()
+    (CacheScope.persist(src.withColumn("code", PqExprs.pq_encode(col(v), codebooks))
+        .select(keep.map(col): _*)), codebooks)
   }
 
   /** Load a [[buildResidual]] index, plugging its coarse quantizer

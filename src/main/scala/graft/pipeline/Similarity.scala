@@ -28,6 +28,36 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     graft.functions.VectorExprs.cosine_sim(a, b)
 
+  /** `(query_id, qv)` per query row — the query side of every vector
+    * search here. Not spread with [[Kernels.ensureParallelism]]: a
+    * broadcast query side is small by contract, so a repartition would
+    * only add a job (a large query side, [[IvfIndex.annJoin]]'s, adds
+    * it itself). */
+  private[pipeline] def queryFrame(queries: DataFrame, id: String,
+                                   vec: String): DataFrame =
+    queries.select(col(id).as("query_id"), vecD(col(vec)).as("qv"))
+
+  /** THE exact re-rank tail of every filter-then-verify search
+    * ([[PqIndex]], [[Sq]], [[progressiveTopK]]) — the operator fusion
+    * of an approximate filter and its exact verify into one plan.
+    * `scored` holds the scan's rows as `(query_id, qv, neighbor_id,
+    * <approximate score>, cv)`; `approx` orders the candidate heap
+    * over them (largest first, tie-break included). The per-query heap
+    * keeps the `nCandidates` best rows — each carrying its candidate's
+    * full vector `cv`, while `qv` rides once per query — and the exact
+    * cosine of the survivors is ranked into the top `k`. The re-rank
+    * heap keys on `query_id` like the candidate heap and reuses its
+    * partitioning: one shuffle, and no join back to the corpus. */
+  private[pipeline] def rerank(scored: DataFrame, approx: Seq[Column],
+                               k: Int, nCandidates: Int): DataFrame = {
+    val cand = Kernels.topKPerKeyAgg(scored, Seq("query_id"), approx,
+        nCandidates, perKey = Seq("qv"))
+      .select(col("query_id"), col("neighbor_id"),
+        cosine(col("qv"), col("cv")).as("cos"))
+    Kernels.topKPerKeyRanked(cand, Seq("query_id"),
+      Seq(col("cos"), -col("neighbor_id")), k)
+  }
+
   /** Exact cosine top-k: each query scored against the whole corpus.
     * The query set is broadcast (it is small by contract); the corpus
     * is scanned once; per-query selection is the mergeable bounded
@@ -36,7 +66,7 @@ object Similarity {
     * the scored frame. O(|Q|·|C|·d) compute, zero corpus shuffle. */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame,
                      id: String, vec: String, k: Int): DataFrame = {
-    val q = broadcast(queries.select(col(id).as("query_id"), vecD(col(vec)).as("qv")))
+    val q = broadcast(queryFrame(queries, id, vec))
     val c = corpus.select(col(id).as("neighbor_id"), vecD(col(vec)).as("cv"))
     val scored = c.crossJoin(q)
       .filter(col("neighbor_id") =!= col("query_id"))
@@ -48,49 +78,35 @@ object Similarity {
 
   /** PROGRESSIVE-DIMENSION re-rank — the Matryoshka/MRL serving trick
     * (Kusupati et al., "Matryoshka Representation Learning", NeurIPS
-    * 2022): stage 1 scores the WHOLE corpus on only the first
-    * `dPrefix` dims and keeps `candidates` ids per query; stage 2
-    * re-ranks just the survivors with FULL-dimension exact cosine.
-    * MRL-trained embeddings order front-load information, so a small
-    * candidate multiple of k preserves recall at dPrefix/d of the
-    * stage-1 FLOPs; candidates = |corpus| makes the result provably
-    * the exact top-k.
+    * 2022): the WHOLE corpus is scored on only the first `dPrefix`
+    * dims, the `candidates` best per query survive, and only they are
+    * scored with FULL-dimension exact cosine. MRL-trained embeddings
+    * front-load information, so a small candidate multiple of k
+    * preserves recall at dPrefix/d of the filter's FLOPs;
+    * candidates = |corpus| makes the result provably the exact top-k.
     *
-    * Scale shape: stage 1 keeps e1's zero-corpus-shuffle scan but a
+    * Scale shape: the e1 zero-corpus-shuffle broadcast scan with a
     * d/dPrefix cheaper score per row (a production deployment
     * additionally MATERIALIZES the prefix as its own column/table so
     * the scan's bytes shrink too — here the prefix is sliced in the
-    * projection, which saves compute, not I/O); stage 2 touches full
-    * vectors for only |Q|·candidates rows via a keyed join the
-    * planner broadcasts on the tiny candidate side — the corpus is
-    * never shuffled in either stage. The same filter-then-verify
-    * shape as PQ's ADC + re-rank (e6), with dimension prefixes
-    * instead of quantization as the cheap stage. */
+    * projection, which saves compute, not I/O). The verify is
+    * [[rerank]], the tail PQ's ADC and SQ8 share: the prefix-score
+    * heap carries each candidate's full vector, so full vectors are
+    * scored for |Q|·candidates rows and nothing joins back to the
+    * corpus. Prefix-score ties break to the LOWER neighbor id. */
   def progressiveTopK(corpus: DataFrame, queries: DataFrame,
                       id: String, vec: String, k: Int,
                       dPrefix: Int, candidates: Int): DataFrame = {
     require(dPrefix >= 1, "progressiveTopK: dPrefix must be >= 1")
     require(candidates >= k, "progressiveTopK: candidates must be >= k")
-    val q = broadcast(queries.select(col(id).as("query_id"),
-      vecD(col(vec)).as("qv")))
+    val q = broadcast(queryFrame(queries, id, vec))
     val c = corpus.select(col(id).as("neighbor_id"), vecD(col(vec)).as("cv"))
-    // stage 1: prefix-dim filter — only (query, neighbor, score) out
-    val cand = Kernels.topKPerKeyAgg(
-      c.crossJoin(q)
-        .filter(col("neighbor_id") =!= col("query_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          cosine(slice(col("qv"), 1, dPrefix),
-            slice(col("cv"), 1, dPrefix)).as("pcos")),
-      Seq("query_id"), Seq(col("pcos"), -col("neighbor_id")), candidates)
-      .select(col("query_id"), col("neighbor_id"))
-    // stage 2: exact re-rank on full dims, candidates only
-    val rescored = cand
-      .join(c, Seq("neighbor_id"))
-      .join(q.withColumnRenamed("qv", "__qv"), Seq("query_id"))
-      .withColumn("cos", cosine(col("__qv"), col("cv")))
-    Kernels.topKPerKeyRanked(
-      rescored.select(col("query_id"), col("neighbor_id"), col("cos")),
-      Seq("query_id"), Seq(col("cos"), -col("neighbor_id")), k)
+    val scored = c.crossJoin(q)
+      .filter(col("neighbor_id") =!= col("query_id"))
+      .select(col("query_id"), col("qv"), col("neighbor_id"),
+        cosine(slice(col("qv"), 1, dPrefix),
+          slice(col("cv"), 1, dPrefix)).as("pcos"), col("cv"))
+    rerank(scored, Seq(col("pcos"), -col("neighbor_id")), k, candidates)
   }
 
   /** Deterministic random-hyperplane weights: `planes` hyperplanes in

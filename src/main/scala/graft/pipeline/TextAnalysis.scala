@@ -252,8 +252,8 @@ object TextAnalysis {
   }
 
   /** Persist a [[termIndex]] (plus the [[docLengths]] BM25 needs)
-    * BUCKETED BY TERM, under a [[SnapshotManifest]] `_latest`
-    * snapshot directory:
+    * BUCKETED BY TERM, as one snapshot directory published through
+    * [[IndexIo.publish]]:
     *
     *   - postings land in `term_bucket=H/` directories
     *     (`pmod(xxhash64(term), nBuckets)` — bounded directory count
@@ -270,26 +270,40 @@ object TextAnalysis {
     *     previous index version are never broken mid-rebuild.
     *
     * SINGLE WRITER, many readers — the snapshot-directory contract
-    * of [[SnapshotManifest]]. */
+    * of [[IndexIo]]. */
   def saveTermIndex(docs: DataFrame, id: String, text: String,
                     root: String, nBuckets: Int = 64,
-                    withPositions: Boolean = false): Unit = {
-    val spark = docs.sparkSession
-    val snap = SnapshotManifest.newSnapName()
-    val dir = s"$root/$snap"
+                    withPositions: Boolean = false): Unit =
+    publishTermLink(docs, id, text, root, nBuckets, withPositions, prev = None)
+
+  /** Tokenize `docs` and publish them as one term-index snapshot —
+    * the whole index, or an [[appendTermIndex]] link pointing at its
+    * `prev`. */
+  private def publishTermLink(docs: DataFrame, id: String, text: String,
+                              root: String, nBuckets: Int, withPositions: Boolean,
+                              prev: Option[String]): Unit = {
     val idx = if (withPositions) termIndexPositional(docs, id, text)
               else termIndex(docs, id, text)
-    idx
-      .withColumn("term_bucket", pmod(xxhash64(col("term")), lit(nBuckets)))
-      .repartition(col("term_bucket"))
-      .sortWithinPartitions(col("term"), col(id))
-      .write.partitionBy("term_bucket").parquet(s"$dir/postings")
-    docLengths(docs, id, text).write.parquet(s"$dir/doclen")
-    IndexIo.writeMeta(spark, dir,
-      Seq("kind" -> "terms", "nBuckets" -> nBuckets.toString, "id" -> id,
-        "positions" -> withPositions.toString))
-    SnapshotManifest.flip(spark, root, snap)
+    publishTermIndex(docs.sparkSession, root, id, nBuckets, withPositions, prev)(
+      idx.withColumn("term_bucket", pmod(xxhash64(col("term")), lit(nBuckets))),
+      docLengths(docs, id, text))
   }
+
+  /** Publish bucketed postings (carrying `term_bucket`) and doc
+    * lengths as one term-index snapshot: postings land in one
+    * directory per bucket, sorted by (term, id) within files. */
+  private def publishTermIndex(spark: org.apache.spark.sql.SparkSession,
+                               root: String, id: String, nBuckets: Int,
+                               withPositions: Boolean, prev: Option[String])
+                              (postings: DataFrame, doclen: DataFrame): Unit =
+    IndexIo.publish(spark, root, Seq("kind" -> "terms",
+        "nBuckets" -> nBuckets.toString, "id" -> id,
+        "positions" -> withPositions.toString) ++ prev.map("prev" -> _)) { dir =>
+      postings.repartition(col("term_bucket"))
+        .sortWithinPartitions(col("term"), col(id))
+        .write.partitionBy("term_bucket").parquet(s"$dir/postings")
+      doclen.write.parquet(s"$dir/doclen")
+    }
 
   /** True when `root` holds a committed term-index snapshot. */
   def termIndexExists(spark: org.apache.spark.sql.SparkSession,
@@ -316,42 +330,25 @@ object TextAnalysis {
     * [[graft.pipeline.LshIndex.append]]. */
   def appendTermIndex(docs: DataFrame, id: String, text: String,
                       root: String): Unit = {
-    val spark = docs.sparkSession
-    val prev = SnapshotManifest.currentSnap(spark, root).getOrElse(
-      throw new IllegalStateException(
-        s"appendTermIndex: no index at $root; saveTermIndex first"))
-    val meta = IndexIo.readMeta(spark, s"$root/$prev")
-    require(meta.get("kind").contains("terms"), s"not a term index: $root")
+    val (dir, meta) = IndexIo.open(docs.sparkSession, root, "terms")
     require(meta("id") == id,
       s"appendTermIndex: index id column is ${meta("id")}, got $id")
-    val n = meta("nBuckets").toInt
     // the batch link must match the chain's posting schema — a
     // positional index stays positional across appends
-    val withPos = meta.get("positions").contains("true")
-    val snap = SnapshotManifest.newSnapName()
-    val dir = s"$root/$snap"
-    val idx = if (withPos) termIndexPositional(docs, id, text)
-              else termIndex(docs, id, text)
-    idx
-      .withColumn("term_bucket", pmod(xxhash64(col("term")), lit(n)))
-      .repartition(col("term_bucket"))
-      .sortWithinPartitions(col("term"), col(id))
-      .write.partitionBy("term_bucket").parquet(s"$dir/postings")
-    docLengths(docs, id, text).write.parquet(s"$dir/doclen")
-    IndexIo.writeMeta(spark, dir,
-      Seq("kind" -> "terms", "nBuckets" -> n.toString, "id" -> id,
-        "positions" -> withPos.toString, "prev" -> prev))
-    SnapshotManifest.flip(spark, root, snap)
+    publishTermLink(docs, id, text, root, meta("nBuckets").toInt,
+      meta.get("positions").contains("true"),
+      prev = Some(new org.apache.hadoop.fs.Path(dir).getName))
   }
 
   /** The live snapshot chain, newest first — one link per
     * [[appendTermIndex]] since the last [[saveTermIndex]] /
-    * [[compactTermIndex]]. */
+    * [[compactTermIndex]] — and the head's `_meta`. */
   private def termChain(spark: org.apache.spark.sql.SparkSession,
-                        root: String): Seq[String] =
-    termChainFrom(spark, root,
-      SnapshotManifest.currentSnap(spark, root).getOrElse(
-        throw new java.io.FileNotFoundException(s"$root/_latest")))
+                        root: String): (Seq[String], Map[String, String]) = {
+    val (dir, meta) = IndexIo.open(spark, root, "terms")
+    (termChainFrom(spark, root, new org.apache.hadoop.fs.Path(dir).getName),
+      meta)
+  }
 
   private def termChainFrom(spark: org.apache.spark.sql.SparkSession,
                             root: String, head: String): Seq[String] =
@@ -367,27 +364,16 @@ object TextAnalysis {
     * the number of links folded. */
   def compactTermIndex(spark: org.apache.spark.sql.SparkSession,
                        root: String): Int = {
-    val links = termChain(spark, root)
+    val (links, meta) = termChain(spark, root)
     if (links.size <= 1) return 0
-    val meta = IndexIo.readMeta(spark, s"$root/${links.head}")
-    val n = meta("nBuckets").toInt
-    val id = meta("id")
-    val snap = SnapshotManifest.newSnapName()
-    val dir = s"$root/$snap"
-    links.map(l => spark.read
-        .option("basePath", s"$root/$l/postings")
-        .parquet(s"$root/$l/postings"))
-      .reduce(_ unionByName _)
-      .repartition(col("term_bucket"))
-      .sortWithinPartitions(col("term"), col(id))
-      .write.partitionBy("term_bucket").parquet(s"$dir/postings")
-    links.map(l => spark.read.parquet(s"$root/$l/doclen"))
-      .reduce(_ unionByName _)
-      .write.parquet(s"$dir/doclen")
-    IndexIo.writeMeta(spark, dir,
-      Seq("kind" -> "terms", "nBuckets" -> n.toString, "id" -> id,
-        "positions" -> meta.getOrElse("positions", "false")))
-    SnapshotManifest.flip(spark, root, snap)
+    publishTermIndex(spark, root, meta("id"), meta("nBuckets").toInt,
+        meta.get("positions").contains("true"), prev = None)(
+      links.map(l => spark.read
+          .option("basePath", s"$root/$l/postings")
+          .parquet(s"$root/$l/postings"))
+        .reduce(_ unionByName _),
+      links.map(l => spark.read.parquet(s"$root/$l/doclen"))
+        .reduce(_ unionByName _))
     links.size
   }
 
@@ -407,8 +393,7 @@ object TextAnalysis {
     * [[searchBm25]]. */
   def loadTermPostings(spark: org.apache.spark.sql.SparkSession,
                        root: String, terms: Seq[String]): DataFrame = {
-    val links = termChain(spark, root)
-    val meta = IndexIo.readMeta(spark, s"$root/${links.head}")
+    val (links, meta) = termChain(spark, root)
     val n = meta("nBuckets").toInt
     val q = terms.map(_.toLowerCase).distinct
     // the terms' bucket ids, via the engine's own xxhash64 (one
@@ -432,7 +417,7 @@ object TextAnalysis {
     * the whole chain's union. */
   def loadDocLengths(spark: org.apache.spark.sql.SparkSession,
                      root: String): DataFrame =
-    termChain(spark, root)
+    termChain(spark, root)._1
       .map(l => spark.read.parquet(s"$root/$l/doclen"))
       .reduce(_ unionByName _)
 

@@ -297,4 +297,29 @@ class AnnRecallSpec extends SparkSpec {
     // order, so even a 16-candidate cut holds nearly everything
     assert(r16 >= 0.95, s"SQ8 recall@10 at nCandidates=16 was $r16")
   }
+
+  test("progressive-dim re-rank at candidates = |corpus| equals brute force row for row") {
+    val n = nClusters * perCluster
+    def rows(df: DataFrame) = df
+      .select("query_id", "neighbor_id", "cos", "rank")
+      .as[(Long, Long, Double, Int)].collect().sortBy(r => (r._1, r._4)).toSeq
+    val bf = rows(Similarity.bruteForceTopK(corpus, queries, "vec_id",
+      "embedding", k))
+    for (dPrefix <- Seq(1, 8))
+      assert(rows(Similarity.progressiveTopK(corpus, queries, "vec_id",
+        "embedding", k, dPrefix, n)) == bf, s"dPrefix = $dPrefix")
+  }
+
+  test("e14 shape: one progressiveTopK call runs ≤ 3 jobs and joins nothing back to the corpus") {
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+    val df = Similarity.progressiveTopK(emb, emb.filter($"vec_id" < 5),
+      "vec_id", "embedding", k = 10, dPrefix = 8, candidates = 50)
+    val (rows, jobs) = jobsOf(df.collect())
+    assert(rows.length == 50)
+    info(s"progressiveTopK: $jobs jobs")
+    assert(jobs <= 3, s"one progressiveTopK call ran $jobs jobs")
+    val joins = allNodes(df.queryExecution.executedPlan).count(
+      _.isInstanceOf[org.apache.spark.sql.execution.joins.BaseJoinExec])
+    assert(joins == 1, s"expected only the scan join, found $joins joins")
+  }
 }

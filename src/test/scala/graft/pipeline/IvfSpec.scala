@@ -156,4 +156,19 @@ class IvfSpec extends SparkSpec {
       .select("cos").as[Double].collect().toSeq
     assert(r == r.sorted.reverse)
   }
+
+  test("topK dedups pairs: a queries frame that repeats an id answers it once") {
+    val idx = IvfIndex.build(emb, "vec_id", "embedding", nCells = 8)
+    val q = emb.filter($"vec_id" < 3)
+    def ans(queries: org.apache.spark.sql.DataFrame) =
+      idx.topK(queries, "embedding", k = 5, nProbe = 8)
+        .select($"query_id", $"neighbor_id", $"rank")
+        .as[(Long, Long, Int)].collect().sorted.toSeq
+    val once = ans(q)
+    assert(once.length == 15)
+    // each repeated query row yields its (query, neighbor) pairs again;
+    // the dedup keeps one, so ranks and results are the single query's
+    assert(ans(q.unionByName(q).unionByName(q.filter($"vec_id" === 0))) == once)
+    idx.close()
+  }
 }

@@ -139,4 +139,26 @@ class LshIndexSpec extends SparkSpec {
     CacheScope.releaseAll()
     assert(hits == Set((10L, 2L)), hits.toString)
   }
+
+  test("append CAS: a second append landing inside the stage→flip window loses neither batch") {
+    val p = root + "/idx4"
+    LshIndex.build(docs(1L -> "alpha beta gamma delta epsilon zeta eta"), p,
+      "doc_id", "text")
+    try {
+      // the racing append commits while the first one sits between
+      // reading its base snapshot and its CAS commit; the first one's
+      // commit then loses, re-reads and commits on top of the racer
+      graft.catalog.SnapshotManifest.testInterleave = Some(("lsh-before-flip",
+        () => LshIndex.append(docs(3L -> "pack my box with five dozen jugs"), p)))
+      try LshIndex.append(docs(2L -> "sphinx of black quartz judge my vow"), p)
+      finally graft.catalog.SnapshotManifest.testInterleave = None
+      val parts = graft.catalog.SnapshotManifest.currentParts(spark, p).get
+      assert(parts.size == 6, s"build + two appends = 3 lb/lf pairs: $parts")
+      val hits = LshIndex.probe(spark, p, docs(
+          12L -> "sphinx of black quartz judge my vow",
+          13L -> "pack my box with five dozen jugs"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(hits == Set((12L, 2L), (13L, 3L)), hits.toString)
+    } finally CacheScope.releaseAll()
+  }
 }

@@ -46,4 +46,20 @@ class SqSpec extends SparkSpec {
     // each query's twin (id + 10M, identical vector) must be top-1
     assert(sq == Map(0L -> 10000000L, 1L -> 10000001L, 2L -> 10000002L))
   }
+
+  test("e9 shape: one Sq.topK call runs ≤ 3 jobs and joins nothing back to the corpus") {
+    val e = emb.select("vec_id", "embedding")
+    val un = e.unionByName(e.withColumn("vec_id", $"vec_id" + 10000000L))
+    val df = Sq.topK(un, un.filter($"vec_id" < 5), "vec_id", "embedding",
+      k = 1, nCandidates = 256)
+    val (rows, jobs) = jobsOf(df.collect())
+    assert(rows.length == 5)
+    info(s"Sq.topK: $jobs jobs")
+    assert(jobs <= 3, s"one Sq.topK call ran $jobs jobs")
+    // the candidate heap carries each vector into the exact re-rank:
+    // the query × corpus scan is the plan's only join
+    val joins = allNodes(df.queryExecution.executedPlan).count(
+      _.isInstanceOf[org.apache.spark.sql.execution.joins.BaseJoinExec])
+    assert(joins == 1, s"expected only the scan join, found $joins joins")
+  }
 }
