@@ -26,13 +26,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // aggregate-navigation MV rewrite (graft.plans.MvRewriteRule);
-    // a no-op until an MV is registered in graft.plans.MvCatalog
+    // the three declaration rewrites, each a no-op until its
+    // graft.plans.Registry holds a def over a table the plan scans
+    // (Registry.gate): aggregate-navigation MV rewrite (MvCatalog),
+    // FK-verified join elimination (FkCatalog, plus PkCatalog for
+    // outer joins), PK-verified distinct elimination (PkCatalog)
     ext.injectOptimizerRule(s => graft.plans.MvRewriteRule(s))
-    // FK-verified join elimination (graft.plans.JoinElimRule);
-    // a no-op until an edge is declared in graft.plans.FkCatalog
     ext.injectOptimizerRule(s => graft.plans.JoinElimRule(s))
-    // PK-verified distinct elimination (graft.plans.DistinctElimRule)
     ext.injectOptimizerRule(s => graft.plans.DistinctElimRule(s))
     // planner-probed result cache (graft.analytics.ResultCacheRule);
     // a no-op until graft.resultcache.dir is set on the session
@@ -93,4 +93,17 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
         BitmapOrAgg(exprs(0))))
   }
+}
+
+object GraftExtensions {
+
+  /** Idempotently add `rule` to a session's optimizer — the per-session
+    * path of the rules [[GraftExtensions]] injects cluster-wide (`Mv`,
+    * `JoinElim`, `DistinctElim` and `ResultCache` `.install`). */
+  def install(spark: org.apache.spark.sql.SparkSession,
+              rule: org.apache.spark.sql.catalyst.rules.Rule[
+                org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]): Unit =
+    if (!spark.experimental.extraOptimizations.exists(_.getClass == rule.getClass))
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations :+ rule
 }

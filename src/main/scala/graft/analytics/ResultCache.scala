@@ -13,7 +13,7 @@ import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.types._
 
 import graft.catalog.SnapshotManifest
-import graft.plans.TableState
+import graft.plans.{PlanMatch, TableState}
 
 /** QUERY RESULT REUSE — the Snowflake/BigQuery result-cache idea,
   * available two ways:
@@ -91,31 +91,20 @@ object ResultCache {
       .map("%02x".format(_)).mkString
 
   private[graft] def collectRoots(plan: LogicalPlan): Set[String] =
-    orderedRoots(plan).flatten.toSet
+    PlanMatch.leafRoots(plan).flatten.toSet
 
-  /** Per-leaf root paths in PLAN-TRAVERSAL (preorder) order — one
-    * entry per LogicalRelation, ordered as the relations appear in the
-    * tree. The key must use THIS, not an unordered set: the
-    * canonicalized treeString erases attribute names and renders every
-    * parquet scan identically, so two MIRRORED joins over
+  /** Digest of (lossless canonical plan, per-leaf scan roots in tree
+    * order, input-table fingerprints). The key uses the PREORDER
+    * per-leaf roots ([[PlanMatch.leafRoots]]), not an unordered set:
+    * the canonicalized treeString erases attribute names and renders
+    * every parquet scan identically, so two MIRRORED joins over
     * type-identical tables (A JOIN B vs B JOIN A, each aggregating its
     * left side) produce the same canonical tree and the same root SET
     * - only each relation's tree POSITION distinguishes them. Preorder
     * over the original plan matches the canonical tree's shape
     * (canonicalization rewrites expressions, never moves children). */
-  private[graft] def orderedRoots(plan: LogicalPlan): Seq[Seq[String]] =
-    plan.collect {
-      case lr: LogicalRelation => lr.relation match {
-        case fs: HadoopFsRelation =>
-          fs.location.rootPaths.map(_.toString).toSeq
-        case _ => Seq.empty[String]
-      }
-    }
-
-  /** Digest of (lossless canonical plan, per-leaf scan roots in tree
-    * order, input-table fingerprints). */
   private[graft] def planKey(spark: SparkSession, plan: LogicalPlan): String = {
-    val leafRoots = orderedRoots(plan)
+    val leafRoots = PlanMatch.leafRoots(plan)
     val roots = leafRoots.flatten.toSet
     val fp = if (roots.isEmpty) ""
       else TableState.fingerprint(spark, roots)
@@ -245,9 +234,7 @@ object ResultCache {
     * sessions get it via `spark.sql.extensions=graft.GraftExtensions`).
     * The rule stays a no-op until `graft.resultcache.dir` is set. */
   def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[ResultCacheRule]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ ResultCacheRule(spark)
+    graft.GraftExtensions.install(spark, ResultCacheRule(spark))
 
   /** Reclaim entries older than `olderThanMs` (mtime of the entry
     * dir) plus any orphaned staging dirs. Writer-side, after a grace

@@ -1,11 +1,10 @@
 package graft.api
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 import graft.catalog.Tables
-import graft.plans.{DistinctElim, FkCatalog, JoinElim, Mv, MvCatalog, PkCatalog}
+import graft.plans.{DistinctElim, FkCatalog, JoinElim, Mv, MvCatalog, PkCatalog, PlanMatch}
 
 /** Materialized-view rewrite gates (SURVEY §2.11): an aggregate query
   * written against the BASE fact table is transparently re-pointed at
@@ -60,12 +59,7 @@ object MvQueries {
   /** Root paths of every file scan in the optimized plan — shared by
     * every plan-asserting gate in this file. */
   private[api] def scanRoots(df: DataFrame): Set[String] =
-    df.queryExecution.optimizedPlan.collect {
-      case lr: LogicalRelation => lr.relation match {
-        case h: HadoopFsRelation => h.location.rootPaths.map(_.toString)
-        case _ => Seq.empty
-      }
-    }.flatten.toSet
+    PlanMatch.leafRoots(df.queryExecution.optimizedPlan).flatten.toSet
 
   /** Fail loudly if the optimized plan still reads the fact —
     * a silently-bailed rewrite must not pass as a correct gate. */
@@ -318,12 +312,7 @@ object MvQueries {
           .groupBy("status").agg(
             sum("price").cast("double").as("revenue"),
             count(lit(1)).as("n")).orderBy("status")
-        val scans = df.queryExecution.optimizedPlan.collect {
-          case lr: LogicalRelation => lr.relation match {
-            case h: HadoopFsRelation => h.location.rootPaths.map(_.toString)
-            case _ => Seq.empty
-          }
-        }.flatten.toSet
+        val scans = scanRoots(df)
         require(!scans.exists(_.endsWith("/dim")) &&
           scans.exists(_.endsWith("/child")),
           s"join elimination did not fire; scans = $scans")

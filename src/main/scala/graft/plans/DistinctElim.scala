@@ -1,7 +1,5 @@
 package graft.plans
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Count, First, Last, Max, Min, Sum}
@@ -17,26 +15,8 @@ import graft.plans.PlanMatch.{rootsOf, stripToScan}
 case class UniqueKeyDef(name: String, paths: Set[String],
                         keys: Seq[String], fp: String = "")
 
-object PkCatalog {
-  private val defs = TrieMap.empty[String, UniqueKeyDef]
-
-  /** Union of every registered table's root paths — the rules' O(1)
-    * pre-check set (see [[PlanMatch.touchesAny]]); rebuilt on
-    * mutation, read per planning pass. */
-  @volatile private var pathsCache: Set[String] = Set.empty
-  private def rebuild(): Unit =
-    pathsCache = defs.values.flatMap(_.paths).toSet
-  def registeredPaths: Set[String] = pathsCache
-
-  def register(d: UniqueKeyDef): Unit = { defs.put(d.name, d); rebuild() }
-  def get(name: String): Option[UniqueKeyDef] = defs.get(name)
-  def unregister(name: String): Unit = { defs.remove(name); rebuild() }
-  def clear(): Unit = { defs.clear(); rebuild() }
-  def isEmpty: Boolean = defs.isEmpty
-  def all: Seq[UniqueKeyDef] = defs.values.toSeq.sortBy(_.name)
-
-  def forPaths(paths: Set[String]): Seq[UniqueKeyDef] =
-    defs.values.filter(_.paths == paths).toSeq.sortBy(_.name)
+object PkCatalog extends Registry[UniqueKeyDef]("unique key", _.name, _.paths) {
+  def forPaths(paths: Set[String]): Seq[UniqueKeyDef] = all.filter(_.paths == paths)
 }
 
 /** PK-BASED DISTINCT ELIMINATION — when a column set is verified
@@ -67,22 +47,10 @@ object DistinctElim {
   /** Run the `ops/Validate` PK audit; register only if unique. */
   def declareUniqueKey(name: String, df: DataFrame,
                        keys: Seq[String]): UniqueKeyDef = {
-    val paths = Mv.basePathsOf(df)
-    // stamp FIRST, then the freshness check: a commit in the
-    // fingerprint→requireFresh gap fails requireFresh loudly; one
-    // landing mid-audit fails the plan-time fp check — no ordering
-    // leaves a covered-but-unaudited duplicate (JoinElim ordering)
-    val fp = TableState.fingerprint(df.sparkSession, paths)
-    TableState.warnIfPlainDir(fp, paths, s"unique key $name")
-    // the frame's pinned listing must still BE the table (a write in
-    // the read→declare gap would be stamped but unaudited)
-    TableState.requireFresh(df.sparkSession, df, paths, s"unique key $name")
+    val (fp, Seq(paths)) = TableState.stamp(s"unique key $name", df -> "")
     require(graft.ops.Validate.primaryKey(df, keys).isEmpty,
       s"unique key $name: ${keys.mkString(",")} has duplicate tuples")
-    val d = UniqueKeyDef(name, paths, keys, fp = fp)
-    PkCatalog.register(d)
-    RegistryStore.autoPersist(df.sparkSession)
-    d
+    PkCatalog.commit(df.sparkSession, UniqueKeyDef(name, paths, keys, fp = fp))
   }
 
   /** INCREMENTAL RE-VERIFICATION — restore a staleness-suspended key
@@ -114,9 +82,7 @@ object DistinctElim {
     *
     * Re-stamps and resumes the rewrite on success. */
   def reverifyAppended(spark: SparkSession, name: String): UniqueKeyDef = {
-    RegistryStore.ensureLoaded(spark)
-    val d = PkCatalog.get(name).getOrElse(
-      throw new NoSuchElementException(s"unique key $name is not registered"))
+    val d = PkCatalog.lookup(spark, name)
     require(d.paths.size == 1,
       s"unique key $name: incremental re-verification needs a single root")
     val root = d.paths.head
@@ -124,50 +90,32 @@ object DistinctElim {
     val (newFp, moved) = TableState.movedHops(spark, d.fp, d.paths, what)
       .getOrElse(return d) // nothing moved
     import org.apache.spark.sql.functions.col
-    moved(root).appendHops
-      .map(h => TableState.hopRows(spark, root, h, what))
-      .reduceOption(_ unionByName _)
-      .foreach { appended =>
-        val insKeys = appended.select(d.keys.map(col): _*)
-        // uniqueness can only break AT the appended keys: PK-audit the
-        // current table restricted (NULL-SAFE — a NULL-keyed duplicate
-        // counts, exactly as SQL grouping does) to them
-        require(graft.ops.Validate.primaryKey(
-          TableState.restrictToKeys(spark.read.parquet(root), insKeys,
-            d.keys), d.keys).isEmpty,
-          s"$what: appended rows duplicate existing key tuples")
-      }
-    val nd = d.copy(fp = newFp)
-    PkCatalog.register(nd)
-    RegistryStore.autoPersist(spark)
-    nd
+    TableState.appendedRows(spark, moved(root), what).foreach { appended =>
+      val insKeys = appended.select(d.keys.map(col): _*)
+      // uniqueness can only break AT the appended keys: PK-audit the
+      // current table restricted (NULL-SAFE — a NULL-keyed duplicate
+      // counts, exactly as SQL grouping does) to them
+      require(graft.ops.Validate.primaryKey(
+        TableState.restrictToKeys(spark.read.parquet(root), insKeys,
+          d.keys), d.keys).isEmpty,
+        s"$what: appended rows duplicate existing key tuples")
+    }
+    PkCatalog.commit(spark, d.copy(fp = newFp))
   }
 
-  /** Durable revocation — see [[JoinElim.revoke]]. */
-  def revoke(spark: SparkSession, name: String): Unit = {
-    RegistryStore.ensureLoaded(spark)
-    PkCatalog.unregister(name)
-    RegistryStore.writeThrough(spark, exclude = Set(name))
-  }
+  /** Durable revocation — see [[Registry.revoke]]. */
+  def revoke(spark: SparkSession, name: String): Unit =
+    PkCatalog.revoke(spark, name)
 
   def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[DistinctElimRule]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ DistinctElimRule(spark)
+    graft.GraftExtensions.install(spark, DistinctElimRule(spark))
 }
 
 case class DistinctElimRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    // a fresh driver loads persisted declarations before the isEmpty
-    // short-circuit (no-op unless graft.registry.path is set)
-    RegistryStore.ensureLoaded(spark)
-    if (PkCatalog.isEmpty ||
-      conf.getConfString("graft.distinctelim.enabled", "true") != "true")
+    if (!Registry.gate(spark, plan, "graft.distinctelim.enabled", PkCatalog))
       return plan
-    // root-set pre-check: no registered unique-key table in the scan
-    // roots → no dedup/aggregate can collapse — skip the walk
-    if (!PlanMatch.touchesAny(plan, PkCatalog.registeredPaths)) return plan
     // one fingerprint probe per table per PASS (FpCache), however
     // many dedup sites in the tree match a registered key
     val fpc = new FpCache(spark)

@@ -1,7 +1,5 @@
 package graft.plans
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftAnti, LeftOuter, LeftSemi, RightOuter}
@@ -24,27 +22,10 @@ case class FkDef(name: String,
                  parentPaths: Set[String], parentKeys: Seq[String],
                  fp: String = "")
 
-object FkCatalog {
-  private val defs = TrieMap.empty[String, FkDef]
-
-  /** Union of every registered edge's child+parent root paths — the
-    * rule's O(1) pre-check set (see [[PlanMatch.touchesAny]]);
-    * rebuilt on mutation, read per planning pass. */
-  @volatile private var pathsCache: Set[String] = Set.empty
-  private def rebuild(): Unit =
-    pathsCache = defs.values.flatMap(d => d.childPaths ++ d.parentPaths).toSet
-  def registeredPaths: Set[String] = pathsCache
-
-  def register(d: FkDef): Unit = { defs.put(d.name, d); rebuild() }
-  def get(name: String): Option[FkDef] = defs.get(name)
-  def unregister(name: String): Unit = { defs.remove(name); rebuild() }
-  def clear(): Unit = { defs.clear(); rebuild() }
-  def isEmpty: Boolean = defs.isEmpty
-  def all: Seq[FkDef] = defs.values.toSeq.sortBy(_.name)
-
+object FkCatalog extends Registry[FkDef]("FK", _.name,
+    d => d.childPaths ++ d.parentPaths) {
   def forPair(childPaths: Set[String], parentPaths: Set[String]): Seq[FkDef] =
-    defs.values.filter(d => d.childPaths == childPaths &&
-      d.parentPaths == parentPaths).toSeq.sortBy(_.name)
+    all.filter(d => d.childPaths == childPaths && d.parentPaths == parentPaths)
 }
 
 /** FK-BASED JOIN ELIMINATION — the classic referential-integrity
@@ -67,7 +48,7 @@ object FkCatalog {
   * `ops/Validate` PK + FK audits at declaration time and refuses to
   * register a violated edge. At scale the audits run per-snapshot on
   * the changed slice (the Layout change feed makes that O(batch));
-  * the registry is session-scoped like [[MvCatalog]].
+  * [[FkCatalog]] is one [[Registry]], like [[MvCatalog]].
   *
   * Safety guards (all must hold or the plan is untouched):
   *   - inner join whose condition decomposes into exactly the
@@ -88,18 +69,8 @@ object JoinElim {
     * (`ops/Validate`); register the edge only if both are clean. */
   def declareVerified(name: String, child: DataFrame, childKeys: Seq[String],
                       parent: DataFrame, parentKeys: Seq[String]): FkDef = {
-    val (cp, pp) = (Mv.basePathsOf(child), Mv.basePathsOf(parent))
-    // stamp FIRST, then the freshness checks: a commit in the
-    // fingerprint→requireFresh gap changes the live listing and fails
-    // requireFresh loudly; one landing mid-audit fails the plan-time
-    // fp check — no ordering leaves a covered-but-unaudited write
-    val fp = TableState.fingerprint(child.sparkSession, cp ++ pp)
-    TableState.warnIfPlainDir(fp, cp ++ pp, s"FK $name")
-    // the frames' pinned listings must still BE the tables: a write
-    // landing between the caller's read and this declaration would be
-    // covered by the stamp yet unseen by the audits
-    TableState.requireFresh(child.sparkSession, child, cp, s"FK $name (child)")
-    TableState.requireFresh(child.sparkSession, parent, pp, s"FK $name (parent)")
+    val (fp, Seq(cp, pp)) = TableState.stamp(s"FK $name",
+      child -> " (child)", parent -> " (parent)")
     val pkViolations = graft.ops.Validate.primaryKey(parent, parentKeys)
     require(pkViolations.isEmpty,
       s"FK $name: parent keys ${parentKeys.mkString(",")} are not a primary key")
@@ -115,10 +86,8 @@ object JoinElim {
       nonNull, parent, childKeys, parentKeys)
     require(fkViolations.isEmpty,
       s"FK $name: child has orphaned ${childKeys.mkString(",")} values")
-    val d = FkDef(name, cp, childKeys, pp, parentKeys, fp = fp)
-    FkCatalog.register(d)
-    RegistryStore.autoPersist(child.sparkSession)
-    d
+    FkCatalog.commit(child.sparkSession,
+      FkDef(name, cp, childKeys, pp, parentKeys, fp = fp))
   }
 
   /** INCREMENTAL RE-VERIFICATION — restore a staleness-suspended edge
@@ -162,9 +131,7 @@ object JoinElim {
     * parent that never moves composes fine with a snapshot-logged
     * child. */
   def reverifyAppended(spark: SparkSession, name: String): FkDef = {
-    RegistryStore.ensureLoaded(spark)
-    val d = FkCatalog.get(name).getOrElse(
-      throw new NoSuchElementException(s"FK $name is not registered"))
+    val d = FkCatalog.lookup(spark, name)
     require(d.childPaths.size == 1 && d.parentPaths.size == 1,
       s"FK $name: incremental re-verification needs single-root tables")
     val (childRoot, parentRoot) = (d.childPaths.head, d.parentPaths.head)
@@ -173,10 +140,6 @@ object JoinElim {
       d.childPaths ++ d.parentPaths, what)
       .getOrElse(return d) // nothing moved
     import org.apache.spark.sql.functions.col
-    def appended(root: String,
-                 rc: TableState.RootChange): Option[DataFrame] =
-      rc.appendHops.map(h => TableState.hopRows(spark, root, h, what))
-        .reduceOption(_ unionByName _)
     moved.get(parentRoot).foreach { rc =>
       // a parent EXPIRY removed rows without materialized provenance —
       // there is nothing to orphan-audit the children against. The
@@ -185,7 +148,7 @@ object JoinElim {
         s"$what: parent at $parentRoot expired rows (time retention) " +
           "and the removed keys are not recorded; existing children " +
           "may be orphaned — re-declare against the current state")
-      appended(parentRoot, rc).foreach { rows =>
+      TableState.appendedRows(spark, rc, what).foreach { rows =>
         val ins = rows.select(d.parentKeys.map(col): _*)
         // uniqueness can only break AT the inserted keys: audit the
         // current parent restricted (null-safe) to them — batch-sized
@@ -199,22 +162,19 @@ object JoinElim {
       // children referencing them are now orphans. Audit only the
       // children AT the removed keys (rw_* part is batch-sized)
       // against the current parent; everything else kept its parent.
-      rc.rewriteHops
-        .flatMap(h => TableState.removedRows(spark, parentRoot, h))
-        .reduceOption(_ unionByName _)
-        .foreach { removed =>
-          val rmKeys = removed
-            .select(d.parentKeys.zip(d.childKeys).map {
-              case (p, c) => col(p).as(c) }: _*)
-          val child = spark.read.parquet(childRoot)
-            .filter(d.childKeys.map(col(_).isNotNull).reduce(_ && _))
-          val touched = TableState.restrictToKeys(child, rmKeys, d.childKeys)
-          require(graft.ops.Validate.foreignKey(touched,
-            spark.read.parquet(parentRoot), d.childKeys,
-            d.parentKeys).isEmpty,
-            s"$what: parent compaction removed keys still referenced " +
-              "by child rows")
-        }
+      TableState.retractedRows(spark, rc).foreach { removed =>
+        val rmKeys = removed
+          .select(d.parentKeys.zip(d.childKeys).map {
+            case (p, c) => col(p).as(c) }: _*)
+        val child = spark.read.parquet(childRoot)
+          .filter(d.childKeys.map(col(_).isNotNull).reduce(_ && _))
+        val touched = TableState.restrictToKeys(child, rmKeys, d.childKeys)
+        require(graft.ops.Validate.foreignKey(touched,
+          spark.read.parquet(parentRoot), d.childKeys,
+          d.parentKeys).isEmpty,
+          s"$what: parent compaction removed keys still referenced " +
+            "by child rows")
+      }
     }
     moved.get(childRoot).foreach { rc =>
       // child removals (dv commits are NoRowChange on the plain read;
@@ -222,7 +182,7 @@ object JoinElim {
       // appended rows, and only their NON-NULL key tuples — SQL FK
       // semantics exempt NULL keys, and the rewrite's IsNotNull
       // filter drops such rows exactly as the real inner join does
-      appended(childRoot, rc).foreach { rows =>
+      TableState.appendedRows(spark, rc, what).foreach { rows =>
         val ins = rows
           .filter(d.childKeys.map(col(_).isNotNull).reduce(_ && _))
         require(graft.ops.Validate.foreignKey(ins,
@@ -230,46 +190,23 @@ object JoinElim {
           s"$what: appended child rows are orphaned")
       }
     }
-    val nd = d.copy(fp = newFp)
-    FkCatalog.register(nd)
-    RegistryStore.autoPersist(spark)
-    nd
+    FkCatalog.commit(spark, d.copy(fp = newFp))
   }
 
-  /** Revoke a declared edge DURABLY: plain `FkCatalog.unregister` only
-    * mutates this JVM's registry, and a persisted store would
-    * resurrect the def on the next driver's lazy load — the exact
-    * wrong outcome for an edge revoked because its declaration was
-    * semantically mistaken. Loads the store first (so the write-back
-    * is the full remainder), unregisters, writes through. */
-  def revoke(spark: SparkSession, name: String): Unit = {
-    RegistryStore.ensureLoaded(spark)
-    FkCatalog.unregister(name)
-    RegistryStore.writeThrough(spark, exclude = Set(name))
-  }
+  /** Durable revocation — see [[Registry.revoke]]. */
+  def revoke(spark: SparkSession, name: String): Unit =
+    FkCatalog.revoke(spark, name)
 
-  /** Idempotently install the rule on a session (cluster sessions get
-    * it via `spark.sql.extensions=graft.GraftExtensions`). */
   def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[JoinElimRule]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ JoinElimRule(spark)
+    graft.GraftExtensions.install(spark, JoinElimRule(spark))
 }
 
 case class JoinElimRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    // a fresh driver loads persisted declarations before the isEmpty
-    // short-circuit (no-op unless graft.registry.path is set)
-    RegistryStore.ensureLoaded(spark)
     // PkCatalog counts too: the OUTER elimination needs no FK edge
-    if ((FkCatalog.isEmpty && PkCatalog.isEmpty) ||
-      conf.getConfString("graft.joinelim.enabled", "true") != "true") plan
-    // root-set pre-check: no registered child/parent/unique-key table
-    // in the scan roots → nothing can eliminate — skip the walk
-    // (two probes against the cached sets: no per-plan union alloc)
-    else if (!PlanMatch.touchesAny(plan, FkCatalog.registeredPaths) &&
-        !PlanMatch.touchesAny(plan, PkCatalog.registeredPaths)) plan
+    if (!Registry.gate(spark, plan, "graft.joinelim.enabled",
+        FkCatalog, PkCatalog)) plan
     else {
       // one fingerprint probe per table per PASS (FpCache), however
       // many joins in the tree match a registered edge

@@ -81,20 +81,11 @@ case class MvDef(name: String,
     basePaths ++ joins.flatMap(_.dimPaths)
 }
 
-/** Session-wide MV registry, keyed by the base scan's root paths —
-  * the same identity the rewrite rule recovers from a candidate plan's
-  * leaf [[HadoopFsRelation]], so registration and lookup can never
-  * disagree on path spelling. */
-object MvCatalog {
-  private val defs = TrieMap.empty[String, MvDef]
-
-  /** Union of every registered MV's base+dim root paths — the rewrite
-    * rule's O(1) pre-check set (see [[PlanMatch.touchesAny]]);
-    * rebuilt on mutation, read per planning pass. */
-  @volatile private var pathsCache: Set[String] = Set.empty
-  private def rebuildPaths(): Unit =
-    pathsCache = defs.values.flatMap(_.allBasePaths).toSet
-  def registeredPaths: Set[String] = pathsCache
+/** The MV [[Registry]]. A def covers its base and dim root paths —
+  * the same identity the rewrite rule recovers from a candidate
+  * plan's leaf [[HadoopFsRelation]] ([[PlanMatch.leafRoots]]), so
+  * registration and lookup can never disagree on path spelling. */
+object MvCatalog extends Registry[MvDef]("MV", _.name, _.allBasePaths) {
 
   /** Memoized resolved relation per summary directory: binding an MV
     * costs a file listing + parquet footer schema read, and the
@@ -112,41 +103,25 @@ object MvCatalog {
     * pass). */
   private[graft] val bindLoads = new java.util.concurrent.atomic.AtomicLong
 
-  def register(d: MvDef): Unit = {
-    // drop BOTH the superseded path's entry and the new path's: a
-    // rebuild-in-place (Mv.build, mode overwrite, same mvPath — the
-    // documented recovery for MIN/MAX-carrying views) deletes the
-    // part files a cached relation's file index still lists; binding
-    // it would fail at execution with FileNotFoundException
-    relCache.remove(d.mvPath)
-    predCache.remove(d.mvPath)
-    defs.put(d.name, d).foreach { old =>
-      if (old.mvPath != d.mvPath) {
-        relCache.remove(old.mvPath); predCache.remove(old.mvPath)
-      }
+  /** Drop BOTH the superseded path's entries and the new path's: a
+    * rebuild-in-place ([[Mv.build]], mode overwrite, same mvPath — the
+    * documented recovery for MIN/MAX-carrying views) deletes the part
+    * files a cached relation's file index still lists; binding it
+    * would fail at execution with FileNotFoundException. A
+    * (re-)declaration is also the documented recovery from an
+    * in-place base schema change: drop the bases' memoized footer
+    * schemas so the NEXT predicate resolution reads fresh — without
+    * this a re-declared filtered MV would resolve against the stale
+    * memo and park on Literal(false) for the process lifetime. */
+  override protected def evict(old: Option[MvDef], cur: Option[MvDef]): Unit = {
+    (cur ++ old).foreach { d =>
+      relCache.remove(d.mvPath); predCache.remove(d.mvPath)
     }
-    // a (re-)declaration is the documented recovery from an in-place
-    // base schema change: drop the bases' memoized footer schemas so
-    // the NEXT predicate resolution reads fresh — without this a
-    // re-declared filtered MV would resolve against the stale memo
-    // and park on Literal(false) for the process lifetime
-    d.allBasePaths.foreach(schemaCache.remove)
-    rebuildPaths()
+    cur.orElse(old).foreach(_.allBasePaths.foreach(schemaCache.remove))
   }
-  def get(name: String): Option[MvDef] = defs.get(name)
-  def unregister(name: String): Unit = {
-    defs.remove(name).foreach { old =>
-      relCache.remove(old.mvPath); predCache.remove(old.mvPath)
-      old.allBasePaths.foreach(schemaCache.remove)
-    }
-    rebuildPaths()
+  override def clear(): Unit = {
+    super.clear(); relCache.clear(); predCache.clear(); schemaCache.clear()
   }
-  def clear(): Unit = {
-    defs.clear(); relCache.clear(); predCache.clear(); schemaCache.clear()
-    rebuildPaths()
-  }
-  def isEmpty: Boolean = defs.isEmpty
-  def all: Seq[MvDef] = defs.values.toSeq.sortBy(_.name)
 
   private[plans] def resolvedRelation(spark: SparkSession, mvPath: String)
       : Option[org.apache.spark.sql.execution.datasources.LogicalRelation] =
@@ -233,8 +208,7 @@ object MvCatalog {
 
   /** Single-table MVs whose base is exactly this scan's root-path set. */
   def forPaths(paths: Set[String]): Seq[MvDef] =
-    defs.values.filter(d => d.joins.isEmpty && d.basePaths == paths)
-      .toSeq.sortBy(_.name)
+    all.filter(d => d.joins.isEmpty && d.basePaths == paths)
 
   /** Star MVs answerable for this bag of join-tree leaves, in any
     * orientation/order: one leaf must be the fact's `basePaths`, the
@@ -249,7 +223,7 @@ object MvCatalog {
   def forLeaves(leaves: Seq[Set[String]])
       : Seq[(MvDef, Seq[MvJoin], Seq[MvJoin])] = {
     def key(s: Set[String]): String = s.toSeq.sorted.mkString("|")
-    defs.values.toSeq.sortBy(_.name).flatMap { d =>
+    all.flatMap { d =>
       if (d.joins.isEmpty || leaves.size > d.joins.size + 1) None
       else {
         val bag = leaves.map(key)
@@ -307,12 +281,7 @@ object Mv {
   /** Root paths of the file-backed leaves of `df`'s plan — the base
     * identity MVs are registered under. */
   def basePathsOf(df: DataFrame): Set[String] = {
-    val paths = df.queryExecution.analyzed.collect {
-      case lr: LogicalRelation => lr.relation match {
-        case fs: HadoopFsRelation => fs.location.rootPaths.map(_.toString)
-        case _ => Seq.empty
-      }
-    }.flatten.toSet
+    val paths = PlanMatch.leafRoots(df.queryExecution.analyzed).flatten.toSet
     require(paths.nonEmpty, "MV base must be a file-backed scan")
     paths
   }
@@ -376,20 +345,8 @@ object Mv {
             mins: Seq[String] = Nil, maxs: Seq[String] = Nil,
             distincts: Seq[String] = Nil,
             where: Option[String] = None): MvDef = {
-    val paths = basePathsOf(base)
     requireIntegral(base, distincts, name)
-    // fingerprint FIRST, freshness check second: a commit landing in
-    // the fingerprint→requireFresh gap changes the live listing and
-    // fails requireFresh loudly, and one landing after requireFresh
-    // (mid-build) fails the plan-time fp check — no ordering leaves a
-    // covered-but-unaudited write (r12 ADVICE: the reverse order let a
-    // commit in the requireFresh→fingerprint gap be stamped yet unseen
-    // by the summarizing pass's pinned listing)
-    val fp = TableState.fingerprint(base.sparkSession, paths)
-    TableState.warnIfPlainDir(fp, paths, s"MV $name")
-    // the frame's pinned listing must still BE the table (a write in
-    // the read→build gap would be stamped but not summarized)
-    TableState.requireFresh(base.sparkSession, base, paths, s"MV $name")
+    val (fp, Seq(paths)) = TableState.stamp(s"MV $name", base -> "")
     // FILTERED (partial) MV: the predicate is part of the view
     // DEFINITION — the summary holds only σ(where) rows, and the
     // rewrite fires only for queries whose filters SUBSUME it (the
@@ -400,12 +357,9 @@ object Mv {
       base.filter(org.apache.spark.sql.functions.expr(w))).getOrElse(base)
     summarize(slice, dims, measures, mins, maxs, distincts)
       .write.mode("overwrite").parquet(mvPath)
-    val d = MvDef(name, paths, mvPath, dims,
+    MvCatalog.commit(base.sparkSession, MvDef(name, paths, mvPath, dims,
       measures.toSet, mins.toSet, maxs.toSet, fp = fp,
-      distincts = distincts.toSet, where = where)
-    MvCatalog.register(d)
-    RegistryStore.autoPersist(base.sparkSession)
-    d
+      distincts = distincts.toSet, where = where))
   }
 
   /** STAR-SCHEMA MV — the summary is built over `fact INNER JOIN dim`
@@ -451,18 +405,9 @@ object Mv {
       require(dup.isEmpty,
         s"MV $name: ambiguous columns across base tables: $dup")
     }
-    val spark = fact.sparkSession
-    val fpaths = basePathsOf(fact)
-    val dpaths = dimTables.map(t => basePathsOf(t._1))
-    val all = fpaths ++ dpaths.flatten
-    // fingerprint FIRST, then the freshness checks (see [[build]]:
-    // no ordering gap may leave a covered-but-unaudited write)
-    val fp = TableState.fingerprint(spark, all)
-    TableState.warnIfPlainDir(fp, all, s"MV $name")
-    TableState.requireFresh(spark, fact, fpaths, s"MV $name (fact)")
-    dimTables.zipWithIndex.foreach { case ((dm, _), i) =>
-      TableState.requireFresh(spark, dm, dpaths(i), s"MV $name (dim $i)")
-    }
+    val (fp, fpaths +: dpaths) = TableState.stamp(s"MV $name",
+      (fact -> " (fact)") +: dimTables.zipWithIndex.map {
+        case ((dm, _), i) => dm -> s" (dim $i)" }: _*)
     val joined = dimTables.foldLeft(fact) { case (acc, (dm, on)) =>
       val cond = on.map { case (f, d) => acc(f) === dm(d) }.reduce(_ && _)
       acc.join(dm, cond, "inner")
@@ -494,15 +439,12 @@ object Mv {
         .count().filter(col("count") > 1L).isEmpty
       noNulls && allMatch && dimUnique
     }
-    val d = MvDef(name, fpaths, mvPath, dims,
+    MvCatalog.commit(fact.sparkSession, MvDef(name, fpaths, mvPath, dims,
       measures.toSet, mins.toSet, maxs.toSet,
       joins = dimTables.zipWithIndex.map { case ((dm, on), i) =>
         MvJoin(dpaths(i), on.map(_._1), on.map(_._2),
           preserving = preservingAudit(dm, on))
-      }, fp = fp, distincts = distincts.toSet, where = where)
-    MvCatalog.register(d)
-    RegistryStore.autoPersist(spark)
-    d
+      }, fp = fp, distincts = distincts.toSet, where = where))
   }
 
   /** INCREMENTAL APPEND-REFRESH — fold a batch of new base rows into
@@ -517,7 +459,7 @@ object Mv {
     * of the previous summary never observe a half-written view and a
     * crashed refresh leaves the registered MV untouched (the
     * snapshot-then-flip discipline of [[graft.catalog.SnapshotManifest]];
-    * the pointer here is the session-scoped registry — a multi-session
+    * the pointer here is the in-JVM [[MvCatalog]] — a multi-driver
     * deployment persists it through [[RegistryStore]]'s `_latest`
     * instead).
     *
@@ -538,11 +480,7 @@ object Mv {
   private def refreshAppendStamped(spark: SparkSession, name: String,
                                    batch: DataFrame,
                                    fpOverride: Option[String]): MvDef = {
-    // a fresh driver's first action may be a refresh, not a query —
-    // load persisted declarations here too, not only in the rule
-    RegistryStore.ensureLoaded(spark)
-    val d = MvCatalog.get(name).getOrElse(
-      throw new NoSuchElementException(s"MV $name is not registered"))
+    val d = MvCatalog.lookup(spark, name)
     // re-stamp against the base state the refreshed summary reflects:
     // the caller's contract is base-advance THEN refresh-with-batch,
     // so at refresh entry the base already holds the batch's rows
@@ -615,10 +553,7 @@ object Mv {
     // calling in, which already maintained the flags.
     val joins = if (fpOverride.nonEmpty) d.joins
       else d.joins.map(_.copy(preserving = false))
-    val nd = d.copy(mvPath = next, joins = joins, fp = fp)
-    MvCatalog.register(nd)
-    RegistryStore.autoPersist(spark)
-    nd
+    MvCatalog.commit(spark, d.copy(mvPath = next, joins = joins, fp = fp))
   }
 
   /** RETRACTABLE CDC REFRESH — fold a row-level change feed (rows
@@ -661,9 +596,7 @@ object Mv {
                                     feed: DataFrame,
                                     fpOverride: Option[String],
                                     extremesGuard: Boolean = true): MvDef = {
-    RegistryStore.ensureLoaded(spark) // see [[refreshAppend]]
-    val d = MvCatalog.get(name).getOrElse(
-      throw new NoSuchElementException(s"MV $name is not registered"))
+    val d = MvCatalog.lookup(spark, name)
     // distinct bitmaps do not retract: clearing a bit needs proof the
     // deleted row was the value's LAST occurrence in its group, which
     // only a group rescan can give (the MIN/MAX problem, per value) —
@@ -769,10 +702,7 @@ object Mv {
     // refreshAppendStamped)
     val joins = if (fpOverride.nonEmpty) d.joins
       else d.joins.map(_.copy(preserving = false))
-    val nd = d.copy(mvPath = next, joins = joins, fp = fp)
-    MvCatalog.register(nd)
-    RegistryStore.autoPersist(spark)
-    nd
+    MvCatalog.commit(spark, d.copy(mvPath = next, joins = joins, fp = fp))
   }
 
   /** SELF-REFRESH FROM THE SNAPSHOT LOG — the MV leg of the
@@ -808,9 +738,7 @@ object Mv {
     * O(changed rows + MV); the base fact is never re-read. A no-op
     * (same stamp) returns the registered def untouched. */
   def refreshFromLog(spark: SparkSession, name: String): MvDef = {
-    RegistryStore.ensureLoaded(spark)
-    val d = MvCatalog.get(name).getOrElse(
-      throw new NoSuchElementException(s"MV $name is not registered"))
+    val d = MvCatalog.lookup(spark, name)
     if (d.joins.nonEmpty) return refreshStarFromLog(spark, d)
     require(d.basePaths.size == 1,
       s"MV $name: log-driven refresh needs a single-root base")
@@ -831,20 +759,12 @@ object Mv {
     // covers — an append racing the fold must not be covered by a
     // stamp newer than the folded rows (the declareVerified ordering:
     // never postdate the audited state)
-    val inserted = rc.appendHops
-      .map(h => TableState.hopRows(spark, root, h, what))
-      .reduceOption(_ unionByName _)
-    val removed = rc.rewriteHops
-      .flatMap(h => TableState.removedRows(spark, root, h))
-      .reduceOption(_ unionByName _)
-    (inserted, removed) match {
+    val inserted = TableState.appendedRows(spark, rc, what)
+    (inserted, TableState.retractedRows(spark, rc)) match {
       case (None, None) =>
         // dv-only / provenance-empty chain: the plain read is
         // bit-identical — a pure restamp, no fold, no new version
-        val nd = d.copy(fp = newFp)
-        MvCatalog.register(nd)
-        RegistryStore.autoPersist(spark)
-        nd
+        MvCatalog.commit(spark, d.copy(fp = newFp))
       case (Some(ins), None) =>
         refreshAppendStamped(spark, name, ins, fpOverride = Some(newFp))
       case (_, Some(rm)) =>
@@ -927,10 +847,8 @@ object Mv {
           s"$what: $root rows were expired (time retention) without " +
             "materialized provenance — the summary cannot retract what " +
             "was never recorded; rebuild with Mv.buildStar (one pass)")
-        (rc.appendHops.map(h => TableState.hopRows(spark, root, h, what))
-          .reduceOption(_ unionByName _),
-          rc.rewriteHops.flatMap(h => TableState.removedRows(spark, root, h))
-            .reduceOption(_ unionByName _))
+        (TableState.appendedRows(spark, rc, what),
+          TableState.retractedRows(spark, rc))
       }.getOrElse((None, None))
     val deltas = roots.map(delta)
     // the probe sides T₂ are PINNED to the audited snapshots (the
@@ -1042,10 +960,7 @@ object Mv {
     if (movedRoles.isEmpty) {
       // dv-only / zero-provenance chains: every plain read is
       // bit-identical — restamp
-      val nd = dd.copy(fp = newFp)
-      MvCatalog.register(nd)
-      RegistryStore.autoPersist(spark)
-      nd
+      MvCatalog.commit(spark, dd.copy(fp = newFp))
     } else if (movedRoles.size == 1 && deltas(movedRoles.head)._2.isEmpty) {
       // ONE table moved, append-only — the nightly shape: Δᵢ joined
       // against every other table's pinned read, a pure insert batch
@@ -1113,9 +1028,7 @@ object Mv {
     * [[graft.catalog.SnapshotManifest.vacuumSnapDirs]]).
     * Returns the number of directories reclaimed. */
   def vacuum(spark: SparkSession, name: String): Int = {
-    RegistryStore.ensureLoaded(spark) // see [[refreshAppend]]
-    val d = MvCatalog.get(name).getOrElse(
-      throw new NoSuchElementException(s"MV $name is not registered"))
+    val d = MvCatalog.lookup(spark, name)
     val cur = new org.apache.hadoop.fs.Path(d.mvPath)
     val fs = cur.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val base = cur.getName.replaceAll("_v\\d+$", "")
@@ -1133,37 +1046,22 @@ object Mv {
     }
   }
 
-  /** Durable revocation — see [[JoinElim.revoke]]. The summary parquet
+  /** Durable revocation — see [[Registry.revoke]]. The summary parquet
     * stays on disk (reclaim with a manual delete or [[vacuum]] before
     * revoking); only the registration — and therefore the rewrite —
     * is withdrawn, everywhere. */
-  def revoke(spark: SparkSession, name: String): Unit = {
-    RegistryStore.ensureLoaded(spark)
-    MvCatalog.unregister(name)
-    RegistryStore.writeThrough(spark, exclude = Set(name))
-  }
+  def revoke(spark: SparkSession, name: String): Unit =
+    MvCatalog.revoke(spark, name)
 
-  /** Idempotently install the rewrite rule on a session (the local /
-    * per-session path; cluster sessions get it via
-    * `spark.sql.extensions=graft.GraftExtensions`). */
   def install(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[MvRewriteRule]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ MvRewriteRule(spark)
+    graft.GraftExtensions.install(spark, MvRewriteRule(spark))
 }
 
 case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    // a fresh driver loads persisted declarations before the isEmpty
-    // short-circuit (no-op unless graft.registry.path is set)
-    RegistryStore.ensureLoaded(spark)
-    if (MvCatalog.isEmpty ||
-      conf.getConfString("graft.mv.rewrite.enabled", "true") != "true") plan
-    // root-set pre-check: a plan scanning none of the registered base
-    // or dim tables can never rewrite — skip the transformDown (a
-    // shared session pays this rule on EVERY plan compile otherwise)
-    else if (!PlanMatch.touchesAny(plan, MvCatalog.registeredPaths)) plan
+    if (!Registry.gate(spark, plan, "graft.mv.rewrite.enabled", MvCatalog))
+      plan
     else {
       // one fingerprint probe per base path per PASS, however many
       // candidate Aggregates match a registered table

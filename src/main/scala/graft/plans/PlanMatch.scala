@@ -9,10 +9,26 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * residual-filter shell the optimizer leaves around a file scan, and
   * decompose conjunctions/equi-conditions by column NAME — the rules'
   * registries are name-and-path keyed, so matching must be too. */
-private[plans] object PlanMatch {
+private[graft] object PlanMatch {
 
-  def rootsOf(fs: HadoopFsRelation): Set[String] =
-    fs.location.rootPaths.map(_.toString).toSet
+  /** A table's identity: the root-path set of its file scan — what
+    * the registries key defs by and what the result cache keys on. */
+  def rootsOf(fs: HadoopFsRelation): Set[String] = pathsOf(fs).toSet
+
+  /** The root paths of every file-scan leaf of `plan`, one entry per
+    * relation in PREORDER (non-file relations give an empty entry):
+    * the one scan-identity walk. Callers wanting a table set flatten
+    * it; [[graft.analytics.ResultCache]] keys on the per-leaf order. */
+  def leafRoots(plan: LogicalPlan): Seq[Seq[String]] =
+    plan.collect {
+      case lr: LogicalRelation => lr.relation match {
+        case fs: HadoopFsRelation => pathsOf(fs)
+        case _ => Seq.empty[String]
+      }
+    }
+
+  private def pathsOf(fs: HadoopFsRelation): Seq[String] =
+    fs.location.rootPaths.map(_.toString).toSeq
 
   /** Cheap PRE-CHECK for the rewrite rules: does any file-scan leaf of
     * `plan` sit on one of `paths`? The rules' registries hold a handful

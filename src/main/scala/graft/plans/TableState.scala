@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.catalog.SnapshotManifest
 
 /** Table-state fingerprints for the constraint/MV rewrite registries.
@@ -44,6 +44,31 @@ object TableState {
   def fingerprint(spark: SparkSession, roots: Set[String]): String =
     roots.toSeq.sorted.map(one(spark, _)).mkString(";")
 
+  /** THE DECLARATION STAMP for `what` (an MV build, an FK or unique-key
+    * audit) over the audited frames, each with the label suffix its
+    * freshness refusal names. Returns the stamp over every frame's
+    * roots and each frame's root-path set, in order.
+    *
+    * FINGERPRINT FIRST, freshness checks second: a commit landing in
+    * the fingerprint→[[requireFresh]] gap changes the live listing and
+    * fails requireFresh loudly, and one landing after it (mid-audit or
+    * mid-build) fails the plan-time fp check — no ordering leaves a
+    * covered-but-unaudited write. The reverse order let a commit in
+    * the requireFresh→fingerprint gap be stamped yet unseen by the
+    * audit's pinned listing. */
+  private[plans] def stamp(what: String, frames: (DataFrame, String)*)
+      : (String, Seq[Set[String]]) = {
+    val spark = frames.head._1.sparkSession
+    val paths = frames.map(f => Mv.basePathsOf(f._1))
+    val all = paths.reduce(_ ++ _)
+    val fp = fingerprint(spark, all)
+    warnIfPlainDir(fp, all, what)
+    frames.zip(paths).foreach { case ((df, label), ps) =>
+      requireFresh(spark, df, ps, what + label)
+    }
+    (fp, paths)
+  }
+
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Count of plain-directory registration warnings issued — pinned by
@@ -59,8 +84,8 @@ object TableState {
     * a full re-declare, O(table) instead of O(batch)). Warn once per
     * declaration, naming the roots and the fix (migrate under
     * [[graft.catalog.Layout]]'s snapshot log). */
-  private[plans] def warnIfPlainDir(fp: String, roots: Set[String],
-                                    what: String): Unit =
+  private def warnIfPlainDir(fp: String, roots: Set[String],
+                             what: String): Unit =
     segments(fp, roots).foreach { segs =>
       val plain = segs.collect {
         case (r, s) if s.startsWith("ls:") => r }.toSeq.sorted
@@ -310,6 +335,21 @@ object TableState {
     }
   }
 
+  /** Every append hop's fresh rows in `rc`'s window, unioned — the
+    * insert batch the re-verifiers audit and the log refreshes fold.
+    * None when no hop appended. */
+  private[plans] def appendedRows(spark: SparkSession, rc: RootChange,
+                                  what: String): Option[DataFrame] =
+    rc.appendHops.map(h => hopRows(spark, rc.root, h, what))
+      .reduceOption(_ unionByName _)
+
+  /** Every rewrite hop's removed rows ([[removedRows]]) in `rc`'s
+    * window, unioned. None when nothing was materialized out. */
+  private[plans] def retractedRows(spark: SparkSession,
+                                   rc: RootChange): Option[DataFrame] =
+    rc.rewriteHops.flatMap(h => removedRows(spark, rc.root, h))
+      .reduceOption(_ unionByName _)
+
   /** The table's plain-read content PINNED to one snapshot's manifest
     * file list — bit-identical to `spark.read.parquet(root)` when the
     * directory equals the manifest, but immune to a racing writer:
@@ -362,9 +402,9 @@ object TableState {
     * staleness guard. Refuse when the frame's pinned input files
     * differ from the roots' current data files; the caller re-reads
     * and re-declares — one metadata listing, no data read. */
-  private[plans] def requireFresh(spark: SparkSession,
-                                  df: org.apache.spark.sql.DataFrame,
-                                  roots: Set[String], what: String): Unit = {
+  private def requireFresh(spark: SparkSession,
+                           df: org.apache.spark.sql.DataFrame,
+                           roots: Set[String], what: String): Unit = {
     def norm(s: String): String = new Path(s).toUri.getPath
     // collect from the ANALYZED plan's pinned file index, not
     // Dataset.inputFiles — the latter propagates empty relations

@@ -259,10 +259,16 @@ object GraftProperties extends Properties("graft") {
     forAll(for {
       n <- Gen.choose(2, 6)
       iters <- Gen.choose(0, 3)
+      // b = a + a nonzero offset mod n + 1: every a != b pair over
+      // nodes 0..n, with no filter (a filter inside the list generator
+      // discards whole samples and can make ScalaCheck give up)
       edges <- Gen.nonEmptyListOf(for {
         a <- Gen.choose(0L, n.toLong)
-        b <- Gen.choose(0L, n.toLong) if a != b
-      } yield (math.min(a, b), math.max(a, b)))
+        off <- Gen.choose(1L, n.toLong)
+      } yield {
+        val b = (a + off) % (n + 1)
+        (math.min(a, b), math.max(a, b))
+      })
     } yield (edges.distinct, iters)) { case (edges, iters) =>
       val pr = graft.analytics.Graph.pageRank(
           edges.toDF("u1", "u2"), "u1", "u2", iters = iters)

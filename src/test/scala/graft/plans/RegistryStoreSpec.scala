@@ -175,10 +175,7 @@ class RegistryStoreSpec extends SparkSpec with BeforeAndAfterAll {
         "the interleaved winner's def was overwritten (lost update)")
     } finally {
       SnapshotManifest.testInterleave = None
-      Seq("regspec_cas_a", "regspec_cas_b").foreach { n =>
-        PkCatalog.unregister(n)
-        RegistryStore.writeThrough(spark, exclude = Set(n))
-      }
+      Seq("regspec_cas_a", "regspec_cas_b").foreach(DistinctElim.revoke(spark, _))
     }
   }
 
@@ -191,5 +188,143 @@ class RegistryStoreSpec extends SparkSpec with BeforeAndAfterAll {
     assert(count0 <= 2, s"keep-last-2 must bound the version files, got $count0")
     // loading an empty/uninitialized dir must not throw
     RegistryStore.load(spark, root + "/nonexistent_registry")
+  }
+
+  test("revoke is kind-keyed: revoking unique key k keeps a concurrently persisted FK k") {
+    // driver A revokes unique key k; inside its stage→flip window
+    // driver B (the interleave thunk) persists an FK also named k and
+    // then leaves A's memory as it found it. A's CAS loses, re-merges
+    // B's version and retries: the merge must skip only (unique key, k)
+    MvCatalog.clear(); FkCatalog.clear(); PkCatalog.clear()
+    RegistryStore.resetForTest()
+    val k = "regspec_kind"
+    val fk = FkDef(k, Set(childP), Seq("ck"), Set(parentP), Seq("ck2"))
+    try {
+      PkCatalog.register(UniqueKeyDef(k, Set(childP), Seq("ok")))
+      RegistryStore.persist(spark, regDir)
+      SnapshotManifest.testInterleave = Some(("registry-before-flip", () => {
+        FkCatalog.register(fk)
+        RegistryStore.persist(spark, regDir)
+        // B's defs live in B's JVM, not in A's registries
+        FkCatalog.unregister(k); PkCatalog.unregister(k)
+      }))
+      DistinctElim.revoke(spark, k)
+      assert(SnapshotManifest.testInterleave.isEmpty, "thunk must have run")
+      MvCatalog.clear(); FkCatalog.clear(); PkCatalog.clear()
+      RegistryStore.resetForTest()
+      RegistryStore.load(spark, regDir)
+      assert(FkCatalog.get(k).contains(fk),
+        "revoking unique key k dropped the concurrently persisted FK k")
+      assert(PkCatalog.get(k).isEmpty, "the revoked unique key resurrected")
+    } finally {
+      SnapshotManifest.testInterleave = None
+      JoinElim.revoke(spark, k); DistinctElim.revoke(spark, k)
+    }
+  }
+
+  test("version-1 store format: hand-written files load exactly, re-persist byte for byte, bad files fail naming the file") {
+    // the format persist() writes (Jackson default pretty printer);
+    // fx_plain has no distincts/where/joins, so they are absent
+    val v1 = """{
+      |  "version" : 1,
+      |  "mvs" : [ {
+      |    "name" : "fx_plain",
+      |    "mvPath" : "/fx/mv_plain_v1",
+      |    "fp" : "",
+      |    "basePaths" : [ "file:/fx/base" ],
+      |    "dims" : [ "rf" ],
+      |    "measures" : [ "qty" ],
+      |    "mins" : [ ],
+      |    "maxs" : [ "qty" ]
+      |  }, {
+      |    "name" : "fx_star",
+      |    "mvPath" : "/fx/mv_star_v7",
+      |    "fp" : "snap:snap_1;snap:snap_2",
+      |    "basePaths" : [ "file:/fx/fact" ],
+      |    "dims" : [ "seg", "status" ],
+      |    "measures" : [ "price", "qty" ],
+      |    "mins" : [ "price" ],
+      |    "maxs" : [ ],
+      |    "distincts" : [ "ok" ],
+      |    "where" : "status <> 'X'",
+      |    "joins" : [ {
+      |      "dimPaths" : [ "file:/fx/dim" ],
+      |      "factKeys" : [ "ck" ],
+      |      "dimKeys" : [ "ck2" ],
+      |      "preserving" : true
+      |    } ]
+      |  } ],
+      |  "fks" : [ {
+      |    "name" : "fx_fk",
+      |    "fp" : "ls:1:2:3;snap:snap_9",
+      |    "childPaths" : [ "file:/fx/fact" ],
+      |    "childKeys" : [ "ck", "ck_b" ],
+      |    "parentPaths" : [ "file:/fx/dim" ],
+      |    "parentKeys" : [ "ck2", "ck2_b" ]
+      |  } ],
+      |  "pks" : [ {
+      |    "name" : "fx_pk",
+      |    "fp" : "snap:snap_9",
+      |    "paths" : [ "file:/fx/dim" ],
+      |    "keys" : [ "ck2" ]
+      |  } ]
+      |}""".stripMargin
+    val plain = MvDef("fx_plain", Set("file:/fx/base"), "/fx/mv_plain_v1",
+      Seq("rf"), Set("qty"), Set.empty, Set("qty"))
+    val starDef = MvDef("fx_star", Set("file:/fx/fact"), "/fx/mv_star_v7",
+      Seq("seg", "status"), Set("price", "qty"), Set("price"), Set.empty,
+      Seq(MvJoin(Set("file:/fx/dim"), Seq("ck"), Seq("ck2"), preserving = true)),
+      "snap:snap_1;snap:snap_2", Set("ok"), Some("status <> 'X'"))
+    val fk = FkDef("fx_fk", Set("file:/fx/fact"), Seq("ck", "ck_b"),
+      Set("file:/fx/dim"), Seq("ck2", "ck2_b"), "ls:1:2:3;snap:snap_9")
+    val pk = UniqueKeyDef("fx_pk", Set("file:/fx/dim"), Seq("ck2"), "snap:snap_9")
+    def store(json: String): String = {
+      val dir = root + "/fx_" + java.util.UUID.randomUUID().toString.take(8)
+      val p = java.nio.file.Paths.get(dir)
+      java.nio.file.Files.createDirectories(p)
+      java.nio.file.Files.write(p.resolve("reg_1.json"), json.getBytes("UTF-8"))
+      java.nio.file.Files.write(p.resolve("_latest"), "reg_1.json".getBytes("UTF-8"))
+      dir
+    }
+    def text(dir: String): String = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(dir, SnapshotManifest.currentSnap(spark, dir).get)),
+      "UTF-8")
+    def fresh(): Unit = {
+      MvCatalog.clear(); FkCatalog.clear(); PkCatalog.clear()
+    }
+    def loaded: (Seq[MvDef], Seq[FkDef], Seq[UniqueKeyDef]) =
+      (MvCatalog.all, FkCatalog.all, PkCatalog.all)
+    val want = (Seq(plain, starDef), Seq(fk), Seq(pk))
+    try {
+      fresh(); RegistryStore.load(spark, store(v1))
+      assert(loaded == want)
+      // persist → load round trip, and the written file is the input
+      // byte for byte
+      val out = root + "/fx_out"
+      RegistryStore.persist(spark, out)
+      assert(text(out) == v1)
+      fresh(); RegistryStore.load(spark, out)
+      assert(loaded == want)
+      // the pre-star spelling: one `join` object instead of `joins`
+      val legacy = v1.replace("\"joins\" : [ {", "\"join\" : {")
+        .replace("      \"preserving\" : true\n    } ]",
+          "      \"preserving\" : true\n    }")
+      assert(legacy.contains("\"join\" : {") && !legacy.contains("joins"))
+      fresh(); RegistryStore.load(spark, store(legacy))
+      assert(loaded == want)
+      // unsupported version and a missing array fail with guidance
+      // naming the file
+      for ((bad, why) <- Seq(
+          v1.replace("\"version\" : 1", "\"version\" : 2") ->
+            "unsupported version 2",
+          v1.replaceAll("(?s)  \"fks\" : \\[.*?\\} \\],\n", "") ->
+            "missing or non-array 'fks' field")) {
+        fresh()
+        val dir = store(bad)
+        val e = intercept[IllegalStateException](RegistryStore.load(spark, dir))
+        assert(e.getMessage.contains(s"$dir/reg_1.json") &&
+          e.getMessage.contains(why), e.getMessage)
+      }
+    } finally fresh()
   }
 }
