@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.analytics.Behavior
 import graft.catalog.Tables
 import graft.pipeline.Similarity
+import QueryCatalog.scratch
 
 /** Analytics extensions beyond the reference's own surface (SURVEY
   * §2.4 notes GROUPING SETS / percentiles are absent there — an
@@ -830,12 +831,10 @@ object AnalyticsQueries {
       // from the raw table — a stale or torn cache entry cannot
       // hash-match.
       (s, dir) => {
-        val cacheRoot = System.getProperty("java.io.tmpdir") +
-          "/graft_rescache_" + s.sparkContext.applicationId + "_" +
-          Integer.toHexString(dir.hashCode)
+        val cacheRoot = scratch(s, dir, "rescache", fresh = false)
         graft.analytics.ResultCache.install(s)
-        s.conf.set("graft.resultcache.dir", cacheRoot)
-        try {
+        graft.ops.ConfScope.withScopedConf(s,
+            Seq("graft.resultcache.dir" -> cacheRoot)) {
           def q = Tables.load(s, dir, "orders")
             .groupBy(col("o_orderstatus").as("status"))
             .agg(sum(col("o_totalprice").cast("decimal(18,2)"))
@@ -849,7 +848,7 @@ object AnalyticsQueries {
             scans.forall(_.contains("graft_rescache_")),
             s"result cache was not served from the entry; scans = $scans")
           served
-        } finally s.conf.unset("graft.resultcache.dir")
+        }
       },
       Some("SELECT o_orderstatus AS status, " +
         "CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue, " +

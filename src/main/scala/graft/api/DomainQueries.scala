@@ -4,10 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import graft.catalog.Tables
 import graft.ops.Kernels
 import graft.domain.{Acl, Ledger, Social, Trade, Trading}
 import graft.streaming.Streams
+import QueryCatalog.{scratch, t}
 
 /** Batch 2: write/upsert semantics, domain flows (trading fold, ACL,
   * friend-graph state machine), set ops, scalar surface — SURVEY §2
@@ -15,8 +15,13 @@ import graft.streaming.Streams
   * §2.8. Same oracle-parity conventions as QueryCatalog.
   */
 object DomainQueries {
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
+  /** The Layout gates' lineitem rows: (symbol, ship, l_orderkey,
+    * l_linenumber, qty). */
+  private def layoutRows(li: DataFrame): DataFrame = li.select(
+    col("l_returnflag").as("symbol"),
+    to_date(col("l_shipdate")).as("ship"),
+    col("l_orderkey"), col("l_linenumber"),
+    col("l_quantity").as("qty"))
 
   /** Deterministic demo trade stream derived from events (first trade
     * per (user, type) key is a large opening buy; the last two, when
@@ -81,8 +86,7 @@ object DomainQueries {
       (s, dir) => {
         val o = t(s, dir, "orders")
           .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-        val path = System.getProperty("java.io.tmpdir") +
-          "/graft_csv_" + s.sparkContext.applicationId + "_" + Integer.toHexString(dir.hashCode)
+        val path = scratch(s, dir, "csv", fresh = false)
         o.write.mode("overwrite").option("header", "true").csv(path)
         s.read.schema("o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE")
           .option("header", "true").csv(path)
@@ -105,9 +109,7 @@ object DomainQueries {
       (s, dir) => {
         val c = t(s, dir, "customer")
           .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
-        val path = System.getProperty("java.io.tmpdir") +
-          "/graft_json_" + s.sparkContext.applicationId + "_" +
-          Integer.toHexString(dir.hashCode)
+        val path = scratch(s, dir, "json", fresh = false)
         c.write.mode("overwrite").json(path)
         s.read.schema("c_custkey BIGINT, c_mktsegment STRING, c_acctbal DOUBLE")
           .json(path)
@@ -281,14 +283,7 @@ object DomainQueries {
       // and echo the rows — write→read fidelity under the oracle.
       // Partition-pruning itself is pinned by LayoutSpec.
       (s, dir) => {
-        val path = System.getProperty("java.io.tmpdir") +
-          "/graft_layout_" + s.sparkContext.applicationId + "_" + Integer.toHexString(dir.hashCode)
-        // fresh target per run: a stale directory from a prior run with
-        // different buckets/schema (or a dir-hash collision) would
-        // poison the read-back — same discipline as m4_stats_cache
-        val fs = org.apache.hadoop.fs.FileSystem
-          .get(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(path), true)
+        val path = scratch(s, dir, "layout")
         val src = t(s, dir, "lineitem").select(
           col("l_returnflag").as("symbol"),
           to_date(col("l_shipdate")).as("ts"),
@@ -317,17 +312,8 @@ object DomainQueries {
       // in-memory batch frame (s3 gates the initial write; this gates
       // the append).
       (s, dir) => {
-        val path = System.getProperty("java.io.tmpdir") +
-          "/graft_insecho_" + s.sparkContext.applicationId + "_" +
-          Integer.toHexString(dir.hashCode)
-        val fs = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(path), true)
-        val src = t(s, dir, "lineitem").select(
-          col("l_returnflag").as("symbol"),
-          to_date(col("l_shipdate")).as("ship"),
-          col("l_orderkey"), col("l_linenumber"),
-          col("l_quantity").as("qty"))
+        val path = scratch(s, dir, "insecho")
+        val src = layoutRows(t(s, dir, "lineitem"))
         graft.catalog.Layout.writeClusteredZoned(
           src.filter(col("symbol") =!= "R"), path, "symbol", "ship",
           numBuckets = 4, filesPerBucket = 4)
@@ -352,11 +338,7 @@ object DomainQueries {
       // stats. Result ≡ the plain range filter (the oracle); the
       // file-count reduction itself is pinned by ZoneMapSpec.
       (s, dir) => {
-        val path = System.getProperty("java.io.tmpdir") +
-          "/graft_zonemap_" + s.sparkContext.applicationId + "_" + Integer.toHexString(dir.hashCode)
-        val fs = org.apache.hadoop.fs.FileSystem
-          .get(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(path), true)
+        val path = scratch(s, dir, "zonemap")
         val src = t(s, dir, "lineitem").select(col("l_orderkey"),
           col("l_linenumber"), to_date(col("l_shipdate")).as("ship"),
           col("l_quantity"))
@@ -384,16 +366,8 @@ object DomainQueries {
       // key+range filter (the oracle); the inputFiles shrinkage under
       // each predicate is pinned by ZoneMapSpec.
       (s, dir) => {
-        val path = System.getProperty("java.io.tmpdir") +
-          "/graft_clustered_" + s.sparkContext.applicationId + "_" + Integer.toHexString(dir.hashCode)
-        val fs = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(path), true)
-        val src = t(s, dir, "lineitem").select(
-          col("l_returnflag").as("symbol"),
-          to_date(col("l_shipdate")).as("ship"),
-          col("l_orderkey"), col("l_linenumber"),
-          col("l_quantity").as("qty"))
+        val path = scratch(s, dir, "clustered")
+        val src = layoutRows(t(s, dir, "lineitem"))
         graft.catalog.Layout.writeClusteredZoned(src, path, "symbol", "ship",
           numBuckets = 4, filesPerBucket = 4)
         graft.catalog.Layout.read(s, path, "symbol", "ship", numBuckets = 4,
@@ -419,17 +393,8 @@ object DomainQueries {
       // filter. File-count and manifest mechanics are pinned by
       // LayoutSpec; this gates end-to-end fidelity under the oracle.
       (s, dir) => {
-        val path = System.getProperty("java.io.tmpdir") +
-          "/graft_compact_" + s.sparkContext.applicationId + "_" +
-          Integer.toHexString(dir.hashCode)
-        val fs = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(path), true)
-        val src = t(s, dir, "lineitem").select(
-          col("l_returnflag").as("symbol"),
-          to_date(col("l_shipdate")).as("ship"),
-          col("l_orderkey"), col("l_linenumber"),
-          col("l_quantity").as("qty"))
+        val path = scratch(s, dir, "compact")
+        val src = layoutRows(t(s, dir, "lineitem"))
         graft.catalog.Layout.writeClusteredZoned(src, path, "symbol", "ship",
           numBuckets = 4, filesPerBucket = 16)
         graft.catalog.Layout.compact(s, path, "symbol", "ship",
@@ -459,12 +424,7 @@ object DomainQueries {
       // filter minus the deleted rows; flip atomicity, DV
       // materialization, and prune mechanics are pinned by LayoutSpec.
       (s, dir) => {
-        val path = System.getProperty("java.io.tmpdir") +
-          "/graft_recluster_" + s.sparkContext.applicationId + "_" +
-          Integer.toHexString(dir.hashCode)
-        val fs = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(path), true)
+        val path = scratch(s, dir, "recluster")
         val src = t(s, dir, "lineitem").select(
           col("l_returnflag").as("rf"), col("l_linestatus").as("ls"),
           to_date(col("l_shipdate")).as("ship"),
@@ -500,17 +460,8 @@ object DomainQueries {
       // equals the plain filter. Incremental-manifest mechanics are
       // pinned by LayoutSpec.
       (s, dir) => {
-        val path = System.getProperty("java.io.tmpdir") +
-          "/graft_append_" + s.sparkContext.applicationId + "_" +
-          Integer.toHexString(dir.hashCode)
-        val fs = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(path), true)
-        val src = t(s, dir, "lineitem").select(
-          col("l_returnflag").as("symbol"),
-          to_date(col("l_shipdate")).as("ship"),
-          col("l_orderkey"), col("l_linenumber"),
-          col("l_quantity").as("qty"))
+        val path = scratch(s, dir, "append")
+        val src = layoutRows(t(s, dir, "lineitem"))
         val cut = lit("1997-01-01").cast("date")
         graft.catalog.Layout.writeClusteredZoned(
           src.filter(col("ship") < cut), path, "symbol", "ship",
@@ -542,17 +493,8 @@ object DomainQueries {
       // historical read. Readability of old snaps is bounded by
       // vacuum's keep-last-2 retention (LayoutSpec).
       (s, dir) => {
-        val path = System.getProperty("java.io.tmpdir") +
-          "/graft_travel_" + s.sparkContext.applicationId + "_" +
-          Integer.toHexString(dir.hashCode)
-        val fs = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(path), true)
-        val src = t(s, dir, "lineitem").select(
-          col("l_returnflag").as("symbol"),
-          to_date(col("l_shipdate")).as("ship"),
-          col("l_orderkey"), col("l_linenumber"),
-          col("l_quantity").as("qty"))
+        val path = scratch(s, dir, "travel")
+        val src = layoutRows(t(s, dir, "lineitem"))
         val cut = lit("1997-01-01").cast("date")
         graft.catalog.Layout.writeClusteredZoned(
           src.filter(col("ship") < cut), path, "symbol", "ship",
@@ -580,12 +522,7 @@ object DomainQueries {
       // BOTH dimensions prunes files from metadata and still equals
       // the plain filter. Per-axis skip effectiveness: ZOrderSpec.
       (s, dir) => {
-        val path = System.getProperty("java.io.tmpdir") +
-          "/graft_zorder_" + s.sparkContext.applicationId + "_" +
-          Integer.toHexString(dir.hashCode)
-        val fs = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(path), true)
+        val path = scratch(s, dir, "zorder")
         val src = t(s, dir, "lineitem").select(
           col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
           datediff(to_date(col("l_shipdate")),
@@ -617,20 +554,11 @@ object DomainQueries {
       // every SF — and the result ≡ the plain equality filter (the
       // oracle). File-open reduction itself is pinned by LayoutSpec.
       (s, dir) => {
-        val path = System.getProperty("java.io.tmpdir") +
-          "/graft_bloom_" + s.sparkContext.applicationId + "_" +
-          Integer.toHexString(dir.hashCode)
-        val fs = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(path), true)
+        val path = scratch(s, dir, "bloom")
         // quarter slice: the gate pins bloom-skip mechanics, not write
         // throughput (the s19 discipline)
-        val src = t(s, dir, "lineitem")
-          .filter(pmod(col("l_partkey"), lit(4)) === 0).select(
-          col("l_returnflag").as("symbol"),
-          to_date(col("l_shipdate")).as("ship"),
-          col("l_orderkey"), col("l_linenumber"),
-          col("l_quantity").as("qty"))
+        val src = layoutRows(t(s, dir, "lineitem")
+          .filter(pmod(col("l_partkey"), lit(4)) === 0))
         graft.catalog.Layout.writeClusteredZoned(src, path, "symbol", "ship",
           numBuckets = 4, filesPerBucket = 4)
         graft.catalog.Layout.buildBloomIndex(s, path, "l_orderkey", "ship")
@@ -655,12 +583,7 @@ object DomainQueries {
       // equaling the plain triple filter. Per-axis skip effectiveness
       // on the 3-D manifest is pinned by ZOrderSpec.
       (s, dir) => {
-        val path = System.getProperty("java.io.tmpdir") +
-          "/graft_zorder3_" + s.sparkContext.applicationId + "_" +
-          Integer.toHexString(dir.hashCode)
-        val fs = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(path), true)
+        val path = scratch(s, dir, "zorder3")
         // quarter slice: the gate pins 3-axis skip mechanics, not
         // write throughput (the s19 discipline)
         val src = t(s, dir, "lineitem")
@@ -701,10 +624,7 @@ object DomainQueries {
       (s, dir) => {
         val tag = Integer.toHexString(s.sparkContext.applicationId.hashCode) +
           "_" + Integer.toHexString(dir.hashCode)
-        val base = System.getProperty("java.io.tmpdir") + "/graft_bucketed_" + tag
-        val fs = new org.apache.hadoop.fs.Path(base)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(base), true)
+        val base = scratch(s, dir, "bucketed")
         val li = t(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_quantity"))
         val o = t(s, dir, "orders")
@@ -736,20 +656,11 @@ object DomainQueries {
       // proves the fold preserved content exactly. Crash-atomicity of
       // the delete flip and the fold purge are pinned by LayoutSpec.
       (s, dir) => {
-        val path = System.getProperty("java.io.tmpdir") +
-          "/graft_dv_" + s.sparkContext.applicationId + "_" +
-          Integer.toHexString(dir.hashCode)
-        val fs = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(path), true)
+        val path = scratch(s, dir, "dv")
         // a quarter slice keeps the gate's I/O proportional to what it
         // pins (DV mechanics, not write throughput — s13 covers that)
-        val src = t(s, dir, "lineitem")
-          .filter(pmod(col("l_partkey"), lit(4)) === 0).select(
-          col("l_returnflag").as("symbol"),
-          to_date(col("l_shipdate")).as("ship"),
-          col("l_orderkey"), col("l_linenumber"),
-          col("l_quantity").as("qty"))
+        val src = layoutRows(t(s, dir, "lineitem")
+          .filter(pmod(col("l_partkey"), lit(4)) === 0))
         graft.catalog.Layout.writeClusteredZoned(
           src, path, "symbol", "ship", numBuckets = 4, filesPerBucket = 4)
         graft.catalog.Layout.delete(s, path, "ship", col("qty") < 10)
@@ -787,18 +698,9 @@ object DomainQueries {
       // files): only the appended files and the DV-touched files are
       // scanned, never the whole table.
       (s, dir) => {
-        val path = System.getProperty("java.io.tmpdir") +
-          "/graft_cdf_" + s.sparkContext.applicationId + "_" +
-          Integer.toHexString(dir.hashCode)
-        val fs = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(path), true)
-        val src = t(s, dir, "lineitem")
-          .filter(pmod(col("l_partkey"), lit(4)) === 0).select(
-          col("l_returnflag").as("symbol"),
-          to_date(col("l_shipdate")).as("ship"),
-          col("l_orderkey"), col("l_linenumber"),
-          col("l_quantity").as("qty"))
+        val path = scratch(s, dir, "cdf")
+        val src = layoutRows(t(s, dir, "lineitem")
+          .filter(pmod(col("l_partkey"), lit(4)) === 0))
         val cut = lit("1997-01-01").cast("date")
         graft.catalog.Layout.writeClusteredZoned(
           src.filter(col("ship") < cut), path, "symbol", "ship",
@@ -837,12 +739,7 @@ object DomainQueries {
       // TARGET's aggregate must equal the source's final state, i.e.
       // the plain double-filter oracle.
       (s, dir) => {
-        val base = System.getProperty("java.io.tmpdir") +
-          "/graft_repl_" + s.sparkContext.applicationId + "_" +
-          Integer.toHexString(dir.hashCode)
-        val fs = new org.apache.hadoop.fs.Path(base)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(base), true)
+        val base = scratch(s, dir, "repl")
         val srcPath = base + "/src"
         val tgtPath = base + "/tgt"
         // orders, not lineitem: CDC keying needs a REAL unique key
@@ -896,12 +793,7 @@ object DomainQueries {
       // equals recomputing from the final table (the oracle). The
       // retraction algebra itself is pinned by IncrementalAggSpec.
       (s, dir) => {
-        val path = System.getProperty("java.io.tmpdir") +
-          "/graft_cdcview_" + s.sparkContext.applicationId + "_" +
-          Integer.toHexString(dir.hashCode)
-        val fs = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(path), true)
+        val path = scratch(s, dir, "cdcview")
         // quarter slice: the gate pins the CDC→view loop, not write
         // throughput (the s19 discipline)
         val src = t(s, dir, "orders")
@@ -946,12 +838,7 @@ object DomainQueries {
       // equals the plain filter. File-drop accounting and the
       // crash-atomic flip are pinned by LayoutSpec.
       (s, dir) => {
-        val path = System.getProperty("java.io.tmpdir") +
-          "/graft_retain_" + s.sparkContext.applicationId + "_" +
-          Integer.toHexString(dir.hashCode)
-        val fs = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(path), true)
+        val path = scratch(s, dir, "retain")
         val src = t(s, dir, "orders").select(
           col("o_orderstatus").as("symbol"),
           to_date(col("o_orderdate")).as("ship"),
@@ -979,17 +866,8 @@ object DomainQueries {
       // oracle pays the real filtered count. Append/time-travel/
       // compaction accounting is pinned by LayoutSpec.
       (s, dir) => {
-        val path = System.getProperty("java.io.tmpdir") +
-          "/graft_cfast_" + s.sparkContext.applicationId + "_" +
-          Integer.toHexString(dir.hashCode)
-        val fs = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(path), true)
-        val src = t(s, dir, "lineitem").select(
-          col("l_returnflag").as("symbol"),
-          to_date(col("l_shipdate")).as("ship"),
-          col("l_orderkey"), col("l_linenumber"),
-          col("l_quantity").as("qty"))
+        val path = scratch(s, dir, "cfast")
+        val src = layoutRows(t(s, dir, "lineitem"))
         graft.catalog.Layout.writeClusteredZoned(
           src, path, "symbol", "ship", numBuckets = 4)
         graft.catalog.Layout.deleteWhere(s, path, "ship",
@@ -1008,12 +886,7 @@ object DomainQueries {
       // unchanged. The zone manifest and bucket layout are untouched
       // by the widened schema.
       (s, dir) => {
-        val path = System.getProperty("java.io.tmpdir") +
-          "/graft_evolve_" + s.sparkContext.applicationId + "_" +
-          Integer.toHexString(dir.hashCode)
-        val fs = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(path), true)
+        val path = scratch(s, dir, "evolve")
         val o = t(s, dir, "orders")
         val cut = lit("1997-01-01").cast("date")
         val v1 = o.select(col("o_orderstatus").as("symbol"),
@@ -1545,12 +1418,8 @@ object DomainQueries {
       (s, dir) => {
         import s.implicits._
         implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        val root = System.getProperty("java.io.tmpdir") +
-          "/graft_statscache_" + s.sparkContext.applicationId + "_" + Integer.toHexString(dir.hashCode)
         // fresh cache per run — the gate pins the flow, not persistence
-        val fs = org.apache.hadoop.fs.FileSystem
-          .get(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(root), true)
+        val root = scratch(s, dir, "statscache")
         val ev = t(s, dir, "events")
         def statsFor(keys: DataFrame): DataFrame =
           ev.join(broadcast(keys.select("user_id")), Seq("user_id"), "left_semi")
@@ -1769,21 +1638,16 @@ object DomainQueries {
       // planner's file-size guess, made the call. At 100 TB this is
       // the shuffle-the-fact vs broadcast-the-dim decision.
       (s, dir) => {
-        val path = System.getProperty("java.io.tmpdir") +
-          "/graft_statsb_" + s.sparkContext.applicationId + "_" +
-          Integer.toHexString(dir.hashCode)
-        val fs = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
+        val path = scratch(s, dir, "statsb", fresh = false)
         if (graft.catalog.SnapshotManifest.currentSnap(s, path).isEmpty) {
-          fs.delete(new org.apache.hadoop.fs.Path(path), true)
+          scratch(s, dir, "statsb")
           graft.catalog.Layout.appendClusteredZoned(
             t(s, dir, "supplier").select(col("s_suppkey"),
               col("s_name"), col("s_nationkey")),
             path, "s_name", "s_suppkey", numBuckets = 4, filesPerBucket = 1)
         }
-        val prev = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try {
+        graft.ops.ConfScope.withScopedConf(s,
+            Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1")) {
           val dim = graft.catalog.Layout.readForJoin(
             s, path, "s_name", "s_suppkey", numBuckets = 4)
           val fact = t(s, dir, "lineitem")
@@ -1798,7 +1662,7 @@ object DomainQueries {
               .contains("BroadcastHashJoin"),
             "stats-driven broadcast hint did not reach the plan")
           df
-        } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+        }
       },
       Some("SELECT s_nationkey, count(*) AS n, " +
         "CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty " +

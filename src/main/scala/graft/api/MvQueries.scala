@@ -3,8 +3,9 @@ package graft.api
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.catalog.Tables
+import graft.catalog.SnapshotManifest
 import graft.plans.{DistinctElim, FkCatalog, JoinElim, Mv, MvCatalog, PkCatalog, PlanMatch}
+import QueryCatalog.{scratch, t}
 
 /** Materialized-view rewrite gates (SURVEY §2.11): an aggregate query
   * written against the BASE fact table is transparently re-pointed at
@@ -23,20 +24,15 @@ import graft.plans.{DistinctElim, FkCatalog, JoinElim, Mv, MvCatalog, PkCatalog,
   * (order-independent exact sums, surfaced as DOUBLE). */
 object MvQueries {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   /** Build fact+MV once per (applicationId, sf-dir); returns the fact
     * DataFrame. Skip-if-exists keeps repeated gate calls off the
     * FileStatusCache's stale-listing path and makes reruns free. */
   private def factWithMv(s: SparkSession, dir: String): DataFrame = {
-    val root = System.getProperty("java.io.tmpdir") + "/graft_mv_" +
-      s.sparkContext.applicationId + "_" + Integer.toHexString(dir.hashCode)
+    val root = scratch(s, dir, "mv", fresh = false)
     val factPath = root + "/fact"
     val mvPath = root + "/mv"
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(mvPath, "_SUCCESS"))) {
+    if (!SnapshotManifest.fsOf(s, mvPath)
+        .exists(new org.apache.hadoop.fs.Path(mvPath, "_SUCCESS"))) {
       t(s, dir, "lineitem").select(
         col("l_returnflag").as("rf"), col("l_linestatus").as("ls"),
         col("l_quantity").cast("bigint").as("qty"),
@@ -120,14 +116,11 @@ object MvQueries {
       // (O(batch+MV), copy-on-write re-point) — then a query over the
       // FULL fact must answer from the refreshed summary alone
       (s, dir) => {
-        val root = System.getProperty("java.io.tmpdir") + "/graft_mv3_" +
-          s.sparkContext.applicationId + "_" + Integer.toHexString(dir.hashCode)
+        val root = scratch(s, dir, "mv3", fresh = false)
         val name = "mv3_" + Integer.toHexString(root.hashCode)
         val factPath = root + "/fact"
         if (MvCatalog.get(name).isEmpty) {
-          val p = new org.apache.hadoop.fs.Path(root)
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          fs.delete(p, true)
+          scratch(s, dir, "mv3")
           t(s, dir, "lineitem").select(
             col("l_returnflag").as("rf"), col("l_linestatus").as("ls"),
             col("l_orderkey").as("ok"),
@@ -166,14 +159,11 @@ object MvQueries {
       // same net multiset. Measures are BIGINT + DECIMAL, so the
       // retraction is exact, not float-approximate.
       (s, dir) => {
-        val root = System.getProperty("java.io.tmpdir") + "/graft_mv6_" +
-          s.sparkContext.applicationId + "_" + Integer.toHexString(dir.hashCode)
+        val root = scratch(s, dir, "mv6", fresh = false)
         val name = "mv6_" + Integer.toHexString(root.hashCode)
         val factPath = root + "/fact"
         if (MvCatalog.get(name).isEmpty) {
-          val p = new org.apache.hadoop.fs.Path(root)
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          fs.delete(p, true)
+          scratch(s, dir, "mv6")
           t(s, dir, "lineitem").select(
             col("l_returnflag").as("rf"), col("l_linestatus").as("ls"),
             col("l_orderkey").as("ok"),
@@ -196,6 +186,7 @@ object MvQueries {
           v0.filter(col("ok") % 5 =!= 0)
             .unionByName(v0.filter(col("ok") % 7 === 0))
             .write.parquet(root + "/fact_next")
+          val fs = SnapshotManifest.fsOf(s, root)
           fs.delete(new org.apache.hadoop.fs.Path(factPath), true)
           require(fs.rename(new org.apache.hadoop.fs.Path(root + "/fact_next"),
             new org.apache.hadoop.fs.Path(factPath)), "fact swap failed")
@@ -246,13 +237,10 @@ object MvQueries {
       // rolls up to a CUSTOMER attribute is answered from the summary
       // alone — neither base table is scanned (hard-asserted)
       (s, dir) => {
-        val root = System.getProperty("java.io.tmpdir") + "/graft_mv4_" +
-          s.sparkContext.applicationId + "_" + Integer.toHexString(dir.hashCode)
+        val root = scratch(s, dir, "mv4", fresh = false)
         val name = "mv4_" + Integer.toHexString(root.hashCode)
         if (MvCatalog.get(name).isEmpty) {
-          val p = new org.apache.hadoop.fs.Path(root)
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          fs.delete(p, true)
+          scratch(s, dir, "mv4")
           t(s, dir, "orders").select(
             col("o_custkey").as("ck"), col("o_orderstatus").as("status"),
             col("o_totalprice").cast("decimal(18,2)").as("price"))
@@ -287,13 +275,10 @@ object MvQueries {
       // AND audited, the optimizer drops the customer scan and the
       // join entirely (hard-asserted) — the oracle still pays the join
       (s, dir) => {
-        val root = System.getProperty("java.io.tmpdir") + "/graft_je_" +
-          s.sparkContext.applicationId + "_" + Integer.toHexString(dir.hashCode)
+        val root = scratch(s, dir, "je", fresh = false)
         val name = "je_" + Integer.toHexString(root.hashCode)
         if (FkCatalog.get(name).isEmpty) {
-          val p = new org.apache.hadoop.fs.Path(root)
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          fs.delete(p, true)
+          scratch(s, dir, "je")
           t(s, dir, "orders").select(
             col("o_custkey").as("ck"), col("o_orderstatus").as("status"),
             col("o_totalprice").cast("decimal(18,2)").as("price"))
@@ -332,13 +317,10 @@ object MvQueries {
       // 1 (hard-asserted: no Aggregate in the optimized plan). The
       // oracle pays the real aggregation.
       (s, dir) => {
-        val root = System.getProperty("java.io.tmpdir") + "/graft_ae_" +
-          s.sparkContext.applicationId + "_" + Integer.toHexString(dir.hashCode)
+        val root = scratch(s, dir, "ae", fresh = false)
         val name = "ae_" + Integer.toHexString(root.hashCode)
         if (PkCatalog.get(name).isEmpty) {
-          val p = new org.apache.hadoop.fs.Path(root)
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          fs.delete(p, true)
+          scratch(s, dir, "ae")
           t(s, dir, "orders").select(
             col("o_orderkey").as("ok"), col("o_orderstatus").as("status"),
             col("o_totalprice").cast("decimal(18,2)").as("price"))
@@ -370,13 +352,10 @@ object MvQueries {
       // NULL-keyed row the EXISTS must drop; the oracle pays the real
       // probe.
       (s, dir) => {
-        val root = System.getProperty("java.io.tmpdir") + "/graft_sa_" +
-          s.sparkContext.applicationId + "_" + Integer.toHexString(dir.hashCode)
+        val root = scratch(s, dir, "sa", fresh = false)
         val name = "sa_" + Integer.toHexString(root.hashCode)
         if (FkCatalog.get(name).isEmpty) {
-          val p = new org.apache.hadoop.fs.Path(root)
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          fs.delete(p, true)
+          scratch(s, dir, "sa")
           t(s, dir, "orders").select(
             col("o_custkey").as("ck"), col("o_orderstatus").as("status"),
             col("o_totalprice").cast("decimal(18,2)").as("price"))
@@ -423,13 +402,10 @@ object MvQueries {
       // NULL-keyed row and an orphan row; the oracle pays the real
       // left join over the same rows.
       (s, dir) => {
-        val root = System.getProperty("java.io.tmpdir") + "/graft_oj_" +
-          s.sparkContext.applicationId + "_" + Integer.toHexString(dir.hashCode)
+        val root = scratch(s, dir, "oj", fresh = false)
         val name = "oj_" + Integer.toHexString(root.hashCode)
         if (PkCatalog.get(name).isEmpty) {
-          val p = new org.apache.hadoop.fs.Path(root)
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          fs.delete(p, true)
+          scratch(s, dir, "oj")
           t(s, dir, "orders").select(
             col("o_custkey").as("ck"), col("o_orderstatus").as("status"),
             col("o_totalprice").cast("decimal(18,2)").as("price"))
@@ -479,14 +455,11 @@ object MvQueries {
       // present in BOTH halves exactly once. Hard-asserts the fact is
       // never scanned; the oracle recomputes from the raw rows.
       (s, dir) => {
-        val root = System.getProperty("java.io.tmpdir") + "/graft_mv14_" +
-          s.sparkContext.applicationId + "_" + Integer.toHexString(dir.hashCode)
+        val root = scratch(s, dir, "mv14", fresh = false)
         val name = "mv14_" + Integer.toHexString(root.hashCode)
         val factPath = root + "/fact"
         if (MvCatalog.get(name).isEmpty) {
-          val p = new org.apache.hadoop.fs.Path(root)
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          fs.delete(p, true)
+          scratch(s, dir, "mv14")
           t(s, dir, "lineitem").select(
             col("l_returnflag").as("rf"), col("l_linestatus").as("ls"),
             col("l_orderkey").as("ok"), col("l_suppkey").as("sk"),
@@ -527,14 +500,11 @@ object MvQueries {
       // evaluated against the summary. Hard-asserts the fact is never
       // scanned; the oracle recomputes from the raw rows.
       (s, dir) => {
-        val root = System.getProperty("java.io.tmpdir") + "/graft_mv15_" +
-          s.sparkContext.applicationId + "_" + Integer.toHexString(dir.hashCode)
+        val root = scratch(s, dir, "mv15", fresh = false)
         val name = "mv15_" + Integer.toHexString(root.hashCode)
         val factPath = root + "/fact"
         if (MvCatalog.get(name).isEmpty) {
-          val p = new org.apache.hadoop.fs.Path(root)
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          fs.delete(p, true)
+          scratch(s, dir, "mv15")
           t(s, dir, "lineitem").select(
             col("l_returnflag").as("rf"), col("l_linestatus").as("ls"),
             col("l_linenumber").as("ln"),
@@ -569,13 +539,10 @@ object MvQueries {
       // joins and zero fact I/O (hard-asserted); the oracle pays the
       // real join over the raw rows.
       (s, dir) => {
-        val root = System.getProperty("java.io.tmpdir") + "/graft_mv16_" +
-          s.sparkContext.applicationId + "_" + Integer.toHexString(dir.hashCode)
+        val root = scratch(s, dir, "mv16", fresh = false)
         val name = "mv16_" + Integer.toHexString(root.hashCode)
         if (MvCatalog.get(name).isEmpty) {
-          val p = new org.apache.hadoop.fs.Path(root)
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          fs.delete(p, true)
+          scratch(s, dir, "mv16")
           t(s, dir, "lineitem").select(
             col("l_orderkey").as("okey"), col("l_linestatus").as("ls"),
             col("l_quantity").cast("bigint").as("qty"))
@@ -618,8 +585,7 @@ object MvQueries {
       // time, and the rewrite RESUMES answering for the live base
       // (hard-asserted + oracle-checked over the same survivors).
       (s, dir) => {
-        val root = System.getProperty("java.io.tmpdir") + "/graft_mv7_" +
-          s.sparkContext.applicationId + "_" + Integer.toHexString(dir.hashCode)
+        val root = scratch(s, dir, "mv7", fresh = false)
         val name = "mv7_" + Integer.toHexString(root.hashCode)
         val baseP = root + "/base"
         def q: DataFrame = s.read.parquet(baseP)
@@ -627,9 +593,7 @@ object MvQueries {
             sum(col("qty")).cast("double").as("sum_qty"),
             count(lit(1)).as("n")).orderBy("symbol")
         if (MvCatalog.get(name).isEmpty) {
-          val p = new org.apache.hadoop.fs.Path(root)
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          fs.delete(p, true)
+          scratch(s, dir, "mv7")
           val o = t(s, dir, "orders").select(
             col("o_orderstatus").as("symbol"),
             to_date(col("o_orderdate")).as("ship"),
@@ -691,8 +655,7 @@ object MvQueries {
       // rewrite RESUMES answering for the full join (hard-asserted +
       // oracle-checked against the from-scratch join over all rows).
       (s, dir) => {
-        val root = System.getProperty("java.io.tmpdir") + "/graft_mv8_" +
-          s.sparkContext.applicationId + "_" + Integer.toHexString(dir.hashCode)
+        val root = scratch(s, dir, "mv8", fresh = false)
         val name = "mv8_" + Integer.toHexString(root.hashCode)
         val factP = root + "/sfact"
         val dimP = root + "/sdim"
@@ -702,9 +665,7 @@ object MvQueries {
             sum("price").cast("double").as("revenue"),
             count(lit(1)).as("n")).orderBy("seg")
         if (MvCatalog.get(name).isEmpty) {
-          val p = new org.apache.hadoop.fs.Path(root)
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          fs.delete(p, true)
+          scratch(s, dir, "mv8")
           val o = t(s, dir, "orders").select(
             col("o_custkey").as("ck"), col("o_orderstatus").as("status"),
             col("o_totalprice").cast("decimal(18,2)").as("price"),
@@ -760,8 +721,7 @@ object MvQueries {
       // (hard-asserted + oracle-checked against the from-scratch join
       // over the post-delete table).
       (s, dir) => {
-        val root = System.getProperty("java.io.tmpdir") + "/graft_mv9_" +
-          s.sparkContext.applicationId + "_" + Integer.toHexString(dir.hashCode)
+        val root = scratch(s, dir, "mv9", fresh = false)
         val name = "mv9_" + Integer.toHexString(root.hashCode)
         val factP = root + "/cfact"
         val dimP = root + "/cdim"
@@ -771,9 +731,7 @@ object MvQueries {
             sum("price").cast("double").as("revenue"),
             count(lit(1)).as("n")).orderBy("seg")
         if (MvCatalog.get(name).isEmpty) {
-          val p = new org.apache.hadoop.fs.Path(root)
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          fs.delete(p, true)
+          scratch(s, dir, "mv9")
           val o = t(s, dir, "orders").select(
             col("o_custkey").as("ck"), col("o_orderstatus").as("status"),
             col("o_totalprice").cast("decimal(18,2)").as("price"),
@@ -835,8 +793,7 @@ object MvQueries {
       // rewrite resumes (hard-asserted + oracle-checked against the
       // from-scratch 3-way join).
       (s, dir) => {
-        val root = System.getProperty("java.io.tmpdir") + "/graft_mv10_" +
-          s.sparkContext.applicationId + "_" + Integer.toHexString(dir.hashCode)
+        val root = scratch(s, dir, "mv10", fresh = false)
         val name = "mv10_" + Integer.toHexString(root.hashCode)
         val factP = root + "/nfact"
         val d1P = root + "/npart"
@@ -848,9 +805,7 @@ object MvQueries {
             sum("price").cast("double").as("revenue"),
             count(lit(1)).as("n")).orderBy("brand", "snat")
         if (MvCatalog.get(name).isEmpty) {
-          val p = new org.apache.hadoop.fs.Path(root)
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          fs.delete(p, true)
+          scratch(s, dir, "mv10")
           val f = t(s, dir, "lineitem").select(
             col("l_partkey").as("pk"), col("l_suppkey").as("sk"),
             col("l_extendedprice").cast("decimal(18,2)").as("price"),
@@ -908,16 +863,13 @@ object MvQueries {
       // over fact ⋈ dims is the single most expensive recurring
       // query shape this engine serves.
       (s, dir) => {
-        val root = System.getProperty("java.io.tmpdir") + "/graft_mv12_" +
-          s.sparkContext.applicationId + "_" + Integer.toHexString(dir.hashCode)
+        val root = scratch(s, dir, "mv12", fresh = false)
         val name = "mv12_" + Integer.toHexString(root.hashCode)
         val factP = root + "/rfact"
         val d1P = root + "/rpart"
         val d2P = root + "/rsupp"
         if (MvCatalog.get(name).isEmpty) {
-          val p = new org.apache.hadoop.fs.Path(root)
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          fs.delete(p, true)
+          scratch(s, dir, "mv12")
           graft.catalog.Layout.writeClusteredZoned(
             t(s, dir, "lineitem").select(
               col("l_partkey").as("pk"), col("l_suppkey").as("sk"),
@@ -976,8 +928,7 @@ object MvQueries {
       // summary (hard-asserted + oracle-checked). A delete that ties
       // an extreme still refuses loudly (spec-pinned).
       (s, dir) => {
-        val root = System.getProperty("java.io.tmpdir") + "/graft_mv13_" +
-          s.sparkContext.applicationId + "_" + Integer.toHexString(dir.hashCode)
+        val root = scratch(s, dir, "mv13", fresh = false)
         val name = "mv13_" + Integer.toHexString(root.hashCode)
         val factP = root + "/xfact"
         def q: DataFrame = s.read.parquet(factP)
@@ -985,9 +936,7 @@ object MvQueries {
             min("ok").as("mn"), max("ok").as("mx"),
             count(lit(1)).as("n")).orderBy("status")
         if (MvCatalog.get(name).isEmpty) {
-          val p = new org.apache.hadoop.fs.Path(root)
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          fs.delete(p, true)
+          scratch(s, dir, "mv13")
           val o = t(s, dir, "orders").select(
             col("o_orderstatus").as("status"), col("o_orderkey").as("ok"))
           val sentinels = o.select("status").distinct()
@@ -1040,8 +989,7 @@ object MvQueries {
       // summary under/over-count this query, which is why the flag is
       // earned at build and DOWNGRADED by any window that breaks it.
       (s, dir) => {
-        val root = System.getProperty("java.io.tmpdir") + "/graft_mv11_" +
-          s.sparkContext.applicationId + "_" + Integer.toHexString(dir.hashCode)
+        val root = scratch(s, dir, "mv11", fresh = false)
         val name = "mv11_" + Integer.toHexString(root.hashCode)
         val factP = root + "/lfact"
         val d1P = root + "/lpart"
@@ -1052,9 +1000,7 @@ object MvQueries {
             sum("price").cast("double").as("revenue"),
             count(lit(1)).as("n")).orderBy("brand")
         if (MvCatalog.get(name).isEmpty) {
-          val p = new org.apache.hadoop.fs.Path(root)
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          fs.delete(p, true)
+          scratch(s, dir, "mv11")
           val f = t(s, dir, "lineitem").select(
             col("l_partkey").as("pk"), col("l_suppkey").as("sk"),
             col("l_extendedprice").cast("decimal(18,2)").as("price"),
@@ -1107,8 +1053,7 @@ object MvQueries {
       // RESUMES (hard-asserted: the dim scan is gone again). The
       // oracle pays the real join over the same surviving rows.
       (s, dir) => {
-        val root = System.getProperty("java.io.tmpdir") + "/graft_jr_" +
-          s.sparkContext.applicationId + "_" + Integer.toHexString(dir.hashCode)
+        val root = scratch(s, dir, "jr", fresh = false)
         val name = "jr_" + Integer.toHexString(root.hashCode)
         val childP = root + "/child"
         val dimP = root + "/dim"
@@ -1119,9 +1064,7 @@ object MvQueries {
             count(lit(1)).as("n"),
             sum(col("price")).cast("double").as("revenue")).orderBy("symbol")
         if (FkCatalog.get(name).isEmpty) {
-          val p = new org.apache.hadoop.fs.Path(root)
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          fs.delete(p, true)
+          scratch(s, dir, "jr")
           val o = t(s, dir, "orders").select(
             col("o_orderstatus").as("symbol"),
             to_date(col("o_orderdate")).as("ship"),
@@ -1192,8 +1135,7 @@ object MvQueries {
       // any row subset). Hard-asserts suspend + resume at each step;
       // the oracle runs the real DISTINCT over the same survivors.
       (s, dir) => {
-        val root = System.getProperty("java.io.tmpdir") + "/graft_ur_" +
-          s.sparkContext.applicationId + "_" + Integer.toHexString(dir.hashCode)
+        val root = scratch(s, dir, "ur", fresh = false)
         val name = "ur_" + Integer.toHexString(root.hashCode)
         val tp = root + "/t"
         def q: DataFrame = s.read.parquet(tp)
@@ -1201,9 +1143,7 @@ object MvQueries {
         def hasAgg: Boolean =
           q.queryExecution.optimizedPlan.toString.contains("Aggregate")
         if (PkCatalog.get(name).isEmpty) {
-          val p = new org.apache.hadoop.fs.Path(root)
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          fs.delete(p, true)
+          scratch(s, dir, "ur")
           val o = t(s, dir, "orders").select(
             col("o_orderstatus").as("status"),
             to_date(col("o_orderdate")).as("ship"),
@@ -1251,13 +1191,10 @@ object MvQueries {
       // (and its SHUFFLE) must vanish from the plan — hard-asserted;
       // the oracle still runs the real DISTINCT
       (s, dir) => {
-        val root = System.getProperty("java.io.tmpdir") + "/graft_de_" +
-          s.sparkContext.applicationId + "_" + Integer.toHexString(dir.hashCode)
+        val root = scratch(s, dir, "de", fresh = false)
         val name = "de_" + Integer.toHexString(root.hashCode)
         if (PkCatalog.get(name).isEmpty) {
-          val p = new org.apache.hadoop.fs.Path(root)
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          fs.delete(p, true)
+          scratch(s, dir, "de")
           t(s, dir, "orders").select(
             col("o_orderkey").as("ok"), col("o_orderstatus").as("status"))
             .write.mode("overwrite").parquet(root + "/t")
@@ -1289,13 +1226,10 @@ object MvQueries {
       // the repeat scans ONLY the cache entry. The oracle pays all
       // three joins from the raw tables.
       (s, dir) => {
-        val root = System.getProperty("java.io.tmpdir") + "/graft_c1_" +
-          s.sparkContext.applicationId + "_" + Integer.toHexString(dir.hashCode)
+        val root = scratch(s, dir, "c1", fresh = false)
         val name = "c1_" + Integer.toHexString(root.hashCode)
         if (MvCatalog.get(name).isEmpty) {
-          val p = new org.apache.hadoop.fs.Path(root)
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          fs.delete(p, true)
+          scratch(s, dir, "c1")
           t(s, dir, "orders").select(
             col("o_custkey").as("ck"), col("o_orderpriority").as("prio"),
             col("o_orderstatus").as("status"),
@@ -1339,8 +1273,8 @@ object MvQueries {
         // runs 2+3 (cache conf on): populate, then the repeat serves
         // from the entry — metadata + the 3-row result only
         val cacheRoot = root + "/rescache"
-        s.conf.set("graft.resultcache.dir", cacheRoot)
-        try {
+        graft.ops.ConfScope.withScopedConf(s,
+            Seq("graft.resultcache.dir" -> cacheRoot)) {
           q.collect()
           val served = q
           val scans2 = scanRoots(served)
@@ -1348,7 +1282,7 @@ object MvQueries {
             scans2.forall(_.contains("/rescache")),
             s"result cache did not serve the repeat; scans = $scans2")
           served
-        } finally s.conf.unset("graft.resultcache.dir")
+        }
       },
       Some("WITH fact AS (SELECT o_custkey AS ck, o_orderpriority AS prio, " +
         "o_orderstatus AS status, CAST(o_totalprice AS DECIMAL(18,2)) AS price " +
@@ -1373,13 +1307,10 @@ object MvQueries {
       // pattern) that isolation gates cannot see. Hard-asserted: the
       // final plan scans only the MV.
       (s, dir) => {
-        val root = System.getProperty("java.io.tmpdir") + "/graft_c2_" +
-          s.sparkContext.applicationId + "_" + Integer.toHexString(dir.hashCode)
+        val root = scratch(s, dir, "c2", fresh = false)
         val name = "c2_" + Integer.toHexString(root.hashCode)
         if (MvCatalog.get(name).isEmpty) {
-          val p = new org.apache.hadoop.fs.Path(root)
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          fs.delete(p, true)
+          scratch(s, dir, "c2")
           t(s, dir, "orders").select(
             col("o_custkey").as("ck"), col("o_orderstatus").as("status"),
             col("o_totalprice").cast("decimal(18,2)").as("price"))
@@ -1437,13 +1368,10 @@ object MvQueries {
       // the result cache. Hard-asserted: no Join, no Aggregate, scans
       // stay on the fact, no cache entry born.
       (s, dir) => {
-        val root = System.getProperty("java.io.tmpdir") + "/graft_c3_" +
-          s.sparkContext.applicationId + "_" + Integer.toHexString(dir.hashCode)
+        val root = scratch(s, dir, "c3", fresh = false)
         val name = "c3_" + Integer.toHexString(root.hashCode)
         if (PkCatalog.get(name).isEmpty) {
-          val p = new org.apache.hadoop.fs.Path(root)
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          fs.delete(p, true)
+          scratch(s, dir, "c3")
           t(s, dir, "orders").select(
             col("o_orderkey").as("ok"), col("o_custkey").as("ck"),
             col("o_orderstatus").as("status"),
@@ -1460,8 +1388,8 @@ object MvQueries {
         JoinElim.install(s)
         DistinctElim.install(s)
         graft.analytics.ResultCache.install(s)
-        s.conf.set("graft.resultcache.dir", root + "/rescache")
-        try {
+        graft.ops.ConfScope.withScopedConf(s,
+            Seq("graft.resultcache.dir" -> (root + "/rescache"))) {
           val df = s.read.parquet(root + "/fact")
             .join(s.read.parquet(root + "/dim"),
               col("ck") === col("ck2"), "left")
@@ -1478,7 +1406,7 @@ object MvQueries {
           require(scans.nonEmpty && scans.forall(_.endsWith("/fact")),
             s"expected a bare fact projection; scans = $scans")
           df
-        } finally s.conf.unset("graft.resultcache.dir")
+        }
       },
       Some("WITH fact AS (SELECT o_orderkey AS ok, o_custkey AS ck, " +
         "o_orderstatus AS status, " +
@@ -1910,12 +1838,9 @@ object MvQueries {
       // `dynamicpruning#` present in the scan, 12 of 83 partitions
       // actually read.
       (s, dir) => {
-        val factPath = System.getProperty("java.io.tmpdir") +
-          "/graft_dpp_" + s.sparkContext.applicationId + "_" +
-          Integer.toHexString(dir.hashCode) + "/lineitem_by_month"
-        val fp = new org.apache.hadoop.fs.Path(factPath)
-        val fs = fp.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (!fs.exists(new org.apache.hadoop.fs.Path(factPath, "_SUCCESS")))
+        val factPath = scratch(s, dir, "dpp", fresh = false) + "/lineitem_by_month"
+        if (!SnapshotManifest.fsOf(s, factPath)
+            .exists(new org.apache.hadoop.fs.Path(factPath, "_SUCCESS")))
           t(s, dir, "lineitem")
             .withColumn("ship_month",
               date_format(col("l_shipdate"), "yyyy-MM"))

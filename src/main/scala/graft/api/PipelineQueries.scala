@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.catalog.Tables
 import graft.pipeline.{Bpe, Cluster, Dedup, LshIndex, Multimodal, Similarity, Sq, TextAnalysis, MediaRecord}
+import QueryCatalog.{scratch, t}
 
 /** Batch 3: the training-data pipeline operators — text analysis,
   * deduplication, similarity search, multimodal plumbing — over the
@@ -20,9 +21,6 @@ import graft.pipeline.{Bpe, Cluster, Dedup, LshIndex, Multimodal, Similarity, Sq
   * corpora instead.
   */
 object PipelineQueries {
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
-
   /** DuckDB mirror of TextAnalysis.normalize ('g' = replace ALL —
     * DuckDB's regexp_replace is first-match-only by default). */
   private[api] val normSql =
@@ -45,15 +43,13 @@ object PipelineQueries {
   /** Session-scoped location of the persisted term index over this
     * corpus (t13/t16 share it; first caller builds it). */
   private def termIndexRoot(s: SparkSession, dir: String): String =
-    System.getProperty("java.io.tmpdir") + "/graft_termidx_" +
-      s.sparkContext.applicationId + "_" + Integer.toHexString(dir.hashCode)
+    scratch(s, dir, "termidx", fresh = false)
 
   /** Session-scoped location of the POSITIONAL index (t30) — kept
     * separate from [[termIndexRoot]] so t13/t16's position-free
     * postings stay lean (positions are opt-in storage weight). */
   private def posIndexRoot(s: SparkSession, dir: String): String =
-    System.getProperty("java.io.tmpdir") + "/graft_posidx_" +
-      s.sparkContext.applicationId + "_" + Integer.toHexString(dir.hashCode)
+    scratch(s, dir, "posidx", fresh = false)
 
   /** Query-term postings through the STORED bucketed index
     * ([[TextAnalysis.saveTermIndex]]), building the index on first
@@ -461,13 +457,10 @@ object PipelineQueries {
       // the chain to one link + vacuums, and the search must be
       // bit-identical (hard-required).
       (s, dir) => {
-        val root = System.getProperty("java.io.tmpdir") + "/graft_t25_" +
-          s.sparkContext.applicationId + "_" + Integer.toHexString(dir.hashCode)
+        val root = scratch(s, dir, "t25", fresh = false)
         val d = t(s, dir, "documents").select("doc_id", "text")
         if (!TextAnalysis.termIndexExists(s, root)) {
-          val p = new org.apache.hadoop.fs.Path(root)
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          fs.delete(p, true)
+          scratch(s, dir, "t25")
           TextAnalysis.saveTermIndex(
             d.filter(pmod(col("doc_id"), lit(3)) =!= 0),
             "doc_id", "text", root, nBuckets = 64)
@@ -1048,14 +1041,11 @@ object PipelineQueries {
       // probe must surface hits from BOTH the built and the appended
       // generation.
       (s, dir) => {
-        val root = System.getProperty("java.io.tmpdir") + "/graft_d12_" +
-          s.sparkContext.applicationId + "_" + Integer.toHexString(dir.hashCode)
+        val root = scratch(s, dir, "d12", fresh = false)
         val idx = root + "/idx"
         val d = t(s, dir, "documents").select("doc_id", "text")
         if (graft.catalog.SnapshotManifest.currentSnap(s, idx).isEmpty) {
-          val p = new org.apache.hadoop.fs.Path(root)
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          fs.delete(p, true)
+          scratch(s, dir, "d12")
           LshIndex.build(d.filter(pmod(col("doc_id"), lit(3)) =!= 0),
             idx, "doc_id", "text", n = 3, k = 32, bands = 16)
           LshIndex.append(d.filter(pmod(col("doc_id"), lit(3)) === 0), idx)
@@ -1093,14 +1083,11 @@ object PipelineQueries {
       // the oracle recomputes the equal-shingle-set pairs minus the
       // removed ids from scratch.
       (s, dir) => {
-        val root = System.getProperty("java.io.tmpdir") + "/graft_d13_" +
-          s.sparkContext.applicationId + "_" + Integer.toHexString(dir.hashCode)
+        val root = scratch(s, dir, "d13", fresh = false)
         val idx = root + "/idx"
         val d = t(s, dir, "documents").select("doc_id", "text")
         if (graft.catalog.SnapshotManifest.currentSnap(s, idx).isEmpty) {
-          val p = new org.apache.hadoop.fs.Path(root)
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          fs.delete(p, true)
+          scratch(s, dir, "d13")
           LshIndex.build(d.filter(pmod(col("doc_id"), lit(3)) =!= 0),
             idx, "doc_id", "text", n = 3, k = 32, bands = 16)
           LshIndex.append(d.filter(pmod(col("doc_id"), lit(3)) === 0), idx)
@@ -1253,9 +1240,7 @@ object PipelineQueries {
         val emb = Tables.load(s, dir, "embeddings")
         // the gate also pins index PERSISTENCE: build → save → load,
         // and query the RELOADED index (per-run nonce path, see st4)
-        val path = System.getProperty("java.io.tmpdir") +
-          "/graft_ivf_" + s.sparkContext.applicationId +
-          "_" + Integer.toHexString(dir.hashCode)
+        val path = scratch(s, dir, "ivf", fresh = false)
         graft.pipeline.IvfIndex.build(emb, "vec_id", "embedding", nCells = 8)
           .save(path)
         val idx = graft.pipeline.IvfIndex.load(s, path)
@@ -1391,9 +1376,7 @@ object PipelineQueries {
           emb.withColumn("vec_id", col("vec_id") + 10000000L))
         // persistence round-trip, same recipe as e3: query the
         // reloaded index, not the freshly built one
-        val path = System.getProperty("java.io.tmpdir") +
-          "/graft_pq_" + s.sparkContext.applicationId +
-          "_" + Integer.toHexString(dir.hashCode)
+        val path = scratch(s, dir, "pq", fresh = false)
         graft.pipeline.PqIndex.build(un, "vec_id", "embedding",
           m = 8, nWords = 64, maxTrainRows = 20000).save(path)
         val idx = graft.pipeline.PqIndex.load(s, path)
@@ -1568,9 +1551,7 @@ object PipelineQueries {
           emb.withColumn("vec_id", col("vec_id") + 10000000L))
         // both halves of the composition are queried RELOADED — the
         // production shape: train once, persist, probe from any job
-        val base = System.getProperty("java.io.tmpdir") +
-          "/graft_ivfpq_" + s.sparkContext.applicationId +
-          "_" + Integer.toHexString(dir.hashCode)
+        val base = scratch(s, dir, "ivfpq", fresh = false)
         graft.pipeline.IvfIndex.build(un, "vec_id", "embedding", nCells = 8)
           .save(base + "/coarse")
         graft.pipeline.PqIndex.build(un, "vec_id", "embedding",
@@ -1612,9 +1593,7 @@ object PipelineQueries {
         val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
         val un = emb.unionByName(
           emb.withColumn("vec_id", col("vec_id") + 10000000L))
-        val base = System.getProperty("java.io.tmpdir") +
-          "/graft_rivfpq_" + s.sparkContext.applicationId +
-          "_" + Integer.toHexString(dir.hashCode)
+        val base = scratch(s, dir, "rivfpq", fresh = false)
         val coarse0 = graft.pipeline.IvfIndex.build(un, "vec_id", "embedding",
           nCells = 8)
         coarse0.save(base + "/coarse")

@@ -5,7 +5,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.catalog.Tables
+import graft.ops.ConfScope
 import graft.streaming.Streams
+import QueryCatalog.scratch
 
 /** Streaming surface, exercised through its batch-equivalent form
   * (transformations in graft.streaming are source-agnostic; the
@@ -30,12 +32,9 @@ object StreamingQueries {
     * by graft.StatePartitionsCheck (state ran at 8 partitions with
     * the session conf already restored to 4). */
   private def startWithStatePartitions[T](s: SparkSession, n: Int)
-                                         (start: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val old = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try start finally s.conf.set(key, old)
-  }
+                                         (start: => T): T =
+    ConfScope.withScopedConf(s,
+      Seq("spark.sql.shuffle.partitions" -> n.toString))(start)
 
   val entries: Seq[Q] = Seq(
     Q("st1_windowed_agg",
@@ -218,12 +217,7 @@ object StreamingQueries {
         // per-run nonce (applicationId): two concurrent drivers over the
         // same sfDir must not share a sink root — each would delete and
         // flip the other's bucket dirs mid-stream
-        val root = System.getProperty("java.io.tmpdir") +
-          "/graft_scd2sink_" + s.sparkContext.applicationId +
-          "_" + Integer.toHexString(dir.hashCode)
-        val fs = new org.apache.hadoop.fs.Path(root)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(root), true)
+        val root = scratch(s, dir, "scd2sink")
         val log = Tables.load(s, dir, "orders")
           .filter(col("o_custkey") <= 300)
           .select(col("o_custkey").as("custkey"),
@@ -409,12 +403,7 @@ object StreamingQueries {
       (s, dir) => {
         import s.implicits._
         implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        val path = System.getProperty("java.io.tmpdir") +
-          "/graft_st8_" + s.sparkContext.applicationId + "_" +
-          Integer.toHexString(dir.hashCode)
-        val fs = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(path), true)
+        val path = scratch(s, dir, "st8")
         val ev = Tables.load(s, dir, "events")
           .select(col("event_id"), col("ts"), col("event_type"), col("value"))
           .as[(Long, java.sql.Timestamp, String, Double)]
@@ -454,12 +443,7 @@ object StreamingQueries {
       (s, dir) => {
         import s.implicits._
         implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        val root = System.getProperty("java.io.tmpdir") +
-          "/graft_st9_" + s.sparkContext.applicationId + "_" +
-          Integer.toHexString(dir.hashCode)
-        val fs = new org.apache.hadoop.fs.Path(root)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(root), true)
+        val root = scratch(s, dir, "st9")
         val rows = Tables.load(s, dir, "orders")
           .filter(pmod(col("o_orderkey"), lit(4)) === 0)
           .select(col("o_orderstatus"), col("o_totalprice"),
@@ -497,15 +481,11 @@ object StreamingQueries {
       (s, dir) => {
         import s.implicits._
         implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        val root = System.getProperty("java.io.tmpdir") +
-          "/graft_st10_" + s.sparkContext.applicationId + "_" +
-          Integer.toHexString(dir.hashCode)
+        val root = scratch(s, dir, "st10", fresh = false)
         val name = "st10_" + Integer.toHexString(root.hashCode)
         val factPath = root + "/fact"
         if (graft.plans.MvCatalog.get(name).isEmpty) {
-          val fs = new org.apache.hadoop.fs.Path(root)
-            .getFileSystem(s.sparkContext.hadoopConfiguration)
-          fs.delete(new org.apache.hadoop.fs.Path(root), true)
+          scratch(s, dir, "st10")
           Tables.load(s, dir, "orders").select(
             col("o_orderstatus").as("status"),
             col("o_orderpriority").as("prio"),
@@ -556,15 +536,12 @@ object StreamingQueries {
       (s, dir) => {
         import s.implicits._
         implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        val root = System.getProperty("java.io.tmpdir") + "/graft_st13_" +
-          s.sparkContext.applicationId + "_" + Integer.toHexString(dir.hashCode)
+        val root = scratch(s, dir, "st13", fresh = false)
         val name = "st13_" + Integer.toHexString(root.hashCode)
         val factP = root + "/sfact"
         val dimP = root + "/sdim"
         if (graft.plans.MvCatalog.get(name).isEmpty) {
-          val fs = new org.apache.hadoop.fs.Path(root)
-            .getFileSystem(s.sparkContext.hadoopConfiguration)
-          fs.delete(new org.apache.hadoop.fs.Path(root), true)
+          scratch(s, dir, "st13")
           val o = Tables.load(s, dir, "orders").select(
             col("o_custkey").as("ck"), col("o_orderstatus").as("status"),
             col("o_totalprice").cast("decimal(18,2)").as("price"),
@@ -630,14 +607,11 @@ object StreamingQueries {
       (s, dir) => {
         import s.implicits._
         implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        val root = System.getProperty("java.io.tmpdir") + "/graft_st12_" +
-          s.sparkContext.applicationId + "_" + Integer.toHexString(dir.hashCode)
+        val root = scratch(s, dir, "st12", fresh = false)
         val idx = root + "/idx"
         val outP = root + "/admitted"
         if (graft.catalog.SnapshotManifest.currentSnap(s, idx).isEmpty) {
-          val fs = new org.apache.hadoop.fs.Path(root)
-            .getFileSystem(s.sparkContext.hadoopConfiguration)
-          fs.delete(new org.apache.hadoop.fs.Path(root), true)
+          scratch(s, dir, "st12")
           val d = Tables.load(s, dir, "documents").select("doc_id", "text")
           graft.pipeline.LshIndex.build(d.limit(0), idx, "doc_id", "text",
             n = 3, k = 32, bands = 16)

@@ -55,16 +55,12 @@ object Bucketing {
     * sort-merge over buckets is the only shuffle-free plan. */
   def colocatedJoin(spark: SparkSession, left: String, right: String,
                     key: String): DataFrame = {
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    try {
+    graft.ops.ConfScope.withScopedConf(spark, Seq(
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")) {
       val joined = spark.table(left).join(spark.table(right), key)
       requireNoShuffle(joined)
       joined
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
     }
   }
 

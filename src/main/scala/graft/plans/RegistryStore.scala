@@ -323,7 +323,9 @@ object RegistryStore {
       field(n, f).asText()
     def strs(n: JsonNode, f: String): Seq[String] =
       field(n, f).elements().asScala.map(_.asText()).toSeq
-    arr("mvs").foreach { o =>
+    // parse every entry BEFORE registering any: a malformed FK/PK
+    // entry (or a missing array) must not leave this file's MVs live
+    val mvs = arr("mvs").map { o =>
       def mvJoin(j: JsonNode): MvJoin =
         MvJoin(strs(j, "dimPaths").toSet, strs(j, "factKeys"),
           strs(j, "dimKeys"),
@@ -334,7 +336,7 @@ object RegistryStore {
         .map(_.elements().asScala.map(mvJoin).toSeq)
         .orElse(Option(o.get("join")).map(j => Seq(mvJoin(j))))
         .getOrElse(Nil)
-      val d = MvDef(str(o, "name"),
+      MvDef(str(o, "name"),
         strs(o, "basePaths").toSet, str(o, "mvPath"),
         strs(o, "dims"), strs(o, "measures").toSet,
         strs(o, "mins").toSet, strs(o, "maxs").toSet, joins,
@@ -344,17 +346,18 @@ object RegistryStore {
           .map(_.elements().asScala.map(_.asText()).toSet)
           .getOrElse(Set.empty),
         where = Option(o.get("where")).filter(_.isTextual).map(_.asText()))
-      MvCatalog.fillGap(d, exclude)
-    }
-    arr("fks").foreach { o =>
-      FkCatalog.fillGap(FkDef(str(o, "name"),
+    }.toSeq
+    val fks = arr("fks").map { o =>
+      FkDef(str(o, "name"),
         strs(o, "childPaths").toSet, strs(o, "childKeys"),
-        strs(o, "parentPaths").toSet, strs(o, "parentKeys"),
-        str(o, "fp")), exclude)
-    }
-    arr("pks").foreach { o =>
-      PkCatalog.fillGap(UniqueKeyDef(str(o, "name"),
-        strs(o, "paths").toSet, strs(o, "keys"), str(o, "fp")), exclude)
-    }
+        strs(o, "parentPaths").toSet, strs(o, "parentKeys"), str(o, "fp"))
+    }.toSeq
+    val pks = arr("pks").map { o =>
+      UniqueKeyDef(str(o, "name"),
+        strs(o, "paths").toSet, strs(o, "keys"), str(o, "fp"))
+    }.toSeq
+    mvs.foreach(MvCatalog.fillGap(_, exclude))
+    fks.foreach(FkCatalog.fillGap(_, exclude))
+    pks.foreach(PkCatalog.fillGap(_, exclude))
   }
 }

@@ -1,5 +1,7 @@
 package graft.api
 
+import org.apache.hadoop.fs.Path
+
 import graft.SparkSpec
 
 /** Smoke: every registered query runs at sf0.001 and returns rows;
@@ -18,6 +20,23 @@ class QueryCatalogSpec extends SparkSpec {
       val n = q.run(spark, sf).count()
       if (!emptyOkAtToyScale(q.name)) assert(n > 0)
     }
+  }
+
+  test("gate scratch: one path per (session, sf-dir, tag), fresh starts empty, parent removed at exit") {
+    val path = QueryCatalog.scratch(spark, sf, "spec", fresh = false)
+    assert(QueryCatalog.scratch(spark, sf, "spec", fresh = false) == path)
+    val child = new Path(path)
+    val parent = child.getParent
+    assert(parent == new Path(System.getProperty("java.io.tmpdir"),
+      "graft_gates_" + spark.sparkContext.applicationId))
+    assert(QueryCatalog.scratch(spark, sf + "/other", "spec", fresh = false) != path)
+    val fs = parent.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.create(new Path(child, "stale")).close()
+    assert(QueryCatalog.scratch(spark, sf, "spec") == path)
+    assert(!fs.exists(child) || fs.listStatus(child).isEmpty)
+    // registered exactly once for removal at exit: cancel, then restore
+    assert(fs.cancelDeleteOnExit(parent))
+    assert(fs.deleteOnExit(parent))
   }
 
   test("every oracle references only harness tables") {

@@ -28,9 +28,18 @@ class BucketingSpec extends SparkSpec {
 
     // colocatedJoin disables broadcast around planning itself (at test
     // scale Catalyst would rightly broadcast instead — which also
-    // bypasses bucketing) and throws on any planned shuffle
-    val joined = Bucketing.colocatedJoin(
-      spark, "li_bucketed", "o_bucketed", "l_orderkey")
+    // bypasses bucketing) and throws on any planned shuffle; the
+    // caller's own thresholds come back unchanged
+    val adaptive = "spark.sql.adaptive.autoBroadcastJoinThreshold"
+    val static = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set(adaptive, "5MB")
+    val joined = try {
+      val j = Bucketing.colocatedJoin(
+        spark, "li_bucketed", "o_bucketed", "l_orderkey")
+      assert(spark.conf.get(adaptive) == "5MB")
+      assert(spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == static)
+      j
+    } finally spark.conf.unset(adaptive)
     val plan = joined.queryExecution.executedPlan.toString
     assert(plan.contains("SortMergeJoin"), plan.take(1500))
     assert(joined.count() ==

@@ -313,7 +313,8 @@ class RegistryStoreSpec extends SparkSpec with BeforeAndAfterAll {
       fresh(); RegistryStore.load(spark, store(legacy))
       assert(loaded == want)
       // unsupported version and a missing array fail with guidance
-      // naming the file
+      // naming the file, and register nothing: the MVs parsed before
+      // the missing 'fks' array must not go live
       for ((bad, why) <- Seq(
           v1.replace("\"version\" : 1", "\"version\" : 2") ->
             "unsupported version 2",
@@ -324,6 +325,7 @@ class RegistryStoreSpec extends SparkSpec with BeforeAndAfterAll {
         val e = intercept[IllegalStateException](RegistryStore.load(spark, dir))
         assert(e.getMessage.contains(s"$dir/reg_1.json") &&
           e.getMessage.contains(why), e.getMessage)
+        assert(loaded == ((Nil, Nil, Nil)), why)
       }
     } finally fresh()
   }
