@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
   * a file-backed base table, plus the metadata the rewrite rule needs
   * to recognize queries it can answer.
   *
-  * Column-naming contract (fixed by [[Mv.build]]): for each measure
+  * Column-naming contract (fixed by [[Mv.buildStar]]): for each measure
   * column `m` the MV stores `sum_m` and `cnt_m` (non-null count);
   * optionally `min_m` / `max_m`; for each `distincts` column an exact
   * value bitmap `bm_m` ([[graft.functions.BitmapAgg]] over the long
@@ -59,7 +59,8 @@ case class MvJoin(dimPaths: Set[String],
 
 /** `fp`: [[TableState]] fingerprint of the base (and join dim) at
   * build/refresh time — stamped by [[Mv.build]], [[Mv.buildJoin]],
-  * [[Mv.refreshAppend]] and [[Mv.refreshChanges]], and CHECKED by
+  * [[Mv.buildStar]], [[Mv.refreshAppend]], [[Mv.refreshChanges]] and
+  * [[Mv.refreshFromLog]], and CHECKED by
   * [[MvRewriteRule]] before every rewrite: a summary whose base has
   * since moved is refused, turning the documented staleness contract
   * into an enforced one (the query falls back to the base scan,
@@ -287,12 +288,13 @@ object Mv {
   }
 
   /** The MV's partial-aggregate shape over any slice of base rows —
-    * shared by [[build]] (whole base) and [[refreshAppend]] (a batch),
-    * so the two can never disagree on the column contract.
-    * `distincts` columns additionally store a `bm_m` EXACT value
-    * bitmap ([[graft.functions.BitmapAgg]]) per group — the mergeable
-    * partial that lets COUNT(DISTINCT m) re-aggregate across any dim
-    * rollup (bitmaps OR; counts cannot sum). */
+    * [[buildStar]] summarizes the whole (joined) base with it and
+    * [[refreshAppend]] an insert batch, so the two can never disagree
+    * on the column contract. `distincts` columns additionally store a
+    * `bm_m` EXACT value bitmap ([[graft.functions.BitmapAgg]]) per
+    * group — the mergeable partial that lets COUNT(DISTINCT m)
+    * re-aggregate across any dim rollup (bitmaps OR; counts cannot
+    * sum). Refreshes merge these partials in [[publish]]. */
   private def summarize(df: DataFrame, dims: Seq[String],
                         measures: Seq[String], mins: Seq[String],
                         maxs: Seq[String],
@@ -307,6 +309,11 @@ object Mv {
         count(lit(1)).as("cnt")
     df.groupBy(dims.map(col): _*).agg(aggs.head, aggs.tail: _*)
   }
+
+  /** The σ(where) slice of `df` — a filtered MV's rows (`df` itself
+    * when unfiltered). */
+  private def sliceOf(df: DataFrame, where: Option[String]): DataFrame =
+    where.fold(df)(w => df.filter(org.apache.spark.sql.functions.expr(w)))
 
   /** Column names a filtered MV's predicate references (empty when
     * unfiltered) — the log refresh must carry them through its feed
@@ -337,30 +344,17 @@ object Mv {
     }
 
   /** Build the summary parquet for `base` grouped by `dims` and
-    * register it. One distributed grouped pass over the base (partial
+    * register it — a single-table summary is [[buildStar]] with no
+    * dims. One distributed grouped pass over the base (partial
     * hash-agg, map-side combined); the MV's row count is the dim-combo
     * cardinality — the whole point is that it is ≪ |base|. */
   def build(base: DataFrame, name: String, dims: Seq[String],
             measures: Seq[String], mvPath: String,
             mins: Seq[String] = Nil, maxs: Seq[String] = Nil,
             distincts: Seq[String] = Nil,
-            where: Option[String] = None): MvDef = {
-    requireIntegral(base, distincts, name)
-    val (fp, Seq(paths)) = TableState.stamp(s"MV $name", base -> "")
-    // FILTERED (partial) MV: the predicate is part of the view
-    // DEFINITION — the summary holds only σ(where) rows, and the
-    // rewrite fires only for queries whose filters SUBSUME it (the
-    // predicate's canonical conjuncts are a subset of the query's).
-    // Much smaller than a full summary when the hot slice is small —
-    // the Oracle/Calcite partial-MV class.
-    val slice = where.map(w =>
-      base.filter(org.apache.spark.sql.functions.expr(w))).getOrElse(base)
-    summarize(slice, dims, measures, mins, maxs, distincts)
-      .write.mode("overwrite").parquet(mvPath)
-    MvCatalog.commit(base.sparkSession, MvDef(name, paths, mvPath, dims,
-      measures.toSet, mins.toSet, maxs.toSet, fp = fp,
-      distincts = distincts.toSet, where = where))
-  }
+            where: Option[String] = None): MvDef =
+    buildStar(base, Nil, name, dims, measures, mvPath, mins, maxs,
+      distincts, where)
 
   /** STAR-SCHEMA MV — the summary is built over `fact INNER JOIN dim`
     * and registered with its join pedigree, so queries that re-join
@@ -385,12 +379,12 @@ object Mv {
   /** [[buildJoin]] generalized to a k-DIM STAR (or snowflake whose
     * dims each join the fact directly): the summary is built over
     * `fact ⋈ dim₁ ⋈ … ⋈ dimₖ`, each `dimTables` entry carrying its
-    * own `(factKey, dimKey)*` equi-condition against the fact.
-    * Column names must be GLOBALLY disjoint across all k+1 frames —
-    * that is what lets the rewrite rule and the log refresh match and
-    * route columns by name alone. One joined pass, O(|join|) once;
-    * every matching k-way aggregate query then answers from the
-    * summary with zero joins. */
+    * own `(factKey, dimKey)*` equi-condition against the fact; k = 0
+    * is the single-table summary of [[build]]. Column names must be
+    * GLOBALLY disjoint across all k+1 frames — that is what lets the
+    * rewrite rule and the log refresh match and route columns by name
+    * alone. One joined pass, O(|join|) once; every matching k-way
+    * aggregate query then answers from the summary with zero joins. */
   def buildStar(fact: DataFrame,
                 dimTables: Seq[(DataFrame, Seq[(String, String)])],
                 name: String, dims: Seq[String], measures: Seq[String],
@@ -398,35 +392,37 @@ object Mv {
                 maxs: Seq[String] = Nil,
                 distincts: Seq[String] = Nil,
                 where: Option[String] = None): MvDef = {
-    require(dimTables.nonEmpty, s"MV $name: at least one dim required")
     val frames = fact +: dimTables.map(_._1)
     frames.combinations(2).foreach { case Seq(a, b) =>
       val dup = a.columns.toSet.intersect(b.columns.toSet)
       require(dup.isEmpty,
         s"MV $name: ambiguous columns across base tables: $dup")
     }
-    val (fp, fpaths +: dpaths) = TableState.stamp(s"MV $name",
-      (fact -> " (fact)") +: dimTables.zipWithIndex.map {
-        case ((dm, _), i) => dm -> s" (dim $i)" }: _*)
     val joined = dimTables.foldLeft(fact) { case (acc, (dm, on)) =>
       val cond = on.map { case (f, d) => acc(f) === dm(d) }.reduce(_ && _)
       acc.join(dm, cond, "inner")
     }
     requireIntegral(joined, distincts, name)
-    // filtered star (see [[build]]): the summary holds only the
-    // σ(where) slice of the join; subsumption gates the rewrite
-    val slice = where.map(w =>
-      joined.filter(org.apache.spark.sql.functions.expr(w)))
-      .getOrElse(joined)
-    summarize(slice, dims, measures, mins, maxs, distincts)
-      .write.mode("overwrite").parquet(mvPath)
+    val (fp, fpaths +: dpaths) = TableState.stamp(s"MV $name",
+      (fact -> (if (dimTables.isEmpty) "" else " (fact)")) +:
+        dimTables.zipWithIndex.map { case ((dm, _), i) =>
+          dm -> s" (dim $i)" }: _*)
+    // FILTERED (partial) MV: the predicate is part of the view
+    // DEFINITION — the summary holds only the σ(where) slice (of the
+    // join, for a star), and the rewrite fires only for queries whose
+    // filters SUBSUME it (the predicate's canonical conjuncts are a
+    // subset of the query's). Much smaller than a full summary when
+    // the hot slice is small — the Oracle/Calcite partial-MV class.
+    summarize(sliceOf(joined, where), dims, measures, mins, maxs,
+      distincts).write.mode("overwrite").parquet(mvPath)
     // LOSSLESS AUDIT, per dim: the join preserves fact multiplicity
     // iff (a) every fact key is non-null, (b) every fact key row
     // matches the dim (left-semi count = fact count), (c) the dim key
     // is unique. Keys-only column scans — cheap next to the joined
     // summarize pass above; earns the subset-join rewrite (a query
-    // omitting a preserving dim still answers from the summary).
-    val nFact = fact.count()
+    // omitting a preserving dim still answers from the summary). Lazy:
+    // a single-table summary has no join to audit and pays no count.
+    lazy val nFact = fact.count()
     def preservingAudit(dm: DataFrame, on: Seq[(String, String)]): Boolean = {
       val fKeys = fact.select(on.map(p => col(p._1)): _*)
       val noNulls = fKeys.filter(
@@ -448,39 +444,30 @@ object Mv {
   }
 
   /** INCREMENTAL APPEND-REFRESH — fold a batch of new base rows into
-    * the summary WITHOUT touching the base: summarize the batch with
-    * the identical partial shape, then merge partials group-wise
-    * (sum-of-sums, sum-of-counts, min-of-mins, max-of-maxs).
-    * O(|batch| + |MV|) — never O(|base|), which is the whole point at
-    * 100 TB where the nightly batch is GBs against a TB-scale fact.
-    *
-    * Copy-on-write: the merged summary lands in a FRESH directory and
-    * the registry entry is re-pointed afterwards, so in-flight readers
-    * of the previous summary never observe a half-written view and a
-    * crashed refresh leaves the registered MV untouched (the
-    * snapshot-then-flip discipline of [[graft.catalog.SnapshotManifest]];
-    * the pointer here is the in-JVM [[MvCatalog]] — a multi-driver
-    * deployment persists it through [[RegistryStore]]'s `_latest`
-    * instead).
+    * the summary WITHOUT touching the base: [[summarize]] the batch
+    * with the identical partial shape, then merge and publish through
+    * the one refresh tail, [[publish]]. O(|batch| + |MV|) — never
+    * O(|base|), which is the whole point at 100 TB where the nightly
+    * batch is GBs against a TB-scale fact.
     *
     * DELETES are deliberately not folded here: SUM/COUNT retract, but
     * MIN/MAX do not (dropping the current minimum forces a rescan of
     * its group). A deleting refresh either rebuilds ([[build]], one
-    * grouped pass) or recomputes just the delete-touched groups — the
-    * retractable-fold kernels in `ops/IncrementalAgg` cover the
-    * min/max-free case. */
+    * grouped pass), folds a change feed ([[refreshChanges]]) or
+    * recomputes just the delete-touched groups — the retractable-fold
+    * kernels in `ops/IncrementalAgg` cover the min/max-free case. */
   def refreshAppend(spark: SparkSession, name: String,
                     batch: DataFrame): MvDef =
-    refreshAppendStamped(spark, name, batch, fpOverride = None)
+    refreshAppendStamped(spark, MvCatalog.lookup(spark, name), batch,
+      fpOverride = None)
 
   /** [[refreshAppend]] with the stamp supplied by the caller —
     * [[refreshFromLog]] pins it to the snapshot its window actually
     * covers, so the registered/persisted def can never carry a stamp
     * newer than the folded rows, not even transiently. */
-  private def refreshAppendStamped(spark: SparkSession, name: String,
+  private def refreshAppendStamped(spark: SparkSession, d: MvDef,
                                    batch: DataFrame,
                                    fpOverride: Option[String]): MvDef = {
-    val d = MvCatalog.lookup(spark, name)
     // re-stamp against the base state the refreshed summary reflects:
     // the caller's contract is base-advance THEN refresh-with-batch,
     // so at refresh entry the base already holds the batch's rows
@@ -500,7 +487,7 @@ object Mv {
       if (d.joins.isEmpty && d.basePaths.size == 1 &&
           d.fp.startsWith("snap:") && cur != d.fp) {
         val root = d.basePaths.head
-        val what = s"MV $name"
+        val what = s"MV ${d.name}"
         TableState.movedHops(spark, d.fp, d.basePaths, what).foreach {
           case (_, moved) =>
             val rc = moved(root)
@@ -521,54 +508,27 @@ object Mv {
       }
       cur
     }
-    val cur = spark.read.parquet(d.mvPath)
-    val ms = d.measures.toSeq.sorted
     // filtered MV: only the batch's σ(where) slice belongs to the view
     // (the guard above counted the RAW batch — the gap is in base rows)
-    val slice = d.where.map(w =>
-      batch.filter(org.apache.spark.sql.functions.expr(w))).getOrElse(batch)
-    val delta = summarize(slice, d.dims, ms, d.mins.toSeq.sorted,
-      d.maxs.toSeq.sorted, d.distincts.toSeq.sorted)
-    // cast re-summed partials back to the stored column's type so the
-    // summary schema is stable across any number of refreshes (decimal
-    // sums widen per level otherwise)
-    val mergeAggs = ms.flatMap(m => Seq(
-      sum(col(s"sum_$m")).cast(cur.schema(s"sum_$m").dataType).as(s"sum_$m"),
-      sum(col(s"cnt_$m")).cast("long").as(s"cnt_$m"))) ++
-      d.mins.toSeq.sorted.map(m => min(col(s"min_$m")).as(s"min_$m")) ++
-      d.maxs.toSeq.sorted.map(m => max(col(s"max_$m")).as(s"max_$m")) ++
-      // distinct bitmaps OR-merge: a batch value already present in
-      // the group's bitmap stays one bit — re-inserted ids can never
-      // inflate the distinct count the way a summed partial would
-      d.distincts.toSeq.sorted.map(m => graft.functions.BitmapAgg
-        .bitmap_or_agg(col(s"bm_$m")).as(s"bm_$m")) :+
-      sum(col("cnt")).cast("long").as("cnt")
-    val merged = cur.unionByName(delta).groupBy(d.dims.map(col): _*)
-      .agg(mergeAggs.head, mergeAggs.tail: _*)
-    val next = d.mvPath.replaceAll("_v\\d+$", "") + "_v" + System.nanoTime()
-    merged.write.mode("errorifexists").parquet(next)
-    // a CALLER-supplied batch carries no lossless attestation — clear
-    // the preserving flags (downgrade-only; the log refresh audits
-    // its own windows and keeps them). fpOverride = the log refresh
-    // calling in, which already maintained the flags.
-    val joins = if (fpOverride.nonEmpty) d.joins
-      else d.joins.map(_.copy(preserving = false))
-    MvCatalog.commit(spark, d.copy(mvPath = next, joins = joins, fp = fp))
+    val delta = summarize(sliceOf(batch, d.where), d.dims,
+      d.measures.toSeq.sorted, d.mins.toSeq.sorted, d.maxs.toSeq.sorted,
+      d.distincts.toSeq.sorted)
+    publish(spark, d, spark.read.parquet(d.mvPath), delta, signed = false,
+      fp, audited = fpOverride.nonEmpty)
   }
 
   /** RETRACTABLE CDC REFRESH — fold a row-level change feed (rows
     * tagged `_change_type` ∈ insert/delete, the exact shape
     * [[graft.catalog.Layout.changes]] emits) into the summary:
     * inserts contribute with weight +1, deletes with −1, in ONE
-    * delta-sized signed aggregation plus one MV-sized group-wise
-    * merge — O(|feed| + |MV|), the base fact is never re-read. This
-    * closes the loop [[refreshAppend]] can't: storage-level deletes
-    * (deletion vectors → change feed) now drive the REWRITE-facing
-    * summary through row removals, not just appends (the same
-    * counting/retraction idea as `ops/IncrementalAgg.applyChangeFeed`,
-    * here with the MV column contract: per-measure `cnt_m` partials
-    * retract too, and a group whose non-null count reaches zero gets
-    * its `sum_m` nulled so SUM-over-no-rows still reads as NULL).
+    * delta-sized signed aggregation merged and published through
+    * [[publish]] — O(|feed| + |MV|), the base fact is never re-read.
+    * This closes the loop [[refreshAppend]] can't: storage-level
+    * deletes (deletion vectors → change feed) now drive the
+    * REWRITE-facing summary through row removals, not just appends
+    * (the same counting/retraction idea as
+    * `ops/IncrementalAgg.applyChangeFeed`, here with the MV column
+    * contract: per-measure `cnt_m` partials retract too).
     *
     * MIN/MAX-carrying views fold under the EXTREMAL-TIE GUARD: a
     * deleted row strictly inside its group's stored extremes cannot
@@ -580,30 +540,28 @@ object Mv {
     * Exactness matches the kernel contract: integral and decimal
     * measures fold exactly; float measures fold to within
     * re-association rounding, as in any counting-algorithm view.
-    * Groups whose COUNT(*) reaches zero drop from the summary, so
-    * `refreshChanges(build(T₀), changes(T₀→T₁)) ≡ build(T₁)` for
-    * a net feed. Copy-on-write + registry re-point, exactly as
-    * [[refreshAppend]]. */
+    * `refreshChanges(build(T₀), changes(T₀→T₁)) ≡ build(T₁)` for a
+    * net feed. */
   def refreshChanges(spark: SparkSession, name: String,
                      feed: DataFrame): MvDef =
-    refreshChangesStamped(spark, name, feed, fpOverride = None)
+    refreshChangesStamped(spark, MvCatalog.lookup(spark, name), feed,
+      fpOverride = None)
 
   /** [[refreshChanges]] with the stamp supplied by the caller —
     * [[refreshFromLog]] pins it to the snapshot its hop chain actually
     * covers (the [[refreshAppendStamped]] discipline: never postdate
     * the folded rows). */
-  private def refreshChangesStamped(spark: SparkSession, name: String,
+  private def refreshChangesStamped(spark: SparkSession, d: MvDef,
                                     feed: DataFrame,
                                     fpOverride: Option[String],
                                     extremesGuard: Boolean = true): MvDef = {
-    val d = MvCatalog.lookup(spark, name)
     // distinct bitmaps do not retract: clearing a bit needs proof the
     // deleted row was the value's LAST occurrence in its group, which
     // only a group rescan can give (the MIN/MAX problem, per value) —
     // and even the append-only star fold routes here with same-feed
     // cancellation deletes the bitmap could not honor. Rebuild.
     require(d.distincts.isEmpty,
-      s"MV $name tracks COUNT(DISTINCT ${d.distincts.mkString(",")}) " +
+      s"MV ${d.name} tracks COUNT(DISTINCT ${d.distincts.mkString(",")}) " +
         "via exact bitmaps, which cannot fold a retracting/signed " +
         "feed; rebuild instead (Mv.build / Mv.buildStar is one " +
         "grouped pass)")
@@ -615,6 +573,10 @@ object Mv {
     val ms = d.measures.toSeq.sorted
     val mns = d.mins.toSeq.sorted
     val mxs = d.maxs.toSeq.sorted
+    // filtered MV: rows outside σ(where) were never in the view —
+    // their inserts don't belong and their deletes retract nothing
+    // (nor did they ever hold its extremes)
+    val scoped = sliceOf(feed, d.where)
     // MIN/MAX survive a retraction iff every deleted row sits STRICTLY
     // inside its group's stored extremes — deleting a non-extremal row
     // cannot move MIN or MAX, while a tie means the extreme may have
@@ -626,17 +588,14 @@ object Mv {
     // windows) passes extremesGuard = false: such deletes retract
     // nothing from the stored state.
     if (extremesGuard && (mns.nonEmpty || mxs.nonEmpty)) {
-      // deletes outside a filtered view's slice never held its extremes
-      val inScope = d.where.map(p =>
-        feed.filter(org.apache.spark.sql.functions.expr(p))).getOrElse(feed)
-      val dels = inScope.filter(col("_change_type") === "delete")
+      val dels = scoped.filter(col("_change_type") === "delete")
       val hits = mns.map(m => col(m) <= col(s"min_$m")) ++
         mxs.map(m => col(m) >= col(s"max_$m"))
       require(dels.join(cur, d.dims).filter(hits.reduce(_ || _)).isEmpty,
-        s"MV $name: a retracted row ties or beats its group's stored " +
-          "MIN/MAX partial — the extreme may have been the deleted row " +
-          "and MIN/MAX do not retract; rebuild instead (Mv.build / " +
-          "Mv.buildStar is one grouped pass)")
+        s"MV ${d.name}: a retracted row ties or beats its group's " +
+          "stored MIN/MAX partial — the extreme may have been the " +
+          "deleted row and MIN/MAX do not retract; rebuild instead " +
+          "(Mv.build / Mv.buildStar is one grouped pass)")
     }
     // an unknown tag would silently corrupt counts — fail loudly,
     // in-pass (raise_error costs nothing on valid rows)
@@ -645,10 +604,6 @@ object Mv {
       .otherwise(raise_error(concat(
         lit("refreshChanges: _change_type must be insert/delete, got "),
         col("_change_type"))).cast("long"))
-    // filtered MV: rows outside σ(where) were never in the view —
-    // their inserts don't belong and their deletes retract nothing
-    val scoped = d.where.map(p =>
-      feed.filter(org.apache.spark.sql.functions.expr(p))).getOrElse(feed)
     val signed = scoped.withColumn("__w", w)
     val deltaAggs = ms.flatMap(m => Seq(
       sum(col(m) * col("__w")).cast(cur.schema(s"sum_$m").dataType)
@@ -664,43 +619,77 @@ object Mv {
       sum(col("__w")).cast("long").as("cnt")
     val delta = signed.groupBy(d.dims.map(col): _*)
       .agg(deltaAggs.head, deltaAggs.tail: _*)
+    publish(spark, d, cur, delta, signed = true, fp,
+      audited = fpOverride.nonEmpty)
+  }
+
+  /** THE REFRESH TAIL — every fold ([[refreshAppend]]'s insert
+    * batches, [[refreshChanges]]' signed feeds, and through them every
+    * [[refreshFromLog]] window) ends here, in this order:
+    *
+    *   1. re-aggregate the stored summary `cur` ∪ `delta` partials
+    *      group-wise (sum-of-sums, sum-of-counts, min-of-mins,
+    *      max-of-maxs, bitmap OR), re-summed partials cast back to the
+    *      stored column's type so the schema is stable across any
+    *      number of refreshes (decimal sums widen per level otherwise);
+    *   2. `signed` feeds only: fail on an over-retracting count, drop
+    *      groups whose COUNT(*) reached zero, and null each SUM whose
+    *      non-null count reached zero (SUM over no rows is NULL);
+    *   3. write the next `_v<nanos>` version COPY-ON-WRITE: in-flight
+    *      readers of the previous summary never observe a half-written
+    *      view and a crashed refresh leaves the registered MV untouched
+    *      (the snapshot-then-flip discipline of
+    *      [[graft.catalog.SnapshotManifest]]; the pointer here is the
+    *      [[MvCatalog]] entry, persisted through [[RegistryStore]]);
+    *   4. clear the [[MvJoin.preserving]] flags unless `audited` (a
+    *      caller-supplied batch or feed carries no lossless
+    *      attestation — downgrade-only; the log refresh audits its own
+    *      windows and keeps them);
+    *   5. re-point the registry entry at the new version with stamp
+    *      `fp` ([[MvCatalog]] `commit`). */
+  private def publish(spark: SparkSession, d: MvDef, cur: DataFrame,
+                      delta: DataFrame, signed: Boolean, fp: String,
+                      audited: Boolean): MvDef = {
+    val ms = d.measures.toSeq.sorted
+    def sumType(m: String) = cur.schema(s"sum_$m").dataType
     val mergeAggs = ms.flatMap(m => Seq(
-      sum(col(s"sum_$m")).cast(cur.schema(s"sum_$m").dataType).as(s"sum_$m"),
+      sum(col(s"sum_$m")).cast(sumType(m)).as(s"sum_$m"),
       sum(col(s"cnt_$m")).cast("long").as(s"cnt_$m"))) ++
-      mns.map(m => min(col(s"min_$m")).as(s"min_$m")) ++
-      mxs.map(m => max(col(s"max_$m")).as(s"max_$m")) :+
+      d.mins.toSeq.sorted.map(m => min(col(s"min_$m")).as(s"min_$m")) ++
+      d.maxs.toSeq.sorted.map(m => max(col(s"max_$m")).as(s"max_$m")) ++
+      // distinct bitmaps OR-merge: a batch value already present in
+      // the group's bitmap stays one bit — re-inserted ids can never
+      // inflate the distinct count the way a summed partial would
+      d.distincts.toSeq.sorted.map(m => graft.functions.BitmapAgg
+        .bitmap_or_agg(col(s"bm_$m")).as(s"bm_$m")) :+
       sum(col("cnt")).cast("long").as("cnt")
-    val merged0 = cur.unionByName(delta).groupBy(d.dims.map(col): _*)
+    val merged = cur.unionByName(delta).groupBy(d.dims.map(col): _*)
       .agg(mergeAggs.head, mergeAggs.tail: _*)
-    // an OVER-RETRACTING feed (deletes of rows the view never held)
-    // drives a count partial negative; silently dropping such a group
-    // at the cnt>0 filter would make a corrupt feed indistinguishable
-    // from a clean full retraction — fail loudly instead, in-pass
-    // (raise_error costs nothing on valid rows)
-    val guarded = (ms.map(m => s"cnt_$m") :+ "cnt").foldLeft(merged0) {
-      (df, c) => df.withColumn(c, when(col(c) < 0L,
-        raise_error(concat(
-          lit(s"refreshChanges($name): over-retracting feed — $c went " +
-            "negative ("), col(c).cast("string"),
-          lit("); the feed deleted rows the view never held")))
-          .cast("long")).otherwise(col(c)))
+    val out = if (!signed) merged else {
+      // an OVER-RETRACTING feed (deletes of rows the view never held)
+      // drives a count partial negative; silently dropping such a
+      // group at the cnt>0 filter would make a corrupt feed
+      // indistinguishable from a clean full retraction — fail loudly
+      // instead, in-pass (raise_error costs nothing on valid rows)
+      val guarded = (ms.map(m => s"cnt_$m") :+ "cnt").foldLeft(merged) {
+        (df, c) => df.withColumn(c, when(col(c) < 0L,
+          raise_error(concat(
+            lit(s"refreshChanges(${d.name}): over-retracting feed — $c " +
+              "went negative ("), col(c).cast("string"),
+            lit("); the feed deleted rows the view never held")))
+            .cast("long")).otherwise(col(c)))
+      }
+      // fully-retracted groups leave the view; a surviving group whose
+      // non-null count hit zero must read SUM(m) = NULL, not the
+      // cancelled-out 0
+      ms.foldLeft(guarded.filter(col("cnt") > 0)) { (df, m) =>
+        df.withColumn(s"sum_$m", when(col(s"cnt_$m") === 0L, lit(null))
+          .otherwise(col(s"sum_$m")).cast(sumType(m)))
+      }
     }
-    val merged = guarded
-      .filter(col("cnt") > 0) // fully-retracted groups leave the view
-    // a surviving group whose non-null count hit zero must read
-    // SUM(m) = NULL (sum over no rows), not the cancelled-out 0
-    val nulled = merged.select(d.dims.map(col) ++ ms.flatMap(m => Seq(
-      when(col(s"cnt_$m") === 0L, lit(null))
-        .otherwise(col(s"sum_$m"))
-        .cast(cur.schema(s"sum_$m").dataType).as(s"sum_$m"),
-      col(s"cnt_$m"))) ++
-      mns.map(m => col(s"min_$m")) ++ mxs.map(m => col(s"max_$m")) :+
-      col("cnt"): _*)
     val next = d.mvPath.replaceAll("_v\\d+$", "") + "_v" + System.nanoTime()
-    nulled.write.mode("errorifexists").parquet(next)
-    // caller-supplied feeds carry no lossless attestation (see
-    // refreshAppendStamped)
-    val joins = if (fpOverride.nonEmpty) d.joins
+    out.write.mode("errorifexists").parquet(next)
+    val joins = if (audited) d.joins
       else d.joins.map(_.copy(preserving = false))
     MvCatalog.commit(spark, d.copy(mvPath = next, joins = joins, fp = fp))
   }
@@ -708,12 +697,12 @@ object Mv {
   /** SELF-REFRESH FROM THE SNAPSHOT LOG — the MV leg of the
     * incremental staleness loop ([[JoinElim.reverifyAppended]] /
     * [[DistinctElim.reverifyAppended]] are the constraint legs): when
-    * a single-table MV's base is snapshot-logged, the gap between the
-    * stamped and current fingerprints IS the
-    * [[TableState.movedHops]] hop chain, so the summary heals
-    * itself — no caller-assembled batch, no base rescan. The rewrite
-    * answers for PLAIN directory reads of the base, and the chain
-    * classifies exactly what each commit did to that read:
+    * a summary's fact and dims are snapshot-logged, the gap between
+    * the stamped and current fingerprints IS the
+    * [[TableState.movedHops]] hop chain per table, so the summary
+    * heals itself — no caller-assembled batch, no base rescan. The
+    * rewrite answers for PLAIN directory reads of the bases, and each
+    * chain classifies exactly what each commit did to that read:
     *
     *   - [[TableState.AppendHop]]s contribute their fresh files' raw
     *     rows as inserts ([[TableState.hopRows]], O(batch));
@@ -722,80 +711,15 @@ object Mv {
     *   - [[TableState.RewriteHop]]s (compact + full vacuum)
     *     materialized rows OUT of the plain read; their `rw_*`
     *     provenance rows ([[TableState.removedRows]]) fold in as
-    *     retractions via the [[refreshChanges]] counting machinery —
-    *     MIN/MAX-carrying views included, under its extremal-tie
-    *     guard (a removed row that ties or beats a stored extreme
-    *     refuses with rebuild guidance).
+    *     retractions via the [[refreshChanges]] counting machinery.
     *
-    * Appends and retractions fold as ONE net signed feed (SUM/COUNT
-    * partials commute). The fold needs every append hop's fresh files
-    * READABLE: a window whose appended files were themselves later
-    * compacted away (appended, dv-deleted, compacted, vacuumed before
-    * any re-verify) dead-ends LOUDLY in [[TableState.hopRows]]'
-    * vacuumed-files refusal — the insert side of the net is gone and
-    * only a rebuild/re-declare is sound. Re-verify after each
-    * maintenance op to keep windows single-hop and avoid that.
-    * O(changed rows + MV); the base fact is never re-read. A no-op
-    * (same stamp) returns the registered def untouched. */
-  def refreshFromLog(spark: SparkSession, name: String): MvDef = {
-    val d = MvCatalog.lookup(spark, name)
-    if (d.joins.nonEmpty) return refreshStarFromLog(spark, d)
-    require(d.basePaths.size == 1,
-      s"MV $name: log-driven refresh needs a single-root base")
-    val root = d.basePaths.head
-    val what = s"MV $name"
-    val (newFp, moved) = TableState.movedHops(spark, d.fp, d.basePaths,
-      what).getOrElse(return d) // nothing moved
-    val rc = moved(root)
-    // a time-retention EXPIRY removed rows without materializing them
-    // (O(expired data) provenance would defeat expiry's metadata-only
-    // contract) — the summary cannot retract what was never recorded
-    require(rc.shrinkHops.isEmpty,
-      s"$what: base rows were expired (time retention) without " +
-        "materialized provenance; rebuild the summary (Mv.build is one " +
-        "grouped pass) — or make the expiry cutoff a summary dim and " +
-        "filter instead")
-    // the stamp is PINNED to the snapshot the folded chain actually
-    // covers — an append racing the fold must not be covered by a
-    // stamp newer than the folded rows (the declareVerified ordering:
-    // never postdate the audited state)
-    val inserted = TableState.appendedRows(spark, rc, what)
-    (inserted, TableState.retractedRows(spark, rc)) match {
-      case (None, None) =>
-        // dv-only / provenance-empty chain: the plain read is
-        // bit-identical — a pure restamp, no fold, no new version
-        MvCatalog.commit(spark, d.copy(fp = newFp))
-      case (Some(ins), None) =>
-        refreshAppendStamped(spark, name, ins, fpOverride = Some(newFp))
-      case (_, Some(rm)) =>
-        // MIN/MAX-carrying views proceed under the extremal-tie guard
-        // in refreshChangesStamped: a compact that removed only rows
-        // STRICTLY inside their groups' stored extremes cannot move
-        // MIN/MAX (an appended-then-removed row that would corrupt a
-        // fold necessarily ties-or-beats a stored extreme and refuses)
-        // a filtered MV's predicate columns must survive this
-        // projection — refreshChangesStamped scopes the feed with them
-        val cols = (d.dims ++ d.measures.toSeq.sorted ++
-          whereRefs(d)).distinct
-        val feed = inserted
-          .map(_.select(cols.map(col): _*)
-            .withColumn("_change_type", lit("insert")))
-          .foldLeft(rm.select(cols.map(col): _*)
-            .withColumn("_change_type", lit("delete")))(
-            (dels, ins) => ins.unionByName(dels))
-        refreshChangesStamped(spark, name, feed, fpOverride = Some(newFp))
-    }
-  }
-
-  /** STAR-SUMMARY LOG REFRESH — [[refreshFromLog]] for join MVs: when
-    * the fact and every dim are snapshot-logged, a summary over
-    * `T₀ ⋈ T₁ ⋈ … ⋈ Tₖ` (T₀ the fact) heals itself from the k+1 hop
-    * chains using the counting join-delta identity (the
+    * A single-table summary is the star with no dims (k = 0). For a
+    * star over `T₀ ⋈ T₁ ⋈ … ⋈ Tₖ` (T₀ the fact) the k+1 chains fold
+    * through the counting join-delta identity (the
     * [[graft.ops.IncrementalJoin]] algebra, folded through the MV
     * partials instead of a materialized join), in the SIGNED multiset
     * algebra — with Tᵢ₂ the new states and ΔTᵢ signed deltas
-    * (append-hop rows weigh +1, a compact's `rw_*` provenance rows —
-    * the rows it materialized OUT of the plain read — weigh −1):
+    * (append-hop rows weigh +1, rewrite-hop provenance rows −1):
     *
     * {{{ Δ(⋈ᵢTᵢ) = Σ over nonempty S ⊆ moved: (−1)^(|S|+1) ·
     *               ⋈_{i∈S} ΔTᵢ ⋈ ⋈_{i∉S} Tᵢ₂ }}}
@@ -815,38 +739,51 @@ object Mv {
     * needs no signed fold at all: ONE table moved append-only folds
     * `ΔTᵢ ⋈ (others pinned)` as a plain insert batch (MIN/MAX
     * partials fine), and dv-only windows restamp without touching the
-    * summary. MIN/MAX partials fold through any APPEND-ONLY window
-    * (one-table or multi-table); a genuine retraction (a compact on
-    * any base) with MIN/MAX refuses with rebuild guidance — the mixed
-    * cross terms can tag phantom rows as inserts, corrupting a folded
-    * extreme undetectably (single-table retractions, with no cross
-    * terms, instead proceed under [[refreshChanges]]'s extremal-tie
-    * guard) — and a time-retention EXPIRY refuses outright (it
-    * removes rows without materialized provenance, by contract). The
-    * term count is 2^m − 1 for m MOVED tables (nightly m ≤ 2), never
-    * 2^(k+1). At 100 TB this closes the gaps where a dim append — or
-    * a routine fact compact after CDC deletes — suspended every star
-    * rewrite until an O(fact) rebuild. */
-  private def refreshStarFromLog(spark: SparkSession, d: MvDef): MvDef = {
-    val name = d.name
+    * summary. The term count is 2^m − 1 for m MOVED tables (nightly
+    * m ≤ 2), never 2^(k+1); with no dims the one term is the fact's
+    * own signed delta and no pinned scan is opened.
+    *
+    * MIN/MAX partials fold through any APPEND-ONLY window. A
+    * single-table retraction window folds under [[refreshChanges]]'
+    * extremal-tie guard (a removed row that ties or beats a stored
+    * extreme refuses with rebuild guidance); a STAR retraction window
+    * with MIN/MAX refuses outright — its mixed cross terms can tag
+    * phantom rows as inserts, corrupting a folded extreme
+    * undetectably. A time-retention EXPIRY refuses on any base (it
+    * removes rows without materialized provenance, by contract).
+    *
+    * The fold needs every append hop's fresh files READABLE: a window
+    * whose appended files were themselves later compacted away
+    * (appended, dv-deleted, compacted, vacuumed before any re-verify)
+    * dead-ends LOUDLY in [[TableState.hopRows]]' vacuumed-files
+    * refusal — only a rebuild/re-declare is sound. Re-verify after
+    * each maintenance op to keep windows single-hop and avoid that.
+    * O(changed rows + MV); the base fact is never re-read. A no-op
+    * (same stamp) returns the registered def untouched. */
+  def refreshFromLog(spark: SparkSession, name: String): MvDef = {
+    val d = MvCatalog.lookup(spark, name)
+    val what = s"MV $name"
     require(d.basePaths.size == 1 && d.joins.forall(_.dimPaths.size == 1),
-      s"MV $name: log-driven star refresh needs single-root fact and dims")
-    val factRoot = d.basePaths.head
-    val roots = factRoot +: d.joins.map(_.dimPaths.head)
+      s"$what: log-driven refresh needs a single-root fact and dims")
+    val roots = d.basePaths.head +: d.joins.map(_.dimPaths.head)
     require(roots.distinct.size == roots.size,
-      s"MV $name: role-playing dims over one physical table cannot " +
+      s"$what: role-playing dims over one physical table cannot " +
         "log-refresh (their columns are indistinguishable in the plain " +
         "read); rebuild with Mv.buildStar")
-    val what = s"MV $name"
     val (newFp, moved) = TableState.movedHops(spark, d.fp,
       d.allBasePaths, what).getOrElse(return d) // nothing moved
     // per table: (append-hop inserts, rewrite-hop provenance removals)
     def delta(root: String): (Option[DataFrame], Option[DataFrame]) =
       moved.get(root).map { rc =>
+        // a time-retention EXPIRY removed rows without materializing
+        // them (O(expired data) provenance would defeat expiry's
+        // metadata-only contract)
         require(rc.shrinkHops.isEmpty,
           s"$what: $root rows were expired (time retention) without " +
             "materialized provenance — the summary cannot retract what " +
-            "was never recorded; rebuild with Mv.buildStar (one pass)")
+            "was never recorded; rebuild (Mv.build / Mv.buildStar is " +
+            "one grouped pass), or make the expiry cutoff a summary dim " +
+            "and filter instead")
         (TableState.appendedRows(spark, rc, what),
           TableState.retractedRows(spark, rc))
       }.getOrElse((None, None))
@@ -867,28 +804,33 @@ object Mv {
           TableState.pinnedRead(spark, root, s.stripPrefix("snap:"), what)
         case _ => spark.read.parquet(root) // legacy un-logged root
       })
-    // project each table to ITS OWN contract columns before joining —
+    // THE contract columns: every column a fold reads — dims, SUM and
+    // MIN/MAX measures, distinct-tracked columns, and a filtered MV's
+    // predicate columns (the fold scopes its feed with them). Each
+    // table is projected to ITS OWN contract columns before joining —
     // plain reads of Layout tables share bookkeeping columns
     // (sym_bucket) the declared frames never exposed; anything outside
-    // keys ∪ dims ∪ measures is dropped so the joins can never turn
-    // ambiguous. Contract columns must live on exactly one table.
-    val contract = (d.dims ++ d.measures.toSeq ++ d.distincts.toSeq ++
-      whereRefs(d)).distinct
-    lazy val own: Map[String, Seq[String]] = {
-      val m = roots.map(r =>
-        r -> contract.filter(scan(r).columns.contains)).toMap
-      roots.combinations(2).foreach { case Seq(a, b) =>
-        val dup = m(a).intersect(m(b))
-        require(dup.isEmpty,
-          s"$what: columns ${dup.mkString(",")} exist on more than one " +
-            "base table; the summary contract is ambiguous — rebuild")
+    // keys ∪ contract is dropped so the joins can never turn
+    // ambiguous. Contract columns must live on exactly one table; with
+    // no dims they are all the fact's, and no scan is opened to say so.
+    val contract = (d.dims ++ Seq(d.measures, d.mins, d.maxs, d.distincts)
+      .flatMap(_.toSeq.sorted) ++ whereRefs(d)).distinct
+    lazy val own: Map[String, Seq[String]] =
+      if (d.joins.isEmpty) Map(roots.head -> contract) else {
+        val m = roots.map(r =>
+          r -> contract.filter(scan(r).columns.contains)).toMap
+        roots.combinations(2).foreach { case Seq(a, b) =>
+          val dup = m(a).intersect(m(b))
+          require(dup.isEmpty,
+            s"$what: columns ${dup.mkString(",")} exist on more than " +
+              "one base table; the summary contract is ambiguous — rebuild")
+        }
+        require(m.values.flatten.toSet == contract.toSet,
+          s"$what: contract columns " +
+            s"${contract.diff(m.values.flatten.toSeq).mkString(",")} " +
+            "missing from every base table; re-declare")
+        m
       }
-      require(m.values.flatten.toSet == contract.toSet,
-        s"$what: contract columns " +
-          s"${contract.diff(m.values.flatten.toSeq).mkString(",")} " +
-          "missing from every base table; re-declare")
-      m
-    }
     // role r's projection: its join keys + its contract columns.
     // Role 0 is the fact (carries EVERY join's fact keys).
     def side(r: Int)(df: DataFrame): DataFrame = {
@@ -914,7 +856,7 @@ object Mv {
     // failed audit CLEARS the flag — the subset rewrite stops firing —
     // instead of refusing the refresh: the summary itself stays exact.
     import org.apache.spark.sql.functions.broadcast
-    val updatedJoins = d.joins.zipWithIndex.map { case (jn, i) =>
+    val dd = d.copy(joins = d.joins.zipWithIndex.map { case (jn, i) =>
       val r = i + 1
       lazy val dm = scan(roots(r))
       def factDeltaOk: Boolean = deltas(0)._1.forall { df =>
@@ -951,41 +893,38 @@ object Mv {
       if (!jn.preserving) jn
       else if (factDeltaOk && dimAppendOk && dimRemoveOk) jn
       else jn.copy(preserving = false)
-    }
-    val dd = if (updatedJoins == d.joins) d else {
-      val nd = d.copy(joins = updatedJoins)
-      MvCatalog.register(nd) // the stamped refreshes below copy it on
-      nd
-    }
+    })
     if (movedRoles.isEmpty) {
       // dv-only / zero-provenance chains: every plain read is
-      // bit-identical — restamp
+      // bit-identical — a pure restamp, no fold, no new version
       MvCatalog.commit(spark, dd.copy(fp = newFp))
     } else if (movedRoles.size == 1 && deltas(movedRoles.head)._2.isEmpty) {
       // ONE table moved, append-only — the nightly shape: Δᵢ joined
       // against every other table's pinned read, a pure insert batch
       // (MIN/MAX partials fine). The delta is batch-sized and
       // broadcasts; each pinned table is scanned once, no shuffle of
-      // the fact against a dim.
+      // the fact against a dim. With no dims: the fact's own batch.
       val i = movedRoles.head
       val frames = roots.indices.map(r =>
         if (r == i) side(r)(deltas(r)._1.get) else side(r)(scan(roots(r))))
-      refreshAppendStamped(spark, name, joinAll(frames),
+      refreshAppendStamped(spark, dd, joinAll(frames),
         fpOverride = Some(newFp))
     } else {
       // retractions and/or several tables moved: the full signed
       // inclusion–exclusion fold over every nonempty subset S of the
       // moved roles — 2^m − 1 terms (m = moved tables; nightly m ≤ 2).
-      // MIN/MAX partials fold fine through a pure multi-APPEND window
-      // (every insert-tagged row is net-present; the delete-tagged
-      // inclusion–exclusion rows only cancel same-feed duplicate
-      // inserts, retracting nothing from the stored state — so the
-      // extremal-tie guard is off). A GENUINE retraction (rw
-      // provenance) refuses: its mixed-window cross terms can tag
-      // never-present phantom rows as inserts, which would corrupt a
-      // folded extreme undetectably.
+      // With no dims the one term has no cross terms, so its deletes
+      // are genuine retractions and MIN/MAX fold under the extremal-tie
+      // guard. A star's pure multi-APPEND window folds MIN/MAX fine
+      // with the guard off (every insert-tagged row is net-present; the
+      // delete-tagged inclusion–exclusion rows only cancel same-feed
+      // duplicate inserts, retracting nothing from the stored state). A
+      // star's GENUINE retraction (rw provenance) with MIN/MAX refuses:
+      // its mixed-window cross terms can tag never-present phantom rows
+      // as inserts, which would corrupt a folded extreme undetectably.
       val anyRetraction = deltas.exists(_._2.nonEmpty)
-      require(!anyRetraction || (d.mins.isEmpty && d.maxs.isEmpty),
+      require(d.joins.isEmpty || !anyRetraction ||
+        (d.mins.isEmpty && d.maxs.isEmpty),
         s"$what: the window retracts join rows (compact) and the view " +
           "keeps MIN/MAX partials, which do not retract through the " +
           "signed join-delta fold; rebuild with Mv.buildStar")
@@ -998,10 +937,6 @@ object Mv {
           rm.map(side(i)(_).withColumn(w, lit(-1L))))
           .reduce(_ unionByName _)
       }.toMap
-      // predicate columns ride along so refreshChangesStamped can
-      // scope the signed feed to a filtered view's slice
-      val cols = (d.dims ++ d.measures.toSeq.sorted ++ whereRefs(d))
-        .distinct.map(col)
       def term(s: Set[Int]): DataFrame = {
         val frames = roots.indices.map(r =>
           if (s(r)) sd(r) else side(r)(scan(roots(r))))
@@ -1009,15 +944,15 @@ object Mv {
           lit(if (s.size % 2 == 1) 1L else -1L)
         val w = s.toSeq.map(i => col(s"__w$i")).foldLeft(parity)(_ * _)
         joinAll(frames)
-          .select(cols :+ w.as("__w"): _*)
+          .select(contract.map(col) :+ w.as("__w"): _*)
           .withColumn("_change_type",
             when(col("__w") === 1L, lit("insert")).otherwise(lit("delete")))
           .drop("__w")
       }
       val feed = movedRoles.toSet.subsets().filter(_.nonEmpty).toSeq
         .map(term).reduce(_ unionByName _)
-      refreshChangesStamped(spark, name, feed, fpOverride = Some(newFp),
-        extremesGuard = false)
+      refreshChangesStamped(spark, dd, feed, fpOverride = Some(newFp),
+        extremesGuard = d.joins.isEmpty)
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
@@ -176,103 +176,80 @@ object Streams {
                ts: String, ord: String, attrs: Seq[String],
                nBuckets: Int = 16,
                checkpointLocation: Option[String] = None): StreamingQuery = {
-    val writer = changes.writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        val s = batch.sparkSession
-        val conf = s.sparkContext.hadoopConfiguration
-        val rootPath = new org.apache.hadoop.fs.Path(root)
-        // derive the FS from the root path, not fs.defaultFS: a root on
-        // another scheme (s3a:// under an HDFS default) must not resolve
-        // against the wrong filesystem
-        val fs = rootPath.getFileSystem(conf)
-        val pointer = new org.apache.hadoop.fs.Path(root, "_latest")
-        val current = readScd2Manifest(fs, pointer)
-        // high-water idempotence guard: a crash between the manifest
-        // flip and the streaming commit log re-runs this epoch, and a
-        // query restarted without its checkpoint re-delivers applied
-        // batches under SMALLER epoch ids — in both cases the batch's
-        // effect is already durable in history, so skip
-        if (current.exists(_.epoch >= epoch)) {
-          // a skipped NON-EMPTY batch is normal only for the
-          // crash-between-flip-and-commit replay; after a LOST
-          // checkpoint it silently discards genuinely new rows — make
-          // that observable so a mis-restarted query is detectable
-          // (recover by restarting WITH the original checkpoint)
-          if (!batch.isEmpty)
-            org.slf4j.LoggerFactory.getLogger(getClass).warn(
-              s"scd2Sink($root): high-water guard skipped non-empty " +
-                s"epoch $epoch (manifest epoch ${current.get.epoch}). " +
-                "Expected once after a crash-replay; if this repeats, " +
-                "the query was restarted without its original checkpoint " +
-                "and incoming data is being DISCARDED.")
-        } else {
-          val bucketed = batch.toDF()
-            .withColumn("__kb", scd2Bucket(keys, nBuckets))
-          // affected buckets: bounded by nBuckets, not by batch rows
-          val affected = bucketed.select(col("__kb")).distinct()
-            .collect().map(_.getInt(0)).sorted
-          val priorDirs = current.toSeq.flatMap(m =>
-            affected.flatMap(m.buckets.get)).distinct
-          val merged = if (priorDirs.isEmpty)
-            graft.ops.Scd.historize(batch.toDF(), keys, ts, ord, attrs)
-          else {
-            // only the affected buckets' history is read — the rest of
-            // the table is untouched on disk AND unread by the plan
-            val history = s.read.parquet(priorDirs.map(root + "/" + _): _*)
-            graft.ops.Scd.merge(history, batch.toDF(), keys, ts, ord, attrs)
-          }
-          val epochDir = s"epoch_$epoch"
-          merged.withColumn("__kb", scd2Bucket(keys, nBuckets))
-            .repartition(col("__kb"))
-            .sortWithinPartitions(keys.map(col) :+ col("valid_from"): _*)
-            .write.mode("overwrite").partitionBy("__kb")
-            .parquet(root + "/" + epochDir)
-          // zone rows for the rewritten buckets — per-bucket min/max
-          // valid_from (the Layout `_zonemap` shape, natively typed),
-          // aggregated from the just-written files (column-pruned,
-          // affected buckets only) and landed INSIDE the epoch dir
-          // BEFORE the flip: they share the epoch's crash-atomicity
-          // and GC lifetime, and [[scd2History]] range reads skip
-          // whole buckets by them without opening any data footer
-          val epochPath = root + "/" + epochDir
-          if (affected.nonEmpty) // an empty batch writes no bucket dirs
-            s.read.option("basePath", epochPath)
-              .parquet(affected.map(b => s"$epochPath/__kb=$b").toIndexedSeq: _*)
-              .groupBy(col("__kb").cast("int").as("__kb"))
-              .agg(min(col("valid_from")).as("zmin"),
-                max(col("valid_from")).as("zmax"))
-              .coalesce(1).write.mode("overwrite")
-              .parquet(epochPath + "/_zones")
-          val next = Scd2Manifest(epoch,
-            current.map(_.buckets).getOrElse(Map.empty) ++
-              affected.map(b => b -> s"$epochDir/__kb=$b"),
-            Some(nBuckets))
-          // atomic manifest flip: the bucket map IS the pointer text
-          graft.catalog.SnapshotManifest.flip(s, root, next.serialize)
-          // keep-last-2 GC: a bucket dir is live while the NEW or the
-          // PREVIOUS manifest references it; anything older was
-          // superseded two flips ago and no well-behaved reader can
-          // still hold it (store-agnostic — no reliance on HDFS
-          // delete-on-last-close)
-          val live = next.buckets.values.toSet ++
-            current.toSeq.flatMap(_.buckets.values)
-          val epochDirs = fs.globStatus(
-            new org.apache.hadoop.fs.Path(root, "epoch_*"))
-          epochDirs.foreach { ed =>
-            val kept = fs.listStatus(ed.getPath).filter { kb =>
-              val rel = ed.getPath.getName + "/" + kb.getPath.getName
-              if (kb.getPath.getName.startsWith("__kb=") && !live(rel)) {
-                fs.delete(kb.getPath, true); false
-              } else true
-            }
-            if (!kept.exists(_.getPath.getName.startsWith("__kb=")))
-              fs.delete(ed.getPath, true) // only _SUCCESS markers left
-          }
-        }
+    // derive the FS from the root path, not fs.defaultFS: a root on
+    // another scheme (s3a:// under an HDFS default) must not resolve
+    // against the wrong filesystem
+    def manifest(s: SparkSession) = {
+      val fs = graft.catalog.SnapshotManifest.fsOf(s, root)
+      (fs, readScd2Manifest(fs, new org.apache.hadoop.fs.Path(root, "_latest")))
+    }
+    epochSink(changes, s"scd2Sink($root)", checkpointLocation,
+        manifest(_)._2.fold(-1L)(_.epoch)) { (batch, epoch) =>
+      val s = batch.sparkSession
+      val (fs, current) = manifest(s)
+      val bucketed = batch.toDF()
+        .withColumn("__kb", scd2Bucket(keys, nBuckets))
+      // affected buckets: bounded by nBuckets, not by batch rows
+      val affected = bucketed.select(col("__kb")).distinct()
+        .collect().map(_.getInt(0)).sorted
+      val priorDirs = current.toSeq.flatMap(m =>
+        affected.flatMap(m.buckets.get)).distinct
+      val merged = if (priorDirs.isEmpty)
+        graft.ops.Scd.historize(batch.toDF(), keys, ts, ord, attrs)
+      else {
+        // only the affected buckets' history is read — the rest of
+        // the table is untouched on disk AND unread by the plan
+        val history = s.read.parquet(priorDirs.map(root + "/" + _): _*)
+        graft.ops.Scd.merge(history, batch.toDF(), keys, ts, ord, attrs)
       }
-    checkpointLocation
-      .fold(writer)(writer.option("checkpointLocation", _))
-      .start()
+      val epochDir = s"epoch_$epoch"
+      merged.withColumn("__kb", scd2Bucket(keys, nBuckets))
+        .repartition(col("__kb"))
+        .sortWithinPartitions(keys.map(col) :+ col("valid_from"): _*)
+        .write.mode("overwrite").partitionBy("__kb")
+        .parquet(root + "/" + epochDir)
+      // zone rows for the rewritten buckets — per-bucket min/max
+      // valid_from (the Layout `_zonemap` shape, natively typed),
+      // aggregated from the just-written files (column-pruned,
+      // affected buckets only) and landed INSIDE the epoch dir
+      // BEFORE the flip: they share the epoch's crash-atomicity
+      // and GC lifetime, and [[scd2History]] range reads skip
+      // whole buckets by them without opening any data footer
+      val epochPath = root + "/" + epochDir
+      if (affected.nonEmpty) // an empty batch writes no bucket dirs
+        s.read.option("basePath", epochPath)
+          .parquet(affected.map(b => s"$epochPath/__kb=$b").toIndexedSeq: _*)
+          .groupBy(col("__kb").cast("int").as("__kb"))
+          .agg(min(col("valid_from")).as("zmin"),
+            max(col("valid_from")).as("zmax"))
+          .coalesce(1).write.mode("overwrite")
+          .parquet(epochPath + "/_zones")
+      val next = Scd2Manifest(epoch,
+        current.map(_.buckets).getOrElse(Map.empty) ++
+          affected.map(b => b -> s"$epochDir/__kb=$b"),
+        Some(nBuckets))
+      // atomic manifest flip: the bucket map IS the pointer text
+      graft.catalog.SnapshotManifest.flip(s, root, next.serialize)
+      // keep-last-2 GC: a bucket dir is live while the NEW or the
+      // PREVIOUS manifest references it; anything older was
+      // superseded two flips ago and no well-behaved reader can
+      // still hold it (store-agnostic — no reliance on HDFS
+      // delete-on-last-close)
+      val live = next.buckets.values.toSet ++
+        current.toSeq.flatMap(_.buckets.values)
+      val epochDirs = fs.globStatus(
+        new org.apache.hadoop.fs.Path(root, "epoch_*"))
+      epochDirs.foreach { ed =>
+        val kept = fs.listStatus(ed.getPath).filter { kb =>
+          val rel = ed.getPath.getName + "/" + kb.getPath.getName
+          if (kb.getPath.getName.startsWith("__kb=") && !live(rel)) {
+            fs.delete(kb.getPath, true); false
+          } else true
+        }
+        if (!kept.exists(_.getPath.getName.startsWith("__kb=")))
+          fs.delete(ed.getPath, true) // only _SUCCESS markers left
+      }
+    }
   }
 
   /** Read the current SCD2 history maintained by [[scd2Sink]]: resolve
@@ -581,26 +558,6 @@ object Streams {
     * (`m_<ms>_<nano>`) never contain `_e`, so the parse is exact. */
   private val IngestEpochTag = "_e(\\d+)$".r.unanchored
 
-  /** Streaming ingest into a crash-atomic clustered+zoned Layout
-    * table: each micro-batch lands through
-    * [[graft.catalog.Layout.appendClusteredZoned]] — O(batch) staging,
-    * zone rows, and an atomic snapshot flip — so every committed
-    * epoch is immediately a first-class table slice: bucket-pruned,
-    * zone-skipped, time-travelable, compactable, all with the batch
-    * reader ([[graft.catalog.Layout.read]]).
-    *
-    * EXACTLY-ONCE: the batch's manifest part is tagged with its epoch
-    * (`..._e<epoch>`), so "already committed" is a property of the
-    * snapshot itself — atomic with the `_latest` flip, no side file
-    * with its own crash window. A crash between the flip and the
-    * streaming commit log re-runs the epoch; the high-water guard
-    * (epoch ≤ max committed tag) skips it. As with [[scd2Sink]], a
-    * query restarted WITHOUT its checkpoint re-delivers data under
-    * restarted epoch ids — skipped with a loud warning, recover by
-    * restarting with the original checkpoint. Empty batches commit
-    * nothing and replay as no-ops. Fragmentation from many small
-    * epochs is the documented [[graft.catalog.Layout.compact]] duty.
-    */
   /** Epoch-stamped state-snapshot dir name used by [[viewSink]]. */
   private val ViewEpochTag = "^state_e(\\d+)$".r
 
@@ -636,86 +593,85 @@ object Streams {
   def viewSink(feed: DataFrame, root: String, keys: Seq[String],
                values: Seq[String],
                checkpointLocation: Option[String] = None): StreamingQuery = {
-    val writer = feed.writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        val s = batch.sparkSession
-        val cur = graft.catalog.SnapshotManifest.currentSnap(s, root)
-        val hw = cur.collect { case ViewEpochTag(e) => e.toLong }
-          .getOrElse(-1L)
-        if (epoch <= hw) {
-          if (!batch.isEmpty)
-            org.slf4j.LoggerFactory.getLogger(getClass).warn(
-              s"viewSink($root): high-water guard skipped non-empty " +
-                s"epoch $epoch (max committed $hw). Expected once after " +
-                "a crash-replay; if this repeats, the query was restarted " +
-                "without its original checkpoint and incoming changes are " +
-                "being DISCARDED.")
-        } else if (!batch.isEmpty) {
-          val st0 = cur.map(c => s.read.parquet(s"$root/$c")).getOrElse(
-            graft.ops.IncrementalAgg.retractableState(
-              batch.toDF().drop("_change_type").limit(0), keys, values))
-          val st1 = graft.ops.IncrementalAgg.applyChangeFeed(
-            st0, batch.toDF(), keys, values)
-          val snap = s"state_e$epoch"
-          st1.write.mode("overwrite").parquet(s"$root/$snap")
-          graft.catalog.SnapshotManifest.flip(s, root, snap)
-          // keep-last-2: the just-superseded state (epoch hw) survives
-          // one more cycle for in-flight readers; older snaps go
-          val fs = graft.catalog.SnapshotManifest.fsOf(s, root)
-          fs.listStatus(new org.apache.hadoop.fs.Path(root)).foreach { st =>
-            st.getPath.getName match {
-              case ViewEpochTag(e) if st.isDirectory && e.toLong < hw =>
-                fs.delete(st.getPath, true)
-              case _ => ()
-            }
+    // the committed state snapshot and its epoch (-1 when none)
+    def state(s: SparkSession) = {
+      val cur = graft.catalog.SnapshotManifest.currentSnap(s, root)
+      (cur, cur.collect { case ViewEpochTag(e) => e.toLong }.getOrElse(-1L))
+    }
+    epochSink(feed, s"viewSink($root)", checkpointLocation,
+        state(_)._2) { (batch, epoch) =>
+      val s = batch.sparkSession
+      val (cur, hw) = state(s)
+      if (!batch.isEmpty) {
+        val st0 = cur.map(c => s.read.parquet(s"$root/$c")).getOrElse(
+          graft.ops.IncrementalAgg.retractableState(
+            batch.toDF().drop("_change_type").limit(0), keys, values))
+        val st1 = graft.ops.IncrementalAgg.applyChangeFeed(
+          st0, batch.toDF(), keys, values)
+        val snap = s"state_e$epoch"
+        st1.write.mode("overwrite").parquet(s"$root/$snap")
+        graft.catalog.SnapshotManifest.flip(s, root, snap)
+        // keep-last-2: the just-superseded state (epoch hw) survives
+        // one more cycle for in-flight readers; older snaps go
+        val fs = graft.catalog.SnapshotManifest.fsOf(s, root)
+        fs.listStatus(new org.apache.hadoop.fs.Path(root)).foreach { st =>
+          st.getPath.getName match {
+            case ViewEpochTag(e) if st.isDirectory && e.toLong < hw =>
+              fs.delete(st.getPath, true)
+            case _ => ()
           }
         }
       }
-    checkpointLocation
-      .fold(writer)(cp => writer.option("checkpointLocation", cp))
-      .start()
+    }
   }
 
+  /** Streaming ingest into a crash-atomic clustered+zoned Layout
+    * table: each micro-batch lands through
+    * [[graft.catalog.Layout.appendClusteredZoned]] — O(batch) staging,
+    * zone rows, and an atomic snapshot flip — so every committed
+    * epoch is immediately a first-class table slice: bucket-pruned,
+    * zone-skipped, time-travelable, compactable, all with the batch
+    * reader ([[graft.catalog.Layout.read]]).
+    *
+    * EXACTLY-ONCE: the batch's manifest part is tagged with its epoch
+    * (`..._e<epoch>`), so "already committed" is a property of the
+    * snapshot itself — atomic with the `_latest` flip, no side file
+    * with its own crash window. A crash between the flip and the
+    * streaming commit log re-runs the epoch; the high-water guard
+    * (epoch ≤ max committed tag) skips it. As with [[scd2Sink]], a
+    * query restarted WITHOUT its checkpoint re-delivers data under
+    * restarted epoch ids — skipped with a loud warning, recover by
+    * restarting with the original checkpoint. Empty batches commit
+    * nothing and replay as no-ops. Fragmentation from many small
+    * epochs is the documented [[graft.catalog.Layout.compact]] duty.
+    */
   def ingestSink(stream: DataFrame, root: String, symbol: String,
                  time: String, nBuckets: Int = 16, filesPerBucket: Int = 4,
-                 checkpointLocation: Option[String] = None): StreamingQuery = {
-    val writer = stream.writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        ingestEpoch(batch, epoch, root, symbol, time, nBuckets,
-          filesPerBucket)
-      }
-    checkpointLocation
-      .fold(writer)(cp => writer.option("checkpointLocation", cp))
-      .start()
-  }
+                 checkpointLocation: Option[String] = None): StreamingQuery =
+    ingestStream(stream, root, symbol, time, nBuckets, filesPerBucket,
+      checkpointLocation)
 
-  /** One exactly-once epoch of [[ingestSink]]: skip epochs at or below
-    * the manifest's own high-water mark (the `_e<epoch>` part-name tag
-    * IS the committed offset — crash replays are no-ops), else append
-    * crash-atomically. */
-  private def ingestEpoch(batch: Dataset[org.apache.spark.sql.Row],
-                          epoch: Long, root: String, symbol: String,
-                          time: String, nBuckets: Int,
-                          filesPerBucket: Int): Unit = {
-    val s = batch.sparkSession
-    val committed = graft.catalog.SnapshotManifest
-      .currentParts(s, root).getOrElse(Seq.empty)
-      .flatMap { case IngestEpochTag(e) => Some(e.toLong); case _ => None }
-    val highWater = if (committed.isEmpty) -1L else committed.max
-    if (epoch <= highWater) {
-      if (!batch.isEmpty)
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"ingestSink($root): high-water guard skipped non-empty " +
-            s"epoch $epoch (max committed $highWater). Expected once " +
-            "after a crash-replay; if this repeats, the query was " +
-            "restarted without its original checkpoint and incoming " +
-            "data is being DISCARDED.")
-    } else
+  /** The exactly-once ingest under [[ingestSink]] and
+    * [[mvLogRefreshSink]]: skip epochs at or below the manifest's own
+    * high-water mark (the `_e<epoch>` part-name tag IS the committed
+    * offset — crash replays are no-ops), else append crash-atomically;
+    * `every` runs after each epoch, skipped or not. */
+  private def ingestStream(stream: DataFrame, root: String,
+                           symbol: String, time: String, nBuckets: Int,
+                           filesPerBucket: Int,
+                           checkpointLocation: Option[String],
+                           every: SparkSession => Unit = _ => ())
+      : StreamingQuery =
+    epochSink(stream, s"ingestSink($root)", checkpointLocation,
+      s => graft.catalog.SnapshotManifest.currentParts(s, root)
+        .getOrElse(Seq.empty)
+        .collect { case IngestEpochTag(e) => e.toLong }.maxOption
+        .getOrElse(-1L), every) { (batch, epoch) =>
       graft.catalog.Layout.appendClusteredZoned(
         batch.toDF(), root, symbol, time, nBuckets, filesPerBucket,
         partName = Some(
           graft.catalog.SnapshotManifest.newPartName() + s"_e$epoch"))
-  }
+    }
 
   /** STREAMING STAR-MV MAINTENANCE over a SNAPSHOT-LOGGED base — the
     * durable upgrade of [[mvRefreshSink]]: each micro-batch is
@@ -736,21 +692,13 @@ object Streams {
                        time: String, mvName: String, nBuckets: Int = 16,
                        filesPerBucket: Int = 4,
                        checkpointLocation: Option[String] = None)
-      : StreamingQuery = {
-    val writer = stream.writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        ingestEpoch(batch, epoch, root, symbol, time, nBuckets,
-          filesPerBucket)
-        // refresh on EVERY epoch, including replayed/empty ones — the
-        // pre-crash refresh may never have run; a fresh stamp makes
-        // this a metadata-only no-op
-        graft.plans.Mv.refreshFromLog(batch.sparkSession, mvName)
-        ()
-      }
-    checkpointLocation
-      .fold(writer)(cp => writer.option("checkpointLocation", cp))
-      .start()
-  }
+      : StreamingQuery =
+    // refresh on EVERY epoch, including replayed/empty ones — the
+    // pre-crash refresh may never have run; a fresh stamp makes this
+    // a metadata-only no-op
+    ingestStream(stream, root, symbol, time, nBuckets, filesPerBucket,
+      checkpointLocation,
+      s => { graft.plans.Mv.refreshFromLog(s, mvName); () })
 
   /** STREAMING MV MAINTENANCE — fold each micro-batch of new base
     * rows into a registered summary ([[graft.plans.Mv.refreshAppend]]):
@@ -766,23 +714,13 @@ object Streams {
   def mvRefreshSink(batches: DataFrame, mvName: String,
                     checkpointLocation: Option[String] = None): StreamingQuery = {
     val applied = new java.util.concurrent.atomic.AtomicLong(-1L)
-    val writer = batches.writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        if (epoch <= applied.get) {
-          if (!batch.isEmpty)
-            org.slf4j.LoggerFactory.getLogger(getClass).warn(
-              s"mvRefreshSink($mvName): high-water guard skipped " +
-                s"non-empty epoch $epoch (max applied ${applied.get}).")
-        } else {
-          if (!batch.isEmpty)
-            graft.plans.Mv.refreshAppend(batch.sparkSession, mvName,
-              batch.toDF())
-          applied.set(epoch)
-        }
-      }
-    checkpointLocation
-      .fold(writer)(cp => writer.option("checkpointLocation", cp))
-      .start()
+    epochSink(batches, s"mvRefreshSink($mvName)", checkpointLocation,
+        _ => applied.get) { (batch, epoch) =>
+      if (!batch.isEmpty)
+        graft.plans.Mv.refreshAppend(batch.sparkSession, mvName,
+          batch.toDF())
+      applied.set(epoch)
+    }
   }
 
   /** STREAMING CORPUS-DEDUP INGEST — the crawl-admission loop at
@@ -815,60 +753,85 @@ object Streams {
                       compactAtParts: Int = 64)
       : StreamingQuery = {
     val applied = new java.util.concurrent.atomic.AtomicLong(-1L)
-    val writer = docs.writeStream.outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        if (epoch <= applied.get) {
-          if (!batch.isEmpty)
-            org.slf4j.LoggerFactory.getLogger(getClass).warn(
-              s"corpusDedupSink($indexPath): high-water guard skipped " +
-                s"non-empty epoch $epoch (max applied ${applied.get}).")
-        } else {
-          val s = batch.sparkSession
-          if (!batch.isEmpty) {
-            val (id, text, n, k, bands) =
-              graft.pipeline.LshIndex.params(s, indexPath)
-            // ONE shingle/signature pass per micro-batch, cached and
-            // shared by the corpus probe, the in-batch verify, and the
-            // index fold (the hot-path cost is the text tokenize +
-            // shingle hash; the per-stage aggs over the cached (id, h)
-            // frame are comparatively free)
-            val batchDf = batch.toDF()
-            val sh = graft.ops.CacheScope.persist(
-              graft.pipeline.Dedup.hashedShingles(batchDf, id, text, n))
-            val dupIds = graft.pipeline.LshIndex
-              .probeFromHashed(s, indexPath, sh)
-              .select(col("probe_id").as(id)).distinct()
-            val novel = batchDf.join(dupIds, Seq(id), "left_anti")
-            // pairs over the FULL batch's hashes: set-equality is
-            // transitive, so a pair touching a corpus-dup doc has BOTH
-            // members corpus-dup and neither survives into `novel` —
-            // the restriction to novel docs happens in the anti-join
-            val pairs = graft.pipeline.Dedup
-              .verifiedDuplicatesFromHashed(sh, id, k, bands)
-            val admitted = graft.pipeline.Dedup
-              .removeNearDuplicates(novel, pairs, id).persist()
-            try {
-              if (!admitted.isEmpty) {
-                admitted.write.mode("append").parquet(docsPath)
-                val shAdm = sh.join(
-                  admitted.select(col(id)), Seq(id), "left_semi")
-                graft.pipeline.LshIndex.appendFromHashed(s, shAdm, indexPath)
-                if (compactAtParts > 0 && graft.catalog.SnapshotManifest
-                    .currentParts(s, indexPath).exists(_.size > compactAtParts)) {
-                  graft.pipeline.LshIndex.compactIndex(s, indexPath)
-                  graft.pipeline.LshIndex.vacuum(s, indexPath)
-                }
-              }
-            } finally {
-              admitted.unpersist(blocking = false)
-              graft.ops.CacheScope.releaseAll()
+    epochSink(docs, s"corpusDedupSink($indexPath)", checkpointLocation,
+        _ => applied.get) { (batch, epoch) =>
+      val s = batch.sparkSession
+      if (!batch.isEmpty) {
+        val (id, text, n, k, bands) =
+          graft.pipeline.LshIndex.params(s, indexPath)
+        // ONE shingle/signature pass per micro-batch, cached and
+        // shared by the corpus probe, the in-batch verify, and the
+        // index fold (the hot-path cost is the text tokenize +
+        // shingle hash; the per-stage aggs over the cached (id, h)
+        // frame are comparatively free)
+        val batchDf = batch.toDF()
+        val sh = graft.ops.CacheScope.persist(
+          graft.pipeline.Dedup.hashedShingles(batchDf, id, text, n))
+        val dupIds = graft.pipeline.LshIndex
+          .probeFromHashed(s, indexPath, sh)
+          .select(col("probe_id").as(id)).distinct()
+        val novel = batchDf.join(dupIds, Seq(id), "left_anti")
+        // pairs over the FULL batch's hashes: set-equality is
+        // transitive, so a pair touching a corpus-dup doc has BOTH
+        // members corpus-dup and neither survives into `novel` —
+        // the restriction to novel docs happens in the anti-join
+        val pairs = graft.pipeline.Dedup
+          .verifiedDuplicatesFromHashed(sh, id, k, bands)
+        val admitted = graft.pipeline.Dedup
+          .removeNearDuplicates(novel, pairs, id).persist()
+        try {
+          if (!admitted.isEmpty) {
+            admitted.write.mode("append").parquet(docsPath)
+            val shAdm = sh.join(
+              admitted.select(col(id)), Seq(id), "left_semi")
+            graft.pipeline.LshIndex.appendFromHashed(s, shAdm, indexPath)
+            if (compactAtParts > 0 && graft.catalog.SnapshotManifest
+                .currentParts(s, indexPath).exists(_.size > compactAtParts)) {
+              graft.pipeline.LshIndex.compactIndex(s, indexPath)
+              graft.pipeline.LshIndex.vacuum(s, indexPath)
             }
           }
-          applied.set(epoch)
+        } finally {
+          admitted.unpersist(blocking = false)
+          graft.ops.CacheScope.releaseAll()
         }
       }
+      applied.set(epoch)
+    }
+  }
+
+  /** THE EPOCH-GUARDED SINK DRIVER every exactly-once sink here runs
+    * on. `highWater` reads the sink's own committed mark (-1 when
+    * nothing has committed): the manifest epoch, an epoch-named
+    * snapshot, an epoch-tagged manifest part, or an in-session
+    * counter. An epoch at or below it is already durable — a crash
+    * between the sink's commit and the streaming commit log re-runs
+    * it, and a query restarted WITHOUT its checkpoint re-delivers
+    * applied batches under smaller epoch ids — so it is skipped rather
+    * than applied twice. A skipped NON-EMPTY batch is normal only for
+    * the crash replay; after a lost checkpoint it silently discards
+    * genuinely new rows, so it is logged (recover by restarting WITH
+    * the original checkpoint). Newer epochs run `body`, which owns the
+    * sink's empty-batch behaviour; `every` runs after either branch. */
+  private def epochSink(stream: DataFrame, label: String,
+                        checkpointLocation: Option[String],
+                        highWater: SparkSession => Long,
+                        every: SparkSession => Unit = _ => ())(
+      body: (Dataset[Row], Long) => Unit): StreamingQuery = {
+    val writer = stream.writeStream.outputMode("append")
+      .foreachBatch { (batch: Dataset[Row], epoch: Long) =>
+        val hw = highWater(batch.sparkSession)
+        if (epoch > hw) body(batch, epoch)
+        else if (!batch.isEmpty)
+          org.slf4j.LoggerFactory.getLogger(getClass).warn(
+            s"$label: high-water guard skipped non-empty epoch $epoch " +
+              s"(high-water mark $hw). Expected once after a crash-replay; " +
+              "if this repeats, the query was restarted without its " +
+              "original checkpoint and incoming data is being DISCARDED.")
+        every(batch.sparkSession)
+      }
     checkpointLocation
-      .fold(writer)(cp => writer.option("checkpointLocation", cp))
+      .fold(writer)(writer.option("checkpointLocation", _))
       .start()
   }
 }

@@ -51,8 +51,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
       // planner-probed result cache through the SAME injection path
       // (the rule runs inside the operator-optimization fixed point
       // here, not the extraOptimizations tail batch — both must serve)
-      val rcRoot = java.nio.file.Files
-        .createTempDirectory("graft_extrc").toString
+      val rcRoot = SparkSpec.scratchDir("graft_extrc")
       s2.range(10).selectExpr("id % 2 AS k", "id AS v")
         .write.mode("overwrite").parquet(rcRoot + "/t")
       s2.conf.set("graft.resultcache.dir", rcRoot + "/cache")

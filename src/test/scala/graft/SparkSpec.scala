@@ -8,6 +8,10 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sf: String = "/root/testdata/sf0.001"
 
+  /** A fresh, empty scratch directory `<prefix><random>` (see
+    * [[SparkSpec.scratchDir]]). */
+  def scratchDir(prefix: String): String = SparkSpec.scratchDir(prefix)
+
   /** Every physical node, traversing INTO adaptive plans and
     * materialized query stages — under AQE both are leaf nodes
     * wrapping the real subtrees, so `collect`/`collectLeaves` on the
@@ -55,4 +59,24 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = GraftSession.local(4)
+
+  /** The one parent of every spec's scratch directories, one per test
+    * JVM: `<java.io.tmpdir>/graft_specs_<random>`, removed with all it
+    * holds when the JVM exits (the gates' `graft_gates_<appId>` root
+    * follows the same discipline). */
+  private lazy val scratchRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft_specs_")
+    sys.addShutdownHook(scala.util.Try {
+      val walk = java.nio.file.Files.walk(root)
+      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => java.nio.file.Files.deleteIfExists(p))
+      finally walk.close()
+    })
+    root
+  }
+
+  /** A fresh, empty directory `<prefix><random>` under this JVM's
+    * scratch root. */
+  def scratchDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(scratchRoot, prefix).toString
 }

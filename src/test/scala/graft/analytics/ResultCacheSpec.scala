@@ -11,8 +11,7 @@ import graft.SparkSpec
   * schema sidecar, vacuum reclaims. */
 class ResultCacheSpec extends SparkSpec {
 
-  private val root = System.getProperty("java.io.tmpdir") +
-    "/graft_rcspec_" + java.util.UUID.randomUUID().toString.take(8)
+  private val root = scratchDir("graft_rcspec_")
   private val tableP = root + "/t"
   private val cacheP = root + "/cache"
 

@@ -3,7 +3,6 @@ package graft.analytics
 import graft.SparkSpec
 import graft.catalog.SnapshotManifest
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** Cache probe / write-back / compute-through semantics —
   * statistics_cache parity (portfolio.js:329-445). */
@@ -11,7 +10,7 @@ class StatsCacheSpec extends SparkSpec {
   import spark.implicits._
 
   test("getOrCompute computes misses once, serves hits after") {
-    val dir = Files.createTempDirectory("graft_cache").toString + "/stats"
+    val dir = scratchDir("graft_cache") + "/stats"
     val cache = new StatsCache(spark, dir, Seq("symbol"))
     var computeCalls = 0
     def compute(keys: org.apache.spark.sql.DataFrame) = {
@@ -30,7 +29,7 @@ class StatsCacheSpec extends SparkSpec {
   }
 
   test("writeBack upserts: fresh rows replace same-key cached rows") {
-    val dir = Files.createTempDirectory("graft_cache2").toString + "/stats"
+    val dir = scratchDir("graft_cache2") + "/stats"
     val cache = new StatsCache(spark, dir, Seq("symbol"))
     cache.writeBack(Seq(("AAA", 1.0)).toDF("symbol", "cov"))
     cache.writeBack(Seq(("AAA", 2.0), ("BBB", 3.0)).toDF("symbol", "cov"))
@@ -40,7 +39,7 @@ class StatsCacheSpec extends SparkSpec {
   }
 
   test("two racing write-backs both land") {
-    val dir = Files.createTempDirectory("graft_cache3").toString + "/stats"
+    val dir = scratchDir("graft_cache3") + "/stats"
     val cache = new StatsCache(spark, dir, Seq("symbol"))
     cache.writeBack(Seq(("AAA", 1.0)).toDF("symbol", "cov"))
     // a second writer commits inside the first one's stage→flip window

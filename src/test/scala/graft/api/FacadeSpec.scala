@@ -3,7 +3,6 @@ package graft.api
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import java.sql.{Date, Timestamp}
-import java.nio.file.Files
 
 /** End-to-end parity of the REST-read façade over hand-built fixture
   * tables (SURVEY §5.2 semantic-parity fixtures). */
@@ -238,7 +237,7 @@ class FacadeSpec extends SparkSpec {
   }
 
   test("historyChart renders the series to a real PNG (S8)") {
-    val dir = Files.createTempDirectory("charts").toString
+    val dir = scratchDir("charts")
     val path = api.historyChart("aaa", "2024-01-01", "2024-01-05", dir)
     assert(path == s"$dir/AAA_2024-01-01_2024-01-05.png")
     val img = javax.imageio.ImageIO.read(new java.io.File(path))

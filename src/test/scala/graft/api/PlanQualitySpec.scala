@@ -217,7 +217,7 @@ class PlanQualitySpec extends SparkSpec {
   test("stored term index: a 2-term query scans at most 2 bucket directories") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_tidx").toString + "/idx"
+    val root = scratchDir("graft_tidx") + "/idx"
     val docs = (1 to 400).map(i =>
       (i.toLong, s"word$i alpha ${if (i % 3 == 0) "beta" else "gamma"} tail$i"))
       .toDF("doc_id", "text")
@@ -248,7 +248,7 @@ class PlanQualitySpec extends SparkSpec {
   test("positional index: a phrase query scans at most its distinct terms' bucket directories") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_pidx").toString + "/idx"
+    val root = scratchDir("graft_pidx") + "/idx"
     // "alpha beta" occurs in every 3rd doc (once), "beta beta" never;
     // overlap case: doc 0 holds "beta beta beta" = 2 overlapping starts
     val docs = ((1 to 400).map(i =>
@@ -298,7 +298,7 @@ class PlanQualitySpec extends SparkSpec {
   test("appended term index: every chain link prunes to the query buckets; compact folds to one link") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_tidx2").toString + "/idx"
+    val root = scratchDir("graft_tidx2") + "/idx"
     def mk(r: Range) = r.map(i =>
       (i.toLong, s"word$i alpha ${if (i % 3 == 0) "beta" else "gamma"} tail$i"))
       .toDF("doc_id", "text")

@@ -15,8 +15,7 @@ class BucketingSpec extends SparkSpec {
 
   test("co-located join of two bucketed tables plans no Exchange") {
     cleanTables("li_bucketed", "o_bucketed")
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_bucketing").toString
+    val base = scratchDir("graft_bucketing")
     val li = Tables.load(spark, sf, "lineitem")
       .select("l_orderkey", "l_quantity", "l_extendedprice")
     val o = Tables.load(spark, sf, "orders")
@@ -49,8 +48,7 @@ class BucketingSpec extends SparkSpec {
 
   test("contract enforcement: an unbucketed side fails fast, not silently shuffles") {
     cleanTables("li_bucketed2", "o_plain")
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_bucketing_neg").toString
+    val base = scratchDir("graft_bucketing_neg")
     val li = Tables.load(spark, sf, "lineitem")
       .select("l_orderkey", "l_quantity")
     val o = Tables.load(spark, sf, "orders")

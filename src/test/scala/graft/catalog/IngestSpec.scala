@@ -8,7 +8,7 @@ class IngestSpec extends SparkSpec {
   import spark.implicits._
 
   test("CSV ingest: declared schema, symbol upper-cased, dim refreshed, audit clean") {
-    val dir = Files.createTempDirectory("graft_ingest").toString
+    val dir = scratchDir("graft_ingest")
     Files.writeString(java.nio.file.Path.of(dir, "bars.csv"),
       """symbol,timestamp,open,high,low,close,volume
         |aapl,2024-01-02,10.00,11.00,9.00,10.50,100

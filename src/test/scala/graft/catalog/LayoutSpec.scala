@@ -2,7 +2,6 @@ package graft.catalog
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 class LayoutSpec extends SparkSpec {
   import spark.implicits._
@@ -24,7 +23,7 @@ class LayoutSpec extends SparkSpec {
         && !f.getPath.getName.startsWith("."))).toMap
 
   test("clustered layout prunes partitions on symbol lookups (SURVEY §4)") {
-    val dir = Files.createTempDirectory("graft_layout").toString + "/stocks"
+    val dir = scratchDir("graft_layout") + "/stocks"
     val df = (1 to 1000).map(i => (s"SYM${i % 50}", i, i * 1.5))
       .toDF("symbol", "ts", "close")
     Layout.writeClustered(df, dir, "symbol", "ts", numBuckets = 8)
@@ -47,7 +46,7 @@ class LayoutSpec extends SparkSpec {
   test("zoned reads round-trip table paths containing % and spaces") {
     // '%' and spaces URI-escape in input_file_name(); feeding those
     // strings back to spark.read unescaped resolves the WRONG file set
-    val dir = Files.createTempDirectory("graft_pct").toString + "/t %25 table"
+    val dir = scratchDir("graft_pct") + "/t %25 table"
     val df = (1 to 1000).map(i => (s"SYM${i % 10}", i.toLong, i * 1.5))
       .toDF("symbol", "ts", "close")
     def readBack(path: String) = Layout.read(spark, path, "symbol", "ts",
@@ -62,13 +61,13 @@ class LayoutSpec extends SparkSpec {
     assert(readBack(dir) == exp)
     // fallback path (no snapshot log): input_file_name() strings are
     // decoded + glob-escaped before the second read
-    val dir2 = Files.createTempDirectory("graft_pct2").toString + "/t %25 table"
+    val dir2 = scratchDir("graft_pct2") + "/t %25 table"
     Layout.writeClustered(df, dir2, "symbol", "ts", numBuckets = 4)
     assert(readBack(dir2) == exp)
   }
 
   test("ORC and JSON source/sink roundtrips preserve values") {
-    val dir = Files.createTempDirectory("graft_fmt").toString
+    val dir = scratchDir("graft_fmt")
     val df = Seq(("AAA", 1, 10.5), ("BBB", 2, 20.25)).toDF("symbol", "ts", "close")
     df.write.mode("overwrite").orc(s"$dir/orc")
     df.write.mode("overwrite").json(s"$dir/json")
@@ -82,7 +81,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("compact bin-packs over-fragmented buckets, folds the manifest") {
-    val dir = Files.createTempDirectory("graft_compact").toString + "/t"
+    val dir = scratchDir("graft_compact") + "/t"
     val df = (1 to 2000).map(i => (s"SYM${i % 10}", i.toLong, i * 1.5))
       .toDF("symbol", "ts", "close")
     Layout.writeClusteredZoned(df, dir, "symbol", "ts",
@@ -116,7 +115,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("appendClusteredZoned: O(batch) manifest delta, zoned reads span the boundary") {
-    val dir = Files.createTempDirectory("graft_appz").toString + "/t"
+    val dir = scratchDir("graft_appz") + "/t"
     val df = (1 to 1000).map(i => (s"SYM${i % 10}", i.toLong, i * 1.5))
       .toDF("symbol", "ts", "close")
     Layout.writeClusteredZoned(df.filter($"ts" <= 500), dir, "symbol", "ts",
@@ -164,7 +163,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("time travel: a prior snap reads the exact pre-append table; vacuum bounds history") {
-    val dir = Files.createTempDirectory("graft_travel").toString + "/t"
+    val dir = scratchDir("graft_travel") + "/t"
     val df = (1 to 1000).map(i => (s"SYM${i % 10}", i.toLong, i * 1.5))
       .toDF("symbol", "ts", "close")
     Layout.writeClusteredZoned(df.filter($"ts" <= 500), dir, "symbol", "ts",
@@ -204,7 +203,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("a crashed append is invisible: readers stay on the previous snapshot") {
-    val dir = Files.createTempDirectory("graft_crash_ap").toString + "/t"
+    val dir = scratchDir("graft_crash_ap") + "/t"
     val df = (1 to 1000).map(i => (s"SYM${i % 10}", i.toLong, i * 1.5))
       .toDF("symbol", "ts", "close")
     Layout.writeClusteredZoned(df.filter($"ts" <= 500), dir, "symbol", "ts",
@@ -241,7 +240,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("a crashed compact is invisible: full table until the manifest flips") {
-    val dir = Files.createTempDirectory("graft_crash_cp").toString + "/t"
+    val dir = scratchDir("graft_crash_cp") + "/t"
     val df = (1 to 2000).map(i => (s"SYM${i % 10}", i.toLong, i * 1.5))
       .toDF("symbol", "ts", "close")
     Layout.writeClusteredZoned(df, dir, "symbol", "ts",
@@ -269,7 +268,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("recluster: re-keys atomically, materializes DVs, prunes on the new key") {
-    val dir = Files.createTempDirectory("graft_reclus").toString + "/t"
+    val dir = scratchDir("graft_reclus") + "/t"
     val df = (1 to 2000).map(i =>
       (s"SYM${i % 10}", s"EX${i % 3}", i.toLong, i * 1.5))
       .toDF("symbol", "exch", "ts", "close")
@@ -313,7 +312,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("readForJoin: manifest row count drives the broadcast hint, DV-aware") {
-    val dir = Files.createTempDirectory("graft_rfj").toString + "/t"
+    val dir = scratchDir("graft_rfj") + "/t"
     val df = (1 to 500).map(i => (s"SYM${i % 5}", i.toLong, i * 1.5))
       .toDF("symbol", "ts", "close")
     Layout.writeClusteredZoned(df, dir, "symbol", "ts",
@@ -343,7 +342,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("deletion vectors: crash-atomic, idempotent, folded by compact") {
-    val dir = Files.createTempDirectory("graft_dv").toString + "/t"
+    val dir = scratchDir("graft_dv") + "/t"
     val df = (1 to 1000).map(i => (s"SYM${i % 10}", i.toLong, i * 1.5))
       .toDF("symbol", "ts", "close")
     Layout.writeClusteredZoned(df, dir, "symbol", "ts",
@@ -380,7 +379,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("optimistic concurrency: a racing commit fails the loser, loses no parts") {
-    val dir = Files.createTempDirectory("graft_cas").toString + "/t"
+    val dir = scratchDir("graft_cas") + "/t"
     val df = (1 to 1000).map(i => (s"SYM${i % 10}", i.toLong, i * 1.5))
       .toDF("symbol", "ts", "close")
     Layout.writeClusteredZoned(df, dir, "symbol", "ts",
@@ -410,7 +409,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("two appenders racing one table both land: the CAS loser retries and drops no parts") {
-    val dir = Files.createTempDirectory("graft_app_race").toString + "/t"
+    val dir = scratchDir("graft_app_race") + "/t"
     val base = (1 to 400).map(i => (s"SYM${i % 4}", i.toLong, i * 1.0))
       .toDF("symbol", "ts", "close")
     Layout.writeClusteredZoned(base, dir, "symbol", "ts",
@@ -442,7 +441,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("planMaintenance flags exactly the dv-touched buckets; compact clears them") {
-    val dir = Files.createTempDirectory("graft_dv_plan_maint").toString + "/t"
+    val dir = scratchDir("graft_dv_plan_maint") + "/t"
     // one symbol per bucket (numBuckets ≥ distinct symbols ⇒ buckets
     // don't collide only by luck — derive the expectation from bucketOf)
     val df = (1 to 800).map(i => (s"SYM${i % 4}", i.toLong, i * 1.0))
@@ -484,7 +483,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("DV reads plan a hash anti-join on position keys, never a nested loop") {
-    val dir = Files.createTempDirectory("graft_dv_plan").toString + "/t"
+    val dir = scratchDir("graft_dv_plan") + "/t"
     val df = (1 to 500).map(i => (s"SYM${i % 5}", i.toLong, i * 1.0))
       .toDF("symbol", "ts", "close")
     Layout.writeClusteredZoned(df, dir, "symbol", "ts",
@@ -506,7 +505,7 @@ class LayoutSpec extends SparkSpec {
     // at 100 TB a mass delete's DV can exceed the broadcast threshold;
     // the apply must fall back to a SHUFFLED hash join on the position
     // keys — never a sort-merge (pointless double sort) or nested loop
-    val dir = Files.createTempDirectory("graft_dv_shj").toString + "/t"
+    val dir = scratchDir("graft_dv_shj") + "/t"
     val df = (1 to 500).map(i => (s"SYM${i % 5}", i.toLong, i * 1.0))
       .toDF("symbol", "ts", "close")
     Layout.writeClusteredZoned(df, dir, "symbol", "ts",
@@ -528,7 +527,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("deletion vectors: a fully-deleted bucket folds to nothing") {
-    val dir = Files.createTempDirectory("graft_dv_full").toString + "/t"
+    val dir = scratchDir("graft_dv_full") + "/t"
     val df = (1 to 400).map(i => (s"SYM${i % 4}", i.toLong, i * 1.0))
       .toDF("symbol", "ts", "close")
     Layout.writeClusteredZoned(df, dir, "symbol", "ts",
@@ -542,7 +541,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("change feed: net inserts+deletes; rewrite windows throw") {
-    val dir = Files.createTempDirectory("graft_cdf").toString + "/t"
+    val dir = scratchDir("graft_cdf") + "/t"
     val df = (1 to 600).map(i => (s"SYM${i % 5}", i.toLong, i * 1.0))
       .toDF("symbol", "ts", "close")
     Layout.writeClusteredZoned(df.filter($"ts" <= 300), dir, "symbol", "ts",
@@ -572,7 +571,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("applyChanges replicates a window onto a same-snapshot target") {
-    val base = Files.createTempDirectory("graft_repl").toString
+    val base = scratchDir("graft_repl")
     val (sp, tp) = (base + "/s", base + "/t")
     val df = (1 to 600).map(i => (s"SYM${i % 5}", i.toLong, i * 1.0))
       .toDF("symbol", "ts", "close")
@@ -614,7 +613,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("readForJoin: bytes-aware ceiling — narrow dim broadcasts, wide dim of equal rows does not") {
-    val base = Files.createTempDirectory("graft_rfj").toString
+    val base = scratchDir("graft_rfj")
     val (np, wp) = (base + "/narrow", base + "/wide")
     val rows = (1 to 20000).map(i => (s"S${i % 7}", i.toLong))
       .toDF("symbol", "ts")
@@ -643,7 +642,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("readForJoin: wide-STRING dim refuses the broadcast despite defaultSize blindness") {
-    val dir = Files.createTempDirectory("graft_rfj_str").toString + "/t"
+    val dir = scratchDir("graft_rfj_str") + "/t"
     // ~2 KB of hash noise per row: schema defaultSize says ~36 B/row
     // (strings count a flat 20 B however long), the on-disk footprint
     // cross-check says kilobytes — only the latter refuses in time
@@ -674,7 +673,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("applyChanges epoch: crash-retry converges, done replays are metadata no-ops") {
-    val base = Files.createTempDirectory("graft_repl_e").toString
+    val base = scratchDir("graft_repl_e")
     val (sp, tp) = (base + "/s", base + "/t")
     val df = (1 to 600).map(i => (s"SYM${i % 5}", i.toLong, i * 1.0))
       .toDF("symbol", "ts", "close")
@@ -741,7 +740,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("expireBefore: whole files drop metadata-only, straddlers get DVs") {
-    val dir = Files.createTempDirectory("graft_retain").toString + "/t"
+    val dir = scratchDir("graft_retain") + "/t"
     val df = (1 to 1200).map(i => (s"SYM${i % 4}", i.toLong, i * 1.0))
       .toDF("symbol", "ts", "close")
     Layout.writeClusteredZoned(df, dir, "symbol", "ts",
@@ -775,7 +774,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("bloom index: a point probe opens ≈1 file, stays exact, degrades conservatively") {
-    val dir = Files.createTempDirectory("graft_bloom").toString + "/t"
+    val dir = scratchDir("graft_bloom") + "/t"
     // key is unique and UNCORRELATED with the (symbol, ts) clustering,
     // so zone maps can never prune a key-equality probe — each key's
     // single home file is findable only through the bloom index
@@ -854,7 +853,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("buildBloomIndexes: k columns in one pass; per-column incremental delta") {
-    val dir = Files.createTempDirectory("graft_bloom_k").toString + "/t"
+    val dir = scratchDir("graft_bloom_k") + "/t"
     val df = (1 to 4000).map(i =>
         (s"SYM${i % 8}", i.toLong, i.toLong, (i + 100000).toLong, i * 1.5))
       .toDF("symbol", "ts", "key", "key2", "close")
@@ -890,7 +889,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("expireBefore carries the bloom index forward; probes stay exact across expiry") {
-    val dir = Files.createTempDirectory("graft_bloom_exp").toString + "/t"
+    val dir = scratchDir("graft_bloom_exp") + "/t"
     val df = (1 to 1200).map(i => (s"SYM${i % 4}", i.toLong, i * 1.0))
       .toDF("symbol", "ts", "close")
     Layout.writeClusteredZoned(df, dir, "symbol", "ts",
@@ -920,7 +919,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("countFast: metadata count tracks appends, DV deletes, and time travel") {
-    val dir = Files.createTempDirectory("graft_cfast").toString + "/t"
+    val dir = scratchDir("graft_cfast") + "/t"
     val df = (1 to 500).map(i => (s"S${i % 4}", i, i * 1.0))
       .toDF("symbol", "ts", "v")
     Layout.writeClusteredZoned(df, dir, "symbol", "ts", numBuckets = 4)
@@ -944,7 +943,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("a compact committing right after a read resolves its snapshot leaves that read on the snapshot") {
-    val dir = Files.createTempDirectory("graft_resolve").toString + "/t"
+    val dir = scratchDir("graft_resolve") + "/t"
     val df = (1 to 1000).map(i => (s"SYM${i % 10}", i.toLong, i * 1.5))
       .toDF("symbol", "ts", "close")
     Layout.writeClusteredZoned(df, dir, "symbol", "ts",
@@ -969,7 +968,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("job counts: building a read and countFast run no job on a table with two DV parts") {
-    val dir = Files.createTempDirectory("graft_jobs").toString + "/t"
+    val dir = scratchDir("graft_jobs") + "/t"
     val df = (1 to 1000).map(i => (s"SYM${i % 10}", i.toLong, i * 1.5))
       .toDF("symbol", "ts", "close")
     Layout.writeClusteredZoned(df, dir, "symbol", "ts",
@@ -990,7 +989,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("an append of a small batch runs ≤ 3 jobs: its zone rows come from the footers") {
-    val dir = Files.createTempDirectory("graft_appendjobs").toString + "/t"
+    val dir = scratchDir("graft_appendjobs") + "/t"
     def batch(lo: Int) = (lo until lo + 100).map(i => (s"SYM${i % 10}", i.toLong, i * 1.5))
       .toDF("symbol", "ts", "close")
     Layout.writeClusteredZoned(batch(0), dir, "symbol", "ts",
@@ -1014,7 +1013,7 @@ class LayoutSpec extends SparkSpec {
     val prev = spark.conf.getOption(tsType)
     spark.conf.set(tsType, "TIMESTAMP_MICROS")
     try tables.foreach { df =>
-      val dir = Files.createTempDirectory("graft_zoneschema").toString + "/t"
+      val dir = scratchDir("graft_zoneschema") + "/t"
       Layout.writeClustered(df, dir, "symbol", "ts", numBuckets = 4)
       val agg = Layout.zoneAgg(spark, dir, "ts")
       // names, types AND nullability: a footer-path part must be
@@ -1034,7 +1033,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("expireBefore drops the deletion-vector rows of the files it drops") {
-    val dir = Files.createTempDirectory("graft_expiredv").toString + "/t"
+    val dir = scratchDir("graft_expiredv") + "/t"
     val df = (1 to 1000).map(i => (s"SYM${i % 10}", i.toLong, i * 1.5))
       .toDF("symbol", "ts", "close")
     Layout.writeClusteredZoned(df, dir, "symbol", "ts", numBuckets = 4)
@@ -1051,7 +1050,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("read takes Spark's inferred schema from the footer, also after an append added a column") {
-    val dir = Files.createTempDirectory("graft_evolve").toString + "/t"
+    val dir = scratchDir("graft_evolve") + "/t"
     // 16 base files (part-00000..00015, four per bucket), then a
     // 4-file append (part-00000..00003, one per bucket) WITH a new
     // column: in buckets 1-3 the appended file comes first in path
@@ -1088,7 +1087,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("deleteWhere returns exactly the rows that vanished; an applyChanges sweep is counted from footers") {
-    val dir = Files.createTempDirectory("graft_delcount").toString + "/t"
+    val dir = scratchDir("graft_delcount") + "/t"
     val df = (1 to 1000).map(i => (s"SYM${i % 10}", i.toLong, i * 1.5))
       .toDF("symbol", "ts", "close")
     Layout.writeClusteredZoned(df, dir, "symbol", "ts",
@@ -1114,7 +1113,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("double zone columns take the exact aggregation: NaN and -0.0 bounds equal min/max") {
-    val dir = Files.createTempDirectory("graft_dzone").toString + "/t"
+    val dir = scratchDir("graft_dzone") + "/t"
     // footer statistics widen a -0.0 maximum to +0.0 and drop NaN
     Layout.writeClusteredZoned(Seq(("S", -2.0), ("S", -0.0)).toDF("symbol", "t"),
       dir, "symbol", "t", numBuckets = 1, filesPerBucket = 1)
@@ -1135,12 +1134,12 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("writeZoneManifest over an empty or mistyped root never commits an empty manifest") {
-    val empty = Files.createTempDirectory("graft_emptyroot").toString + "/t"
+    val empty = scratchDir("graft_emptyroot") + "/t"
     hfs.mkdirs(new org.apache.hadoop.fs.Path(empty))
     intercept[Exception](Layout.writeZoneManifest(spark, empty, "ts"))
     assert(SnapshotManifest.currentSnap(spark, empty).isEmpty)
     // the table's parent directory: no bucket directory directly below
-    val parent = Files.createTempDirectory("graft_mistyped").toString
+    val parent = scratchDir("graft_mistyped")
     val df = (1 to 100).map(i => (s"SYM${i % 4}", i.toLong))
       .toDF("symbol", "ts")
     Layout.writeClustered(df, parent + "/t", "symbol", "ts", numBuckets = 4)
@@ -1150,7 +1149,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("append write + read-back echo (S3/U1)") {
-    val dir = Files.createTempDirectory("graft_append").toString + "/t"
+    val dir = scratchDir("graft_append") + "/t"
     Seq(("AAA", 1, 10.0)).toDF("symbol", "ts", "close")
       .write.mode("append").parquet(dir)
     Seq(("BBB", 2, 20.0)).toDF("symbol", "ts", "close")

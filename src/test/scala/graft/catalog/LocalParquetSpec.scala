@@ -15,8 +15,7 @@ import graft.SparkSpec
 class LocalParquetSpec extends SparkSpec {
 
   private def roundTrip(schema: StructType, rows: Seq[Row]): Unit = {
-    val base = java.nio.file.Files
-      .createTempDirectory("local_parquet_spec").toString
+    val base = scratchDir("local_parquet_spec")
     val sparkDir = s"$base/spark"
     val localDir = s"$base/local"
     spark.createDataFrame(
@@ -86,8 +85,7 @@ class LocalParquetSpec extends SparkSpec {
       Row("sym_bucket=0/a.parquet", 3L, java.sql.Date.valueOf("1998-12-01"),
         java.sql.Timestamp.valueOf("1997-06-15 12:34:56.789123"), -0.0),
       Row(null, 0L, null, null, null))
-    val base = java.nio.file.Files
-      .createTempDirectory("local_parquet_read").toString
+    val base = scratchDir("local_parquet_read")
     val conf = spark.sparkContext.hadoopConfiguration
     // Spark's default INT96 timestamps are outside readAll's set (it
     // declines them); manifest parts carry INT64 microseconds

@@ -4,7 +4,6 @@ import graft.SparkSpec
 import graft.analytics.StatsCache
 import graft.pipeline.IvfIndex
 import org.apache.hadoop.fs.Path
-import java.nio.file.Files
 
 /** The one commit protocol: artifacts named by an older writer keep
   * loading and vacuuming under it. */
@@ -35,7 +34,7 @@ class SnapshotManifestSpec extends SparkSpec {
   test("an IVF index and a stats cache named snap_<nanoTime> still load and vacuum") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val queries = emb.filter($"vec_id" < 3)
-    val ivfPath = Files.createTempDirectory("graft_nanoivf").toString + "/idx"
+    val ivfPath = scratchDir("graft_nanoivf") + "/idx"
     val built = IvfIndex.build(emb, "vec_id", "embedding", nCells = 8)
     def ans(i: IvfIndex) = i.topK(queries, "embedding", k = 5, nProbe = 2)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
@@ -48,7 +47,7 @@ class SnapshotManifestSpec extends SparkSpec {
     assert(ans(IvfIndex.load(spark, ivfPath)) == ans(built))
     built.close(); loaded.close()
 
-    val cacheDir = Files.createTempDirectory("graft_nanocache").toString + "/stats"
+    val cacheDir = scratchDir("graft_nanocache") + "/stats"
     val cache = new StatsCache(spark, cacheDir, Seq("symbol"))
     cache.writeBack(Seq(("AAA", 1.0), ("BBB", 2.0)).toDF("symbol", "cov"))
     val nanoCache = toNanoNames(cacheDir)

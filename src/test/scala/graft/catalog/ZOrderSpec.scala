@@ -2,7 +2,6 @@ package graft.catalog
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 class ZOrderSpec extends SparkSpec {
   import spark.implicits._
@@ -26,7 +25,7 @@ class ZOrderSpec extends SparkSpec {
   }
 
   test("z-ordered reads equal the plain filter on either or both dims") {
-    val dir = Files.createTempDirectory("graft_zorder").toString + "/t"
+    val dir = scratchDir("graft_zorder") + "/t"
     ZOrder.write(grid, dir, "x", "y", filesTarget = 16)
     def expect(p: org.apache.spark.sql.Column) =
       grid.filter(p).select($"id").as[Long].collect().toSet
@@ -58,8 +57,8 @@ class ZOrderSpec extends SparkSpec {
       when($"id" % 100 =!= 99, $"id" % 100)
         .otherwise(lit(1000000000L) + $"id").cast("long").as("x"),
       ($"id" / 100).cast("long").as("y"))
-    val uDir = Files.createTempDirectory("graft_zskew_u").toString + "/t"
-    val qDir = Files.createTempDirectory("graft_zskew_q").toString + "/t"
+    val uDir = scratchDir("graft_zskew_u") + "/t"
+    val qDir = scratchDir("graft_zskew_q") + "/t"
     ZOrder.write(skew, uDir, "x", "y", filesTarget = 16, equiDepth = false)
     ZOrder.write(skew, qDir, "x", "y", filesTarget = 16)
     val xSlice = Some((lit(10L), lit(19L))) // 10% of the dense region
@@ -80,7 +79,7 @@ class ZOrderSpec extends SparkSpec {
   }
 
   test("file skipping works on BOTH dimensions — the property a linear sort lacks") {
-    val dir = Files.createTempDirectory("graft_zorder_skip").toString + "/t"
+    val dir = scratchDir("graft_zorder_skip") + "/t"
     ZOrder.write(grid, dir, "x", "y", filesTarget = 16)
     val total = ZOrder.manifest(spark, dir).count()
     assert(total >= 8) // enough files for skipping to be meaningful
@@ -118,7 +117,7 @@ class ZOrderSpec extends SparkSpec {
       ($"id" % 32).as("x"),
       (($"id" / 32) % 32).cast("long").as("y"),
       ($"id" / 1024).cast("long").as("w"))
-    val dir = Files.createTempDirectory("graft_zorder3").toString + "/t"
+    val dir = scratchDir("graft_zorder3") + "/t"
     ZOrder.writeN(cube, dir, Seq("x", "y", "w"), filesTarget = 16)
     val total = ZOrder.manifest(spark, dir).count()
     assert(total >= 8)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 class ZoneMapSpec extends SparkSpec {
   import spark.implicits._
 
-  private val path = System.getProperty("java.io.tmpdir") + "/graft_zm_spec"
+  private val path = scratchDir("graft_zm_spec")
 
   private def written() = {
     val fs = org.apache.hadoop.fs.FileSystem
@@ -48,7 +48,7 @@ class ZoneMapSpec extends SparkSpec {
   }
 
   test("write-time manifest: a range read opens ZERO non-matching data files") {
-    val cpath = System.getProperty("java.io.tmpdir") + "/graft_zm_manifest_spec"
+    val cpath = scratchDir("graft_zm_manifest_spec")
     val root = new org.apache.hadoop.fs.Path(cpath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(root, true)
@@ -87,7 +87,7 @@ class ZoneMapSpec extends SparkSpec {
   }
 
   test("Layout.read composes bucket pruning AND zone skipping") {
-    val cpath = System.getProperty("java.io.tmpdir") + "/graft_zm_layout_spec"
+    val cpath = scratchDir("graft_zm_layout_spec")
     val fs = new org.apache.hadoop.fs.Path(cpath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(cpath), true)

@@ -56,7 +56,7 @@ class BpeSpec extends SparkSpec {
   }
 
   test("save/load round-trip: a later session tokenizes identically without retraining") {
-    val root = java.nio.file.Files.createTempDirectory("graft_bpe").toString + "/tok"
+    val root = scratchDir("graft_bpe") + "/tok"
     Bpe.save(spark, Bpe.fixtureMerges, root)
     assert(Bpe.load(spark, root) == Bpe.fixtureMerges)
     // re-save (re-train) flips atomically; readers see the new table

@@ -13,7 +13,7 @@ class IndexIoSpec extends SparkSpec {
   private lazy val emb = spark.read.parquet(s"$sf/embeddings.parquet")
 
   test("a save crashed before its flip leaves every index kind on version 1") {
-    val root = java.nio.file.Files.createTempDirectory("graft_indexio").toString
+    val root = scratchDir("graft_indexio")
     val (ivf, pq, bpe, terms) =
       (s"$root/ivf", s"$root/pq", s"$root/bpe", s"$root/terms")
     def docs(ids: Range) =
@@ -59,8 +59,7 @@ class IndexIoSpec extends SparkSpec {
   }
 
   test("loading where nothing was saved is FileNotFoundException for every kind") {
-    val none = java.nio.file.Files.createTempDirectory("graft_noindex")
-      .toString + "/missing"
+    val none = scratchDir("graft_noindex") + "/missing"
     intercept[java.io.FileNotFoundException](IvfIndex.load(spark, none))
     intercept[java.io.FileNotFoundException](PqIndex.load(spark, none))
     intercept[java.io.FileNotFoundException](Bpe.load(spark, none))

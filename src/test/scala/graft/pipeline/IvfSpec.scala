@@ -51,7 +51,7 @@ class IvfSpec extends SparkSpec {
   }
 
   test("save/load round-trip: the reloaded index answers identically, no retraining") {
-    val path = java.nio.file.Files.createTempDirectory("graft_ivfio").toString + "/idx"
+    val path = scratchDir("graft_ivfio") + "/idx"
     val queries = emb.filter($"vec_id" < 3)
     val built = IvfIndex.build(emb, "vec_id", "embedding", nCells = 8)
     built.save(path)

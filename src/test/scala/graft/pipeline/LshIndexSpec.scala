@@ -12,8 +12,7 @@ import graft.ops.CacheScope
   * and dedupeAgainst admits only genuinely new docs. */
 class LshIndexSpec extends SparkSpec {
 
-  private val root = System.getProperty("java.io.tmpdir") + "/graft_lshidx_" +
-    java.util.UUID.randomUUID().toString.take(8)
+  private val root = scratchDir("graft_lshidx_")
 
   private def docs(rows: (Long, String)*) = {
     import spark.implicits._

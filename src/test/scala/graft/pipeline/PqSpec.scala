@@ -55,7 +55,7 @@ class PqSpec extends SparkSpec {
   }
 
   test("save/load round-trip: reloaded codebooks and codes answer identically") {
-    val path = java.nio.file.Files.createTempDirectory("graft_pqio").toString + "/idx"
+    val path = scratchDir("graft_pqio") + "/idx"
     val queries = emb.filter($"vec_id" < 4)
     val built = PqIndex.build(emb, "vec_id", "embedding", m = 8, nWords = 32)
     built.save(path)
@@ -135,7 +135,7 @@ class PqSpec extends SparkSpec {
     }
     // persistence: plain load refuses; loadResidual verifies the
     // coarse fingerprint and answers identically
-    val path = java.nio.file.Files.createTempDirectory("graft_rpqio").toString + "/idx"
+    val path = scratchDir("graft_rpqio") + "/idx"
     rpq.save(path)
     intercept[IllegalArgumentException] { PqIndex.load(spark, path) }
     val other = IvfIndex.build(un, "vec_id", "embedding", nCells = 4)
@@ -149,7 +149,7 @@ class PqSpec extends SparkSpec {
 
   test("reloaded residual IVF-PQ: one probe call runs ≤ 4 jobs and is exact at full probe") {
     val coarse = IvfIndex.build(emb, "vec_id", "embedding", nCells = 8)
-    val path = java.nio.file.Files.createTempDirectory("graft_rpqjobs").toString + "/idx"
+    val path = scratchDir("graft_rpqjobs") + "/idx"
     val built = PqIndex.buildResidual(emb, "vec_id", "embedding", coarse,
       m = 8, nWords = 32)
     built.save(path)

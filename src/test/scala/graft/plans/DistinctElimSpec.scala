@@ -13,8 +13,7 @@ import graft.catalog.Tables
   * non-covering keys and post-join dedup keep the full plan. */
 class DistinctElimSpec extends SparkSpec with BeforeAndAfterAll {
 
-  private val root = System.getProperty("java.io.tmpdir") + "/graft_despec_" +
-    java.util.UUID.randomUUID().toString.take(8)
+  private val root = scratchDir("graft_despec_")
   private val tp = root + "/t"
 
   private def t: DataFrame = spark.read.parquet(tp)

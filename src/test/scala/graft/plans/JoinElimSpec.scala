@@ -15,8 +15,7 @@ import graft.catalog.Tables
   * keeps or refuses the rewrite. */
 class JoinElimSpec extends SparkSpec with BeforeAndAfterAll {
 
-  private val root = System.getProperty("java.io.tmpdir") + "/graft_jespec_" +
-    java.util.UUID.randomUUID().toString.take(8)
+  private val root = scratchDir("graft_jespec_")
   private val cp = root + "/child"
   private val pp = root + "/parent"
 

@@ -15,8 +15,7 @@ import graft.catalog.Tables
   * plan on the base scan. */
 class MvRewriteSpec extends SparkSpec with BeforeAndAfterAll {
 
-  private val root = System.getProperty("java.io.tmpdir") + "/graft_mvspec_" +
-    java.util.UUID.randomUUID().toString.take(8)
+  private val root = scratchDir("graft_mvspec_")
   private val factPath = root + "/fact"
   private val mvPath = root + "/mv"
 
@@ -1553,5 +1552,100 @@ class MvRewriteSpec extends SparkSpec with BeforeAndAfterAll {
         (x.getString(0), x.getLong(1), x.getLong(2))).toSeq ==
         Seq(("a", 60L, 2L), ("b", 60L, 1L)))
     } finally MvCatalog.unregister(name)
+  }
+
+  /** The registered summary `name` equals, row for row, a fresh
+    * `build` of the same definition over the current base. */
+  private def assertFresh(name: String)(build: String => MvDef): Unit = {
+    val fresh = build(name + "_fresh")
+    try {
+      val exp = spark.read.parquet(fresh.mvPath)
+      def rows(df: DataFrame) =
+        df.select(exp.columns.map(col): _*).collect().map(_.toString).sorted.toSeq
+      val got = rows(spark.read.parquet(MvCatalog.get(name).get.mvPath))
+      assert(got == rows(exp), s"$got vs ${rows(exp)}")
+    } finally MvCatalog.unregister(fresh.name)
+  }
+
+  test("star log refresh folds a MAX column that is not a SUM measure") {
+    import spark.implicits._
+    val factP = root + "/mmc_fact"
+    val dimP = root + "/mmc_dim"
+    graft.catalog.Layout.writeClusteredZoned(
+      (1 to 100).map(i => (i.toLong % 10 + 1, i.toLong, i.toLong * 3))
+        .toDF("ck", "qty", "price"),
+      factP, "ck", "price", numBuckets = 2, filesPerBucket = 2)
+    graft.catalog.Layout.writeClusteredZoned(
+      (1 to 10).map(i => (i.toLong, s"G${i % 3}")).toDF("ck2", "seg"),
+      dimP, "seg", "ck2", numBuckets = 2, filesPerBucket = 2)
+    def build(name: String) = Mv.buildJoin(
+      spark.read.parquet(factP).select("ck", "qty", "price"),
+      spark.read.parquet(dimP).select("ck2", "seg"), name,
+      on = Seq("ck" -> "ck2"), dims = Seq("seg"), measures = Seq("qty"),
+      maxs = Seq("price"), mvPath = root + "/mv_" + name)
+    try {
+      build("mvspec_mmc")
+      graft.catalog.Layout.appendClusteredZoned(
+        Seq((3L, 7L, 5000L)).toDF("ck", "qty", "price"),
+        factP, "ck", "price", numBuckets = 2, filesPerBucket = 2)
+      Mv.refreshFromLog(spark, "mvspec_mmc")
+      assertFresh("mvspec_mmc")(build)
+    } finally MvCatalog.unregister("mvspec_mmc")
+  }
+
+  test("single-table log refresh guards a retraction on a MIN column that is not a SUM measure") {
+    import spark.implicits._
+    val base = root + "/mmc_single"
+    graft.catalog.Layout.writeClusteredZoned(
+      (1 to 100).map(i => (s"S${i % 2}", i.toLong, i.toLong * 3))
+        .toDF("sym", "qty", "price"),
+      base, "sym", "price", numBuckets = 2, filesPerBucket = 2)
+    def build(name: String) = Mv.build(spark.read.parquet(base), name,
+      Seq("sym"), measures = Seq("qty"), mvPath = root + "/mv_" + name,
+      mins = Seq("price"))
+    try {
+      build("mvspec_mmcs")
+      // an interior row (the group minima are 3 and 6)
+      graft.catalog.Layout.delete(spark, base, "price",
+        col("price") === 150L)
+      Mv.refreshFromLog(spark, "mvspec_mmcs") // dv-only restamp
+      graft.catalog.Layout.compact(spark, base, "sym", "price",
+        filesPerBucket = 2)
+      graft.catalog.Layout.vacuum(spark, base, retainPrevious = false)
+      Mv.refreshFromLog(spark, "mvspec_mmcs")
+      assertFresh("mvspec_mmcs")(build)
+    } finally MvCatalog.unregister("mvspec_mmcs")
+  }
+
+  test("job pins: the single-table log walker and builder") {
+    import spark.implicits._
+    val base = root + "/jobs_single"
+    def rows(r: Range) = r.map(i => (s"S${i % 2}", i.toLong, i.toLong * 3))
+      .toDF("sym", "qty", "price")
+    graft.catalog.Layout.writeClusteredZoned(rows(1 to 100), base, "sym",
+      "price", numBuckets = 2, filesPerBucket = 2)
+    def build(name: String) = Mv.build(spark.read.parquet(base), name,
+      Seq("sym"), measures = Seq("qty", "price"),
+      mvPath = root + "/mv_" + name, mins = Seq("price"))
+    def refresh = Mv.refreshFromLog(spark, "mvspec_jobs")
+    try {
+      val (_, nBuild) = jobsOf(build("mvspec_jobs"))
+      val (_, nIdle) = jobsOf(refresh)
+      graft.catalog.Layout.delete(spark, base, "price",
+        col("price") === 150L)
+      val (_, nDv) = jobsOf(refresh)
+      graft.catalog.Layout.appendClusteredZoned(rows(101 to 101), base,
+        "sym", "price", numBuckets = 2, filesPerBucket = 2)
+      val (_, nAppend) = jobsOf(refresh)
+      graft.catalog.Layout.compact(spark, base, "sym", "price",
+        filesPerBucket = 2)
+      graft.catalog.Layout.vacuum(spark, base, retainPrevious = false)
+      val (_, nCompact) = jobsOf(refresh)
+      val got = (nIdle, nDv, nAppend, nCompact, nBuild)
+      info(s"jobs (idle, dv, append, compact, build) = $got")
+      assert(nIdle == 0 && nDv == 0, got)
+      assert(nAppend <= 7 && nCompact <= 8 && nBuild <= 3, got)
+      assertFresh("mvspec_jobs")(build)
+    } finally MvCatalog.unregister("mvspec_jobs")
   }
 }

@@ -15,8 +15,7 @@ import graft.catalog.{SnapshotManifest, Tables}
   * pass — the rewrites fire again, fp stamps intact. */
 class RegistryStoreSpec extends SparkSpec with BeforeAndAfterAll {
 
-  private val root = System.getProperty("java.io.tmpdir") + "/graft_regspec_" +
-    java.util.UUID.randomUUID().toString.take(8)
+  private val root = scratchDir("graft_regspec_")
   private val regDir = root + "/registry"
   private val factP = root + "/fact"
   private val childP = root + "/child"

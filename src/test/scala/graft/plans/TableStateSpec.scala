@@ -12,8 +12,7 @@ import graft.catalog.Tables
   * however often it is consulted. */
 class TableStateSpec extends SparkSpec {
 
-  private val root = System.getProperty("java.io.tmpdir") + "/graft_tsspec_" +
-    java.util.UUID.randomUUID().toString.take(8)
+  private val root = scratchDir("graft_tsspec_")
 
   test("fingerprint holds on a no-op, moves on an append, empty stamp always matches") {
     import spark.implicits._

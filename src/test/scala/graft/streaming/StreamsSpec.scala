@@ -86,7 +86,7 @@ class StreamsSpec extends SparkSpec {
 
   test("upsertSink: streaming aggregation merges into a keyed snapshot table") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_sink").toString + "/bal"
+    val dir = scratchDir("graft_sink") + "/bal"
     val mem = MemoryStream[(Long, Double)]
     val agg = Streams.balanceStream(mem.toDF().toDF("user_id", "value"), "user_id")
     val q = Streams.upsertSink(agg, dir, Seq("user_id"))
@@ -104,7 +104,7 @@ class StreamsSpec extends SparkSpec {
 
   test("mvRefreshSink maintains a FILTERED bitmap-distinct MV: epochs fold only the slice, re-inserted ids count once") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_fmv").toString
+    val dir = scratchDir("graft_fmv")
     val base = dir + "/base"
     val name = "streamspec_fmv"
     Seq(("a", "K", 10L), ("a", "J", 20L), ("b", "K", 30L))
@@ -144,7 +144,7 @@ class StreamsSpec extends SparkSpec {
 
   test("viewSink maintains a retractable view across epochs; deletes retract; GC keeps last 2") {
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft_view").toString + "/v"
+    val root = scratchDir("graft_view") + "/v"
     val mem = MemoryStream[(String, Double, String)]
     val q = Streams.viewSink(
       mem.toDF().toDF("k", "v", "_change_type"), root, Seq("k"), Seq("v"))
@@ -177,7 +177,7 @@ class StreamsSpec extends SparkSpec {
 
   test("viewSink high-water guard skips re-delivered epochs after a lost checkpoint") {
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft_view_hw").toString + "/v"
+    val root = scratchDir("graft_view_hw") + "/v"
     val mem = MemoryStream[(String, Double, String)]
     val q = Streams.viewSink(
       mem.toDF().toDF("k", "v", "_change_type"), root, Seq("k"), Seq("v"))
@@ -266,7 +266,7 @@ class StreamsSpec extends SparkSpec {
 
   test("scd2Sink maintains type-2 history incrementally across micro-batches") {
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft_scd2").toString + "/dim"
+    val root = scratchDir("graft_scd2") + "/dim"
     val mem = MemoryStream[(Int, Long, Long, String)]
     val changes = mem.toDF().toDF("k", "ts", "ord", "attr")
     val q = Streams.scd2Sink(changes, root, Seq("k"), "ts", "ord", Seq("attr"))
@@ -292,7 +292,7 @@ class StreamsSpec extends SparkSpec {
 
   test("scd2Sink write is incremental: a 1-key epoch rewrites exactly 1 bucket") {
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft_scd2i").toString + "/dim"
+    val root = scratchDir("graft_scd2i") + "/dim"
     val mem = MemoryStream[(Int, Long, Long, String)]
     val changes = mem.toDF().toDF("k", "ts", "ord", "attr")
     val q = Streams.scd2Sink(changes, root, Seq("k"), "ts", "ord", Seq("attr"),
@@ -341,7 +341,7 @@ class StreamsSpec extends SparkSpec {
 
   test("scd2Sink restart from checkpoint resumes mid-stream without re-merging") {
     implicit val sqlCtx = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft_scd2r").toString
+    val base = scratchDir("graft_scd2r")
     val root = base + "/dim"
     val ckpt = base + "/ckpt"
     val mem = MemoryStream[(Int, Long, Long, String)]
@@ -377,7 +377,7 @@ class StreamsSpec extends SparkSpec {
 
   test("scd2Sink high-water guard ignores re-delivered epochs after a lost checkpoint") {
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft_scd2hw").toString + "/dim"
+    val root = scratchDir("graft_scd2hw") + "/dim"
     val mem = MemoryStream[(Int, Long, Long, String)]
     val changes = mem.toDF().toDF("k", "ts", "ord", "attr")
     // no checkpoint: each incarnation gets a temp checkpoint and epoch
@@ -406,7 +406,7 @@ class StreamsSpec extends SparkSpec {
   test("scd2Sink zone rows let scd2History prune reads by key and valid_from range") {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.functions.{lit, pmod, xxhash64}
-    val root = java.nio.file.Files.createTempDirectory("graft_scd2z").toString + "/dim"
+    val root = scratchDir("graft_scd2z") + "/dim"
     val nB = 8
     // two keys in DIFFERENT buckets, with disjoint valid_from ranges —
     // the setup where both prunings have something to skip
@@ -583,8 +583,7 @@ class StreamsSpec extends SparkSpec {
 
   test("ingestSink lands epochs in the Layout; high-water guard stops replays") {
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_ingest_spec").toString + "/tbl"
+    val root = scratchDir("graft_ingest_spec") + "/tbl"
     def row(i: Long) =
       (i, java.sql.Timestamp.valueOf(f"2024-01-${i % 27 + 1}%02d 00:00:00"),
         s"s${i % 3}", i.toDouble)
@@ -618,7 +617,7 @@ class StreamsSpec extends SparkSpec {
 
   test("mvLogRefreshSink: exactly-once ingest + log-driven star heal, idempotent after stop") {
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft_mvlog").toString
+    val root = scratchDir("graft_mvlog")
     val factP = root + "/fact"
     val dimP = root + "/dim"
     val name = "spec_mvlog"
@@ -666,7 +665,7 @@ class StreamsSpec extends SparkSpec {
 
   test("corpusDedupSink self-compacts the index once parts exceed the threshold") {
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft_cds").toString
+    val root = scratchDir("graft_cds")
     val idx = root + "/idx"
     val outP = root + "/admitted"
     graft.pipeline.LshIndex.build(
