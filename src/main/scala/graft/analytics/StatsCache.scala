@@ -22,11 +22,10 @@ import graft.catalog.SnapshotManifest
   *
   * Concurrency: many readers, and write-backs from any number of
   * writers. A write-back stages its merged rows in a fresh `snap_*`
-  * directory and publishes it with
-  * [[graft.catalog.SnapshotManifest.casFlip]] against the snapshot it
-  * merged from — the
-  * [[graft.plans.RegistryStore.persist]] discipline: a writer that
-  * lost the race deletes its staged directory, re-merges over the
+  * directory and publishes it compare-and-swap against the snapshot it
+  * merged from, through the one retry loop
+  * ([[graft.catalog.SnapshotManifest.publish]]): a writer that lost
+  * the race has its staged directory deleted, re-merges over the
   * winner's snapshot and retries (bounded attempts), so two racing
   * write-backs both land. Run [[vacuum]] after a grace period
   * covering the longest in-flight read of the previous snapshot.
@@ -49,10 +48,8 @@ class StatsCache(spark: SparkSession, root: String, keyCols: Seq[String]) {
   /** Upsert freshly computed stats (stamped with updated_at). */
   def writeBack(fresh: DataFrame): Unit = {
     val stamped = fresh.withColumn("updated_at", current_timestamp())
-    val fs = SnapshotManifest.fsOf(spark, root)
-    var attempts = 0
-    while (attempts < 5) {
-      val expected = SnapshotManifest.currentSnap(spark, root)
+    SnapshotManifest.publish(spark, root, "stats cache write-back",
+        "statscache-before-flip") { expected =>
       val merged = read(expected) match {
         case Some(existing) =>
           Kernels.upsert(existing,
@@ -61,15 +58,8 @@ class StatsCache(spark: SparkSession, root: String, keyCols: Seq[String]) {
       }
       val snap = SnapshotManifest.newSnapName()
       merged.write.mode("overwrite").parquet(new Path(root, snap).toString)
-      SnapshotManifest.failpoint("statscache-before-flip")
-      if (SnapshotManifest.casFlip(spark, root, snap, expected)) return
-      // lost the race: discard the staged snapshot, re-merge, retry
-      fs.delete(new Path(root, snap), true)
-      attempts += 1
+      Some(SnapshotManifest.PointerOffer(snap))
     }
-    throw new IllegalStateException(
-      s"stats cache write-back at $root: lost the concurrent-commit race " +
-        s"$attempts times — serialize write-backs or retry later")
   }
 
   /** Drop all snapshots except the current one. */

@@ -2,7 +2,7 @@ package graft.catalog
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
 /** Storage layout for the fact table — the Spark analog of the
   * reference's clustered composite PK `Stocks(symbol, timestamp)`
@@ -41,6 +41,17 @@ import org.apache.hadoop.fs.Path
   * each other's parts — the loser throws
   * [[SnapshotManifest.ConcurrentCommitException]] and retries
   * against the winner's snapshot.
+  *
+  * ONE READER, ONE LISTER, ONE LIVE-ROW SCAN: this object is the only
+  * reader of a Layout snapshot log's parts — the hop classifiers of
+  * [[graft.plans.TableState]] read fresh files, provenance and part
+  * row counts through it, on the driver and without a Spark job. The
+  * part kinds (`m_` zone manifest, `dv_` deletion vector, `bf_` bloom
+  * index, `rw_`/`rs_` maintenance provenance) and the provenance name
+  * format are known here alone. Every walk of a table's data files is
+  * [[listData]] (Spark's listing rule, optionally scoped to the
+  * `sym_bucket=` directories), and every merge-on-read scan is
+  * [[liveScan]] (scan, drop the deletion vector's positions).
   */
 object Layout {
   import SnapshotManifest.failpoint
@@ -109,7 +120,10 @@ object Layout {
     * files a crashed append/compact may have left, or they are
     * resurrected into the new snapshot. */
   def writeZoneManifest(spark: SparkSession, path: String, time: String): Unit = {
-    val (schema, rows) = zoneRows(spark, path, time)
+    val files =
+      try listData(SnapshotManifest.fsOf(spark, path), new Path(path), buckets = true)
+      catch { case _: java.io.FileNotFoundException => Nil }
+    val (schema, rows) = zoneRows(spark, path, time, files)
     commitPart(spark, path, schema, rows)
   }
 
@@ -150,7 +164,7 @@ object Layout {
     // (a distributed footer-merge JOB) only for genuinely
     // heterogeneous parts.
     val sts =
-      try dataFiles(SnapshotManifest.fsOf(spark, path), ps.map(new Path(_)))
+      try partFiles(spark, path, parts.filter(_.startsWith("m_")))
       catch { case scala.util.control.NonFatal(_) => Seq.empty }
     LocalParquet.readAll(
         spark.sparkContext.hadoopConfiguration, sts) match {
@@ -187,14 +201,37 @@ object Layout {
     (snap, snap.fold(Seq.empty[String])(SnapshotManifest.partsOf(spark, path, _)))
   }
 
-  /** Data files directly under `dirs` — Spark's listing rule: names
-    * starting with `_` or `.` (markers, checksums) are not data. */
-  private def dataFiles(fs: org.apache.hadoop.fs.FileSystem,
-                        dirs: Seq[Path]): Seq[org.apache.hadoop.fs.FileStatus] =
-    dirs.flatMap(d => fs.listStatus(d).toSeq).filter { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
+  /** THE data-file lister: every walk of a table's data files, and of
+    * a manifest part's files, is this one. Spark's listing rule: a
+    * path component that starts with `_` or `.` (markers, checksums,
+    * the snapshot log itself) is not data. `buckets` scopes the walk
+    * to the files directly inside `root`'s `sym_bucket=` directories —
+    * a Layout table's data files, all that [[vacuum]] may reclaim;
+    * otherwise every visible file at any depth (a plain parquet
+    * directory, a manifest part). Returns each file's path relative to
+    * `root` with its status; a missing `root` throws. */
+  private[graft] def listData(fs: FileSystem, root: Path,
+                              buckets: Boolean = false): Seq[(String, FileStatus)] = {
+    def walk(dir: Path, rel: String, depth: Int): Seq[(String, FileStatus)] =
+      fs.listStatus(dir).toSeq.flatMap { st =>
+        val n = st.getPath.getName
+        val r = if (rel.isEmpty) n else s"$rel/$n"
+        if (n.startsWith("_") || n.startsWith(".")) Nil
+        else if (st.isDirectory) {
+          if (!buckets || depth == 0 && n.startsWith("sym_bucket="))
+            walk(st.getPath, r, depth + 1)
+          else Nil
+        } else if (!buckets || depth == 1) Seq(r -> st)
+        else Nil
+      }
+    walk(root, "", 0)
+  }
+
+  /** The files of the manifest parts `parts`. */
+  private def partFiles(spark: SparkSession, path: String,
+                        parts: Seq[String]): Seq[FileStatus] =
+    parts.flatMap(p => listData(SnapshotManifest.fsOf(spark, path),
+      new Path(SnapshotManifest.partPath(path, p))).map(_._2))
 
   /** The fixed schema of every `dv_*` part (what `spark.read` infers
     * from one, all fields nullable) — given to the reader, so building
@@ -202,12 +239,12 @@ object Layout {
   private val DvSchema = org.apache.spark.sql.types.StructType.fromDDL(
     "file STRING, sym_bucket BIGINT, row_index BIGINT")
 
-  /** The live deletion vector of a snapshot — union of its `dv_*`
+  /** The live deletion vector of a part list — union of its `dv_*`
     * parts, one row per deleted position (file, sym_bucket,
     * row_index) — or None when the snapshot carries no deletes. The
     * schema is a constant, so building the frame runs no job.
     *
-    * JOIN-STRATEGY PIN: the [[minusDv]] anti-join must never
+    * JOIN-STRATEGY PIN: the [[liveScan]] anti-join must never
     * degenerate — a tiny DV broadcasts (the common case), but a DV
     * that outgrew the broadcast threshold must degrade to a SHUFFLED
     * hash join, not a sort-merge (pointless double sort on position
@@ -217,10 +254,6 @@ object Layout {
     * from file statistics) against the session broadcast threshold;
     * oversized (or broadcast-disabled) DVs carry a `shuffle_hash`
     * hint on the build side. */
-  def deletionVectorAsOf(spark: SparkSession, path: String,
-                         snap: Option[String]): Option[DataFrame] =
-    partsAsOf(spark, path, snap).flatMap(deletionVector(spark, path, _))
-
   private def deletionVector(spark: SparkSession, path: String,
                              parts: Seq[String]): Option[DataFrame] = {
     val dv = parts.filter(_.startsWith("dv_"))
@@ -237,14 +270,53 @@ object Layout {
     }
   }
 
-  /** Σ rows of the part list's deletion vector, from the `dv_*` parts'
-    * footers — exact, and no job. */
-  private def dvRows(spark: SparkSession, path: String,
-                     parts: Seq[String]): Long =
+  /** Σ rows of the manifest parts `parts`, from their footers — exact,
+    * and no job. */
+  private[graft] def partRows(spark: SparkSession, path: String,
+                              parts: Seq[String]): Long =
     LocalParquet.footerRows(spark.sparkContext.hadoopConfiguration,
-      dataFiles(SnapshotManifest.fsOf(spark, path),
-        parts.filter(_.startsWith("dv_"))
-          .map(p => new Path(SnapshotManifest.partPath(path, p)))))
+      partFiles(spark, path, parts))
+
+  /** The rows of the manifest part `part` — None when it holds none.
+    * Emptiness and the schema come from the part's footers, so
+    * building the frame runs no job. */
+  private[graft] def partContent(spark: SparkSession, path: String,
+                                 part: String): Option[DataFrame] = {
+    val files = partFiles(spark, path, Seq(part))
+    val conf = spark.sparkContext.hadoopConfiguration
+    if (LocalParquet.footerRows(conf, files) == 0L) None
+    else Some(LocalParquet.sparkSchemaOf(conf, files.head.getPath)
+      .fold(spark.read)(spark.read.schema)
+      .parquet(SnapshotManifest.partPath(path, part)))
+  }
+
+  /** A maintenance commit's provenance part, as the hop classifiers
+    * ([[graft.plans.TableState]]) read it: a [[compact]]'s `rw_`
+    * change-data part (`rewrite`) or an [[expireBefore]]'s `rs_`
+    * dropped-file list, naming the snapshot `base` the commit
+    * rewrote. */
+  private[graft] final case class Provenance(part: String, base: String,
+                                             rewrite: Boolean)
+
+  /** THE provenance part name: `rw_<base>__<token>` for a rewrite,
+    * `rs_<base>__<token>` for an expiry. */
+  private def provenanceName(rewrite: Boolean, base: String): String =
+    s"${if (rewrite) "rw" else "rs"}_${base}__${SnapshotManifest.token()}"
+
+  /** THE provenance-name parser; None for every other part kind. */
+  private[graft] def provenanceOf(part: String): Option[Provenance] =
+    if (part.startsWith("rw_") || part.startsWith("rs_"))
+      Some(Provenance(part, part.drop(3).split("__")(0), part.startsWith("rw_")))
+    else None
+
+  /** Is `parts` a bare maintenance commit carrying `p`: ONE folded zone
+    * part plus the provenance? An expiry may also carry deletion-vector
+    * and bloom parts, which add no plain rows. Anything else means the
+    * history between `p.base` and this commit was pruned. */
+  private[graft] def bareMaintenance(parts: Seq[String], p: Provenance): Boolean =
+    parts.count(_.startsWith("m_")) == 1 &&
+      parts.forall(q => q == p.part || q.startsWith("m_") ||
+        !p.rewrite && (q.startsWith("dv_") || q.startsWith("bf_")))
 
   /** Scan the data files `rel` (manifest-relative names) of the table
     * at `path` — every Layout scan of live files is built here.
@@ -255,8 +327,9 @@ object Layout {
     * launches even for one footer. A footer without that key (a
     * non-Spark writer) or one that carries the partition column falls
     * back to the inference. */
-  private def scanFiles(spark: SparkSession, path: String, rel: Seq[String],
-                        mergeSchema: Boolean = false): DataFrame = {
+  private[graft] def scanFiles(spark: SparkSession, path: String,
+                               rel: Seq[String],
+                               mergeSchema: Boolean = false): DataFrame = {
     val r = spark.read.option("basePath", path)
     val reader =
       if (mergeSchema) r.option("mergeSchema", "true")
@@ -403,8 +476,9 @@ object Layout {
     SnapshotManifest.commit(spark, path, kept :+ part, Some(baseSnap))
   }
 
-  /** Per-file (bucket, zmin, zmax, n_rows) rows for the data files in
-    * the `sym_bucket=` directories under `root`, with paths RELATIVE
+  /** Per-file (bucket, zmin, zmax, n_rows) rows for `files`, the data
+    * files in the `sym_bucket=` directories under `root` ([[listData]]
+    * with `buckets`), with paths RELATIVE
     * to `root` and URI-DECODED (input_file_name returns escaped URIs;
     * see [[literalPath]]); driver memory bounded by FILE count.
     * `n_rows` is the file's PHYSICAL row count (the Delta `numRecords`
@@ -422,20 +496,19 @@ object Layout {
     * column-pruned aggregation job ([[zoneAgg]]); either path yields
     * identical rows and the schema [[zoneSchema]] (LayoutSpec pins
     * both). */
-  private def zoneRows(spark: SparkSession, root: String, time: String)
-      : (org.apache.spark.sql.types.StructType, Array[Row]) = {
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val qroot = fs.makeQualified(new Path(root)).toString
-    def rel(p: Path): String =
-      fs.makeQualified(p).toString.stripPrefix(qroot).stripPrefix("/")
-    zoneRowsFromFooters(spark, fs, root, time, rel).getOrElse {
+  private def zoneRows(spark: SparkSession, root: String, time: String,
+                       files: Seq[(String, FileStatus)])
+      : (org.apache.spark.sql.types.StructType, Array[Row]) =
+    zoneRowsFromFooters(spark, time, files).getOrElse {
+      val fs = SnapshotManifest.fsOf(spark, root)
+      val qroot = fs.makeQualified(new Path(root)).toString
       val agg = zoneAgg(spark, root, time)
       (agg.schema, agg.collect().map { r =>
-        Row(rel(new Path(new java.net.URI(r.getString(0)))),
+        Row(fs.makeQualified(new Path(new java.net.URI(r.getString(0))))
+            .toString.stripPrefix(qroot).stripPrefix("/"),
           r.get(1), r.get(2), r.get(3), r.get(4))
       })
     }
-  }
 
   /** The zone aggregation over every data file under `root` — the
     * fallback of [[zoneRows]]: one column-pruned aggregate job, plus
@@ -459,34 +532,25 @@ object Layout {
       StructField("zmax", dt), StructField("n_rows", LongType, nullable = false)))
   }
 
-  private def zoneRowsFromFooters(spark: SparkSession,
-                                  fs: org.apache.hadoop.fs.FileSystem,
-                                  root: String, time: String,
-                                  rel: Path => String)
+  private def zoneRowsFromFooters(spark: SparkSession, time: String,
+                                  files: Seq[(String, FileStatus)])
       : Option[(org.apache.spark.sql.types.StructType, Array[Row])] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val bucketRe = ".*sym_bucket=(-?\\d+)$".r
+    val bucketRe = "sym_bucket=(-?\\d+)/[^/]+".r
+    // no bucket files: a mistyped or empty root — the aggregation
+    // then fails loudly instead of an empty manifest being committed
+    if (files.isEmpty) return None
     try {
-      val files = fs.listStatus(new Path(root)).toSeq.flatMap {
-        case d if d.isDirectory &&
-            d.getPath.getName.startsWith("sym_bucket=") =>
-          fs.listStatus(d.getPath).toSeq.filter(f => f.isFile &&
-            f.getPath.getName.endsWith(".parquet"))
-        case _ => Seq.empty
-      }
-      // no bucket files: a mistyped or empty root — the aggregation
-      // then fails loudly instead of an empty manifest being committed
-      if (files.isEmpty) return None
-      val dt = LocalParquet.sparkSchemaOf(conf, files.head.getPath)
+      val dt = LocalParquet.sparkSchemaOf(conf, files.head._2.getPath)
         .flatMap(_.find(_.name == time)).getOrElse(return None).dataType
-      val zones = LocalParquet.footerZones(conf, files, time, dt)
+      val zones = LocalParquet.footerZones(conf, files.map(_._2), time, dt)
         .getOrElse(return None)
-      val rows = files.zip(zones).map { case (st, (n, mn, mx)) =>
-        val bucket: Long = st.getPath.getParent.toString match {
+      val rows = files.zip(zones).map { case ((rel, _), (n, mn, mx)) =>
+        val bucket: Long = rel match {
           case bucketRe(b) => b.toLong
           case _ => return None
         }
-        Row(rel(st.getPath), bucket, mn, mx, n)
+        Row(rel, bucket, mn, mx, n)
       }
       Some((zoneSchema(dt), rows.toArray))
     } catch { case scala.util.control.NonFatal(_) => None }
@@ -531,30 +595,15 @@ object Layout {
     migrateIfLegacy(spark, path, time)
     stageAppendPart(df, path, symbol, time, numBuckets, filesPerBucket,
       partName).foreach { part =>
-      // CAS retry (the RegistryStore.persist discipline): unlike the
-      // maintenance ops — whose FOLDED output depends on the snapshot
-      // they read, so a loser must recompute — an append's staged part
-      // is pure ADDITION, independent of the base. A loser re-reads
-      // the winner's part list and re-commits; two appenders racing
-      // one table both land, neither drops the other's parts. Bounded:
-      // a pathological stampede still surfaces the loss loudly.
-      var attempts = 0
-      var committed = false
-      while (!committed) {
-        val cur = SnapshotManifest.currentSnap(spark, path)
-        val parts = SnapshotManifest.currentParts(spark, path)
-          .getOrElse(Seq.empty) :+ part
-        // the crash/interleave window: data files staged, snapshot
-        // read, flip not yet attempted
-        failpoint("append-before-flip")
-        try {
-          SnapshotManifest.commit(spark, path, parts, Some(cur))
-          committed = true
-        } catch {
-          case e: SnapshotManifest.ConcurrentCommitException =>
-            attempts += 1
-            if (attempts >= 16) throw e
-        }
+      // unlike the maintenance ops — whose FOLDED output depends on the
+      // snapshot they read, so a loser must recompute — an append's
+      // staged part is pure ADDITION, independent of the base: it is
+      // staged once and re-offered on top of each winner's part list,
+      // so two appenders racing one table both land
+      SnapshotManifest.publish(spark, path, "Layout append",
+          "append-before-flip") { base =>
+        Some(SnapshotManifest.SnapOffer(base.fold(Seq.empty[String])(
+          SnapshotManifest.partsOf(spark, path, _)) :+ part, Seq(part)))
       }
     }
   }
@@ -566,8 +615,7 @@ object Layout {
     val rootP = new Path(path)
     val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(rootP) && SnapshotManifest.currentSnap(spark, path).isEmpty &&
-        fs.listStatus(rootP).exists(st => st.isDirectory &&
-          st.getPath.getName.startsWith("sym_bucket=")))
+        listData(fs, rootP, buckets = true).nonEmpty)
       writeZoneManifest(spark, path, time)
   }
 
@@ -607,9 +655,9 @@ object Layout {
     val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val stage = new Path(rootP, s".stage_${kind}_${SnapshotManifest.token()}")
     df.write.mode("overwrite").partitionBy("sym_bucket").parquet(stage.toString)
-    val staged = fs.listStatus(stage).exists(st => st.isDirectory &&
-      st.getPath.getName.startsWith("sym_bucket="))
-    val zones = if (staged) Some(zoneRows(spark, stage.toString, time)) else None
+    val staged = listData(fs, stage, buckets = true)
+    val zones =
+      if (staged.isEmpty) None else Some(zoneRows(spark, stage.toString, time, staged))
     zones.foreach(_._2.foreach { r =>
       val rel = r.getString(0)
       val dst = new Path(rootP, rel)
@@ -629,13 +677,41 @@ object Layout {
         col("_metadata.file_path"), "(sym_bucket=[^/]+/[^/]+)$", 1))
       .withColumn("__dv_pos", col("_metadata.row_index"))
 
-  /** Anti-join a position-stamped scan against a deletion vector —
-    * the merge-on-read apply. The DV side is position keys only
-    * (file, ordinal), tiny next to the data, so AQE broadcasts it. */
-  private def minusDv(scan: DataFrame, dv: DataFrame): DataFrame =
-    scan.join(dv,
-      scan("__dv_file") === dv("file") &&
-        scan("__dv_pos") === dv("row_index"), "left_anti")
+  /** Join a position-stamped scan against a deletion vector on the
+    * position key (file, ordinal). The DV side is position keys only,
+    * tiny next to the data, so AQE broadcasts it. */
+  private def atPositions(scan: DataFrame, dv: DataFrame,
+                          how: String): DataFrame =
+    scan.join(dv, scan("__dv_file") === dv("file") &&
+      scan("__dv_pos") === dv("row_index"), how)
+
+  /** THE live-row scan — the merge-on-read apply: the rows of `files`
+    * minus the positions `dv` covers, the position columns dropped
+    * unless `keepPos` (a deletion-vector writer addresses its hits by
+    * them). Without a DV and without `keepPos` it is the plain scan. */
+  private def liveScan(spark: SparkSession, path: String, files: Seq[String],
+                       dv: Option[DataFrame], keepPos: Boolean = false,
+                       mergeSchema: Boolean = false): DataFrame = {
+    val scan = scanFiles(spark, path, files, mergeSchema)
+    if (dv.isEmpty && !keepPos) scan
+    else {
+      val live = dv.fold(withPos(scan))(atPositions(withPos(scan), _, "left_anti"))
+      if (keepPos) live else live.drop("__dv_file", "__dv_pos")
+    }
+  }
+
+  /** The rows at the positions `dv` covers, in the files it names that
+    * `scanned` admits — what the deletion vector removed (the change
+    * feed's deletes, a compact's provenance) — or None when no such
+    * file remains. Scans only those files, bounded by the deletes. */
+  private def deletedRows(spark: SparkSession, path: String, dv: DataFrame,
+                          scanned: String => Boolean): Option[DataFrame] = {
+    val files = dv.select(col("file")).distinct().collect()
+      .map(_.getString(0)).filter(scanned) // bounded by FILE count
+    if (files.isEmpty) None
+    else Some(atPositions(withPos(scanFiles(spark, path, files.toSeq)), dv,
+      "left_semi").drop("__dv_file", "__dv_pos"))
+  }
 
   /** Merge-on-read DELETE via a deletion vector — O(matched rows)
     * written, ZERO data files rewritten (the Delta/Iceberg
@@ -672,9 +748,10 @@ object Layout {
     }
   }
 
-  /** The data files a part list's zone manifest references. */
-  private def manifestFiles(spark: SparkSession, path: String,
-                            parts: Seq[String]): Seq[String] =
+  /** The data files a part list's zone manifest references — read on
+    * the driver, no job. */
+  private[graft] def manifestFiles(spark: SparkSession, path: String,
+                                   parts: Seq[String]): Seq[String] =
     if (!parts.exists(_.startsWith("m_"))) Seq.empty
     else zoneManifest(spark, path, parts).select(col("file")).collect()
       .map(_.getString(0)).toSeq // bounded by FILE count
@@ -693,9 +770,8 @@ object Layout {
                           selector: DataFrame => DataFrame)
       : Option[(String, Long)] = {
     if (files.isEmpty) return None
-    val scanned = withPos(scanFiles(spark, path, files))
-    val survivors = deletionVector(spark, path, base)
-      .fold(scanned)(dv => minusDv(scanned, dv))
+    val survivors = liveScan(spark, path, files,
+      deletionVector(spark, path, base), keepPos = true)
     stageDv(spark, path, selector(survivors)
       .select(col("__dv_file").as("file"),
         col("sym_bucket").cast("long").as("sym_bucket"),
@@ -709,7 +785,7 @@ object Layout {
                       rows: DataFrame): Option[(String, Long)] = {
     val part = SnapshotManifest.stageFrame(spark, path,
       SnapshotManifest.newPartName("dv"), rows)
-    val n = dvRows(spark, path, Seq(part))
+    val n = partRows(spark, path, Seq(part))
     if (n > 0L) Some((part, n))
     else {
       SnapshotManifest.fsOf(spark, path)
@@ -792,7 +868,7 @@ object Layout {
           org.apache.spark.sql.types.StructField("file",
             org.apache.spark.sql.types.StringType))),
         dropped.map(r => Row(r.getString(0))),
-        s"rs_${baseSnap.get}__${SnapshotManifest.token()}")
+        provenanceName(rewrite = false, baseSnap.get))
       failpoint("expire-before-flip")
       SnapshotManifest.commit(spark, path,
         mPart +: (bfParts ++ dvParts ++ dvPart.map(_._1).toSeq) :+ rsPart,
@@ -831,28 +907,14 @@ object Layout {
     val fresh = pb.filterNot(pa)
     val insFiles = manifestFiles(spark, path, fresh)
     val freshDv = deletionVector(spark, path, fresh)
+    // window DVs are the only ones that can reference the fresh files
     val inserts =
       if (insFiles.isEmpty) None
-      else {
-        val sc = withPos(scanFiles(spark, path, insFiles))
-        // window DVs are the only ones that can reference these files
-        val lv = freshDv.fold(sc)(minusDv(sc, _))
-        Some(lv.drop("__dv_file", "__dv_pos")
-          .withColumn("_change_type", lit("insert")))
-      }
-    val deletes = freshDv.flatMap { dv =>
-      val ins = insFiles.toSet
-      val delFiles = dv.select(col("file")).distinct().collect()
-        .map(_.getString(0)).filterNot(ins) // bounded by FILE count
-      if (delFiles.isEmpty) None
-      else {
-        val sc = withPos(scanFiles(spark, path, delFiles.toIndexedSeq))
-        Some(sc.join(dv, sc("__dv_file") === dv("file") &&
-            sc("__dv_pos") === dv("row_index"), "left_semi")
-          .drop("__dv_file", "__dv_pos")
-          .withColumn("_change_type", lit("delete")))
-      }
-    }
+      else Some(liveScan(spark, path, insFiles, freshDv)
+        .withColumn("_change_type", lit("insert")))
+    val ins = insFiles.toSet
+    val deletes = freshDv.flatMap(deletedRows(spark, path, _, !ins(_)))
+      .map(_.withColumn("_change_type", lit("delete")))
     (inserts, deletes) match {
       case (Some(i), Some(d)) => i.unionByName(d)
       case (Some(i), None)    => i
@@ -1137,33 +1199,17 @@ object Layout {
     def processBucket(bucket: Long, rows: Array[Row])
         : (Array[String], Array[Row], Option[DataFrame]) = {
       org.apache.spark.sql.SparkSession.setActiveSession(spark)
-      val bdf0 = scanFiles(spark, path, rows.map(_.getString(0)).toSeq)
-      val (bdf, removedHere) = dvOpt match {
-        case Some(dv) if dvBuckets(bucket) =>
-          val posed = withPos(bdf0)
-          val bdv = dv.filter(col("sym_bucket") === bucket)
-          // provenance side scans ONLY the dv-touched FILES of this
-          // bucket (bounded by the deletes, not the bucket) — the
-          // rewrite side above already pays the full-bucket read once
-          // intersect with the bucket's LIVE files: in a table whose
-          // expiries predate the deletion-vector fold, dv entries may
-          // dangle onto expiry-dropped files, which must not resurrect
-          // a dead path here
-          val liveHere = rows.map(_.getString(0)).toSet
-          val dvFiles = bdv.select(col("file")).distinct().collect()
-            .map(_.getString(0)).filter(liveHere)
-          val rem =
-            if (dvFiles.isEmpty) None
-            else {
-              val touched = withPos(scanFiles(spark, path, dvFiles.toSeq))
-              Some(touched.join(bdv,
-                touched("__dv_file") === bdv("file") &&
-                  touched("__dv_pos") === bdv("row_index"), "left_semi")
-                .drop("__dv_file", "__dv_pos"))
-            }
-          (minusDv(posed, bdv).drop("__dv_file", "__dv_pos"), rem)
-        case _ => (bdf0, None)
-      }
+      val files = rows.map(_.getString(0)).toSeq
+      val bdv = dvOpt.filter(_ => dvBuckets(bucket))
+        .map(_.filter(col("sym_bucket") === bucket))
+      val bdf = liveScan(spark, path, files, bdv)
+      // provenance side scans ONLY the dv-touched FILES of this bucket
+      // (bounded by the deletes, not the bucket) — the rewrite side
+      // already pays the full-bucket read once — intersected with the
+      // bucket's LIVE files: in a table whose expiries predate the
+      // deletion-vector fold, dv entries may dangle onto
+      // expiry-dropped files, which must not resurrect a dead path here
+      val removedHere = bdv.flatMap(deletedRows(spark, path, _, files.toSet))
       // a fully-deleted bucket stages zero files — fold it to nothing
       val newRows = moveStaged(spark, path, s"compact_$bucket",
         bdf.repartitionByRange(filesPerBucket, col(time))
@@ -1212,7 +1258,7 @@ object Layout {
         .orElse(liveRows.headOption.map(r =>
           scanFiles(spark, path, Seq(r.getString(0))).limit(0)))
       val rwPart = removedSrc.map(SnapshotManifest.stageFrame(spark, path,
-        s"rw_${baseSnap.get}__${SnapshotManifest.token()}", _))
+        provenanceName(rewrite = true, baseSnap.get), _))
       failpoint("compact-before-flip")
       commitPart(spark, path, schema, folded,
         expected = Some(baseSnap), extraParts = rwPart.toSeq)
@@ -1248,11 +1294,8 @@ object Layout {
     val m = zoneManifest(spark, path, base)
     val files = m.select(col("file")).collect().map(_.getString(0))
     require(files.nonEmpty, s"recluster: $path has no live files")
-    val sc0 = scanFiles(spark, path, files.toSeq)
-    val live = deletionVector(spark, path, base) match {
-      case Some(dv) => minusDv(withPos(sc0), dv).drop("__dv_file", "__dv_pos")
-      case None => sc0
-    }
+    val live = liveScan(spark, path, files.toSeq,
+      deletionVector(spark, path, base))
     val (schema, rows) = moveStaged(spark, path, "recluster",
       live.drop("sym_bucket")
         .withColumn("sym_bucket", bucketOf(col(newSymbol), numBuckets))
@@ -1295,18 +1338,15 @@ object Layout {
     // annotations on m_-listed files — a dangling dv/bf entry must
     // not keep an expired file alive)
     val liveFiles = manifestFiles(spark, path, keepParts).toSet
+    val dead = listData(fs, rootP, buckets = true)
+      .collect { case (rel, st) if !liveFiles(rel) => st.getPath }
+    dead.foreach(fs.delete(_, false))
+    // a bucket directory this vacuum emptied goes too
+    dead.map(_.getParent).distinct
+      .foreach(d => if (fs.listStatus(d).isEmpty) fs.delete(d, false))
     fs.listStatus(rootP).foreach { st =>
-      val n = st.getPath.getName
-      if (st.isDirectory && n.startsWith(".stage_")) fs.delete(st.getPath, true)
-      else if (st.isDirectory && n.startsWith("sym_bucket=")) {
-        fs.listStatus(st.getPath).foreach { f =>
-          val name = f.getPath.getName
-          if (f.isFile && !name.startsWith("_") && !name.startsWith(".") &&
-              !liveFiles(n + "/" + name))
-            fs.delete(f.getPath, false)
-        }
-        if (fs.listStatus(st.getPath).isEmpty) fs.delete(st.getPath, false)
-      }
+      if (st.isDirectory && st.getPath.getName.startsWith(".stage_"))
+        fs.delete(st.getPath, true)
     }
   }
 
@@ -1340,7 +1380,7 @@ object Layout {
       if (unknown.isEmpty) 0L
       else scanFiles(spark, path, unknown.toSeq)
         .count() // footer-count job over ONLY the stat-less files
-    known + fallback - dvRows(spark, path, parts)
+    known + fallback - partRows(spark, path, parts.filter(_.startsWith("dv_")))
   }
 
   /** METADATA-SIZED JOIN SIDE — the cost-based broadcast decision made
@@ -1405,17 +1445,9 @@ object Layout {
           val rows = man.select(col("file"), col("n_rows")).collect()
           if (rows.isEmpty || rows.exists(_.isNullAt(1))) 0L
           else {
-            val fs = SnapshotManifest.fsOf(spark, path)
-            val rootP = new Path(path)
-            val sizes = scala.collection.mutable.HashMap.empty[String, Long]
-            fs.listStatus(rootP).foreach { st =>
-              if (st.isDirectory && st.getPath.getName.startsWith("sym_bucket="))
-                fs.listStatus(st.getPath).foreach { f =>
-                  if (f.isFile)
-                    sizes(st.getPath.getName + "/" + f.getPath.getName) =
-                      f.getLen
-                }
-            }
+            val sizes = listData(SnapshotManifest.fsOf(spark, path),
+              new Path(path), buckets = true)
+              .map { case (rel, st) => rel -> st.getLen }.toMap
             // a manifest file missing from the listing (mid-vacuum
             // race) contributes 0 bytes — conservative toward the
             // schema-width estimate, never an exception
@@ -1454,16 +1486,7 @@ object Layout {
     val rootP = new Path(path)
     val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(rootP)) return want.isEmpty
-    val got = Set.newBuilder[String]
-    fs.listStatus(rootP).foreach { st =>
-      if (st.isDirectory && st.getPath.getName.startsWith("sym_bucket="))
-        fs.listStatus(st.getPath).foreach { f =>
-          val n = f.getPath.getName
-          if (f.isFile && !n.startsWith("_") && !n.startsWith("."))
-            got += st.getPath.getName + "/" + n
-        }
-    }
-    got.result() == want
+    listData(fs, rootP, buckets = true).map(_._1).toSet == want
   }
 
   /** ONE catalog read composing BOTH prunings — what a real table
@@ -1546,12 +1569,10 @@ object Layout {
           else scanFiles(spark, path, Seq(any(0).getString(0)), mergeSchema)
             .limit(0)
         } else {
-          val scanned = scanFiles(spark, path, rel.toSeq, mergeSchema)
           // merge-on-read: drop positions the live deletion vector
           // covers (no-op when the snapshot carries no deletes)
-          val lv = deletionVector(spark, path, parts).fold(scanned)(
-            dv => minusDv(withPos(scanned), dv).drop("__dv_file", "__dv_pos"))
-          bucketPruned(lv)
+          bucketPruned(liveScan(spark, path, rel.toSeq,
+            deletionVector(spark, path, parts), mergeSchema = mergeSchema))
         }
       case None =>
         timeRange match {

@@ -38,13 +38,20 @@ import java.nio.charset.StandardCharsets
   * its target verbatim, and the vacuums keep whatever it names.
   *
   * Manifest tables [[commit]] a snap file listing their parts, parts
-  * staged through [[stageFrame]] / [[stageRows]]. Concurrency: many
-  * readers; writers commit compare-and-swap — [[commit]] with
-  * `expectedSnap`, or [[casFlip]] — so two writers racing can never
-  * silently drop each other's work: the loser gets
-  * [[ConcurrentCommitException]] (or `false`) and recomputes against
-  * the winner's version. Reclamation is the owner's: [[Layout.vacuum]]
-  * (keep-last-2), [[vacuumSnapDirs]] (keep the pointed-to dirs).
+  * staged through [[stageFrame]] / [[stageRows]]. This module writes
+  * a manifest table's log and reads its pointer and part NAMES; what
+  * a Layout part holds and how its name is built is read in one place,
+  * [[Layout]] — the one reader of Layout logs, hop classification
+  * included. Concurrency: many readers; writers commit
+  * compare-and-swap — [[commit]] with `expectedSnap`, or [[casFlip]] —
+  * so two writers racing can never silently drop each other's work.
+  * A one-shot maintenance op lets the loser's
+  * [[ConcurrentCommitException]] reach its caller; every writer that
+  * retries goes through the one retry loop, [[publish]] (re-read,
+  * re-offer, bounded attempts, the loser's staged files deleted), so
+  * the exception and `casFlip`'s `false` are handled nowhere else.
+  * Reclamation is the owner's: [[Layout.vacuum]] (keep-last-2),
+  * [[vacuumSnapDirs]] (keep the pointed-to dirs).
   *
   * [[testFailpoint]] / [[testInterleave]] are the one test hook of
   * every writer: a named [[failpoint]] sits in each stage→flip window.
@@ -213,14 +220,76 @@ object SnapshotManifest {
     * files (the registry store): under the directory's commit lock,
     * point `_latest` at `next` iff it still names `expected`
     * (`None` = "no pointer yet"). Returns false — flipping nothing —
-    * when a concurrent writer moved the pointer first; the caller
-    * re-reads, re-merges, and retries with a fresh version file. */
+    * when a concurrent writer moved the pointer first; [[publish]]
+    * then retries with a fresh version file. */
   def casFlip(spark: SparkSession, root: String, next: String,
               expected: Option[String]): Boolean =
     withLock(spark, root) {
       val cur = currentSnap(spark, root)
       if (cur == expected) { flip(spark, root, next); true } else false
     }
+
+  /** What one attempt of a [[publish]] writer offers on top of the
+    * version it read. */
+  private[graft] sealed trait Offer
+  /** A snap listing `parts` ([[commit]]), of which `fresh` are the
+    * writer's own staged parts. */
+  private[graft] final case class SnapOffer(parts: Seq[String],
+                                            fresh: Seq[String]) extends Offer
+  /** A version `name` the writer staged directly under the root — a
+    * version file or a snapshot directory — named in `_latest`
+    * ([[casFlip]]). */
+  private[graft] final case class PointerOffer(name: String) extends Offer
+
+  /** Attempts per [[publish]]. A writer loses an attempt only to a
+    * writer that flipped inside its read→flip window, and every round
+    * lets one writer through, so 16 lets 16 writers racing one root
+    * all land; losing 16 in a row means some writer flips in a tight
+    * loop, which retrying cannot outlast — the loser fails loudly
+    * instead of spinning. */
+  private val MaxAttempts = 16
+
+  /** THE compare-and-swap retry loop of every snapshot-log writer
+    * (Layout appends, LshIndex appends and compactions, the registry
+    * store, the stats cache). Each attempt reads the current version,
+    * asks `offer` what to publish on top of it (None: nothing to
+    * publish — returned as is), passes the writer's failpoint, then
+    * commits compare-and-swap. A writer that stages once re-offers
+    * the same staged files every attempt; one that restages (its
+    * content depends on the base) offers new ones, and a lost
+    * attempt's staged files that the next attempt does not offer
+    * again are deleted at once — after the last lost attempt, all of
+    * them. Returns the winning offer. */
+  private[graft] def publish[O <: Offer](spark: SparkSession, root: String,
+                                         what: String, failpointName: String)
+                                        (offer: Option[String] => Option[O])
+      : Option[O] = {
+    def staged(o: Option[O]): Seq[Path] = o.toSeq.flatMap {
+      case SnapOffer(_, fresh) => fresh.map(p => new Path(partPath(root, p)))
+      case PointerOffer(name) => Seq(new Path(root, name))
+    }
+    def discard(ps: Seq[Path]): Unit = ps.foreach(fsOf(spark, root).delete(_, true))
+    var lost: Option[O] = None
+    for (_ <- 1 to MaxAttempts) {
+      val base = currentSnap(spark, root)
+      val o = offer(base)
+      discard(staged(lost).diff(staged(o)))
+      if (o.isEmpty) return o
+      failpoint(failpointName)
+      val won = o.get match {
+        case SnapOffer(parts, _) =>
+          try { commit(spark, root, parts, Some(base)); true }
+          catch { case _: ConcurrentCommitException => false }
+        case PointerOffer(name) => casFlip(spark, root, name, base)
+      }
+      if (won) return o
+      lost = o
+    }
+    discard(staged(lost))
+    throw new IllegalStateException(s"$what at $root: lost the " +
+      s"concurrent-commit race $MaxAttempts times — another writer " +
+      "commits in a tight loop; serialize writers or retry later")
+  }
 
   /** Atomically replace `_latest` with `text` — a snap or directory
     * name, or a caller's own pointer text (scd2Sink's bucket map),

@@ -75,8 +75,4 @@ object Tables {
         case _ => df
       }
     } else readCached(spark, s"$sfDir/$name.parquet")
-
-  /** Register every table as a temp view for spark.sql use. */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    all.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
 }

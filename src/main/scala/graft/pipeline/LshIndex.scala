@@ -104,37 +104,20 @@ object LshIndex {
       m("id"), m("k").toInt, m("bands").toInt))
   }
 
-  /** Commit the staged `fresh` parts on top of the current snapshot,
-    * compare-and-swap: a racing writer that flips first makes this one
-    * re-read the (metadata-sized) part list and retry — the parts'
-    * content is independent of the base snapshot, so nothing is
-    * recomputed or rewritten. After 5 lost races the parts belong to
-    * no snapshot and are deleted at once instead of being left for a
-    * later vacuum. */
+  /** Commit the staged `fresh` parts on top of the current snapshot
+    * through [[SnapshotManifest.publish]]: the parts' content is
+    * independent of the base snapshot, so a loser only re-reads the
+    * (metadata-sized) part list and re-offers them; parts that no
+    * snapshot will list are deleted at once instead of being left for
+    * a later vacuum. */
   private def commitOnTop(spark: SparkSession, path: String, op: String,
-                          fresh: Seq[String]): Unit = {
-    var attempts = 0
-    while (attempts < 5) {
-      val base = SnapshotManifest.currentSnap(spark, path)
+                          fresh: Seq[String]): Unit =
+    SnapshotManifest.publish(spark, path, s"LshIndex.$op",
+        "lsh-before-flip") { base =>
       require(base.nonEmpty, s"LshIndex.$op: no index at $path; build first")
-      SnapshotManifest.failpoint("lsh-before-flip")
-      try {
-        SnapshotManifest.commit(spark, path,
-          SnapshotManifest.partsOf(spark, path, base.get) ++ fresh,
-          Some(base))
-        return
-      } catch {
-        case _: SnapshotManifest.ConcurrentCommitException =>
-          attempts += 1 // a racing writer won; re-read and retry
-      }
+      Some(SnapshotManifest.SnapOffer(
+        SnapshotManifest.partsOf(spark, path, base.get) ++ fresh, fresh))
     }
-    val fs = SnapshotManifest.fsOf(spark, path)
-    fresh.foreach(p =>
-      fs.delete(new Path(SnapshotManifest.partPath(path, p)), true))
-    throw new IllegalStateException(
-      s"LshIndex.$op at $path: lost the concurrent-commit race " +
-        s"$attempts times; serialize writers or retry later")
-  }
 
   /** REMOVE documents from the index — the retention/right-to-forget
     * path: when docs expire from the corpus, the index must stop
@@ -170,41 +153,32 @@ object LshIndex {
   def compactIndex(spark: SparkSession, path: String): Int = {
     val m = meta(spark, path)
     val id = m("id")
-    var attempts = 0
-    while (attempts < 5) {
-      val base = SnapshotManifest.currentSnap(spark, path).getOrElse(
-        throw new IllegalStateException(
-          s"LshIndex.compactIndex: no index at $path; build first"))
+    var nFolded = 0
+    // a racing appender that flips first is not in the folded parts:
+    // the loser refolds over the new state
+    SnapshotManifest.publish(spark, path, "LshIndex.compactIndex",
+        "lsh-before-flip") { b =>
+      val base = b.getOrElse(throw new IllegalStateException(
+        s"LshIndex.compactIndex: no index at $path; build first"))
       val parts = SnapshotManifest.partsOf(spark, path, base)
-      val nFolded = parts.size - 2
-      if (nFolded <= 0) return 0 // already one lb + one lf, no tombstones
-      def side(prefix: String): DataFrame = {
-        val live = spark.read.parquet(parts.filter(_.startsWith(prefix))
-          .map(p => SnapshotManifest.partPath(path, p)): _*)
-        val tomb = parts.filter(_.startsWith("lt_"))
-        if (tomb.isEmpty) live
-        else live.join(broadcast(spark.read.parquet(tomb.map(p =>
-            SnapshotManifest.partPath(path, p)): _*)),
-          Seq(id), "left_anti")
-      }
-      val fresh = Seq(writePart(spark, path, "lb_", side("lb_")),
-        writePart(spark, path, "lf_", side("lf_")))
-      try {
-        SnapshotManifest.commit(spark, path, fresh, Some(Some(base)))
-        return nFolded
-      } catch {
-        case _: SnapshotManifest.ConcurrentCommitException =>
-          // a racing appender flipped first: its batch is not in the
-          // folded parts — discard them and refold over the new state
-          val fs = SnapshotManifest.fsOf(spark, path)
-          fresh.foreach(p =>
-            fs.delete(new Path(SnapshotManifest.partPath(path, p)), true))
-          attempts += 1
+      nFolded = parts.size - 2
+      if (nFolded <= 0) None // already one lb + one lf, no tombstones
+      else {
+        def side(prefix: String): DataFrame = {
+          val live = spark.read.parquet(parts.filter(_.startsWith(prefix))
+            .map(p => SnapshotManifest.partPath(path, p)): _*)
+          val tomb = parts.filter(_.startsWith("lt_"))
+          if (tomb.isEmpty) live
+          else live.join(broadcast(spark.read.parquet(tomb.map(p =>
+              SnapshotManifest.partPath(path, p)): _*)),
+            Seq(id), "left_anti")
+        }
+        val fresh = Seq(writePart(spark, path, "lb_", side("lb_")),
+          writePart(spark, path, "lf_", side("lf_")))
+        Some(SnapshotManifest.SnapOffer(fresh, fresh))
       }
     }
-    throw new IllegalStateException(
-      s"LshIndex.compactIndex at $path: lost the concurrent-commit " +
-        s"race $attempts times; serialize writers or retry later")
+    nFolded max 0
   }
 
   /** Near-duplicate hits of `batch` against the INDEXED corpus:

@@ -70,17 +70,6 @@ private[graft] object PlanMatch {
     case other => Seq(other)
   }
 
-  /** Decompose a join condition into attr-name equality pairs; None if
-    * any conjunct is not a plain attribute equality. */
-  def equiPairs(cond: Expression): Option[Seq[(String, String)]] = {
-    val pairs = conjuncts(cond).map {
-      case EqualTo(a: AttributeReference, b: AttributeReference) =>
-        (a.name, b.name)
-      case _ => return None
-    }
-    Some(pairs)
-  }
-
   /** Canonical string form of a predicate conjunct, for the filtered-MV
     * subsumption test: attribute refs lose their qualifier (exprIds
     * never print in `.sql`), and symmetric equalities sort their

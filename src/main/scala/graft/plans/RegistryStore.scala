@@ -172,38 +172,26 @@ object RegistryStore {
     * flip + keep-last-2 prune).
     *
     * CONCURRENCY-SAFE: the flip is a compare-and-swap against the
-    * pointer observed at entry ([[SnapshotManifest.casFlip]], under
-    * the directory's commit lock). Two drivers declaring at once can
-    * no longer last-writer-win the whole store: the loser re-reads the
-    * winner's version, MERGES it into the live registries (fill-gaps —
-    * its own fresh declarations win by name), re-serializes, and
-    * retries with a fresh version file; bounded attempts, then a loud
-    * failure naming the directory. `exclude` suppresses the merge for
-    * the (kind, name) pairs being revoked (see [[writeThrough]]). */
+    * pointer read before the merge, through the one retry loop
+    * ([[SnapshotManifest.publish]]). Two drivers declaring at once can
+    * no longer last-writer-win the whole store: the loser deletes its
+    * version file, re-reads the winner's version, MERGES it into the
+    * live registries (fill-gaps — its own fresh declarations win by
+    * name), re-serializes, and retries with a fresh version file;
+    * bounded attempts, then a loud failure naming the directory.
+    * `exclude` suppresses the merge for the (kind, name) pairs being
+    * revoked (see [[writeThrough]]). */
   def persist(spark: SparkSession, dir: String,
               exclude: Set[(String, String)] = Set.empty): Unit = {
     val fs = SnapshotManifest.fsOf(spark, dir)
     fs.mkdirs(new Path(dir))
-    var attempts = 0
-    while (attempts < 5) {
-      val expected = SnapshotManifest.currentSnap(spark, dir)
+    SnapshotManifest.publish(spark, dir, "registry persist",
+        "registry-before-flip") { _ =>
       // merge any defs a concurrent driver persisted since our last
       // read — one small file read; live (newer) defs win by name
       loadExcluding(spark, dir, exclude)
-      val name = stageVersion(spark, dir)
-      SnapshotManifest.failpoint("registry-before-flip")
-      if (SnapshotManifest.casFlip(spark, dir, name, expected)) {
-        prune(fs, dir, name)
-        return
-      }
-      // lost the race: discard the staged file, re-merge, retry
-      fs.delete(new Path(dir, name), false)
-      attempts += 1
-    }
-    throw new IllegalStateException(
-      s"registry persist at $dir: lost the concurrent-commit race " +
-        s"$attempts times — a writer is flipping the pointer in a " +
-        "tight loop; serialize declaring drivers or retry later")
+      Some(SnapshotManifest.PointerOffer(stageVersion(spark, dir)))
+    }.foreach(o => prune(fs, dir, o.name))
   }
 
   /** Write the current registries as a fresh immutable version file

@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.catalog.SnapshotManifest
+import graft.catalog.{Layout, SnapshotManifest}
 
 /** Table-state fingerprints for the constraint/MV rewrite registries.
   *
@@ -22,13 +22,20 @@ import graft.catalog.SnapshotManifest
   *     `_latest` pointer — ONE tiny file read, the same token every
   *     maintenance op already CAS-commits against;
   *   - a plain directory → `ls:<files>:<bytes>:<maxMtime>` over its
-  *     recursively listed data files (hidden `_`/`.` components
-  *     skipped) — one listing, O(file count) metadata;
+  *     data files ([[Layout.listData]], Spark's listing rule) — one
+  *     listing, O(file count) metadata;
   *   - a single file → `f:<len>:<mtime>`.
   * Any append, delete, compact, or overwrite changes the value. The
   * check runs only AFTER a registry entry's path set has matched the
   * candidate plan, so queries that touch no registered table never
   * pay it.
+  *
+  * Hops between two stamps are read through [[Layout]], the one
+  * reader of a Layout snapshot log: this object classifies a step
+  * from its part NAMES (through Layout's provenance parser) and takes
+  * every part's content, every data-file listing and every hop scan
+  * from Layout's job-free metadata plane — classifying a window and
+  * building its frames runs no Spark job.
   */
 object TableState {
 
@@ -155,7 +162,11 @@ object TableState {
     *     metadata-only contract. Subset-safe consumers (PK
     *     uniqueness, FK child side) restamp; consumers that need the
     *     removed rows (FK parent side, MV retraction) refuse with
-    *     guidance. Same directory-equals-manifest gate as rewrites. */
+    *     guidance. Same directory-equals-manifest gate as rewrites.
+    *
+    * Every hop is read through [[Layout]]: the fresh files from the
+    * zone parts on the driver ([[Layout.manifestFiles]]), provenance
+    * from [[Layout.provenanceOf]], emptiness from part footers. */
   private[plans] sealed trait Hop { def from: String; def to: String }
   private[plans] case class AppendHop(from: String, to: String,
                                       freshFiles: Seq[String]) extends Hop
@@ -171,12 +182,6 @@ object TableState {
       s"$root is unknown or expired (vacuum retention is keep-last-2 " +
       "and compaction provenance reaches one hop back); re-verify " +
       "after each maintenance op, or re-declare against the current state")
-
-  private def rwBase(part: String): String =
-    part.stripPrefix("rw_").split("__")(0)
-
-  private def rsBase(part: String): String =
-    part.stripPrefix("rs_").split("__")(0)
 
   /** The hop chain `(from → to]` for one snapshot-logged root.
     * Retained snapshots form a contiguous SUFFIX of history (vacuum
@@ -204,71 +209,50 @@ object TableState {
     } else {
       // `from` vacuumed: find the compact/expiry commit whose
       // provenance names it — it must be the EARLIEST retained snap
-      // carrying that rw_/rs_ part AND look like a bare maintenance
-      // commit (one folded zone manifest + the provenance; expiry may
-      // also carry dv/bf annotation parts, which add no plain rows);
+      // carrying that provenance AND be a bare maintenance commit;
       // anything else means intermediate history was pruned and the
       // chain is unrecoverable
-      def marks(p: String): Boolean =
-        (p.startsWith("rw_") && rwBase(p) == from) ||
-          (p.startsWith("rs_") && rsBase(p) == from)
-      val hit = retained.view.map(s =>
-        s -> SnapshotManifest.partsOf(spark, root, s))
-        .find { case (_, parts) => parts.exists(marks) }
-        .getOrElse(expired(what, root, from))
-      val (snapE, parts) = hit
-      val mark = parts.find(marks).get
-      val bare =
-        if (mark.startsWith("rw_"))
-          parts.count(_.startsWith("m_")) == 1 &&
-            parts.forall(p => p == mark || p.startsWith("m_"))
-        else
-          parts.count(_.startsWith("m_")) == 1 &&
-            parts.forall(p => p == mark || p.startsWith("m_") ||
-              p.startsWith("dv_") || p.startsWith("bf_"))
-      if (!bare) expired(what, root, from)
-      val hop =
-        if (mark.startsWith("rw_")) RewriteHop(from, snapE, mark)
-        else shrinkOrNoop(spark, root, from, snapE, mark)
-      hop +: hopsFor(spark, root, snapE, to, what)
+      val (snapE, parts, mark) = retained.view.flatMap { s =>
+        val parts = SnapshotManifest.partsOf(spark, root, s)
+        provenanceNaming(parts, from).map((s, parts, _))
+      }.headOption.getOrElse(expired(what, root, from))
+      if (!Layout.bareMaintenance(parts, mark)) expired(what, root, from)
+      maintenanceHop(spark, root, from, snapE, mark) +:
+        hopsFor(spark, root, snapE, to, what)
     }
   }
+
+  /** The provenance part of `parts` naming `base`, if any. */
+  private def provenanceNaming(parts: Seq[String],
+                               base: String): Option[Layout.Provenance] =
+    parts.flatMap(Layout.provenanceOf).find(_.base == base)
 
   private def classifyPair(spark: SparkSession, root: String,
                            a: String, b: String, what: String): Hop = {
     val pa = SnapshotManifest.partsOf(spark, root, a).toSet
     val pb = SnapshotManifest.partsOf(spark, root, b)
     if (pa.subsetOf(pb.toSet)) {
-      val freshM = pb.filterNot(pa).filter(_.startsWith("m_"))
-      if (freshM.isEmpty) NoRowChangeHop(a, b)
-      else {
-        val files = spark.read.parquet(freshM.map(p =>
-            SnapshotManifest.partPath(root, p)): _*)
-          .select("file").collect().map(_.getString(0)).toSeq
-        if (files.isEmpty) NoRowChangeHop(a, b) else AppendHop(a, b, files)
-      }
-    } else pb.find(p => p.startsWith("rw_") && rwBase(p) == a) match {
-      case Some(rw) => RewriteHop(a, b, rw)
-      case None =>
-        pb.find(p => p.startsWith("rs_") && rsBase(p) == a) match {
-          case Some(rs) => shrinkOrNoop(spark, root, a, b, rs)
-          case None => throw new IllegalStateException(
-            s"$what: window $a -> $b at $root crosses a physical " +
-              "rewrite without maintenance provenance (recluster / " +
-              "re-create); re-declare against the current state")
-        }
+      val files = Layout.manifestFiles(spark, root, pb.filterNot(pa))
+      if (files.isEmpty) NoRowChangeHop(a, b) else AppendHop(a, b, files)
+    } else provenanceNaming(pb, a) match {
+      case Some(mark) => maintenanceHop(spark, root, a, b, mark)
+      case None => throw new IllegalStateException(
+        s"$what: window $a -> $b at $root crosses a physical " +
+          "rewrite without maintenance provenance (recluster / " +
+          "re-create); re-declare against the current state")
     }
   }
 
-  /** An expiry that dropped NO whole files (straddle-dv-only) left the
-    * plain read bit-identical — classify it as a free restamp instead
-    * of a conservative refusal. One tiny parquet read (the rs part is
-    * the dropped FILE LIST, O(dropped files)). */
-  private def shrinkOrNoop(spark: SparkSession, root: String,
-                           a: String, b: String, rs: String): Hop =
-    if (spark.read.parquet(SnapshotManifest.partPath(root, rs)).isEmpty)
+  /** The hop a maintenance commit's provenance marks. An expiry that
+    * dropped NO whole files (straddle-dv-only) left the plain read
+    * bit-identical — classified as a free restamp instead of a
+    * conservative refusal, from the `rs_` part's footer row count. */
+  private def maintenanceHop(spark: SparkSession, root: String, a: String,
+                             b: String, mark: Layout.Provenance): Hop =
+    if (mark.rewrite) RewriteHop(a, b, mark.part)
+    else if (Layout.partRows(spark, root, Seq(mark.part)) == 0L)
       NoRowChangeHop(a, b)
-    else ShrinkHop(a, b, rs)
+    else ShrinkHop(a, b, mark.part)
 
   /** One changed root's audited history: the stamped and current
     * snapshots plus the hop chain between them. */
@@ -305,7 +289,7 @@ object TableState {
         (seg(r).stripPrefix("snap:"), curSeg(r).stripPrefix("snap:"))
       val rc = RootChange(r, from, to, hopsFor(spark, r, from, to, what))
       if (rc.rewriteHops.nonEmpty || rc.shrinkHops.nonEmpty)
-        require(graft.catalog.Layout.directoryMatchesManifest(spark, r),
+        require(Layout.directoryMatchesManifest(spark, r),
           s"$what: $r was compacted/expired but the directory still " +
             "holds the superseded file generation (plain reads see the " +
             "removed rows until the full vacuum) — run Layout.vacuum(" +
@@ -322,18 +306,22 @@ object TableState {
     * re-verified before a later compact + full vacuum rewrote it)
     * fails with guidance rather than a bare missing-path error. */
   private[plans] def hopRows(spark: SparkSession, root: String,
-                             h: AppendHop, what: String)
-      : org.apache.spark.sql.DataFrame = {
-    val paths = h.freshFiles.map(f => graft.catalog.Layout.globEscape(
-      new Path(root, f).toString))
-    try spark.read.option("basePath", root).parquet(paths: _*)
+                             h: AppendHop, what: String): DataFrame =
+    scan(spark, root, h.freshFiles, s"$what: window ${h.from} -> ${h.to}")
+
+  /** THE hop scan: the data files `files` of `root`, planned through
+    * [[Layout.scanFiles]] (schema from a footer, no job). A file that a
+    * later compact + full vacuum reclaimed fails with guidance, naming
+    * `subject`, rather than a bare missing-path error. */
+  private def scan(spark: SparkSession, root: String, files: Seq[String],
+                   subject: String): DataFrame =
+    try Layout.scanFiles(spark, root, files)
     catch { case e: org.apache.spark.sql.AnalysisException =>
-      throw new IllegalStateException(s"$what: window ${h.from} -> " +
-        s"${h.to} at $root references vacuumed files — re-verify after " +
-        "each maintenance op (before a later compact + full vacuum " +
-        "rewrites the window), or re-declare", e)
+      throw new IllegalStateException(s"$subject at $root references " +
+        "vacuumed files — re-verify after each maintenance op (before a " +
+        "later compact + full vacuum rewrites the window), or re-declare " +
+        "against the current state", e)
     }
-  }
 
   /** Every append hop's fresh rows in `rc`'s window, unioned — the
     * insert batch the re-verifiers audit and the log refreshes fold.
@@ -362,37 +350,23 @@ object TableState {
     * same identity [[hopsFor]] classifies). O(manifest) driver
     * metadata + a normal distributed scan of the listed files. */
   private[plans] def pinnedRead(spark: SparkSession, root: String,
-                                snap: String, what: String)
-      : org.apache.spark.sql.DataFrame = {
-    val mParts = SnapshotManifest.partsOf(spark, root, snap)
-      .filter(_.startsWith("m_"))
-    val files = spark.read.parquet(mParts.map(p =>
-        SnapshotManifest.partPath(root, p)): _*)
-      .select("file").collect().map(_.getString(0)).toSeq
+                                snap: String, what: String): DataFrame = {
+    val files = Layout.manifestFiles(spark, root,
+      SnapshotManifest.partsOf(spark, root, snap))
     require(files.nonEmpty,
       s"$what: $root has no data files at audited snapshot $snap; " +
         "rebuild against the current state instead")
-    val paths = files.map(f => graft.catalog.Layout.globEscape(
-      new Path(root, f).toString))
-    try spark.read.option("basePath", root).parquet(paths: _*)
-    catch { case e: org.apache.spark.sql.AnalysisException =>
-      throw new IllegalStateException(s"$what: snapshot $snap at $root " +
-        "references vacuumed files — re-verify after each maintenance " +
-        "op, or re-declare against the current state", e)
-    }
+    scan(spark, root, files, s"$what: snapshot $snap")
   }
 
   /** The rows a rewrite hop materialized OUT of the plain read — the
     * compact commit's own `rw_*` change-data part, recorded at commit
     * time precisely so this audit survives the full vacuum that makes
     * the hop visible. None when the compact removed nothing (pure
-    * defragmentation / manifest fold). */
+    * defragmentation / manifest fold) — told by the part's footers. */
   private[plans] def removedRows(spark: SparkSession, root: String,
-                                 h: RewriteHop)
-      : Option[org.apache.spark.sql.DataFrame] = {
-    val df = spark.read.parquet(SnapshotManifest.partPath(root, h.rwPart))
-    if (df.isEmpty) None else Some(df)
-  }
+                                 h: RewriteHop): Option[DataFrame] =
+    Layout.partContent(spark, root, h.rwPart)
 
   /** Guard for the declaration-time audits: the caller's DataFrame
     * pinned its FILE LISTING when `spark.read.parquet` ran — possibly
@@ -422,19 +396,7 @@ object TableState {
       val p = new Path(r)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (!fs.exists(p)) Seq.empty[String]
-      else {
-        val qroot = fs.makeQualified(p).toString
-        val out = Seq.newBuilder[String]
-        val it = fs.listFiles(p, true)
-        while (it.hasNext) {
-          val f = it.next()
-          val rel = f.getPath.toString.stripPrefix(qroot).stripPrefix("/")
-          val hidden = rel.split('/')
-            .exists(c => c.startsWith("_") || c.startsWith("."))
-          if (!hidden) out += norm(f.getPath.toString)
-        }
-        out.result()
-      }
+      else Layout.listData(fs, p).map(f => norm(f._2.getPath.toString))
     }
     require(pinned == live,
       s"$what: the audited frame's file listing no longer matches the " +
@@ -472,20 +434,9 @@ object TableState {
     SnapshotManifest.currentSnap(spark, root) match {
       case Some(snap) => s"snap:$snap"
       case None =>
-        val qroot = fs.makeQualified(p).toString
-        var n = 0L; var bytes = 0L; var mt = 0L
-        val it = fs.listFiles(p, true)
-        while (it.hasNext) {
-          val f = it.next()
-          val rel = f.getPath.toString.stripPrefix(qroot).stripPrefix("/")
-          val hidden = rel.split('/')
-            .exists(c => c.startsWith("_") || c.startsWith("."))
-          if (!hidden) {
-            n += 1; bytes += f.getLen
-            if (f.getModificationTime > mt) mt = f.getModificationTime
-          }
-        }
-        s"ls:$n:$bytes:$mt"
+        val files = Layout.listData(fs, p).map(_._2)
+        s"ls:${files.size}:${files.map(_.getLen).sum}:" +
+          files.map(_.getModificationTime).foldLeft(0L)(_ max _)
     }
   }
 }

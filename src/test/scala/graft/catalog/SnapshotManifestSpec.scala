@@ -62,4 +62,103 @@ class SnapshotManifestSpec extends SparkSpec {
     cache.vacuum()
     assert(snapDirs(cacheDir) == Set(SnapshotManifest.currentSnap(spark, cacheDir).get))
   }
+
+  /** Arm `point` so each pass runs `compete` — a competing commit — and
+    * re-arms: a writer reaching it loses every race. Returns the
+    * versions the competitor published, in order. */
+  private def loseEvery(root: String, point: String)(compete: => Unit)
+      : scala.collection.mutable.Buffer[String] = {
+    val won = scala.collection.mutable.Buffer.empty[String]
+    lazy val thunk: () => Unit = () => {
+      compete
+      won += SnapshotManifest.currentSnap(spark, root).get
+      SnapshotManifest.testInterleave = Some((point, thunk))
+    }
+    SnapshotManifest.testInterleave = Some((point, thunk))
+    won
+  }
+
+  /** A competing commit of a manifest table: the current parts again,
+    * as a new snapshot. */
+  private def recommit(root: String): Unit =
+    SnapshotManifest.commit(spark, root,
+      SnapshotManifest.currentParts(spark, root).get)
+
+  /** `write` exhausts the retry loop: the error names the root and says
+    * to serialize writers. */
+  private def givesUp(root: String)(write: => Unit): Unit = {
+    val e = intercept[IllegalStateException] {
+      try write finally SnapshotManifest.testInterleave = None
+    }
+    assert(e.getMessage.contains(root) &&
+      e.getMessage.contains("serialize writers"), e.getMessage)
+  }
+
+  private def names(dir: String): Set[String] =
+    hfs.listStatus(new Path(dir)).map(_.getPath.getName).toSet
+
+  test("a writer that loses every race gives up, leaves the competitor's version and no staged files") {
+    // Layout append (stages once): readers see the competitor's last
+    // snapshot without the loser's row; its staged part is deleted
+    val t = scratchDir("graft_cas_lose") + "/t"
+    def rows(ts: Long) = Seq(("S1", ts, 1.0)).toDF("symbol", "ts", "v")
+    Layout.writeClusteredZoned(rows(1L), t, "symbol", "ts",
+      numBuckets = 2, filesPerBucket = 1)
+    val appends = loseEvery(t, "append-before-flip")(recommit(t))
+    givesUp(t)(Layout.appendClusteredZoned(rows(0L), t, "symbol", "ts",
+      numBuckets = 2, filesPerBucket = 1))
+    assert(SnapshotManifest.currentSnap(spark, t) == appends.lastOption)
+    assert(Layout.read(spark, t, "symbol", "ts", numBuckets = 2)
+      .select($"ts").as[Long].collect().toSeq == Seq(1L))
+    assert(names(s"$t/_manifests") ==
+      SnapshotManifest.currentParts(spark, t).get.toSet)
+
+    // LshIndex append (stages once)
+    val lsh = scratchDir("graft_cas_lose") + "/lsh"
+    def doc(id: Long) = Seq((id, s"doc $id alpha beta gamma delta"))
+      .toDF("doc_id", "text")
+    graft.pipeline.LshIndex.build(doc(1L), lsh, "doc_id", "text")
+    val lshAppends = loseEvery(lsh, "lsh-before-flip")(recommit(lsh))
+    givesUp(lsh)(graft.pipeline.LshIndex.append(doc(0L), lsh))
+    assert(SnapshotManifest.currentSnap(spark, lsh) == lshAppends.lastOption)
+    assert(names(s"$lsh/_manifests") ==
+      SnapshotManifest.currentParts(spark, lsh).get.toSet)
+
+    // RegistryStore.persist (restages): only the competitor's version
+    // files remain
+    val reg = scratchDir("graft_cas_lose") + "/reg"
+    graft.plans.RegistryStore.persist(spark, reg)
+    val first = SnapshotManifest.currentSnap(spark, reg).get
+    val persisted = loseEvery(reg, "registry-before-flip") {
+      graft.plans.RegistryStore.persist(spark, reg)
+    }
+    givesUp(reg)(graft.plans.RegistryStore.persist(spark, reg))
+    assert(SnapshotManifest.currentSnap(spark, reg) == persisted.lastOption)
+    val versions = names(reg).filter(_.startsWith("reg_"))
+    assert(versions.contains(persisted.last) &&
+      versions.subsetOf(persisted.toSet + first), versions.toString)
+
+    // StatsCache.writeBack (restages): the competitor publishes a copy
+    // of the current snapshot each time; readers see it without the
+    // loser's key, and no staged snapshot directory remains
+    val dir = scratchDir("graft_cas_lose") + "/stats"
+    new StatsCache(spark, dir, Seq("symbol"))
+      .writeBack(Seq(("K0", 0.0)).toDF("symbol", "cov"))
+    val firstSnap = SnapshotManifest.currentSnap(spark, dir).get
+    val written = loseEvery(dir, "statscache-before-flip") {
+      val next = SnapshotManifest.newSnapName()
+      org.apache.hadoop.fs.FileUtil.copy(hfs,
+        new Path(dir, SnapshotManifest.currentSnap(spark, dir).get), hfs,
+        new Path(dir, next), false, spark.sparkContext.hadoopConfiguration)
+      SnapshotManifest.flip(spark, dir, next)
+    }
+    givesUp(dir)(new StatsCache(spark, dir, Seq("symbol"))
+      .writeBack(Seq(("LOSER", -1.0)).toDF("symbol", "cov")))
+    assert(SnapshotManifest.currentSnap(spark, dir) == written.lastOption)
+    assert(new StatsCache(spark, dir, Seq("symbol"))
+      .probe(Seq("K0", "LOSER").toDF("symbol")).select($"symbol").as[String]
+      .collect().toSeq == Seq("K0"))
+    assert(snapDirs(dir).subsetOf(written.toSet + firstSnap),
+      snapDirs(dir).toString)
+  }
 }

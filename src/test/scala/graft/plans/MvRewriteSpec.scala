@@ -1644,7 +1644,7 @@ class MvRewriteSpec extends SparkSpec with BeforeAndAfterAll {
       val got = (nIdle, nDv, nAppend, nCompact, nBuild)
       info(s"jobs (idle, dv, append, compact, build) = $got")
       assert(nIdle == 0 && nDv == 0, got)
-      assert(nAppend <= 7 && nCompact <= 8 && nBuild <= 3, got)
+      assert(nAppend <= 4 && nCompact <= 6 && nBuild <= 3, got)
       assertFresh("mvspec_jobs")(build)
     } finally MvCatalog.unregister("mvspec_jobs")
   }

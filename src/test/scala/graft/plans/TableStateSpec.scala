@@ -201,6 +201,54 @@ class TableStateSpec extends SparkSpec {
       Seq("NoRowChangeHop"), moved3(p).hops.toString)
   }
 
+  test("job pins: classifying hops and building the hop frames run no Spark job") {
+    import spark.implicits._
+    val p = root + "/t_jobs"
+    val df = (1 to 400).map(i => (s"S${i % 2}", i.toLong, i * 1.0))
+      .toDF("symbol", "ts", "v")
+    def fp = TableState.fingerprint(spark, Set(p))
+    def hops(from: String) = jobsOf(
+      TableState.movedHops(spark, from, Set(p), "spec").get._2(p).hops)
+    graft.catalog.Layout.writeClusteredZoned(df.filter(col("ts") <= 200), p,
+      "symbol", "ts", numBuckets = 2, filesPerBucket = 2)
+    val fp0 = fp
+    graft.catalog.Layout.appendClusteredZoned(df.filter(col("ts") > 200), p,
+      "symbol", "ts", numBuckets = 2, filesPerBucket = 2)
+    val (appendHops, nAppend) = hops(fp0)
+    val (_, nHopRows) = jobsOf(TableState.hopRows(spark, p,
+      appendHops.head.asInstanceOf[TableState.AppendHop], "spec"))
+    val fp1 = fp
+    graft.catalog.Layout.delete(spark, p, "ts", col("ts") <= 50)
+    val (dvHops, nDv) = hops(fp1)
+    val fp2 = fp
+    graft.catalog.Layout.compact(spark, p, "symbol", "ts", filesPerBucket = 2)
+    graft.catalog.Layout.vacuum(spark, p, retainPrevious = false)
+    val (rwHops, nCompact) = hops(fp2)
+    val (removed, nRemoved) = jobsOf(TableState.removedRows(spark, p,
+      rwHops.head.asInstanceOf[TableState.RewriteHop]))
+    // the frames are the rows the jobs used to produce
+    assert(removed.get.select($"ts").as[Long].collect().toSet ==
+      (1L to 50L).toSet)
+    val fp3 = fp
+    val (nDropped, _) = graft.catalog.Layout.expireBefore(
+      spark, p, "ts", lit(301L))
+    assert(nDropped > 0, "the expiry must drop whole files")
+    graft.catalog.Layout.vacuum(spark, p, retainPrevious = false)
+    val (rsHops, nExpire) = hops(fp3)
+    val (pinned, nPinned) = jobsOf(TableState.pinnedRead(spark, p,
+      fp.stripPrefix("snap:"), "spec"))
+    val kinds = Seq(appendHops, dvHops, rwHops, rsHops)
+      .map(_.map(_.getClass.getSimpleName).mkString(","))
+    assert(kinds == Seq("AppendHop", "NoRowChangeHop", "RewriteHop",
+      "ShrinkHop"), kinds.toString)
+    val got = (nAppend, nDv, nCompact, nExpire, nHopRows, nRemoved, nPinned)
+    info(s"jobs (append, dv, compact, expire, hopRows, removedRows, " +
+      s"pinnedRead) = $got")
+    assert(got == (0, 0, 0, 0, 0, 0, 0), got)
+    assert(pinned.select($"ts").as[Long].collect().toSet ==
+      spark.read.parquet(p).select($"ts").as[Long].collect().toSet)
+  }
+
   test("FpCache probes each root exactly once per pass, any number of consultations") {
     val p = root + "/t_memo"
     Tables.load(spark, sf, "region").select(col("r_regionkey").as("k"))
